@@ -18,13 +18,25 @@ Per-partition metrics are collected DISTRIBUTED (groupBy(spark_partition_id))
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+
+from ditto_spark.operators.serialize import serialize_conversations
+from ditto_spark.pipeline import (
+    PipelineConfig,
+    PipelineResult,
+    stage_candidates,
+    stage_clusters,
+    stage_matches,
+    stage_pair_text,
+    stage_scored,
+)
 
 
 def _success_marker(path: str) -> str:
@@ -161,25 +173,16 @@ def dedup_transcripts_checkpointed(
 ):
     """Checkpointed flagship pipeline: every stage boundary is a parquet
     table; a rerun after a crash resumes from the last committed stage and
-    produces byte-identical clusters (pytest asserts this).
+    produces byte-identical clusters (pytest asserts this). The stages are
+    `pipeline.py`'s, so the checkpointed run computes what
+    `dedup_transcripts` does.
 
     Stage graph (lineage recorded in _lineage.jsonl):
         transcripts → serialized → candidates → scored → matches → clusters
     """
-    from ditto_spark.pipeline import PipelineConfig, PipelineResult
-    from ditto_spark.operators.serialize import serialize_conversations
-    from ditto_spark.operators.blocking import block_minhash_lsh
-    from ditto_spark.operators.scoring import (
-        attach_pair_text, score_pairs, score_pairs_builtin, apply_threshold,
-    )
-    from ditto_spark.operators.cluster import assign_clusters
-
     cfg = cfg or PipelineConfig()
     if store.config_hash is None:
         # bind the store to this config (refuses stale-resume on mismatch)
-        import hashlib
-        from dataclasses import asdict
-
         store.config_hash = hashlib.md5(
             json.dumps(asdict(cfg), sort_keys=True, default=str).encode()
         ).hexdigest()
@@ -188,46 +191,19 @@ def dedup_transcripts_checkpointed(
         "serialized", lambda: serialize_conversations(transcripts), ["transcripts"]
     )
     candidates = store.materialize(
-        "candidates",
-        lambda: block_minhash_lsh(
-            serialized,
-            text_col="block_text",
-            shingle_n=cfg.shingle_n,
-            num_perm=cfg.num_perm,
-            num_bands=cfg.num_bands,
-            rows_per_band=cfg.rows_per_band,
-            max_bucket=cfg.max_bucket,
-            threshold=cfg.lsh_prefilter,
-        ),
-        ["serialized"],
+        "candidates", lambda: stage_candidates(serialized, cfg), ["serialized"]
     )
-
-    def _score():
-        with_text = attach_pair_text(candidates, serialized)
-        # mirror pipeline.py: spread the CPU-bound Arrow UDF over all cores
-        # (AQE byte-based coalescing otherwise strands it on few workers)
-        n_parts = cfg.repartition_pairs or 2 * int(
-            spark.sparkContext.defaultParallelism
-        )
-        if cfg.use_arrow_udf_scorer:
-            with_text = with_text.repartition(n_parts)
-        return (
-            score_pairs(with_text)
-            if cfg.use_arrow_udf_scorer
-            else score_pairs_builtin(with_text)
-        )
-
-    scored = store.materialize("scored", _score, ["candidates", "serialized"])
+    scored = store.materialize(
+        "scored",
+        lambda: stage_scored(stage_pair_text(candidates, serialized, cfg), cfg),
+        ["candidates", "serialized"],
+    )
     matches = store.materialize(
-        "matches",
-        lambda: apply_threshold(scored, cfg.tau).where(F.col("match") == 1),
-        ["scored"],
+        "matches", lambda: stage_matches(scored, cfg), ["scored"]
     )
     clusters = store.materialize(
         "clusters",
-        lambda: assign_clusters(
-            serialized, matches.select("left_id", "right_id"), assume_unique=True
-        ),
+        lambda: stage_clusters(serialized, matches),
         ["matches", "serialized"],
     )
     return PipelineResult(serialized, candidates, scored, matches, clusters)

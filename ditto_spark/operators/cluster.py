@@ -140,44 +140,6 @@ def _small_star(edges: DataFrame, parts: int) -> DataFrame:
     )
 
 
-def _large_star_agg(edges: DataFrame) -> DataFrame:
-    """Skew-safe large-star: same semantics as _large_star, but m =
-    min(Γ(u) ∪ u) comes from a groupBy (partial-aggregated map-side — a hub
-    key reduces within every map task, no single-reducer bottleneck) joined
-    back onto the symmetric edge view. The join's exchange is left to AQE's
-    skew-join splitting, so a dense component's hub neighborhood is
-    processed by MANY tasks — the window formulation necessarily collects
-    all Γ(hub) rows into one task. Costs ~1.5x the shuffle volume of the
-    window form; worth it only when components are large/dense."""
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    m = sym.groupBy("u").agg(F.min("v").alias("mv")).select(
-        "u", F.least("mv", F.col("u")).alias("m")
-    )
-    return (
-        sym.join(m, "u")
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-    )
-
-
-def _small_star_agg(edges: DataFrame) -> DataFrame:
-    """Skew-safe small-star (see _large_star_agg): groupBy-min + join-back
-    + self-edge from the min table; the end-of-round dedup is itself an
-    aggregation (map-side partial), so no step funnels a hot key into one
-    task."""
-    m = edges.groupBy("u").agg(F.min("v").alias("m"))
-    emit_n = edges.join(m, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
-    emit_self = m.select("u", F.col("m").alias("v"))
-    return (
-        emit_n.unionByName(emit_self)
-        .where(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     left_col: str = "left_id",
@@ -186,7 +148,6 @@ def connected_components(
     check_every: int = 2,
     rows_per_partition: int = 200_000,
     assume_unique: bool = False,
-    skew_safe: bool = False,
     contract: bool = True,
 ) -> DataFrame:
     """(left_id, right_id) match edges → (conv_id, cluster_id) with
@@ -208,12 +169,9 @@ def connected_components(
       jobs on the same SparkSession are unaffected. On a 1000-executor
       cluster the same knob keeps thousands of near-empty reducers out of
       every round.
-    * skew_safe=True swaps the per-star min-WINDOW (one shuffle, but a hub
-      node's whole neighborhood lands in one task) for groupBy-min +
-      join-back (partial aggregation + AQE skew-split join; ~1.5x shuffle
-      volume). Default False: dedup graphs are millions of small cliques
-      where the window form wins; use True for graphs with giant/dense
-      components.
+    * each star is one min-WINDOW shuffle; a hub node's whole neighborhood
+      lands in one task, which suits dedup graphs (millions of small
+      cliques, most collapsed by the contraction below before the loop).
     * two-pass local contraction (by v, then by u) + a star-forest check
       SKIP the loop outright when contraction already converged — exact
       for clique-shaped components (the dedup production shape), so the
@@ -326,14 +284,9 @@ def connected_components(
         # lazy checkpoint: the signature collect below materializes it
         # (with the intermediate rounds), so convergence costs ONE
         # driver-synchronized job per check_every rounds
-        if skew_safe:
-            edges = _small_star_agg(_large_star_agg(edges)).localCheckpoint(
-                eager=False
-            )
-        else:
-            edges = _small_star(
-                _large_star(edges, loop_parts), loop_parts
-            ).localCheckpoint(eager=False)
+        edges = _small_star(
+            _large_star(edges, loop_parts), loop_parts
+        ).localCheckpoint(eager=False)
         if (rnd + 1) % check_every != 0 and rnd + 1 < max_iter:
             continue
         sig_row = edges.select(

@@ -6,14 +6,20 @@ components → clusters.
 
 Exactly three keyed shuffles at scale: groupBy(conv_id) for serialization,
 the band equi-join for blocking, and the CC iterations (bounded O(log n)
-rounds). The scorer stage is shuffle-free (mapInPandas over the already
-partitioned pair table); `repartition_pairs` controls its parallelism so no
-partition exceeds model memory (SURVEY.md §7 risk: skew).
+rounds). The Arrow scorer runs as mapInPandas over the pair table after one
+repartition to 2 × defaultParallelism (`repartition_pairs` overrides the
+count) so the CPU-bound UDF spreads over every core and no partition exceeds
+model memory (SURVEY.md §7 risk: skew).
+
+This module is the only owner of the stage graph: the `stage_*` functions
+below map a `PipelineConfig` onto the operators, and `dedup_transcripts`,
+the progressive variant, threshold tuning and the checkpointed pipeline
+(`checkpoint.py`) all compose them.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
@@ -43,18 +49,11 @@ class PipelineConfig:
     tau: float = 0.5
     use_arrow_udf_scorer: bool = True
     repartition_pairs: int | None = None
-    # Progressive-scoring break-even knobs (round-4 verdict #5: the skew
-    # drill measured progressive 1.8x SLOWER at surrogate cost while
-    # pruning 58% of pairs — the saved scorer work must exceed the
-    # n_batches meta-CC/join overhead to pay). scorer_cost_per_pair:
-    # sec/pair; None → measure on a calibration batch at run time.
-    # progressive_batch_overhead_sec is the measured sandbox per-batch
-    # fixed cost (meta-CC + two id joins, BENCH/skew_drill.json ≈ 29 s);
-    # at cluster scale re-measure and override.
-    scorer_cost_per_pair: float | None = None
-    progressive_prune_frac: float = 0.5
-    progressive_batch_overhead_sec: float = 30.0
-    extra: dict = field(default_factory=dict)
+
+
+# Fraction of candidate pairs progressive scoring is assumed to prune when
+# deciding whether it pays (the skew drill measured 58% pruned).
+PROGRESSIVE_PRUNE_FRAC = 0.5
 
 
 @dataclass
@@ -64,6 +63,64 @@ class PipelineResult:
     scored: DataFrame
     matches: DataFrame
     clusters: DataFrame
+
+
+def stage_candidates(serialized: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """serialized → MinHash-LSH candidate pairs (left_id < right_id)."""
+    return block_minhash_lsh(
+        serialized,
+        text_col="block_text",
+        shingle_n=cfg.shingle_n,
+        num_perm=cfg.num_perm,
+        num_bands=cfg.num_bands,
+        rows_per_band=cfg.rows_per_band,
+        max_bucket=cfg.max_bucket,
+        threshold=cfg.lsh_prefilter,
+    )
+
+
+def stage_pair_text(
+    candidates: DataFrame, serialized: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
+    """Attach both sides' text to the pairs. For the Arrow scorer, also
+    repartition: AQE coalesces the pair table to ~64MB partitions, which
+    strands the Arrow UDF on a handful of Python workers (measured:
+    local[32] SLOWER than local[8] at sf0.1). The UDF stage is CPU-bound per
+    pair, not bytes-bound — spread it over the cluster's cores. On a real
+    cluster this is also where pair-count-based sizing caps model memory per
+    partition (SURVEY.md §7)."""
+    with_text = attach_pair_text(candidates, serialized)
+    if not cfg.use_arrow_udf_scorer:
+        return with_text
+    n_parts = cfg.repartition_pairs or 2 * int(
+        candidates.sparkSession.sparkContext.defaultParallelism
+    )
+    return with_text.repartition(n_parts)
+
+
+def stage_scored(
+    with_text: DataFrame, cfg: PipelineConfig, scorer_factory=None
+) -> DataFrame:
+    """`stage_pair_text` output → (left_id, right_id, prob), scored by the
+    Arrow UDF (`scorer_factory`, default the surrogate) or, with
+    use_arrow_udf_scorer=False, by the JVM surrogate."""
+    if cfg.use_arrow_udf_scorer:
+        return score_pairs(with_text, scorer_factory)
+    return score_pairs_builtin(with_text)
+
+
+def stage_matches(scored: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Scored pairs → the pairs with prob > τ."""
+    return apply_threshold(scored, cfg.tau).where(F.col("match") == 1)
+
+
+def stage_clusters(serialized: DataFrame, matches: DataFrame) -> DataFrame:
+    """Match edges → (conv_id, cluster_id) over every serialized conv_id."""
+    # candidates are distinct (left < right) by construction → the CC init
+    # can skip its dedup shuffle over the full edge set
+    return assign_clusters(
+        serialized, matches.select("left_id", "right_id"), assume_unique=True
+    )
 
 
 def tune_threshold_on_pairs(
@@ -85,13 +142,10 @@ def tune_threshold_on_pairs(
     cfg = cfg or PipelineConfig()
 
     def score_fresh() -> DataFrame:
-        with_text = attach_pair_text(
-            labeled_pairs.select("left_id", "right_id"), serialized
+        with_text = stage_pair_text(
+            labeled_pairs.select("left_id", "right_id"), serialized, cfg
         )
-        scored = (
-            score_pairs(with_text) if cfg.use_arrow_udf_scorer
-            else score_pairs_builtin(with_text)
-        )
+        scored = stage_scored(with_text, cfg)
         return scored.join(
             labeled_pairs.select("left_id", "right_id", "label"),
             ["left_id", "right_id"],
@@ -110,8 +164,6 @@ def dedup_transcripts_tuned(
 ) -> tuple["PipelineResult", float]:
     """Full reference inference flow: tune τ on labeled validation pairs,
     then run the pipeline at the tuned τ."""
-    from dataclasses import replace
-
     cfg = cfg or PipelineConfig()
     serialized = serialize_conversations(transcripts).persist()
     tau = tune_threshold_on_pairs(serialized, labeled_pairs, cfg)
@@ -169,12 +221,15 @@ def dedup_transcripts_progressive(
     serialized: DataFrame | None = None,
     auto: bool = False,
     scorer_factory=None,
+    batch_overhead_sec: float = 30.0,
 ) -> tuple[DataFrame, dict]:
     """Flagship variant with progressive (pay-as-you-go) scoring: candidate
     pairs run through the Arrow scorer in descending est_jaccard batches and
     pairs whose endpoints already share a cluster are pruned unscored
     (`scoring.score_pairs_progressive` — cluster output provably identical
     to the one-shot pipeline, tested in test_scoring/test_pipeline).
+    Always scores with the Arrow UDF (`scorer_factory`), whatever
+    cfg.use_arrow_udf_scorer says.
 
     Use when the scorer dominates (at the 50x stress point the score stage
     is 355 s of 409 s): duplicate-heavy corpora resolve near-clique groups
@@ -184,93 +239,68 @@ def dedup_transcripts_progressive(
     invocations; keep the one-shot path when pair probabilities for EVERY
     candidate are themselves a deliverable (auditing, calibration).
 
-    auto=True applies the measured break-even (round-4 verdict #5)
-    instead of trusting the operator: the candidate count and a
-    calibration-batch scorer cost (or cfg.scorer_cost_per_pair when
-    pre-measured) decide between progressive and the one-shot scorer —
-    both produce identical clusters, so the choice is purely a cost
-    decision, and `stats["mode"]` records which ran plus the numbers
-    behind the decision.
+    auto=True applies the measured break-even (round-4 verdict #5: the skew
+    drill measured progressive 1.8x SLOWER at surrogate cost while pruning
+    58% of pairs) instead of trusting the operator: the candidate count and
+    a calibration-batch scorer cost decide between progressive and the
+    one-shot scorer — both produce identical clusters, so the choice is
+    purely a cost decision, and `stats["mode"]` records which ran plus the
+    numbers behind the decision. `batch_overhead_sec` is the per-batch fixed
+    cost (meta-CC + two id joins) the saved scorer work must exceed; the
+    default is the sandbox measurement (BENCH/skew_drill.json ≈ 29 s) — at
+    cluster scale re-measure and pass it.
 
     Returns (clusters, stats) — clusters schema identical to
     PipelineResult.clusters; stats has per-batch scored/pruned counts.
     """
     from ditto_spark.operators.scoring import score_pairs_progressive
 
-    cfg = cfg or PipelineConfig()
+    cfg = replace(cfg or PipelineConfig(), use_arrow_udf_scorer=True)
     if serialized is None:
         serialized = serialize_conversations(transcripts).persist()
-    candidates = block_minhash_lsh(
-        serialized,
-        text_col="block_text",
-        shingle_n=cfg.shingle_n,
-        num_perm=cfg.num_perm,
-        num_bands=cfg.num_bands,
-        rows_per_band=cfg.rows_per_band,
-        max_bucket=cfg.max_bucket,
-        threshold=cfg.lsh_prefilter,
-    )
-    with_text = attach_pair_text(candidates, serialized)
-    n_parts = cfg.repartition_pairs or 2 * int(
-        transcripts.sparkSession.sparkContext.defaultParallelism
-    )
-    with_text = with_text.repartition(n_parts)
+    with_text = stage_pair_text(stage_candidates(serialized, cfg), serialized, cfg)
 
+    stats: dict = {"mode": "progressive"}
     if auto:
         with_text = with_text.persist()
         n_pairs = with_text.count()
-        cost = cfg.scorer_cost_per_pair
-        if cost is None:
-            cost = calibrate_scorer_cost(with_text, scorer_factory)
+        cost = calibrate_scorer_cost(with_text, scorer_factory)
         break_even = progressive_break_even_cost(
-            n_pairs,
-            n_batches,
-            cfg.progressive_prune_frac,
-            cfg.progressive_batch_overhead_sec,
+            n_pairs, n_batches, PROGRESSIVE_PRUNE_FRAC, batch_overhead_sec
         )
-        decision = {
+        stats["decision"] = {
             "n_pairs": n_pairs,
             "scorer_cost_per_pair": cost,
             "break_even_cost_per_pair": break_even,
-            "prune_frac_assumed": cfg.progressive_prune_frac,
-            "batch_overhead_sec": cfg.progressive_batch_overhead_sec,
+            "prune_frac_assumed": PROGRESSIVE_PRUNE_FRAC,
+            "batch_overhead_sec": batch_overhead_sec,
         }
         if cost <= break_even:
-            # one-shot wins: score everything, threshold, one CC pass
-            scored = score_pairs(with_text, scorer_factory)
-            matches = apply_threshold(scored, cfg.tau).where(
-                F.col("match") == 1
-            )
-            clusters = assign_clusters(
-                serialized,
-                matches.select("left_id", "right_id"),
-                assume_unique=True,
-            )
+            # one-shot wins: score everything, threshold, one CC pass.
+            # Materialize the clusters while with_text is still cached, so
+            # acting on them later does not rerun blocking and pair text.
+            scored = stage_scored(with_text, cfg, scorer_factory)
+            clusters = stage_clusters(
+                serialized, stage_matches(scored, cfg)
+            ).persist()
+            clusters.count()
             with_text.unpersist()
-            return clusters, {"mode": "one_shot", "decision": decision}
-        assignments, stats = score_pairs_progressive(
-            with_text,
-            threshold=cfg.tau,
-            scorer_factory=scorer_factory,
-            n_batches=n_batches,
-        )
+            return clusters, {**stats, "mode": "one_shot"}
+    assignments, batch_stats = score_pairs_progressive(
+        with_text,
+        threshold=cfg.tau,
+        scorer_factory=scorer_factory,
+        n_batches=n_batches,
+    )
+    if auto:
         with_text.unpersist()
-        stats = {"mode": "progressive", "decision": decision, **stats}
-    else:
-        assignments, stats = score_pairs_progressive(
-            with_text,
-            threshold=cfg.tau,
-            scorer_factory=scorer_factory,
-            n_batches=n_batches,
-        )
-        stats = {"mode": "progressive", **stats}
     clusters = (
         serialized.select("conv_id")
         .distinct()
         .join(assignments, "conv_id", "left")
         .withColumn("cluster_id", F.coalesce("cluster_id", "conv_id"))
     )
-    return clusters, stats
+    return clusters, {**stats, **batch_stats}
 
 
 def dedup_transcripts(
@@ -283,37 +313,8 @@ def dedup_transcripts(
     # final cluster assignment — materialize once (checkpoint table at scale)
     if serialized is None:
         serialized = serialize_conversations(transcripts).persist()
-    candidates = block_minhash_lsh(
-        serialized,
-        text_col="block_text",
-        shingle_n=cfg.shingle_n,
-        num_perm=cfg.num_perm,
-        num_bands=cfg.num_bands,
-        rows_per_band=cfg.rows_per_band,
-        max_bucket=cfg.max_bucket,
-        threshold=cfg.lsh_prefilter,
-    )
-    with_text = attach_pair_text(candidates, serialized)
-    # Repartition before the Python scorer: AQE coalesces the pair table to
-    # ~64MB partitions, which strands the Arrow UDF on a handful of Python
-    # workers (measured: local[32] SLOWER than local[8] at sf0.1). The UDF
-    # stage is CPU-bound per pair, not bytes-bound — spread it over the
-    # cluster's cores. On a real cluster this is also where pair-count-based
-    # sizing caps model memory per partition (SURVEY.md §7).
-    n_parts = cfg.repartition_pairs or 2 * int(
-        transcripts.sparkSession.sparkContext.defaultParallelism
-    )
-    if cfg.use_arrow_udf_scorer:
-        with_text = with_text.repartition(n_parts)
-    if cfg.use_arrow_udf_scorer:
-        scored = score_pairs(with_text)
-    else:
-        scored = score_pairs_builtin(with_text)
-    decided = apply_threshold(scored, cfg.tau)
-    matches = decided.where(F.col("match") == 1)
-    # candidates are distinct (left < right) by construction → the CC init
-    # can skip its dedup shuffle over the full edge set
-    clusters = assign_clusters(
-        serialized, matches.select("left_id", "right_id"), assume_unique=True
-    )
+    candidates = stage_candidates(serialized, cfg)
+    scored = stage_scored(stage_pair_text(candidates, serialized, cfg), cfg)
+    matches = stage_matches(scored, cfg)
+    clusters = stage_clusters(serialized, matches)
     return PipelineResult(serialized, candidates, scored, matches, clusters)

@@ -75,12 +75,11 @@ def run_child(cores: int) -> None:
     spark = get_spark(app_name="cc_scaling", cores=cores)
     edges = build_edges(spark, N_EDGES, N_NODES)
     n = edges.count()
-    skew_safe = os.environ.get("CC_SKEW_SAFE", "0") == "1"
     times = []
     for i in range(REPEAT + 1):  # pass 0 is the untimed warmup
         spark.catalog.clearCache()
         t0 = time.monotonic()
-        cc = connected_components(edges, max_iter=60, skew_safe=skew_safe)
+        cc = connected_components(edges, max_iter=60)
         n_out = cc.count()
         dt = round(time.monotonic() - t0, 3)
         if i > 0:
@@ -116,8 +115,6 @@ def main() -> None:
 
     t_lo, t_hi = t_min(lo), t_min(hi)
     shape = os.environ.get("CC_SHAPE", "clustered")
-    if os.environ.get("CC_SKEW_SAFE", "0") == "1":
-        shape += "_skewsafe"
     summary = {
         "shape": shape,
         "metric": f"cc_scaling_{lo}_to_{hi}_cores",

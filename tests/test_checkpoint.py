@@ -5,6 +5,7 @@ identical clusters)."""
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from ditto_spark.checkpoint import StageStore, dedup_transcripts_checkpointed
 
@@ -59,8 +60,6 @@ def test_checkpoint_refuses_stale_config_resume(spark, tiny_transcripts, tmp_pat
     """Rerunning the same root/run_id with a DIFFERENT PipelineConfig (e.g.
     a new tau) must refuse to reuse checkpoints computed under the old
     config instead of silently resuming them."""
-    import pytest
-
     from ditto_spark.pipeline import PipelineConfig
 
     root = str(tmp_path / "ckpt4")
@@ -84,12 +83,16 @@ def test_checkpoint_refuses_stale_config_resume(spark, tiny_transcripts, tmp_pat
     assert r3.clusters.count() > 0
 
 
-def test_checkpoint_matches_unchechpointed_pipeline(spark, tiny_transcripts, tmp_path):
-    from ditto_spark.pipeline import dedup_transcripts
+@pytest.mark.parametrize("arrow", [True, False], ids=["arrow_scorer", "jvm_scorer"])
+def test_checkpoint_matches_unchechpointed_pipeline(
+    spark, tiny_transcripts, tmp_path, arrow
+):
+    from ditto_spark.pipeline import PipelineConfig, dedup_transcripts
 
+    cfg = PipelineConfig(use_arrow_udf_scorer=arrow)
     s = StageStore(spark, str(tmp_path / "ckpt3"), "runC")
-    ck = dedup_transcripts_checkpointed(spark, tiny_transcripts, s)
-    direct = dedup_transcripts(tiny_transcripts)
+    ck = dedup_transcripts_checkpointed(spark, tiny_transcripts, s, cfg)
+    direct = dedup_transcripts(tiny_transcripts, cfg)
     assert _cluster_sig(ck.clusters) == _cluster_sig(direct.clusters)
 
 
@@ -97,8 +100,6 @@ def test_checkpoint_refuses_unhashed_preexisting_run(spark, tiny_transcripts, tm
     """A run dir with committed stages but no _config_hash (written before
     the guard existed) must be refused, not silently adopted."""
     import os
-
-    import pytest
 
     from ditto_spark.pipeline import PipelineConfig
 

@@ -233,6 +233,10 @@ def test_progressive_auto_break_even(spark):
     assert stats["mode"] == "one_shot"
     d = stats["decision"]
     assert d["scorer_cost_per_pair"] <= d["break_even_cost_per_pair"]
+    # the branch releases its cached pair table before returning: the
+    # clusters must already be materialized, or acting on them reruns
+    # blocking and pair-text attachment
+    assert clusters.is_cached
     assert {(r["conv_id"], r["cluster_id"]) for r in clusters.collect()} == want
 
     # regime 2: slowed scorer (5 ms/pair) with the batch overhead set to a
@@ -248,11 +252,13 @@ def test_progressive_auto_break_even(spark):
 
         return score
 
-    from dataclasses import replace
-
-    cfg2 = replace(cfg, progressive_batch_overhead_sec=0.05)
     clusters2, stats2 = dedup_transcripts_progressive(
-        t, cfg2, n_batches=3, auto=True, scorer_factory=slow_factory
+        t,
+        cfg,
+        n_batches=3,
+        auto=True,
+        scorer_factory=slow_factory,
+        batch_overhead_sec=0.05,
     )
     assert stats2["mode"] == "progressive"
     d2 = stats2["decision"]
