@@ -242,7 +242,7 @@ def main() -> None:
     # zeroes fresh pages at only ~130-300 MB/s, so the first full-size job
     # in a JVM pays tens of GB of lazy heap commit (measured: 181-265 s
     # first run vs 38 s identical second run). Pre-touching at startup
-    # costs ~8.5 min for 64 GB on this host (see session.py), so instead
+    # costs ~8.5 min for 64 GB on this host, so instead
     # the harness pays the commit once here, overlapped with real work,
     # and the timed samples below measure steady state — the quantity that
     # scales with cores and the standard JVM-benchmark discipline. The
@@ -282,12 +282,16 @@ def main() -> None:
 
     # per-stage breakdown (one staged pass, cold data / warm JIT): stage
     # boundaries materialized so each wall time is attributable. The staged
-    # total ≈ the flagship (same operators; extra persists at boundaries).
+    # total ≈ the flagship (the same pipeline.stage_* functions; extra
+    # persists at boundaries).
     from ditto_spark.operators.serialize import serialize_conversations
-    from ditto_spark.operators.blocking import block_minhash_lsh
-    from ditto_spark.operators.scoring import attach_pair_text, score_pairs, apply_threshold
-    from ditto_spark.operators.cluster import assign_clusters
-    import pyspark.sql.functions as F
+    from ditto_spark.pipeline import (
+        stage_candidates,
+        stage_clusters,
+        stage_matches,
+        stage_pair_text,
+        stage_scored,
+    )
 
     spark.catalog.clearCache()
     transcripts.cache()
@@ -300,25 +304,15 @@ def main() -> None:
     ser.count()
     stages["serialize"] = round(time.monotonic() - t0, 3)
     t0 = time.monotonic()
-    cand = block_minhash_lsh(
-        ser, text_col="block_text", shingle_n=cfg.shingle_n,
-        num_perm=cfg.num_perm, num_bands=cfg.num_bands,
-        rows_per_band=cfg.rows_per_band, max_bucket=cfg.max_bucket,
-        threshold=cfg.lsh_prefilter,
-    ).persist()
+    cand = stage_candidates(ser, cfg).persist()
     n_cand_full = cand.count()
     stages["blocking"] = round(time.monotonic() - t0, 3)
     t0 = time.monotonic()
-    wt = attach_pair_text(cand, ser).repartition(2 * cores)
-    scored = score_pairs(wt).persist()
+    scored = stage_scored(stage_pair_text(cand, ser, cfg), cfg).persist()
     scored.count()
     stages["score"] = round(time.monotonic() - t0, 3)
     t0 = time.monotonic()
-    matches = apply_threshold(scored, cfg.tau).where(F.col("match") == 1)
-    clusters = assign_clusters(
-        ser, matches.select("left_id", "right_id"), assume_unique=True
-    )
-    clusters.count()
+    stage_clusters(ser, stage_matches(scored, cfg)).count()
     stages["threshold_cc"] = round(time.monotonic() - t0, 3)
     counts["transcript_blocking"] = n_cand_full
 
@@ -339,12 +333,7 @@ def main() -> None:
         ser_b = serialize_conversations(transcripts).persist()
         ser_b.count()
         t0 = time.monotonic()
-        cand_b = block_minhash_lsh(
-            ser_b, text_col="block_text", shingle_n=cfg.shingle_n,
-            num_perm=cfg.num_perm, num_bands=cfg.num_bands,
-            rows_per_band=cfg.rows_per_band, max_bucket=cfg.max_bucket,
-            threshold=cfg.lsh_prefilter,
-        )
+        cand_b = stage_candidates(ser_b, cfg)
         cand_b.persist()
         cand_b.count()
         wall = round(time.monotonic() - t0, 3)

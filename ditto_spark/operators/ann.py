@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
+from ditto_spark.operators.blocking import hashed_salt, replicated_salts, salt_count
+
 
 def _dot(a, b) -> F.Column:
     return F.aggregate(
@@ -274,7 +276,6 @@ def cosine_topk_lsh(
     bands: int = 8,
     seed: int = 23,
     max_bucket: int = 2000,
-    salt_seed: int = 7,
     query_filter: F.Column | None = None,
     n_probes: int = 0,
 ) -> DataFrame:
@@ -304,12 +305,11 @@ def cosine_topk_lsh(
     banded = _banded_ids(vectors, dim, id_col, vec_col, n_planes, bands, seed)
     w = Window.partitionBy("band_idx", "chunk")
     banded = banded.withColumn(
-        "n_salts",
-        F.ceil(F.count(F.lit(1)).over(w) / F.lit(max_bucket)).cast("int"),
+        "n_salts", salt_count(F.count(F.lit(1)).over(w), max_bucket)
     )
     n = banded.select(
         "band_idx", "chunk",
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(salt_seed)), F.col("n_salts")).alias("salt"),
+        hashed_salt(id_col).alias("salt"),
         F.col(id_col).alias("neighbor_id"),
     )
     if n_probes > 0:
@@ -339,7 +339,7 @@ def cosine_topk_lsh(
             q = q.where(query_filter)
     q = q.select(
         "band_idx", "chunk", "query_id",
-        F.explode(F.sequence(F.lit(0).cast("long"), F.col("n_salts").cast("long") - 1)).alias("salt"),
+        replicated_salts().alias("salt"),
     )
     cand_ids = (
         q.join(n, ["band_idx", "chunk", "salt"])
@@ -376,7 +376,6 @@ def embedding_near_dup_pairs(
     bands: int = 8,
     seed: int = 23,
     max_bucket: int = 2000,
-    salt_seed: int = 7,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ threshold), LSH-bucketed
     (blocker.py:74-79's threshold variant at scale). Hot buckets are salted
@@ -392,19 +391,16 @@ def embedding_near_dup_pairs(
     banded = _banded_ids(vectors, dim, id_col, vec_col, n_planes, bands, seed)
     w = Window.partitionBy("band_idx", "chunk")
     banded = banded.withColumn(
-        "n_salts",
-        F.ceil(F.count(F.lit(1)).over(w) / F.lit(max_bucket)).cast("int"),
+        "n_salts", salt_count(F.count(F.lit(1)).over(w), max_bucket)
     )
     l = banded.select(
         "band_idx", "chunk",
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(salt_seed)), F.col("n_salts")).alias("salt"),
+        hashed_salt(id_col).alias("salt"),
         F.col(id_col).alias("left_id"),
     )
     r = banded.select(
         "band_idx", "chunk", F.col(id_col).alias("right_id"),
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.col("n_salts").cast("long") - 1)
-        ).alias("salt"),
+        replicated_salts().alias("salt"),
     )
     cand_ids = (
         l.join(r, ["band_idx", "chunk", "salt"])

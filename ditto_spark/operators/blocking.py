@@ -18,21 +18,34 @@ Design (all JVM expressions, whole-stage codegen; zero Python):
 
 Skew handling (north_rule "salted keys for skewed blocks"): hot band buckets
 (near-identical template conversations all landing in one bucket) are split
-into `ceil(size/max_bucket)` salt cells by xxhash64(conv_id); pairs are
-generated within a salt cell only. Cross-cell pairs of a hot bucket are
-recovered probabilistically by the OTHER b-1 bands (each band salts
+into `ceil(size/max_bucket)` salt cells by xxhash64(conv_id, SALT_SEED);
+pairs are generated within a salt cell only. Cross-cell pairs of a hot bucket
+are recovered probabilistically by the OTHER b-1 bands (each band salts
 independently), and deterministically by transitive clustering downstream —
 a giant near-duplicate bucket is exactly the case where connected components
-closes the gap. AQE skew-join splitting stays on as the second line of
-defense.
+closes the gap. Two-sided joins (block_minhash_lsh_cross, ann's hyperplane
+LSH) hash one side into a cell and replicate the other across every cell of
+its bucket instead, which keeps full within-bucket recall. AQE skew-join
+splitting stays on as the second line of defense.
+
+This module is the only owner of the three formulas that define LSH
+blocking; every other module (streaming/incremental.py, ann.py) calls these
+Column helpers instead of copying them, so a band index built here always
+joins against band keys computed elsewhere:
+  band_structs      sig → exploded (band_idx, band_key) structs
+  sig_agreement     fraction of agreeing components of two signatures
+  salt_count / hashed_salt / replicated_salts
+                    the salt cell of a hot bucket
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
 TOKEN_PATTERN = "[^a-z0-9]+"
+# xxhash64 seed of the salt-cell hash; fixed so a re-run salts identically
+SALT_SEED = 7
 
 
 def tokenize(df: DataFrame, text_col: str = "entity_text") -> DataFrame:
@@ -104,16 +117,13 @@ def minhash_signatures(
     )
 
 
-def lsh_bands(
-    sig_df: DataFrame,
-    id_col: str = "conv_id",
-    num_bands: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Signature → (id, band_idx, band_key) rows; band_key hashes r
-    consecutive signature components. num_bands*rows_per_band must not
-    exceed the signature length."""
-    bands = F.explode(
+def band_structs(num_bands: int, rows_per_band: int) -> Column:
+    """Exploded (band_idx, band_key) structs of the `sig` column, one row
+    per band; band_key hashes r consecutive signature components. A Column
+    rather than a DataFrame so streaming callers can carry `sig` through
+    banding in one projection (a `lsh_bands(sig).join(sig)` self-join trips
+    "conflicting attributes" under a stateful operator)."""
+    return F.explode(
         F.transform(
             F.sequence(F.lit(0), F.lit(num_bands - 1)),
             lambda b: F.struct(
@@ -129,7 +139,50 @@ def lsh_bands(
                 ).alias("band_key"),
             ),
         )
-    ).alias("band")
+    )
+
+
+def sig_agreement(left, right) -> Column:
+    """MinHash Jaccard estimate of two signature columns (names or
+    Columns): the fraction of agreeing components."""
+    agree = F.aggregate(
+        F.zip_with(left, right, lambda a, b: (a == b).cast("int")),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+    return agree / F.size(left)
+
+
+def salt_count(bucket_n: Column, max_bucket: int) -> Column:
+    """n_salts: how many salt cells a bucket of `bucket_n` rows splits into."""
+    return F.ceil(bucket_n / F.lit(max_bucket)).cast("int")
+
+
+def hashed_salt(id_col: str) -> Column:
+    """The one cell a row hashes into, given its `n_salts` column. n_salts
+    must be ≥ 1 on every row it is evaluated on: ANSI mode raises on pmod
+    by zero."""
+    return F.pmod(F.xxhash64(F.col(id_col), F.lit(SALT_SEED)), F.col("n_salts"))
+
+
+def replicated_salts() -> Column:
+    """Every cell of the bucket (0 .. n_salts - 1), exploded — the
+    replicated side of a two-sided salted join. Filter n_salts = 0 rows out
+    first: Spark's sequence(0, -1) is [0, -1], not empty."""
+    return F.explode(
+        F.sequence(F.lit(0).cast("long"), F.col("n_salts").cast("long") - 1)
+    )
+
+
+def lsh_bands(
+    sig_df: DataFrame,
+    id_col: str = "conv_id",
+    num_bands: int = 16,
+    rows_per_band: int = 4,
+) -> DataFrame:
+    """Signature → (id, band_idx, band_key) rows. num_bands*rows_per_band
+    must not exceed the signature length."""
+    bands = band_structs(num_bands, rows_per_band).alias("band")
     return sig_df.select(id_col, bands).select(
         id_col, F.col("band.band_idx").alias("band_idx"), F.col("band.band_key").alias("band_key")
     )
@@ -139,29 +192,22 @@ def salt_cell_assignment(
     sized_bands: DataFrame,
     id_col: str = "conv_id",
     max_bucket: int = 200,
-    salt_seed: int = 7,
     bucket_n_col: str = "bucket_n",
 ) -> DataFrame:
     """THE production salt-cell assignment, shared by candidates_from_bands
     and scripts/skew_drill.py's bucket histogram so the drill can never
     silently measure a split the pipeline no longer performs: given rows
-    that carry their bucket size, add n_salts = ceil(size/max_bucket) and
-    salt = pmod(xxhash64(id, salt_seed), n_salts). One place owns the
-    formula, the seed, and the hash."""
+    that carry their bucket size, add n_salts (salt_count) and salt
+    (hashed_salt)."""
     return sized_bands.withColumn(
-        "n_salts",
-        F.ceil(F.col(bucket_n_col) / F.lit(max_bucket)).cast("int"),
-    ).withColumn(
-        "salt",
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(salt_seed)), F.col("n_salts")),
-    )
+        "n_salts", salt_count(F.col(bucket_n_col), max_bucket)
+    ).withColumn("salt", hashed_salt(id_col))
 
 
 def candidates_from_bands(
     bands_df: DataFrame,
     id_col: str = "conv_id",
     max_bucket: int = 200,
-    salt_seed: int = 7,
 ) -> DataFrame:
     """Self-equi-join on (band_idx, band_key) → distinct (left_id, right_id).
 
@@ -184,7 +230,6 @@ def candidates_from_bands(
         ),
         id_col=id_col,
         max_bucket=max_bucket,
-        salt_seed=salt_seed,
     )
     left = salted.select(
         "band_idx", "band_key", "salt", F.col(id_col).alias("left_id")
@@ -206,8 +251,7 @@ def candidates_from_bands(
 def estimated_jaccard(
     pairs: DataFrame, sig_df: DataFrame, id_col: str = "conv_id"
 ) -> DataFrame:
-    """Attach the MinHash Jaccard estimate: fraction of agreeing signature
-    components, zero Python.
+    """Attach the MinHash Jaccard estimate (sig_agreement), zero Python.
 
     The signature side carries a 64-long array (~0.5 KB/row) — too wide to
     broadcast at corpus scale, and a sort-merge join would SORT the pair
@@ -219,58 +263,17 @@ def estimated_jaccard(
     joined = pairs.join(ls.hint("shuffle_hash"), "left_id").join(
         rs.hint("shuffle_hash"), "right_id"
     )
-    agree = F.aggregate(
-        F.zip_with("lsig", "rsig", lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
     return joined.withColumn(
-        "est_jaccard", agree / F.size("lsig")
+        "est_jaccard", sig_agreement("lsig", "rsig")
     ).drop("lsig", "rsig")
 
 
-def block_minhash_lsh(
-    serialized: DataFrame,
-    id_col: str = "conv_id",
-    text_col: str = "entity_text",
-    shingle_n: int = 2,
-    num_perm: int = 64,
-    num_bands: int = 21,
-    rows_per_band: int = 3,
-    max_bucket: int = 200,
-    threshold: float | None = None,
-    top_k: int | None = None,
-    persist_sig: bool = True,
-    sig_mode: str = "perm",
+def _filter_pairs(
+    pairs: DataFrame, threshold: float | None, top_k: int | None
 ) -> DataFrame:
-    """End-to-end blocking: serialized entities → candidate pairs with
-    est_jaccard, optionally filtered by threshold (B2 analogue,
-    blocker.py:74-79) and/or top-k per right id (B3, blocker.py:67-72).
-
-    The signature stage is persisted by default: it feeds the band join,
-    the bucket-size histogram, AND both sides of the jaccard-estimate join —
-    without materialization the tokenize+shingle+hash projection re-executes
-    4× (measured 80s → 29s at sf0.1). At cluster scale this persist is the
-    `signatures` checkpoint table (north_rule lineage/resume).
-
-    sig_mode: "perm" (default) = num_perm seeded int64 rehashes per
-    shingle (minhash_signatures — measured fastest at num_perm=64); "oph"
-    = one-permutation hashing (oph_signatures), the single-hash-pass
-    construction. Identical downstream contract either way."""
+    """est_jaccard ≥ threshold, then the best top_k left ids per right id."""
     from pyspark.sql import Window
 
-    assert num_bands * rows_per_band <= num_perm
-    assert sig_mode in ("perm", "oph")
-    shingled = shingle(tokenize(serialized, text_col), shingle_n)
-    if sig_mode == "oph":
-        sig = oph_signatures(shingled, id_col, num_bins=num_perm)
-    else:
-        sig = minhash_signatures(shingled, id_col, num_perm=num_perm)
-    if persist_sig:
-        sig = sig.persist()
-    bands = lsh_bands(sig, id_col, num_bands, rows_per_band)
-    pairs = candidates_from_bands(bands, id_col, max_bucket=max_bucket)
-    pairs = estimated_jaccard(pairs, sig, id_col)
     if threshold is not None:
         pairs = pairs.where(F.col("est_jaccard") >= threshold)
     if top_k is not None:
@@ -285,6 +288,54 @@ def block_minhash_lsh(
     return pairs
 
 
+def _lsh_pairs(
+    sig: DataFrame,
+    id_col: str,
+    num_bands: int,
+    rows_per_band: int,
+    max_bucket: int,
+    threshold: float | None,
+    top_k: int | None = None,
+) -> DataFrame:
+    """Signatures → filtered (left_id, right_id, est_jaccard): the shared
+    tail of block_minhash_lsh and weighted_minhash_lsh.
+
+    The signature stage is persisted: it feeds the band join, the
+    bucket-size histogram, AND both sides of the jaccard-estimate join —
+    without materialization the tokenize+shingle+hash projection re-executes
+    4× (measured 80s → 29s at sf0.1). At cluster scale this persist is the
+    `signatures` checkpoint table (north_rule lineage/resume)."""
+    sig = sig.persist()
+    bands = lsh_bands(sig, id_col, num_bands, rows_per_band)
+    pairs = candidates_from_bands(bands, id_col, max_bucket=max_bucket)
+    return _filter_pairs(estimated_jaccard(pairs, sig, id_col), threshold, top_k)
+
+
+def block_minhash_lsh(
+    serialized: DataFrame,
+    id_col: str = "conv_id",
+    text_col: str = "entity_text",
+    shingle_n: int = 2,
+    num_perm: int = 64,
+    num_bands: int = 21,
+    rows_per_band: int = 3,
+    max_bucket: int = 200,
+    threshold: float | None = None,
+    top_k: int | None = None,
+) -> DataFrame:
+    """End-to-end blocking: serialized entities → candidate pairs with
+    est_jaccard, optionally filtered by threshold (B2 analogue,
+    blocker.py:74-79) and/or top-k per right id (B3, blocker.py:67-72).
+    Signatures are minhash_signatures (measured fastest at num_perm=64) and
+    are persisted (see _lsh_pairs)."""
+    assert num_bands * rows_per_band <= num_perm
+    shingled = shingle(tokenize(serialized, text_col), shingle_n)
+    sig = minhash_signatures(shingled, id_col, num_perm=num_perm)
+    return _lsh_pairs(
+        sig, id_col, num_bands, rows_per_band, max_bucket, threshold, top_k
+    )
+
+
 def block_minhash_lsh_cross(
     table_a: DataFrame,
     table_b: DataFrame,
@@ -295,10 +346,8 @@ def block_minhash_lsh_cross(
     num_bands: int = 21,
     rows_per_band: int = 3,
     max_bucket: int = 200,
-    salt_seed: int = 7,
     threshold: float | None = None,
     top_k: int | None = None,
-    persist_sig: bool = True,
 ) -> DataFrame:
     """Two-table (cross-corpus) MinHash-LSH blocking — the reference's
     ER-Magellan / WDC setting, where candidates link table_a to table_b
@@ -317,7 +366,8 @@ def block_minhash_lsh_cross(
     probabilistic cross-cell recovery, which leans on CC downstream — a
     luxury two-table linkage does not have since its output IS the final
     pair set). Per-task width stays ~max_bucket A rows; the replication
-    factor is bounded by the count window, not guessed.
+    factor is bounded by the count window, not guessed. Both signature
+    tables are persisted (each feeds its band rows and the estimate join).
 
     top_k keeps the best-k A-side candidates per B row (blocker.py:67-72
     ranks neighbors per query row)."""
@@ -326,13 +376,10 @@ def block_minhash_lsh_cross(
     assert num_bands * rows_per_band <= num_perm
     sig_a = minhash_signatures(
         shingle(tokenize(table_a, text_col), shingle_n), id_col, num_perm=num_perm
-    )
+    ).persist()
     sig_b = minhash_signatures(
         shingle(tokenize(table_b, text_col), shingle_n), id_col, num_perm=num_perm
-    )
-    if persist_sig:
-        sig_a = sig_a.persist()
-        sig_b = sig_b.persist()
+    ).persist()
     bands_a = lsh_bands(sig_a, id_col, num_bands, rows_per_band).withColumn(
         "side", F.lit("a")
     )
@@ -342,27 +389,21 @@ def block_minhash_lsh_cross(
     w = Window.partitionBy("band_idx", "band_key")
     tagged = bands_a.unionByName(bands_b).withColumn(
         "n_salts",
-        F.ceil(
-            F.sum((F.col("side") == "a").cast("int")).over(w) / F.lit(max_bucket)
-        ).cast("int"),
+        salt_count(F.sum((F.col("side") == "a").cast("int")).over(w), max_bucket),
     )
     # n_salts = 0 ⇔ the bucket has no A rows: B rows there are filtered out
-    # before the explode, so they never enter the join shuffle. (NB: Spark's
-    # sequence(0, -1) is NOT empty — it auto-detects a negative step and
-    # yields [0, -1], which would DOUBLE those rows instead of dropping
-    # them; the explicit n_salts > 0 filter is load-bearing.)
+    # before the explode, so they never enter the join shuffle, and the
+    # hashed salt is only computed on A rows, whose n_salts is ≥ 1
     a_rows = tagged.where(F.col("side") == "a").select(
         "band_idx", "band_key",
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(salt_seed)), F.col("n_salts")).alias("salt"),
+        hashed_salt(id_col).alias("salt"),
         F.col(id_col).alias("left_id"),
     )
     b_rows = (
         tagged.where((F.col("side") == "b") & (F.col("n_salts") > 0))
         .select(
             "band_idx", "band_key", F.col(id_col).alias("right_id"),
-            F.explode(
-                F.sequence(F.lit(0).cast("long"), F.col("n_salts").cast("long") - 1)
-            ).alias("salt"),
+            replicated_salts().alias("salt"),
         )
     )
     cand = (
@@ -372,29 +413,13 @@ def block_minhash_lsh_cross(
     )
     ls = sig_a.select(F.col(id_col).alias("left_id"), F.col("sig").alias("lsig"))
     rs = sig_b.select(F.col(id_col).alias("right_id"), F.col("sig").alias("rsig"))
-    agree = F.aggregate(
-        F.zip_with("lsig", "rsig", lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
     pairs = (
         cand.join(ls.hint("shuffle_hash"), "left_id")
         .join(rs.hint("shuffle_hash"), "right_id")
-        .withColumn("est_jaccard", agree / F.size("lsig"))
+        .withColumn("est_jaccard", sig_agreement("lsig", "rsig"))
         .drop("lsig", "rsig")
     )
-    if threshold is not None:
-        pairs = pairs.where(F.col("est_jaccard") >= threshold)
-    if top_k is not None:
-        wk = Window.partitionBy("right_id").orderBy(
-            F.desc("est_jaccard"), F.asc("left_id")
-        )
-        pairs = (
-            pairs.withColumn("rk", F.row_number().over(wk))
-            .where(F.col("rk") <= top_k)
-            .drop("rk")
-        )
-    return pairs
+    return _filter_pairs(pairs, threshold, top_k)
 
 
 def ngram_overlap_cross(
@@ -1189,11 +1214,13 @@ def oph_signatures(
     num_perm=64 that path runs the signature stage ~3x FASTER than this
     OPH implementation (2.2 s vs 6.2 s) — the O(num_bins·|shingles|)
     bin-filter compares plus the densification scan outweigh the saved
-    integer rehashes at this width. OPH is kept as the standard
-    single-hash-pass construction (contract-compatible via sig_mode="oph"
-    everywhere signatures are consumed): its win materializes when
-    signatures must come from ONE pass over the shingles (very large
-    num_perm, or an expensive/streamed hash), not at the pipeline default.
+    integer rehashes at this width, so the blocking entry points use
+    minhash_signatures. OPH is kept as the standard single-hash-pass
+    construction (the `oph_signature` oracle query; compose it with
+    lsh_bands → candidates_from_bands → estimated_jaccard for an OPH
+    blocking run): its win materializes when signatures must come from ONE
+    pass over the shingles (very large num_perm, or an expensive/streamed
+    hash), not at the pipeline default.
 
     Construction: each shingle hashes ONCE to h = xxhash64(shingle, seed);
     bin = pmod(h, num_bins) splits the hash space into num_bins ranges;
@@ -1360,7 +1387,6 @@ def weighted_minhash_lsh(
     max_bucket: int = 200,
     max_weight: int = 4,
     threshold: float | None = None,
-    sig_mode: str = "perm",
     shingle_n: int | None = None,
 ) -> DataFrame:
     """End-to-end IDF-weighted MinHash-LSH blocking: rare-token agreement
@@ -1397,21 +1423,10 @@ def weighted_minhash_lsh(
         ),
     )
     rep = weighted_token_replicas(toks, id_col, unit_col, w, max_weight)
-    if sig_mode == "oph":
-        sig = oph_signatures(
-            rep, id_col, shingles_col="wshingles", num_bins=num_perm
-        )
-    else:
-        sig = minhash_signatures(
-            rep, id_col, shingles_col="wshingles", num_perm=num_perm
-        )
-    sig = sig.persist()
-    bands = lsh_bands(sig, id_col, num_bands, rows_per_band)
-    pairs = candidates_from_bands(bands, id_col, max_bucket=max_bucket)
-    pairs = estimated_jaccard(pairs, sig, id_col)
-    if threshold is not None:
-        pairs = pairs.where(F.col("est_jaccard") >= threshold)
-    return pairs
+    sig = minhash_signatures(
+        rep, id_col, shingles_col="wshingles", num_perm=num_perm
+    )
+    return _lsh_pairs(sig, id_col, num_bands, rows_per_band, max_bucket, threshold)
 
 
 def time_band_pairs(

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ditto_spark.operators.blocking import (
@@ -210,18 +210,25 @@ def curate_documents(
                 )
 
         pairs = chunk_pair_fn(e_surv.select(id_col, text_col))
+        # both windows of a cross-doc pair are flagged; one explode reads
+        # `pairs` once (a union of two selects plans the LSH subtree twice)
         flagged = (
             pairs.where(F.col("left_doc") != F.col("right_doc"))
             .select(
-                F.col("left_doc").alias("__doc"),
-                F.col("left_chunk").alias("__idx"),
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col("left_doc").alias("__doc"),
+                            F.col("left_chunk").alias("__idx"),
+                        ),
+                        F.struct(
+                            F.col("right_doc").alias("__doc"),
+                            F.col("right_chunk").alias("__idx"),
+                        ),
+                    )
+                ).alias("__w")
             )
-            .unionByName(
-                pairs.where(F.col("left_doc") != F.col("right_doc")).select(
-                    F.col("right_doc").alias("__doc"),
-                    F.col("right_chunk").alias("__idx"),
-                )
-            )
+            .select("__w.*")
             .distinct()
             .groupBy("__doc")
             .agg(F.count(F.lit(1)).alias("__flagged"))
@@ -310,30 +317,29 @@ def curation_funnel(
     """Stage-ordered funnel counts from a curate_documents output:
     (stage, dropped, remaining) — remaining = survivors after the stage
     ran, so the last row's remaining equals the kept count. One small
-    aggregate + a stage-count window; the stage spine is joined in so
-    stages that dropped nothing still appear with dropped = 0. Pass
-    stages=CHUNK_STAGES for a run with the chunk_boiler stage enabled."""
-    spark = annotated.sparkSession
-    spine = spark.createDataFrame(
-        [(i + 1, s) for i, s in enumerate(stages)], "ord int, stage string"
-    )
-    counts = annotated.groupBy(F.col("dropped_at").alias("stage")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    total = annotated.select(F.count(F.lit(1)).alias("total"))
-    w = Window.orderBy("ord").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        spine.join(counts, "stage", "left")
-        .withColumn("dropped", F.coalesce("n", F.lit(0)))
-        .crossJoin(total)
-        .select(
-            "ord",
-            "stage",
-            F.col("dropped").cast("long").alias("dropped"),
-            (F.col("total") - F.sum("dropped").over(w))
-            .cast("long")
-            .alias("remaining"),
+    aggregate over `annotated` (a row per stage, collected); stages that
+    dropped nothing still appear with dropped = 0. Pass
+    stages=CHUNK_STAGES for a run with the chunk_boiler stage enabled.
+
+    Raises ValueError if `annotated` has a dropped_at value (other than
+    'kept') missing from `stages`: its rows would vanish from the funnel
+    and every later `remaining` would overstate the survivors."""
+    counts = {
+        r["dropped_at"]: r["n"]
+        for r in annotated.groupBy("dropped_at")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    unknown = sorted(set(counts) - set(stages) - {"kept"})
+    if unknown:
+        raise ValueError(
+            f"dropped_at values {unknown} are not in stages {tuple(stages)}"
         )
-        .orderBy("ord")
-        .drop("ord")
+    remaining = sum(counts.values())
+    rows = []
+    for stage in stages:
+        remaining -= counts.get(stage, 0)
+        rows.append((stage, counts.get(stage, 0), remaining))
+    return annotated.sparkSession.createDataFrame(
+        rows, "stage string, dropped long, remaining long"
     )

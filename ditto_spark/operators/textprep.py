@@ -750,7 +750,7 @@ def chunk_exact_dedup(
     ).withColumn("__nc", n_chunks)
     # base feeds the chunk-hash explode AND the reassembly join — without
     # materialization the full-corpus tokenize pass runs twice per action
-    # (same discipline as block_minhash_lsh's persist_sig; the checkpoint
+    # (same discipline as block_minhash_lsh's signature persist; the checkpoint
     # store's tokens stage table at cluster scale). The persisted handle
     # rides on the returned DataFrame as `chunk_toks_cache`; long-lived
     # sessions release it with `release_chunk_cache(out)` after the
@@ -813,7 +813,6 @@ def chunk_near_dup_pairs(
     rows_per_band: int = 4,
     max_bucket: int = 200,
     threshold: float | None = 0.25,
-    persist_sig: bool = True,
 ) -> DataFrame:
     """Chunk-level NEAR-dup candidate pairs — the production (xxhash) twin
     of the md5-portable entry query `chunk_near_dup`, promoted per the
@@ -875,7 +874,6 @@ def chunk_near_dup_pairs(
         rows_per_band=rows_per_band,
         max_bucket=max_bucket,
         threshold=threshold,
-        persist_sig=persist_sig,
     )
     # decompose from the TAIL (':' then digits) so a string id that itself
     # contains ':' round-trips

@@ -41,6 +41,16 @@ def _local_dir(min_free_bytes: int = 8 << 30) -> str:
     return "/tmp"
 
 
+def default_driver_memory() -> str:
+    """`spark.driver.memory` default: half of physical memory, capped at
+    64g (on a 128 GiB host a 16g heap left 32 concurrent local tasks
+    GC-bound, blocking stage 2x slower). Half, because local mode's Python
+    workers and tmpfs shuffle share the same RAM; a fixed 64g default
+    overcommitted small hosts until the kernel killed the JVM."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(64 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "ditto_spark",
     cores: int | None = None,
@@ -83,35 +93,13 @@ def get_spark(
         # Arrow batch size bounds pair-scorer UDF memory (reference batches
         # 1024 pairs/batch, matcher.py:120); 2048 keeps batches model-sized.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # local mode runs everything in the driver JVM; a 16g heap left 32
-        # concurrent tasks GC-bound (blocking stage 2x slower). The sandbox
-        # has 128 GiB; on a real cluster this maps to executor memory.
-        .config("spark.driver.memory", os.environ.get("DITTO_SPARK_DRIVER_MEM", "64g"))
-        # Heap-commit policy. This VM's host zeroes fresh pages at only
-        # ~130-300 MB/s, so the FIRST full-size job in each JVM pays tens of
-        # GB of lazy page-fault/zeroing (measured: first flagship run
-        # 181-265 s vs 38 s for the identical second run, loadavg ~4 on 16
-        # cores — a non-CPU stall invisible to the scheduler). -Xms=-Xmx +
-        # AlwaysPreTouch moves that cost to JVM startup, but at this host's
-        # zeroing rate that is ~8.5 min for 64 GB (measured 506 s even with
-        # -XX:+UseTransparentHugePages; THP madvise did not speed the host
-        # up) — far too slow for tests and interactive sessions, so
-        # pre-touch is opt-in via DITTO_SPARK_PRETOUCH=1. The benchmark
-        # harness instead runs one untimed warm-up pass per JVM (bench.py),
-        # which pays the commit cost inside the JVM where it overlaps real
-        # work, and times only steady-state runs. On a real cluster,
-        # long-lived executors amortize this exactly the same way.
+        # local mode runs everything in the driver JVM, so the driver heap
+        # is the whole engine's memory (see default_driver_memory); on a
+        # real cluster this maps to executor memory. Heap commit is lazy:
+        # a caller wanting -Xms=-Xmx pre-touch passes it in extra_conf.
         .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "DITTO_SPARK_DRIVER_JAVA_OPTS",
-                (
-                    "-Xms" + os.environ.get("DITTO_SPARK_DRIVER_MEM", "64g")
-                    + " -XX:+AlwaysPreTouch -XX:+UseTransparentHugePages"
-                )
-                if os.environ.get("DITTO_SPARK_PRETOUCH")
-                else "",
-            ),
+            "spark.driver.memory",
+            os.environ.get("DITTO_SPARK_DRIVER_MEM") or default_driver_memory(),
         )
         # Spark's default 10MB: a larger threshold made the planner broadcast
         # the ~1M-row LSH band table in the self-join, serializing blocking

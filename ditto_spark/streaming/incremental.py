@@ -9,11 +9,17 @@ streaming-legal without modification):
 * exact first-seen dedup — fingerprint (md5 of normalized text) +
   `dropDuplicates` state, bounded by a watermark on the event-time column.
 * incremental LSH candidate generation — each arriving serialized
-  conversation computes its MinHash signature + band keys (narrow
-  projections from ditto_spark.operators.blocking) and equi-joins the
-  *static* band index of the already-ingested corpus (stream-static inner
-  join, supported without watermark) → candidate pairs against the corpus,
-  with est_jaccard from the carried signatures.
+  conversation computes its MinHash signature + band keys and equi-joins
+  the *static* band index of the already-ingested corpus (stream-static
+  inner join, supported without watermark) → candidate pairs against the
+  corpus, with est_jaccard from the carried signatures.
+
+Band keys and est_jaccard come from the blocking module's Column helpers
+(`band_structs`, `sig_agreement`) — the same formulas `lsh_bands` uses to
+build the static index, so stream and index keys cannot drift apart. The
+streams carry `sig` through banding in one projection rather than joining
+`lsh_bands(sig)` back to `sig`: that self-join trips "conflicting
+attributes" when a stateful operator sits upstream.
 
 Both run with `trigger(availableNow=True)` in tests (file source → memory
 sink); on a cluster the same code points at Kafka/Iceberg-CDC sources and
@@ -26,10 +32,12 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ditto_spark.operators.blocking import (
-    tokenize,
-    shingle,
-    minhash_signatures,
+    band_structs,
     lsh_bands,
+    minhash_signatures,
+    shingle,
+    sig_agreement,
+    tokenize,
 )
 
 
@@ -103,41 +111,19 @@ def streaming_lsh_candidates(
     sig = minhash_signatures(
         shingle(tokenize(stream, text_col), shingle_n), id_col, num_perm=num_perm
     )
-    # carry sig through banding inline: a lsh_bands(sig).join(sig) self-join
-    # trips "conflicting attributes" when a stateful operator sits upstream
-    band = F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_bands - 1)),
-            lambda b: F.struct(
-                b.alias("band_idx"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ":",
-                        F.transform(
-                            F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                            lambda h: h.cast("string"),
-                        ),
-                    )
-                ).alias("band_key"),
-            ),
-        )
-    )
-    bands = sig.select(id_col, "sig", band.alias("b")).select(
+    bands = sig.select(
+        id_col, "sig", band_structs(num_bands, rows_per_band).alias("b")
+    ).select(
         id_col, "sig",
         F.col("b.band_idx").alias("band_idx"), F.col("b.band_key").alias("band_key"),
     )
     joined = bands.join(band_index, ["band_idx", "band_key"]).where(
         F.col(id_col) != F.col("corpus_id")
     )
-    agree = F.aggregate(
-        F.zip_with("sig", "corpus_sig", lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
     out = joined.select(
         F.col(id_col).alias("stream_id"),
         F.col("corpus_id"),
-        (agree / F.size("sig")).alias("est_jaccard"),
+        sig_agreement("sig", "corpus_sig").alias("est_jaccard"),
     ).dropDuplicates(["stream_id", "corpus_id"])
     if threshold is not None:
         out = out.where(F.col("est_jaccard") >= threshold)
@@ -181,25 +167,10 @@ def streaming_lsh_self_candidates(
         num_perm=num_perm,
         extra_cols=(ts_col,),
     )
-    band = F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_bands - 1)),
-            lambda b: F.struct(
-                b.alias("band_idx"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ":",
-                        F.transform(
-                            F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                            lambda h: h.cast("string"),
-                        ),
-                    )
-                ).alias("band_key"),
-            ),
-        )
-    )
     bands = (
-        sig.select(id_col, ts_col, "sig", band.alias("b"))
+        sig.select(
+            id_col, ts_col, "sig", band_structs(num_bands, rows_per_band).alias("b")
+        )
         .select(
             id_col, ts_col, "sig",
             F.col("b.band_idx").alias("band_idx"),
@@ -218,18 +189,11 @@ def streaming_lsh_self_candidates(
         & (F.col(f"b.{ts_col}") <= hi)
     )
     joined = a.join(b, cond)
-    agree = F.aggregate(
-        F.zip_with(
-            F.col("a.sig"), F.col("b.sig"), lambda x, y: (x == y).cast("int")
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
     out = joined.select(
         F.col(f"a.{id_col}").alias("left_id"),
         F.col(f"b.{id_col}").alias("right_id"),
         F.col(f"a.{ts_col}").alias("left_ts"),
-        (agree / F.lit(float(num_perm))).alias("est_jaccard"),
+        sig_agreement(F.col("a.sig"), F.col("b.sig")).alias("est_jaccard"),
     ).dropDuplicatesWithinWatermark(["left_id", "right_id"])
     if threshold is not None:
         out = out.where(F.col("est_jaccard") >= threshold)

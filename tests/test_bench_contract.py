@@ -43,6 +43,20 @@ def test_benchmark_imports_resolve():
     assert params["cfg"].default is None
 
 
+def test_benchmark_blocking_positional_signatures():
+    """traced.py passes these arguments positionally."""
+    from ditto_spark.operators import blocking as B
+
+    def head(fn, n):
+        return list(inspect.signature(fn).parameters)[:n]
+
+    assert head(B.minhash_signatures, 2) == ["df", "id_col"]
+    assert "num_perm" in inspect.signature(B.minhash_signatures).parameters
+    assert head(B.lsh_bands, 4) == ["sig_df", "id_col", "num_bands", "rows_per_band"]
+    assert head(B.candidates_from_bands, 3) == ["bands_df", "id_col", "max_bucket"]
+    assert head(B.estimated_jaccard, 3) == ["pairs", "sig_df", "id_col"]
+
+
 def test_benchmark_config_fields():
     from ditto_spark.pipeline import PipelineConfig
 

@@ -702,11 +702,16 @@ def test_oph_estimator_quality_and_composition(spark):
 
 
 def test_block_minhash_lsh_oph_mode_recall(spark, small_transcripts):
-    """sig_mode='oph' drops into block_minhash_lsh with the same recall
-    contract as the permutation path on planted duplicates."""
+    """oph_signatures composed with the LSH stages (block_minhash_lsh's
+    default bands and bucket cap) keeps the permutation path's recall
+    contract on planted duplicates."""
     ser = serialize_conversations(small_transcripts)
-    pairs = B.block_minhash_lsh(
-        ser, text_col="block_text", sig_mode="oph"
+    sig = B.oph_signatures(
+        B.shingle(B.tokenize(ser, "block_text"), 2), "conv_id", num_bins=64
+    ).cache()
+    bands = B.lsh_bands(sig, "conv_id", 21, 3)
+    pairs = B.estimated_jaccard(
+        B.candidates_from_bands(bands, "conv_id", 200), sig, "conv_id"
     ).cache()
     truth = golden_clusters(small_transcripts)
     pos = (

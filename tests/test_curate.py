@@ -193,3 +193,7 @@ def test_curate_chunk_boiler_stage(spark):
     by_stage = {r["stage"]: (r["dropped"], r["remaining"]) for r in fun}
     assert by_stage["chunk_boiler"] == (3, 2)
     assert by_stage["near_dup"] == (0, 2)
+    # the default spine has no chunk_boiler stage: refuse rather than
+    # silently drop its rows from the funnel
+    with pytest.raises(ValueError, match="chunk_boiler"):
+        curation_funnel(out)
