@@ -510,7 +510,7 @@ def q_pivot_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIS rounds, yet FULLY value-checked: the DuckDB oracle unrolls the
     rounds as generated CTEs and this query asserts convergence within
     the oracle's round budget."""
-    from ditto_spark.operators.cluster import pivot_clusters
+    from ditto_spark.operators.cluster import cover_singletons, pivot_clusters
 
     docs = _load(spark, sf_dir, "documents")
     edges = (
@@ -523,11 +523,8 @@ def q_pivot_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         pivot_clusters.last_rounds is not None
         and pivot_clusters.last_rounds <= 8
     ), f"pivot rounds {pivot_clusters.last_rounds} exceed oracle unroll budget"
-    return docs.select("doc_id").join(
-        clusters, docs["doc_id"] == clusters["node"], "left"
-    ).select(
-        "doc_id",
-        F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
+    return cover_singletons(
+        docs.select("doc_id"), clusters.withColumnRenamed("node", "doc_id"), "doc_id"
     )
 
 
@@ -1012,9 +1009,10 @@ def q_stable_cluster_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     matches = _rare_shingle_pairs(docs).where(F.col("jaccard") >= 0.5)
     new = assign_clusters(
-        docs.select(F.col("doc_id").alias("conv_id")),
+        docs,
         matches.select("left_id", "right_id"),
-    ).select(F.col("conv_id").alias("doc_id"), "cluster_id")
+        id_col="doc_id",
+    )
     return stabilize_cluster_ids(new, prev, id_col="doc_id").select(
         "doc_id", "cluster_id", "stable_id", "carried"
     )
@@ -4851,12 +4849,8 @@ def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flagship pipeline — its banding is xxhash-based → rows-only.)"""
     docs = _load(spark, sf_dir, "documents")
     matches = _rare_shingle_pairs(docs).where(F.col("jaccard") >= 0.5)
-    clusters = assign_clusters(
-        docs.select(F.col("doc_id").alias("conv_id")),
-        matches.select("left_id", "right_id"),
-    )
-    return clusters.select(
-        F.col("conv_id").alias("doc_id"), F.col("cluster_id")
+    return assign_clusters(
+        docs, matches.select("left_id", "right_id"), id_col="doc_id"
     )
 
 
@@ -4958,12 +4952,12 @@ def q_transcript_dedup_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = score_pairs_builtin(with_text)
     matches = apply_threshold(scored, 0.8).where(F.col("match") == 1)
-    clusters = assign_clusters(
-        docs.select(F.col("doc_id").alias("conv_id")),
+    return assign_clusters(
+        docs,
         matches.select("left_id", "right_id"),
+        id_col="doc_id",
         assume_unique=True,
     )
-    return clusters.select(F.col("conv_id").alias("doc_id"), "cluster_id")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -5041,9 +5035,10 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _rare_shingle_pairs(docs)
     matches = pairs.where(F.col("jaccard") >= 0.5)
     assignment = assign_clusters(
-        docs.select(F.col("doc_id").alias("conv_id")),
+        docs,
         matches.select("left_id", "right_id"),
-    ).select(F.col("conv_id").alias("doc_id"), "cluster_id")
+        id_col="doc_id",
+    )
     return split_clusters(
         assignment,
         pairs.select("left_id", "right_id", F.col("jaccard").alias("score")),

@@ -16,22 +16,81 @@ dedup (large-star's output feeds small-star un-deduplicated: duplicate
 edges are harmless to a min/row_number window, and small-star's dedup
 bounds growth across rounds) — then a lazy localCheckpoint to cut lineage
 (a persisted round table on a real cluster — the resume point) and one tiny
-(count, xor-hash) job per `check_every` rounds for the convergence test.
+(count, xor-hash) job every CHECK_EVERY rounds for the convergence test.
 All driver work is O(1) per round. Loop shuffles are scoped to an
-edge-sized partition count via explicit repartition(loop_parts, keys) on
-the loop tables — never by mutating the session-global
-spark.sql.shuffle.partitions (a concurrent job on the same session must
-not see the loop's partition count).
+edge-sized partition count (`_loop_partitions`) via explicit
+repartition(loop_parts, keys) on the loop tables — never by mutating the
+session-global spark.sql.shuffle.partitions (a concurrent job on the same
+session must not see the loop's partition count).
 
   large-star(x): m = min(Γ(x) ∪ x); emit (w, m) for w ∈ Γ(x), w > x
   small-star(x): N = {w ∈ Γ(x): w < x}; m = min(N); emit
                  (w, m) for w ∈ N ∪ {x}, w ≠ m
+
+Cluster-assignment contract: every clusterer here returns rows only for
+nodes that touch an edge; `cover_singletons` is the one place that gives
+every other id its own cluster (cluster_id = the id itself).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
+
+# Edges per loop partition of the CC and pivot loops (`_loop_partitions`).
+ROWS_PER_PARTITION = 200_000
+# Star rounds per convergence check (why 2: see connected_components).
+CHECK_EVERY = 2
+
+
+def _loop_partitions(spark, n_edges: int) -> int:
+    """Edge-sized shuffle partition count for an iterative loop:
+    max(4, n_edges / ROWS_PER_PARTITION + 1), capped at the session's
+    shuffle.partitions (which is sized for the corpus; edges ≪ corpus).
+    On a 1000-executor cluster this keeps thousands of near-empty
+    reducers out of every round."""
+    try:
+        session_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    except (TypeError, ValueError):
+        session_parts = 200
+    return max(4, min(session_parts, n_edges // ROWS_PER_PARTITION + 1))
+
+
+def _signature(edges: DataFrame) -> tuple:
+    """(edge count, xor of per-edge hashes) — one tiny job. Equal
+    signatures across a round pair mean the edge set is a fixed point."""
+    row = edges.select(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("u", "v")).alias("h"),
+    ).collect()[0]
+    return row["n"], row["h"]
+
+
+def _star_assignment(edges: DataFrame) -> DataFrame:
+    """Stable (u > v) star forest → (conv_id, cluster_id). Roots appear
+    only on the v side — union their self-mapping back in. groupBy-min
+    (not dropDuplicates) keeps the resolution deterministic."""
+    comp = edges.groupBy("u").agg(F.min("v").alias("cluster_id")).select(
+        F.col("u").alias("conv_id"), "cluster_id"
+    )
+    roots = edges.select(
+        F.col("v").alias("conv_id"), F.col("v").alias("cluster_id")
+    ).distinct()
+    return (
+        comp.unionByName(roots)
+        .groupBy("conv_id")
+        .agg(F.min("cluster_id").alias("cluster_id"))
+    )
+
+
+def cover_singletons(
+    ids: DataFrame, clusters: DataFrame, id_col: str, cluster_col: str = "cluster_id"
+) -> DataFrame:
+    """Every row of `ids` gets a cluster: left-join `clusters` (id_col,
+    cluster_col) on id_col; ids with no cluster row map to themselves."""
+    return ids.join(clusters, id_col, "left").withColumn(
+        cluster_col, F.coalesce(cluster_col, id_col)
+    )
 
 
 def _contract_partitions(edges: DataFrame) -> DataFrame:
@@ -142,33 +201,25 @@ def _small_star(edges: DataFrame, parts: int) -> DataFrame:
 
 def connected_components(
     pairs: DataFrame,
-    left_col: str = "left_id",
-    right_col: str = "right_id",
     max_iter: int = 50,
-    check_every: int = 2,
-    rows_per_partition: int = 200_000,
     assume_unique: bool = False,
     contract: bool = True,
 ) -> DataFrame:
     """(left_id, right_id) match edges → (conv_id, cluster_id) with
     cluster_id = min node id of the component. Nodes appearing only as
-    singletons must be unioned in by the caller (see assign_clusters).
+    singletons must be unioned in by the caller (`cover_singletons`).
 
     Serial-fraction controls (the loop is the pipeline's only
     driver-synchronized iteration, so its fixed costs cap scaling
     efficiency):
-    * convergence is tested every `check_every` rounds — the lazy
+    * convergence is tested every CHECK_EVERY = 2 rounds — the lazy
       localCheckpoints of the rounds in between fold into one job, halving
       driver barriers (two stable consecutive signatures are required
       anyway since one round can be a fixed point of only one star);
-    * the loop's shuffles run at a partition count sized to the EDGE table
-      (edges ≪ corpus; the session's shuffle.partitions is sized for the
-      corpus): max(4, n_edges/rows_per_partition) capped at the session
-      setting, applied via explicit repartition on the loop tables — the
+    * the loop's shuffles run at the edge-sized `_loop_partitions` count,
+      applied via explicit repartition on the loop tables — the
       session-global shuffle.partitions is never mutated, so concurrent
-      jobs on the same SparkSession are unaffected. On a 1000-executor
-      cluster the same knob keeps thousands of near-empty reducers out of
-      every round.
+      jobs on the same SparkSession are unaffected;
     * each star is one min-WINDOW shuffle; a hub node's whole neighborhood
       lands in one task, which suits dedup graphs (millions of small
       cliques, most collapsed by the contraction below before the loop).
@@ -191,9 +242,8 @@ def connected_components(
     under concurrent calls on one session read it immediately after the
     call you mean."""
     connected_components.last_rounds = None
-    spark = pairs.sparkSession
     e = pairs.select(
-        F.col(left_col).alias("a"), F.col(right_col).alias("b")
+        F.col("left_id").alias("a"), F.col("right_id").alias("b")
     ).where(F.col("a") != F.col("b"))
     oriented = e.select(
         F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
@@ -229,8 +279,8 @@ def connected_components(
     # v-side member is emitted once per partition, possibly under two
     # roots. Under (a)+(b), orientation (u > v) makes each root the min of
     # its star and connectivity preservation makes each star exactly one
-    # input component — the final assembly below is then exact with zero
-    # star rounds. Checked with ONE node-keyed aggregate (ids only,
+    # input component — the final `_star_assignment` is then exact with
+    # zero star rounds. Checked with ONE node-keyed aggregate (ids only,
     # map-side partial) + an isEmpty probe; on star input this replaces
     # the loop's 2 fixed-point rounds (6 shuffles, 2 collects).
     vtype = edges.schema["v"].dataType.simpleString()
@@ -249,51 +299,27 @@ def connected_components(
     )
     if viol.isEmpty():
         connected_components.last_rounds = 0
-        return (
-            edges.groupBy("u")
-            .agg(F.min("v").alias("cluster_id"))
-            .select(F.col("u").alias("conv_id"), "cluster_id")
-            .unionByName(
-                edges.select(
-                    F.col("v").alias("conv_id"), F.col("v").alias("cluster_id")
-                ).distinct()
-            )
-            .groupBy("conv_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-        )
-    init_row = edges.select(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-    ).collect()[0]
-    n_edges = init_row["n"]  # > 0: empty edge sets exit via the star path
-    try:
-        session_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except (TypeError, ValueError):
-        session_parts = 200
-    loop_parts = max(4, min(session_parts, n_edges // rows_per_partition + 1))
-
+        return _star_assignment(edges)
     # Seed the convergence test with the INPUT's signature: post-contraction
     # the graph is often already a union of min-rooted stars (a fixed point
     # of both stars), and with a seeded prev_sig the first check at round
-    # check_every can conclude — saving a full extra round pair. Identical
+    # CHECK_EVERY can conclude — saving a full extra round pair. Identical
     # signatures across one round pair still mean "fixed point of both
     # stars", same guarantee as before.
-    prev_sig = (init_row["n"], init_row["h"])
+    prev_sig = _signature(edges)
+    # prev_sig[0] > 0: empty edge sets exit via the star path
+    loop_parts = _loop_partitions(pairs.sparkSession, prev_sig[0])
     converged = False
     for rnd in range(max_iter):
         # lazy checkpoint: the signature collect below materializes it
         # (with the intermediate rounds), so convergence costs ONE
-        # driver-synchronized job per check_every rounds
+        # driver-synchronized job per CHECK_EVERY rounds
         edges = _small_star(
             _large_star(edges, loop_parts), loop_parts
         ).localCheckpoint(eager=False)
-        if (rnd + 1) % check_every != 0 and rnd + 1 < max_iter:
+        if (rnd + 1) % CHECK_EVERY != 0 and rnd + 1 < max_iter:
             continue
-        sig_row = edges.select(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
+        sig = _signature(edges)
         if sig == prev_sig:
             converged = True
             connected_components.last_rounds = rnd + 1
@@ -307,20 +333,8 @@ def connected_components(
             f"connected_components did not converge within max_iter={max_iter} "
             "rounds; raise max_iter (large-star/small-star needs O(log n) rounds)"
         )
-    # stable state: stars rooted at the component minimum. Roots appear only
-    # on the v side (u > v invariant) — union their self-mapping back in.
-    # groupBy-min (not dropDuplicates) keeps the resolution deterministic.
-    comp = edges.groupBy("u").agg(F.min("v").alias("cluster_id")).select(
-        F.col("u").alias("conv_id"), "cluster_id"
-    )
-    roots = edges.select(
-        F.col("v").alias("conv_id"), F.col("v").alias("cluster_id")
-    ).distinct()
-    return (
-        comp.unionByName(roots)
-        .groupBy("conv_id")
-        .agg(F.min("cluster_id").alias("cluster_id"))
-    )
+    # stable state: stars rooted at the component minimum
+    return _star_assignment(edges)
 
 
 def assign_clusters(
@@ -329,13 +343,13 @@ def assign_clusters(
     id_col: str = "conv_id",
     assume_unique: bool = False,
 ) -> DataFrame:
-    """Full assignment: matched components + singletons as their own cluster."""
+    """Full assignment (id_col, cluster_id): matched components +
+    singletons as their own cluster, one row per distinct id."""
     comp = connected_components(pairs, assume_unique=assume_unique)
-    return (
-        all_ids.select(F.col(id_col).alias("conv_id"))
-        .distinct()
-        .join(comp, "conv_id", "left")
-        .withColumn("cluster_id", F.coalesce("cluster_id", "conv_id"))
+    return cover_singletons(
+        all_ids.select(id_col).distinct(),
+        comp.withColumnRenamed("conv_id", id_col),
+        id_col,
     )
 
 
@@ -465,13 +479,10 @@ def merge_edge_batch(
         .distinct()
         .join(assignments.select(id_col), id_col, "left_anti")
     )
-    fresh_assigned = (
-        fresh.join(
-            meta.select(F.col("conv_id").alias(id_col), F.col("cluster_id")),
-            id_col,
-            "left",
-        )
-        .withColumn("cluster_id", F.coalesce("cluster_id", F.col(id_col)))
+    fresh_assigned = cover_singletons(
+        fresh,
+        meta.select(F.col("conv_id").alias(id_col), F.col("cluster_id")),
+        id_col,
     )
     return merged.unionByName(fresh_assigned)
 
@@ -560,13 +571,13 @@ def split_clusters(
         "left_id", "right_id"
     )
     comp = connected_components(hi).select(
-        F.col("conv_id").alias(id_col), F.col("cluster_id").alias("__sub")
+        F.col("conv_id").alias(id_col), F.col("cluster_id").alias("subcluster_id")
     )
-    out = (
-        assignments.select(F.col(id_col), F.col(cluster_col))
-        .join(comp, id_col, "left")
-        .withColumn("subcluster_id", F.coalesce("__sub", F.col(id_col)))
-        .drop("__sub")
+    out = cover_singletons(
+        assignments.select(F.col(id_col), F.col(cluster_col)),
+        comp,
+        id_col,
+        "subcluster_id",
     )
     nsub = out.groupBy(cluster_col).agg(
         F.countDistinct("subcluster_id").cast("long").alias("n_subclusters")
@@ -773,11 +784,6 @@ def _tarjan_cuts(nodes, adj):
     return set(bridges), arts
 
 
-def _tarjan_bridges(nodes, adj):
-    """Bridges only — see _tarjan_cuts."""
-    return _tarjan_cuts(nodes, adj)[0]
-
-
 def cluster_bridge_edges(
     edges: DataFrame,
     assignment: DataFrame,
@@ -877,11 +883,8 @@ def cluster_bridge_edges(
 
 def pivot_clusters(
     pairs: DataFrame,
-    left_col: str = "left_id",
-    right_col: str = "right_id",
     seed: int = 17,
     max_rounds: int = 64,
-    rows_per_partition: int = 200_000,
 ) -> DataFrame:
     """KwikCluster pivot correlation clustering (Ailon, Charikar & Newman,
     JACM 2008; parallelized via the lex-first-MIS rounds of Blelloch,
@@ -908,28 +911,26 @@ def pivot_clusters(
 
     Scale shape (same discipline as connected_components): per round, one
     self-equi-join of the ACTIVE edge set + one groupBy-min keyed on node
-    ids only (ranks are 32-char strings, no payload), shuffles sized to
-    the edge table via explicit repartition — the session's
-    shuffle.partitions is never mutated; active edges shrink geometrically
-    (each round removes pivots AND their whole neighborhoods). The final
-    assignment is one edge-vs-pivot semi-join + groupBy-min. Returns
-    (node, cluster_id) for every node incident to an edge; singletons are
-    the caller's union (assign_clusters pattern). Raises on
-    non-convergence within max_rounds; `pivot_clusters.last_rounds` holds
-    the executed round count."""
+    ids only (ranks are 32-char strings, no payload), shuffles at the same
+    edge-sized `_loop_partitions` count via explicit repartition — the
+    session's shuffle.partitions is never mutated; active edges shrink
+    geometrically (each round removes pivots AND their whole
+    neighborhoods). The final assignment is one edge-vs-pivot semi-join +
+    groupBy-min. Returns (node, cluster_id) for every node incident to an
+    (left_id, right_id) edge; singletons are the caller's
+    `cover_singletons`. Raises on non-convergence within max_rounds;
+    `pivot_clusters.last_rounds` holds the executed round count."""
     pivot_clusters.last_rounds = None
     spark = pairs.sparkSession
     e = pairs.select(
-        F.col(left_col).alias("x"), F.col(right_col).alias("y")
+        F.col("left_id").alias("x"), F.col("right_id").alias("y")
     ).where(F.col("x") != F.col("y"))
     sym = e.union(e.select(F.col("y").alias("x"), F.col("x").alias("y"))).distinct()
 
     def rk(c) -> F.Column:
         return F.md5(F.concat_ws(":", F.lit(str(seed)), c.cast("string")))
 
-    n_edges = sym.count()
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop_parts = max(4, min(session_parts, n_edges // rows_per_partition + 1))
+    loop_parts = _loop_partitions(spark, sym.count())
     sym = sym.repartition(loop_parts, "x").localCheckpoint(eager=True)
     active = (
         sym.select(F.col("x").alias("n")).distinct()
@@ -977,7 +978,7 @@ def pivot_clusters(
     if not pivot_rounds:
         # no edges at all (caller unions singletons anyway); keep the
         # caller's id type
-        t = pairs.schema[left_col].dataType.simpleString()
+        t = pairs.schema["left_id"].dataType.simpleString()
         return spark.createDataFrame([], f"node {t}, cluster_id {t}")
     piv = pivot_rounds[0]
     for p in pivot_rounds[1:]:

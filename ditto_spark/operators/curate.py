@@ -260,12 +260,8 @@ def curate_documents(
     # min id (connected_components' deterministic resolution), so the
     # representative test is simply doc_id == cluster_id
     edges = _near_dup_edges(cb_surv, id_col, text_col, cfg)
-    clusters = assign_clusters(
-        cb_surv.select(F.col(id_col).alias("conv_id")), edges, assume_unique=True
-    )
-    nd_keep = clusters.where(F.col("cluster_id") == F.col("conv_id")).select(
-        F.col("conv_id").alias(id_col)
-    )
+    clusters = assign_clusters(cb_surv, edges, id_col=id_col, assume_unique=True)
+    nd_keep = clusters.where(F.col("cluster_id") == F.col(id_col)).select(id_col)
     nd_surv = cb_surv.join(nd_keep, id_col)
 
     drops = [

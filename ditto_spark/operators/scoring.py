@@ -39,8 +39,6 @@ import pyspark.sql.functions as F
 
 from ditto_spark.operators.blocking import TOKEN_PATTERN
 
-_TOKEN_RE = r"[a-z0-9]+"
-
 SCORE_SCHEMA = "left_id string, right_id string, prob double"
 
 

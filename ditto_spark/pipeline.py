@@ -32,7 +32,7 @@ from ditto_spark.operators.scoring import (
     score_pairs_builtin,
     apply_threshold,
 )
-from ditto_spark.operators.cluster import assign_clusters
+from ditto_spark.operators.cluster import assign_clusters, cover_singletons
 
 
 @dataclass
@@ -294,11 +294,8 @@ def dedup_transcripts_progressive(
     )
     if auto:
         with_text.unpersist()
-    clusters = (
-        serialized.select("conv_id")
-        .distinct()
-        .join(assignments, "conv_id", "left")
-        .withColumn("cluster_id", F.coalesce("cluster_id", "conv_id"))
+    clusters = cover_singletons(
+        serialized.select("conv_id").distinct(), assignments, "conv_id"
     )
     return clusters, {**stats, **batch_stats}
 

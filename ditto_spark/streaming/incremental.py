@@ -388,9 +388,7 @@ def make_cluster_maintainer(assignment_path: str, id_col: str = "conv_id"):
             nodes = edges.select(
                 F.explode(F.array("left_id", "right_id")).alias(id_col)
             ).distinct()
-            merged = assign_clusters(nodes, edges, id_col=id_col).withColumnRenamed(
-                "conv_id", id_col
-            )
+            merged = assign_clusters(nodes, edges, id_col=id_col)
         # stage-then-swap: never read and overwrite the same files in one
         # job. Crash windows: after the first rename, assignment_path is
         # missing but '._old' survives (restored above on replay); after

@@ -59,7 +59,11 @@ def main() -> None:
                 " ",
                 F.transform(
                     F.split(F.col("text"), " "),
-                    lambda t: F.concat(t, F.lit("r"), F.col("rep").cast("string")),
+                    # empty strings (leading / repeated spaces) stay empty,
+                    # so each replica keeps the source's token structure
+                    lambda t: F.when(t == "", t).otherwise(
+                        F.concat(t, F.lit("r"), F.col("rep").cast("string"))
+                    ),
                 ),
             ).alias("text"),
             *[c for c in docs.columns if c not in ("doc_id", "text")],

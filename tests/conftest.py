@@ -5,10 +5,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The library's 64g default heap lets the one session-scoped JVM grow past
-# the physical memory of a small test host (the suite's data is tiny, but
-# G1 expands the heap long before it collects), and the kernel then kills
-# it mid-suite. Cap the test JVM unless the caller chose a size.
+# The library's default heap is half of physical memory (up to 64g), but the
+# suite's JVM heap, its Python workers and a tmpfs shuffle directory all
+# share one small host's RAM; G1 expands the heap long before it collects,
+# so an uncapped session-scoped JVM can push the host out of memory
+# mid-suite. Cap the test JVM unless the caller chose a size.
 os.environ.setdefault("DITTO_SPARK_DRIVER_MEM", "4g")
 
 from ditto_spark.session import get_spark  # noqa: E402

@@ -4,7 +4,9 @@ unchanged between library revisions. This pins the library surface it
 uses, so a simplification of `ditto_spark` cannot silently break the traced
 run."""
 
+import ast
 import inspect
+import os
 
 
 def test_benchmark_imports_resolve():
@@ -81,3 +83,39 @@ def test_connected_components_reports_rounds(spark):
     edges = spark.createDataFrame([("a", "b"), ("b", "c")], ["left_id", "right_id"])
     connected_components(edges).collect()
     assert connected_components.last_rounds is not None
+
+
+def test_benchmark_assign_clusters_surface(spark):
+    """traced.py calls assign_clusters(serialized, matches,
+    assume_unique=True) and reads its (conv_id, cluster_id) output."""
+    from ditto_spark.operators.cluster import assign_clusters
+
+    params = list(inspect.signature(assign_clusters).parameters)
+    assert params[:2] == ["all_ids", "pairs"]
+    assert "assume_unique" in params
+
+    ids = spark.createDataFrame([("a",), ("b",), ("c",)], "conv_id string")
+    pairs = spark.createDataFrame([("a", "b")], "left_id string, right_id string")
+    assert set(assign_clusters(ids, pairs, assume_unique=True).columns) == {
+        "conv_id",
+        "cluster_id",
+    }
+
+    traced = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench",
+        "traced.py",
+    )
+    with open(traced) as f:
+        tree = ast.parse(f.read())
+    calls = [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "assign_clusters"
+    ]
+    assert calls
+    for call in calls:
+        assert len(call.args) == 2
+        assert {k.arg for k in call.keywords} <= {"assume_unique"}

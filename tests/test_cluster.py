@@ -86,6 +86,18 @@ def test_loop_path_without_contraction(spark):
                    "x": "x", "y": "x", "z": "x"}
 
 
+def test_connected_components_nonconvergence_raises(spark):
+    import pytest
+
+    nodes = [f"n{i:02d}" for i in range(12)]
+    df = spark.createDataFrame(
+        list(zip(nodes, nodes[1:])), "left_id string, right_id string"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, contract=False, max_iter=1)
+    assert connected_components.last_rounds is None
+
+
 def test_empty_edges(spark):
     df = spark.createDataFrame([], "left_id string, right_id string")
     assert connected_components(df).count() == 0
@@ -96,6 +108,14 @@ def test_singletons_assigned_self(spark):
     pairs = spark.createDataFrame([("a", "b")], "left_id string, right_id string")
     got = {r["conv_id"]: r["cluster_id"] for r in assign_clusters(ids, pairs).collect()}
     assert got == {"a": "a", "b": "a", "c": "c", "lone": "lone"}
+
+
+def test_assign_clusters_writes_id_col(spark):
+    ids = spark.createDataFrame([(1, "x"), (2, "y"), (3, "z")], "doc_id long, text string")
+    pairs = spark.createDataFrame([(1, 2)], "left_id long, right_id long")
+    out = assign_clusters(ids, pairs, id_col="doc_id")
+    assert out.columns == ["doc_id", "cluster_id"]
+    assert sorted(map(tuple, out.collect())) == [(1, 1), (2, 1), (3, 3)]
 
 
 def test_cluster_representatives_survivorship_rules(spark):
