@@ -3871,9 +3871,7 @@ def _chunk_windows(
     Production chunk-pair code (`textprep.chunk_near_dup_pairs`) avoids
     the composite entirely via string keys; this int form exists for the
     SQL-portable oracle twin."""
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != ""
-    )
+    toks = B.content_tokens(F.col("text"))
     base = docs.select(F.col("doc_id"), toks.alias("t")).withColumn(
         "nc", F.ceil(F.size("t") / F.lit(w)).cast("int")
     )
@@ -4897,10 +4895,7 @@ def _event_entity_docs(ev: DataFrame) -> DataFrame:
 
     def text_of(sliced) -> F.Column:
         joined = F.concat_ws(" ", F.transform(sliced, lambda s: s["txt"]))
-        return F.concat_ws(
-            " ",
-            F.filter(F.split(F.lower(joined), "[^a-z0-9]+"), lambda t: t != ""),
-        )
+        return F.concat_ws(" ", B.content_tokens(joined))
 
     n = F.size("a")
     full = arr.select(

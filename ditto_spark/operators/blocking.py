@@ -48,14 +48,18 @@ TOKEN_PATTERN = "[^a-z0-9]+"
 SALT_SEED = 7
 
 
+def content_tokens(col: Column) -> Column:
+    """Lowercase alnum token stream of `col`: lowercase, split on
+    TOKEN_PATTERN, drop empty strings. Every blocking, SimHash, chunking and
+    JVM-Jaccard tokenizer calls this, so a pair blocks and scores on the same
+    tokens. The DuckDB oracles in __spark_entry__.py replicate
+    '[^a-z0-9]+' in SQL; a change to TOKEN_PATTERN must change them too."""
+    return F.filter(F.split(F.lower(col), TOKEN_PATTERN), lambda t: t != "")
+
+
 def tokenize(df: DataFrame, text_col: str = "entity_text") -> DataFrame:
     """Add a `tokens` array column: lowercase alnum token stream."""
-    return df.withColumn(
-        "tokens",
-        F.filter(
-            F.split(F.lower(F.col(text_col)), TOKEN_PATTERN), lambda t: t != ""
-        ),
-    )
+    return df.withColumn("tokens", content_tokens(F.col(text_col)))
 
 
 def shingle(df: DataFrame, n: int = 3, tokens_col: str = "tokens") -> DataFrame:

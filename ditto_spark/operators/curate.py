@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ditto_spark.operators.blocking import (
+    content_tokens,
     ngram_overlap_cross,
     shingle,
     tokenize,
@@ -233,10 +234,7 @@ def curate_documents(
             .groupBy("__doc")
             .agg(F.count(F.lit(1)).alias("__flagged"))
         )
-        ch_toks = F.filter(
-            F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-            lambda t: t != "",
-        )
+        ch_toks = content_tokens(F.col(text_col))
         ncs = e_surv.select(
             F.col(id_col),
             F.col(id_col).cast("string").alias("__doc"),

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
+from ditto_spark.operators.scoring import idf_lookup
+
 _GROUPS = [
     ("[bfpv]", "1"),
     ("[cgjkqsxz]", "2"),
@@ -212,7 +214,6 @@ def soft_tfidf_scores(
     idf_df: DataFrame,
     theta: float = 0.9,
     default_idf: float = 1.0,
-    broadcast_idf: bool = True,
 ) -> DataFrame:
     """Soft-TF-IDF hybrid comparator (Cohen, Ravikumar & Fienberg 2003 —
     the best-performing string metric in their record-linkage study):
@@ -236,9 +237,6 @@ def soft_tfidf_scores(
     final left join. Per-pair cost bounded by its own token counts.
     """
     jw = jaro_winkler_udf()
-    idf = idf_df.select("token", "idf")
-    if broadcast_idf:
-        idf = F.broadcast(idf)
 
     def side(col: str, pre: str) -> DataFrame:
         t = pairs.select(
@@ -247,17 +245,10 @@ def soft_tfidf_scores(
         tf = t.groupBy(*key_cols, f"{pre}t").agg(
             F.count(F.lit(1)).alias("tf")
         )
-        w = tf.join(
-            idf.select(F.col("token").alias(f"{pre}t"), "idf"),
-            f"{pre}t",
-            "left",
-        ).select(
+        w = idf_lookup(tf, idf_df, default_idf, token_col=f"{pre}t").select(
             *key_cols,
             f"{pre}t",
-            (
-                F.log(F.col("tf") + 1.0)
-                * F.coalesce("idf", F.lit(default_idf))
-            ).alias("w"),
+            (F.log(F.col("tf") + 1.0) * F.col("idf")).alias("w"),
         )
         norms = w.groupBy(*key_cols).agg(
             F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("n")

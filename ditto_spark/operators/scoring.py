@@ -14,18 +14,26 @@ partition — the "batched pre-trained-LM cross-encoder inside pandas/Arrow
 iterator UDFs with no per-row Python" contract from BASELINE.json.
 
 Two scorers plug into the same slot:
-  * token-cosine surrogate (default, deterministic, no downloads): hashed
-    token-count cosine computed with pandas str ops + numpy factorize —
-    batch-vectorized, no per-row Python functions. Used by tests/CI where
-    LM weights are unavailable (SURVEY.md §7 risks).
+  * token-cosine surrogate (default, deterministic, no downloads):
+    token-count cosine over exact whitespace tokens — pandas str ops split
+    them, `pd.factorize` maps each distinct token to an int code (no
+    hashing, so no collisions) — batch-vectorized, no per-row Python
+    functions. Used by tests/CI where LM weights are unavailable
+    (SURVEY.md §7 risks).
   * HF cross-encoder (ditto semantics) behind an import-try: loads
     transformers+torch once per partition iterator, tokenizes each Arrow
     batch with padding/truncation (dataset.py:73-76, dataset.py:91-117
     semantics) and applies softmax over the 2-class head.
 
 There is also a pure-JVM fast path (`score_pairs_builtin`) — token Jaccard
-via array_intersect/array_union — used as the benchmark baseline and the
-DuckDB-oracle-checkable scorer.
+via array_intersect/array_union over `blocking.content_tokens` — used as the
+benchmark baseline and the DuckDB-oracle-checkable scorer.
+
+The IDF scorers (`score_pairs_tfidf_relational`, `score_pairs_weighted_jaccard`,
+`match_evidence`, `phonetic.soft_tfidf_scores`) weight tokens through one
+broadcast lookup, `idf_lookup`; the relational ones and the IDF builders
+tokenize with `_ws_tokens`, which splits where the Arrow scorer's
+`_token_lists` (Python str.split()) splits.
 """
 
 from __future__ import annotations
@@ -34,12 +42,14 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
-from ditto_spark.operators.blocking import TOKEN_PATTERN
+from ditto_spark.operators.blocking import content_tokens
 
 SCORE_SCHEMA = "left_id string, right_id string, prob double"
+# attach_pair_text truncates each side's text to this many characters
+PAIR_TEXT_MAX_CHARS = 4096
 
 
 def _token_lists(s: pd.Series) -> pd.Series:
@@ -137,71 +147,84 @@ def idf_weighted_scorer_factory(
     return factory
 
 
-def idf_tokens_expr(text_col: str) -> F.Column:
-    """Distinct whitespace tokens of the lowercased text — the EXACT token
-    stream `_token_lists` produces (str.lower().str.split()), so IDF lookups
-    hit for every token the scorer emits, punctuation-adjacent ones
-    included. Keep the two tokenizers in lockstep."""
-    return F.array_distinct(
-        F.filter(F.split(F.lower(F.col(text_col)), "\\s+"), lambda t: t != "")
+def _ws_tokens(col: Column) -> Column:
+    """Whitespace tokens of the lowercased text, split where Python's
+    str.split() splits (every str.isspace() character). Java's \\s matches
+    only [ \\t\\n\\x0B\\f\\r], so the class is spelled out."""
+    return F.filter(
+        F.split(
+            F.lower(col),
+            r"[\t\n\x0B\f\r\x1C-\x20\x85\xA0\u1680\u2000-\u200A"
+            r"\u2028\u2029\u202F\u205F\u3000]+",
+        ),
+        lambda t: t != "",
     )
 
 
-def build_idf_df(texts, text_col: str = "txt", doc_count: int | None = None):
+def idf_tokens_expr(text_col: str) -> Column:
+    """Distinct whitespace tokens of the lowercased text — the token stream
+    `_token_lists` produces (str.lower().str.split()), so IDF lookups hit
+    for every token the Arrow scorer emits, punctuation-adjacent ones
+    included, and the relational scorers score exactly what the dict path
+    scores. Keep the two tokenizers in lockstep."""
+    return F.array_distinct(_ws_tokens(F.col(text_col)))
+
+
+def build_idf_df(texts, text_col: str = "txt"):
     """(doc-distinct) texts DataFrame → (token, idf) DataFrame with
     idf = log(1 + N/df). Stays on the cluster — this is the corpus-scale
     form; broadcast-join it against exploded pair tokens
     (`score_pairs_tfidf_relational`) instead of collecting a dict."""
     toks = texts.select(F.explode(idf_tokens_expr(text_col)).alias("token"))
     df_counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df_cnt"))
-    n = doc_count or texts.count()
+    n = texts.count()
     return df_counts.select(
         "token", F.log(F.lit(1.0) + F.lit(float(n)) / F.col("df_cnt")).alias("idf")
     )
 
 
-def build_idf_dict(
-    texts, text_col: str = "txt", doc_count: int | None = None
-) -> dict[str, float]:
+def build_idf_dict(texts, text_col: str = "txt") -> dict[str, float]:
     """Driver-side {token: idf} — small-vocabulary fast path (labeled eval
     sets). At corpus scale use `build_idf_df` + the relational scorer; this
     collect would pull the whole vocabulary through the driver."""
-    return {
-        r["token"]: r["idf"]
-        for r in build_idf_df(texts, text_col, doc_count).collect()
-    }
+    return {r["token"]: r["idf"] for r in build_idf_df(texts, text_col).collect()}
+
+
+def idf_lookup(
+    df: DataFrame, idf_df: DataFrame, default_idf: float, token_col: str = "token"
+) -> DataFrame:
+    """`df` left-joined on `token_col` to the (token, idf) index, with
+    `idf` = the token's weight, or `default_idf` for tokens the index
+    lacks. The index is broadcast (vocabulary ≪ pair tokens), so the
+    exploded pair side never shuffles for the lookup."""
+    idf = F.broadcast(idf_df.select(F.col("token").alias(token_col), "idf"))
+    return df.join(idf, token_col, "left").withColumn(
+        "idf", F.coalesce("idf", F.lit(float(default_idf)))
+    )
 
 
 def score_pairs_tfidf_relational(
     pairs_with_text: DataFrame,
     idf_df: DataFrame,
     default_idf: float = 1.0,
-    broadcast_idf: bool = True,
 ) -> DataFrame:
     """TF-IDF cosine computed RELATIONALLY: explode pair tokens, join the
     (token, idf) index, aggregate dot product and norms per pair. Produces
     the exact scores of `idf_weighted_scorer_factory` (same whitespace
     tokenizer, same default weight) without ever collecting the vocabulary
-    to the driver — the corpus-scale IDF path. The idf index is
-    broadcast-joined by default (vocabulary ≪ corpus); pass
-    broadcast_idf=False to let AQE pick a shuffle join for huge vocabs."""
-    idf = idf_df.select("token", "idf")
-    if broadcast_idf:
-        idf = F.broadcast(idf)
+    to the driver — the corpus-scale IDF path."""
 
     def side(txt_col: str, prefix: str) -> DataFrame:
         toks = pairs_with_text.select(
             "left_id", "right_id",
-            F.explode(
-                F.filter(F.split(F.lower(F.col(txt_col)), "\\s+"), lambda t: t != "")
-            ).alias("token"),
+            F.explode(_ws_tokens(F.col(txt_col))).alias("token"),
         )
         counted = toks.groupBy("left_id", "right_id", "token").agg(
             F.count(F.lit(1)).alias("cnt")
         )
-        return counted.join(idf, "token", "left").select(
+        return idf_lookup(counted, idf_df, default_idf).select(
             "left_id", "right_id", "token",
-            (F.col("cnt") * F.coalesce("idf", F.lit(default_idf))).alias(f"{prefix}_w"),
+            (F.col("cnt") * F.col("idf")).alias(f"{prefix}_w"),
         )
 
     l = side("left_txt", "l")
@@ -237,12 +260,11 @@ def score_pairs_progressive(
     pairs_with_text: DataFrame,
     threshold: float,
     scorer_factory: Callable[[], Callable[[pd.Series, pd.Series], np.ndarray]] | None = None,
-    est_col: str = "est_jaccard",
     n_batches: int = 4,
 ) -> tuple[DataFrame, dict]:
     """Progressive (pay-as-you-go) pairwise scoring with transitivity
     pruning: candidate pairs are processed in descending blocker-estimate
-    order (fixed [0,1] bins on `est_col` — no global sort), and each batch
+    order (fixed [0,1] bins on `est_jaccard` — no global sort), and each batch
     drops pairs whose endpoints ALREADY share a cluster before the Arrow
     scorer sees them (Whang et al. 2013 pay-as-you-go ER, composed with
     `cluster.merge_edge_batch`'s exact incremental CC).
@@ -280,7 +302,7 @@ def score_pairs_progressive(
             F.lit(n_batches - 1),
             F.greatest(
                 F.lit(0),
-                F.floor((F.lit(1.0) - F.col(est_col)) * n_batches),
+                F.floor((F.lit(1.0) - F.col("est_jaccard")) * n_batches),
             ),
         ).cast("int"),
     ).persist()
@@ -350,7 +372,6 @@ def match_evidence(
     idf_df: DataFrame,
     k: int = 5,
     default_idf: float = 0.0,
-    broadcast_idf: bool = True,
     ndigits: int = 6,
 ) -> DataFrame:
     """Per-pair match EVIDENCE for clerical review: the top-k shared tokens
@@ -376,9 +397,6 @@ def match_evidence(
 
     Output: (left_id, right_id, evidence, evidence_weight, n_overlap).
     """
-    idf = idf_df.select("token", "idf")
-    if broadcast_idf:
-        idf = F.broadcast(idf)
     shared = pairs_with_text.select(
         "left_id",
         "right_id",
@@ -388,11 +406,8 @@ def match_evidence(
             )
         ).alias("token"),
     )
-    weighted = shared.join(idf, "token", "left").select(
-        "left_id",
-        "right_id",
-        "token",
-        F.coalesce("idf", F.lit(float(default_idf))).alias("w"),
+    weighted = idf_lookup(shared, idf_df, default_idf).select(
+        "left_id", "right_id", "token", F.col("idf").alias("w")
     )
     # ordering-in-agg top-k: sort (−w, token) structs inside the aggregate,
     # slice k, project tokens — deterministic (idf desc, token asc) ties
@@ -555,34 +570,32 @@ def score_pairs(
     return cols.mapInPandas(run, schema=SCORE_SCHEMA)
 
 
-def attach_pair_text(
-    pairs: DataFrame, serialized: DataFrame, id_col: str = "conv_id",
-    max_chars: int | None = 4096,
-) -> DataFrame:
-    """Join serialized entity text onto candidate pairs (two hash joins;
-    broadcast if the entity table is small — Catalyst/AQE decides).
+def attach_pair_text(pairs: DataFrame, serialized: DataFrame) -> DataFrame:
+    """Join serialized (conv_id, entity_text) onto candidate pairs as
+    left_txt/right_txt (two hash joins; broadcast if the entity table is
+    small — Catalyst/AQE decides).
 
-    Text is truncated to max_chars BEFORE the join: the downstream scorer
-    truncates anyway (the reference tokenizes with max_length/truncation —
-    dataset.py:73-76; 4096 chars ≳ 256 subwords), and truncating early
-    halves the bytes moved through the two join shuffles + the scorer
-    repartition at 10^12-turn scale."""
-    txt = F.col("entity_text")
-    if max_chars is not None:
-        txt = F.substring(txt, 1, max_chars)
-    ser = serialized.select(F.col(id_col), txt.alias("entity_text"))
+    Text is truncated to PAIR_TEXT_MAX_CHARS (4096) BEFORE the join: the
+    downstream scorer truncates anyway (the reference tokenizes with
+    max_length/truncation — dataset.py:73-76; 4096 chars ≳ 256 subwords),
+    and truncating early halves the bytes moved through the two join
+    shuffles + the scorer repartition at 10^12-turn scale."""
+    ser = serialized.select(
+        "conv_id",
+        F.substring("entity_text", 1, PAIR_TEXT_MAX_CHARS).alias("entity_text"),
+    )
     # shuffle_hash: build on the entity side (one row per conversation),
     # stream the (much larger) pair side — a sort-merge join would sort the
     # pair table twice with text payloads attached. Catalyst still upgrades
     # to broadcast when the entity table fits the threshold.
     return (
         pairs.join(
-            ser.withColumnsRenamed({id_col: "left_id", "entity_text": "left_txt"})
+            ser.withColumnsRenamed({"conv_id": "left_id", "entity_text": "left_txt"})
             .hint("shuffle_hash"),
             "left_id",
         )
         .join(
-            ser.withColumnsRenamed({id_col: "right_id", "entity_text": "right_txt"})
+            ser.withColumnsRenamed({"conv_id": "right_id", "entity_text": "right_txt"})
             .hint("shuffle_hash"),
             "right_id",
         )
@@ -594,10 +607,8 @@ def score_pairs_builtin(pairs_with_text: DataFrame) -> DataFrame:
 
     Zero Python — the throughput baseline the UDF path is benchmarked
     against, and the scorer used by the DuckDB oracle queries."""
-    tok = lambda c: F.array_distinct(  # noqa: E731
-        F.filter(F.split(F.lower(c), TOKEN_PATTERN), lambda t: t != "")
-    )
-    lt, rt = tok(F.col("left_txt")), tok(F.col("right_txt"))
+    lt = F.array_distinct(content_tokens(F.col("left_txt")))
+    rt = F.array_distinct(content_tokens(F.col("right_txt")))
     return pairs_with_text.select(
         "left_id",
         "right_id",
@@ -758,7 +769,6 @@ def score_pairs_weighted_jaccard(
     pairs_with_text: DataFrame,
     idf_df: DataFrame,
     default_idf: float = 1.0,
-    broadcast_idf: bool = True,
 ) -> DataFrame:
     """Set-weighted Jaccard over DISTINCT tokens (Chum et al. 2008's
     weighted set similarity, the standard IDF-weighted complement of the
@@ -769,19 +779,16 @@ def score_pairs_weighted_jaccard(
     `score_pairs_tfidf_relational`: explode pair tokens (distinct — set
     semantics), broadcast-join the (token, idf) index, three pair-keyed
     partial aggregates; union weight arrives as L + R − I (never a union
-    materialization). Output (left_id, right_id, prob in [0,1])."""
-    idf = idf_df.select("token", "idf")
-    if broadcast_idf:
-        idf = F.broadcast(idf)
+    materialization). Output (left_id, right_id, prob in [0,1]); a pair
+    with a token-less side scores 0.0."""
 
     def side(txt_col: str, prefix: str) -> DataFrame:
         toks = pairs_with_text.select(
             "left_id", "right_id",
             F.explode(idf_tokens_expr(txt_col)).alias("token"),
         )
-        return toks.join(idf, "token", "left").select(
-            "left_id", "right_id", "token",
-            F.coalesce("idf", F.lit(default_idf)).alias(f"{prefix}_w"),
+        return idf_lookup(toks, idf_df, default_idf).select(
+            "left_id", "right_id", "token", F.col("idf").alias(f"{prefix}_w")
         )
 
     l = side("left_txt", "l")
@@ -793,6 +800,8 @@ def score_pairs_weighted_jaccard(
         .groupBy("left_id", "right_id")
         .agg(F.sum("l_w").alias("i_s"))
     )
+    # a side with no tokens has no sum row: its weight is 0, not NULL
+    ls, rs, i_s = (F.coalesce(c, F.lit(0.0)) for c in ("l_s", "r_s", "i_s"))
     return (
         pairs_with_text.select("left_id", "right_id")
         .join(l_sum, ["left_id", "right_id"], "left")
@@ -800,11 +809,9 @@ def score_pairs_weighted_jaccard(
         .join(inter, ["left_id", "right_id"], "left")
         .select(
             "left_id", "right_id",
-            F.when(
-                F.coalesce("l_s", F.lit(0.0)) + F.coalesce("r_s", F.lit(0.0)) > 0,
-                F.coalesce("i_s", F.lit(0.0))
-                / (F.col("l_s") + F.col("r_s") - F.coalesce("i_s", F.lit(0.0))),
-            ).otherwise(F.lit(0.0)).alias("prob"),
+            F.when(ls + rs > 0, i_s / (ls + rs - i_s))
+            .otherwise(F.lit(0.0))
+            .alias("prob"),
         )
     )
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from ditto_spark.operators.blocking import TOKEN_PATTERN
+from ditto_spark.operators.blocking import content_tokens
 
 SIG_BITS = 64
 
@@ -46,7 +46,7 @@ def simhash_signatures(
     token_hash: xxhash64 by default (production: fastest JVM hash); pass
     `md5_token_hash` with bits=60 for the engine-portable variant the DuckDB
     oracle replicates bit-for-bit."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), TOKEN_PATTERN), lambda t: t != "")
+    toks = content_tokens(F.col(text_col))
     if token_hash is None:
         th = F.transform(toks, lambda t: F.xxhash64(t, F.lit(seed)))
     else:

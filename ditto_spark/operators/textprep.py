@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
+from ditto_spark.operators.blocking import block_minhash_lsh, content_tokens
+
 # reference stopword list (summarize.py:12) is nltk English; a fixed small
 # list keeps the oracle portable
 SUMMARIZE_STOPWORDS = [
@@ -740,9 +742,7 @@ def chunk_exact_dedup(
     joined by ' ', winner = lexicographic min (doc_id, chunk_idx) — the
     DuckDB oracle (chunk_dedup query) replays winner selection and
     reassembly exactly."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda t: t != ""
-    )
+    toks = content_tokens(F.col(text_col))
     w = int(chunk_tokens)
     n_chunks = F.ceil(F.size("__toks") / F.lit(w)).cast("int")
     base = docs.select(
@@ -839,12 +839,8 @@ def chunk_near_dup_pairs(
     (/root/reference/summarize.py:33-52) are the reference's closest
     analogue of corpus-wide span statistics; the reference itself has no
     sub-document dedup."""
-    from ditto_spark.operators.blocking import block_minhash_lsh
-
     w = int(chunk_tokens)
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda t: t != ""
-    )
+    toks = content_tokens(F.col(text_col))
     base = docs.select(F.col(id_col), toks.alias("__toks")).withColumn(
         "__nc", F.ceil(F.size("__toks") / F.lit(w)).cast("int")
     )

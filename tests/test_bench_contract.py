@@ -48,10 +48,16 @@ def test_benchmark_imports_resolve():
 def test_benchmark_blocking_positional_signatures():
     """traced.py passes these arguments positionally."""
     from ditto_spark.operators import blocking as B
+    from ditto_spark.operators.scoring import attach_pair_text
 
     def head(fn, n):
         return list(inspect.signature(fn).parameters)[:n]
 
+    assert head(B.tokenize, 2) == ["df", "text_col"]
+    assert list(inspect.signature(attach_pair_text).parameters) == [
+        "pairs",
+        "serialized",
+    ]
     assert head(B.minhash_signatures, 2) == ["df", "id_col"]
     assert "num_perm" in inspect.signature(B.minhash_signatures).parameters
     assert head(B.lsh_bands, 4) == ["sig_df", "id_col", "num_bands", "rows_per_band"]

@@ -78,12 +78,17 @@ def test_relational_idf_matches_dict_path(spark):
         score_pairs_tfidf_relational,
     )
 
+    # every character Python's str.split() splits on — Java's \s knows 6
+    seps = [chr(c) for c in range(0x110000) if len(f"a{chr(c)}b".split()) == 2]
+    toks = [f"w{i}" for i in range(len(seps) + 1)]
+    ws_left = toks[0] + "".join(s + t for s, t in zip(seps, toks[1:]))
     pairs = spark.createDataFrame(
         [
             ("1", "r1", "sony, tv 55in", "sony, tv 55in"),
             ("2", "r2", "sony, tv 55in", "lg monitor 27in"),
             ("3", "r3", "apple iphone 12", "apple iphone, 13"),
             ("4", "r4", "", "anything here"),
+            ("5", "r5", ws_left, " ".join(toks)),
         ],
         "left_id string, right_id string, left_txt string, right_txt string",
     )
@@ -102,11 +107,12 @@ def test_relational_idf_matches_dict_path(spark):
         r["left_id"]: r["prob"]
         for r in score_pairs(pairs, scorer_factory=dict_factory).collect()
     }
-    assert set(rel) == set(dct) == {"1", "2", "3", "4"}
+    assert set(rel) == set(dct) == {"1", "2", "3", "4", "5"}
     for k in rel:
         assert abs(rel[k] - dct[k]) < 1e-9, (k, rel[k], dct[k])
     assert abs(rel["1"] - 1.0) < 1e-9
     assert rel["4"] == 0.0
+    assert abs(rel["5"] - 1.0) < 1e-9
 
 
 def test_idf_covers_punctuated_tokens(spark):
@@ -299,6 +305,8 @@ def test_weighted_jaccard_hand_computed(spark):
             (3, 4, "the zygote", "zygote the"),
             # no overlap at all
             (5, 6, "cat", "dog"),
+            # one side has no tokens
+            (7, 8, "", "cat"),
         ],
         "left_id long, right_id long, left_txt string, right_txt string",
     )
@@ -309,6 +317,7 @@ def test_weighted_jaccard_hand_computed(spark):
     assert abs(got[(1, 2)] - 0.1 / 7.1) < 1e-12
     assert abs(got[(3, 4)] - 1.0) < 1e-12
     assert got[(5, 6)] == 0.0
+    assert got[(7, 8)] == 0.0
 
 
 def test_weighted_jaccard_set_semantics_and_default(spark):
