@@ -4663,7 +4663,7 @@ def q_cluster_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             jp.where(F.col("jaccard") >= tau).select("left_id", "right_id"),
         )
 
-    return cluster_agreement(clusters(0.05), clusters(0.9), ndigits=6)
+    return cluster_agreement(clusters(0.05), clusters(0.9))
 
 
 def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:

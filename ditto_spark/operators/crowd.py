@@ -27,6 +27,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from ditto_spark.operators.evaluate import (
+    confusion_cells,
+    confusion_f1,
+    precision_recall_f1,
+)
+
 
 def majority_vote(
     votes: DataFrame,
@@ -128,19 +134,14 @@ def worker_independence_chi2(
         F.col(worker_col).alias("w2"), F.col(label_col).alias("l2"),
     )
     pairs = a.join(b, [task_col, "y"]).where(F.col("w1") < F.col("w2"))
-    cnt = pairs.groupBy("w1", "w2", "y").agg(
-        F.sum(((F.col("l1") == 0) & (F.col("l2") == 0)).cast("long")).alias("n00"),
-        F.sum(((F.col("l1") == 0) & (F.col("l2") == 1)).cast("long")).alias("n01"),
-        F.sum(((F.col("l1") == 1) & (F.col("l2") == 0)).cast("long")).alias("n10"),
-        F.sum(((F.col("l1") == 1) & (F.col("l2") == 1)).cast("long")).alias("n11"),
-    )
-    n = F.col("n00") + F.col("n01") + F.col("n10") + F.col("n11")
-    det = F.abs(F.col("n00") * F.col("n11") - F.col("n01") * F.col("n10"))
+    # the 2×2 table n_{l1 l2} is the confusion matrix of l1 against l2:
+    # n00 = tn, n01 = fn, n10 = fp, n11 = tp
+    cnt = pairs.groupBy("w1", "w2", "y").agg(*confusion_cells("l1", "l2"))
+    n00, n01, n10, n11 = F.col("tn"), F.col("fn"), F.col("fp"), F.col("tp")
+    n = n00 + n01 + n10 + n11
+    det = F.abs(n00 * n11 - n01 * n10)
     yates = F.greatest(det - n / 2.0, F.lit(0.0))
-    denom = (
-        (F.col("n00") + F.col("n01")) * (F.col("n10") + F.col("n11"))
-        * (F.col("n00") + F.col("n10")) * (F.col("n01") + F.col("n11"))
-    )
+    denom = (n00 + n01) * (n10 + n11) * (n00 + n10) * (n01 + n11)
     chi2 = F.when(denom > 0, n * yates * yates / denom).otherwise(F.lit(0.0))
     per_class = cnt.select("w1", "w2", "y", chi2.alias("chi2"))
     return (
@@ -202,18 +203,8 @@ def optimal_f1_cutoff(
     )
     crossed = pat.crossJoin(F.broadcast(levels))
     pred = (F.col("mt") > F.col("level")).cast("int")
-    per_level = crossed.groupBy("level").agg(
-        F.sum(((pred == 1) & (F.col(truth_col) == 1)).cast("long")).alias("tp"),
-        F.sum(((pred == 1) & (F.col(truth_col) == 0)).cast("long")).alias("fp"),
-        F.sum(((pred == 0) & (F.col(truth_col) == 1)).cast("long")).alias("fn"),
-    )
-    scored = per_level.select(
-        "level",
-        (
-            2.0 * F.col("tp")
-            / F.greatest(2 * F.col("tp") + F.col("fp") + F.col("fn"), F.lit(1))
-        ).alias("f1"),
-    )
+    per_level = crossed.groupBy("level").agg(*confusion_cells(pred, truth_col))
+    scored = per_level.select("level", precision_recall_f1("tp", "fp", "fn")[2])
     best = scored.orderBy(F.desc("f1"), F.desc("level")).limit(1).collect()[0]
     out = pat.select(
         task_col, (F.col("mt") > F.lit(float(best["level"]))).cast("int").alias("agg_label")
@@ -294,17 +285,11 @@ def worker_f1_ranking(
         (F.avg(label_col) > 0.5).cast("int").alias("wlabel")
     )
     j = wl.join(truth.select(task_col, truth_col), task_col)
-    per = j.groupBy(worker_col).agg(
-        F.sum(((F.col("wlabel") == 1) & (F.col(truth_col) == 1)).cast("long")).alias("tp"),
-        F.sum(((F.col("wlabel") == 1) & (F.col(truth_col) == 0)).cast("long")).alias("fp"),
-        F.sum(((F.col("wlabel") == 0) & (F.col(truth_col) == 1)).cast("long")).alias("fn"),
-    )
-    f1 = (
-        2.0 * F.col("tp")
-        / F.greatest(2 * F.col("tp") + F.col("fp") + F.col("fn"), F.lit(1))
-    )
+    per = j.groupBy(worker_col).agg(*confusion_cells("wlabel", truth_col))
     w = Window.orderBy(F.desc("f1"), F.desc(worker_col))
-    return per.select(worker_col, f1.alias("f1")).withColumn(
+    return per.select(
+        worker_col, precision_recall_f1("tp", "fp", "fn")[2]
+    ).withColumn(
         "removal_rank", F.row_number().over(w) - 1
     )
 
@@ -343,13 +328,10 @@ def worker_removal_curve(
         sub = votes.where(F.col(worker_col).isin(remaining))
         for name in sorted(methods):
             pred = methods[name](sub).select(task_col, "crowd_label")
-            c = pred.join(t, task_col).agg(
-                F.sum(((F.col("crowd_label") == 1) & (F.col(truth_col) == 1)).cast("long")).alias("tp"),
-                F.sum(((F.col("crowd_label") == 1) & (F.col(truth_col) == 0)).cast("long")).alias("fp"),
-                F.sum(((F.col("crowd_label") == 0) & (F.col(truth_col) == 1)).cast("long")).alias("fn"),
-            ).collect()[0]
-            f1 = 2.0 * c["tp"] / max(2 * c["tp"] + c["fp"] + c["fn"], 1)
-            rows.append((k, name, f1))
+            decided = pred.join(t, task_col).select(
+                F.col("crowd_label").alias("match"), F.col(truth_col).alias("label")
+            )
+            rows.append((k, name, confusion_f1(decided).collect()[0]["f1"]))
     return votes.sparkSession.createDataFrame(
         rows, "n_removed int, method string, f1 double"
     )

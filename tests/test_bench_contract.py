@@ -125,3 +125,30 @@ def test_benchmark_assign_clusters_surface(spark):
     for call in calls:
         assert len(call.args) == 2
         assert {k.arg for k in call.keywords} <= {"assume_unique"}
+
+
+def test_benchmark_cluster_pairwise_f1_surface(spark):
+    """traced.py's same_f1 calls cluster_pairwise_f1(clusters, truth) and
+    requires its f1 to equal the benchmark's own contingency-table formula
+    (harness.pairwise_f1)."""
+    from ditto_spark.operators.evaluate import cluster_pairwise_f1
+
+    assert list(inspect.signature(cluster_pairwise_f1).parameters) == [
+        "predicted",
+        "truth",
+    ]
+    schema = "conv_id string, cluster_id string"
+    pred = spark.createDataFrame(
+        [("a", "1"), ("b", "1"), ("c", "1"), ("d", "2")], schema
+    )
+    truth = spark.createDataFrame(
+        [("a", "x"), ("b", "x"), ("c", "y"), ("d", "y")], schema
+    )
+    out = cluster_pairwise_f1(pred, truth)
+    assert out.columns == ["tp", "fp", "fn", "precision", "recall", "f1"]
+    row = out.collect()[0]
+    # cells (1,x)=2, (1,y)=1, (2,y)=1 → tp = C(2,2) = 1; predicted pairs
+    # C(3,2) + C(1,2) = 3 → fp = 2; truth pairs C(2,2) + C(2,2) = 2 → fn = 1
+    assert (row["tp"], row["fp"], row["fn"]) == (1, 2, 1)
+    assert row["f1"] == 2.0 * 1 / (2 * 1 + 2 + 1)
+    assert (row["precision"], row["recall"]) == (1 / 3, 1 / 2)

@@ -80,6 +80,21 @@ def test_roc_auc_single_class_raises(spark):
         roc_auc(_scored_df(spark, [0.1, 0.9], [1, 1]))
 
 
+def test_roc_auc_releases_its_caches(spark):
+    """The row is computed eagerly; neither the score histogram nor the
+    range-partitioned prefix-sum input stays cached afterwards. Compares
+    RDD ids, not counts: the context cleaner may release caches that
+    earlier tests left behind while roc_auc runs."""
+
+    def cached():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    df = _scored_df(spark, [0.1, 0.4, 0.35, 0.8], [0, 0, 1, 1])
+    before = cached()
+    roc_auc(df).collect()
+    assert cached() - before == set()
+
+
 def test_roc_auc_partition_invariant(spark):
     rng = np.random.RandomState(11)
     scores = np.round(rng.rand(200), 1)

@@ -68,6 +68,11 @@ def test_confusion_f1(spark):
     assert abs(m["f1"] - 2 * 6 / (12 + 2 + 1)) < 1e-9
 
 
+def test_confusion_f1_empty_is_zero(spark):
+    df = spark.createDataFrame([], "match int, label int")
+    assert tuple(confusion_f1(df).collect()[0]) == (0, 0, 0, 0, 0.0, 0.0, 0.0)
+
+
 def test_relational_idf_matches_dict_path(spark):
     """score_pairs_tfidf_relational (corpus-scale join path) must produce the
     exact scores of the closure-dict Arrow-UDF path on the same IDF corpus —
@@ -159,6 +164,18 @@ def test_tune_threshold_verified_roundtrip(spark):
     )
     with pytest.raises(RuntimeError, match="not deterministic"):
         tune_threshold_verified(df, lambda: flipped)
+
+
+def test_tune_threshold_empty_validation_raises(spark):
+    import pytest
+
+    from ditto_spark.operators.evaluate import tune_threshold_verified
+
+    empty = spark.createDataFrame([], "prob double, label int")
+    with pytest.raises(ValueError, match="^tune_threshold: .*empty"):
+        tune_threshold(empty)
+    with pytest.raises(ValueError, match="^tune_threshold_verified: .*empty"):
+        tune_threshold_verified(empty, lambda: empty)
 
 
 def test_numpy_cross_encoder_semantics():
