@@ -15,11 +15,12 @@ iterator UDFs with no per-row Python" contract from BASELINE.json.
 
 Two scorers plug into the same slot:
   * token-cosine surrogate (default, deterministic, no downloads):
-    token-count cosine over exact whitespace tokens — pandas str ops split
-    them, `pd.factorize` maps each distinct token to an int code (no
-    hashing, so no collisions) — batch-vectorized, no per-row Python
-    functions. Used by tests/CI where LM weights are unavailable
-    (SURVEY.md §7 risks).
+    token-count cosine over exact whitespace tokens (`_cosine_batch`). The
+    pairs of a duplicate group share their texts, so each Arrow batch
+    tokenizes each distinct text once and scores its pairs from per-text
+    token counts; its cost per pair falls with how often texts repeat in a
+    batch. Used by tests/CI where LM weights are unavailable (SURVEY.md §7
+    risks).
   * HF cross-encoder (ditto semantics) behind an import-try: loads
     transformers+torch once per partition iterator, tokenizes each Arrow
     batch with padding/truncation (dataset.py:73-76, dataset.py:91-117
@@ -67,61 +68,56 @@ def _cosine_batch(
 ) -> np.ndarray:
     """Vectorized token-count cosine for one Arrow batch.
 
-    Factorizes all tokens in the batch to int codes (C-level), builds
-    (row, code, count) triples with numpy, and computes the sparse dot
-    product per pair via a sorted merge — no per-row Python functions.
-    With `idf`, token counts are scaled by the given per-token weight
-    (TF-IDF cosine); weights must be corpus-derived for determinism.
+    The pairs of a duplicate group share their texts, so the batch's texts
+    are factorized first and only the distinct ones are tokenized. Their
+    tokens are factorized to int codes (no hashing, so no collisions) and
+    sorted by (text, code) into one run of (code, count) per distinct text,
+    which also gives its squared norm. Each pair expands its left text's
+    run and finds each code in the right text's run with one searchsorted
+    over `text * V + code` keys. Outside `_token_lists` there is no per-row
+    Python. With `idf`, token counts are scaled by the given per-token
+    weight (TF-IDF cosine); weights must be corpus-derived for determinism.
+    Without it every count, norm and dot product is an integer, so the
+    result does not depend on summation order. A null text scores like an
+    empty one: 0.0.
     """
     n = len(left)
-    if n == 0:
-        return np.zeros(0)
-    lt = _token_lists(left)
-    rt = _token_lists(right)
-    l_lens = np.fromiter(map(len, lt), dtype=np.int64, count=n)
-    r_lens = np.fromiter(map(len, rt), dtype=np.int64, count=n)
-    flat = np.concatenate([x for x in lt] + [x for x in rt]) if (l_lens.sum() + r_lens.sum()) else np.array([], dtype=object)
+    text_id, texts = pd.factorize(
+        pd.concat([left, right], ignore_index=True), use_na_sentinel=False
+    )
+    # explode keeps each token's distinct-text id as its index and turns
+    # empty (and null) texts into one NaN row, which dropna removes
+    flat = _token_lists(pd.Series(texts)).explode().dropna()
     codes, uniques = pd.factorize(flat)
+    vocab = len(uniques)
+    if vocab == 0:
+        return np.zeros(n)
+    keys, counts = np.unique(
+        flat.index.to_numpy(np.int64) * vocab + codes, return_counts=True
+    )
+    run_text, run_code = np.divmod(keys, vocab)
+    weights = counts.astype(np.float64)
     if idf is not None:
         wvec = np.fromiter(
             (idf.get(t, default_idf) for t in uniques), dtype=np.float64,
-            count=len(uniques),
+            count=vocab,
         )
-    else:
-        wvec = None
-    row_ids = np.repeat(
-        np.concatenate([np.arange(n), np.arange(n)]),
-        np.concatenate([l_lens, r_lens]),
+        weights *= wvec[run_code]
+    norm = np.bincount(run_text, weights=weights**2, minlength=len(texts))
+    run_start = np.searchsorted(run_text, np.arange(len(texts) + 1))
+    lt, rt = text_id[:n], text_id[n:]
+    # one element per (pair, distinct token of the pair's left text)
+    l_start = run_start[lt]
+    l_len = run_start[lt + 1] - l_start
+    pair = np.repeat(np.arange(n), l_len)
+    pos = np.arange(len(pair)) - np.repeat(np.cumsum(l_len) - l_len - l_start, l_len)
+    probe = rt[pair] * vocab + run_code[pos]
+    found = np.minimum(np.searchsorted(keys, probe), len(keys) - 1)
+    hit = keys[found] == probe
+    dots = np.bincount(
+        pair[hit], weights=weights[pos[hit]] * weights[found[hit]], minlength=n
     )
-    side = np.repeat(
-        np.concatenate([np.zeros(n, np.int8), np.ones(n, np.int8)]),
-        np.concatenate([l_lens, r_lens]),
-    )
-    # counts per (row, side, code)
-    order = np.lexsort((codes, side, row_ids))
-    r_, s_, c_ = row_ids[order], side[order], codes[order]
-    new_group = np.ones(len(r_), bool)
-    new_group[1:] = (r_[1:] != r_[:-1]) | (s_[1:] != s_[:-1]) | (c_[1:] != c_[:-1])
-    starts = np.flatnonzero(new_group)
-    counts = np.diff(np.append(starts, len(r_)))
-    gr, gs, gc = r_[starts], s_[starts], c_[starts]
-    wcounts = counts.astype(np.float64)
-    if wvec is not None:
-        wcounts = wcounts * wvec[gc]
-    # norms per (row, side)
-    sq = wcounts ** 2
-    l_norm = np.zeros(n)
-    r_norm = np.zeros(n)
-    np.add.at(l_norm, gr[gs == 0], sq[gs == 0])
-    np.add.at(r_norm, gr[gs == 1], sq[gs == 1])
-    # dot product: group keys sorted by (row, side, code); within a row,
-    # match codes across sides via a second lexsort on (row, code)
-    o2 = np.lexsort((gs, gc, gr))
-    r2, s2, c2, cnt2 = gr[o2], gs[o2], gc[o2], wcounts[o2]
-    same = (r2[1:] == r2[:-1]) & (c2[1:] == c2[:-1]) & (s2[1:] != s2[:-1])
-    dots = np.zeros(n)
-    np.add.at(dots, r2[1:][same], cnt2[1:][same] * cnt2[:-1][same])
-    denom = np.sqrt(l_norm) * np.sqrt(r_norm)
+    denom = np.sqrt(norm[lt]) * np.sqrt(norm[rt])
     with np.errstate(divide="ignore", invalid="ignore"):
         cos = np.where(denom > 0, dots / denom, 0.0)
     return cos

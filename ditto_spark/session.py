@@ -106,6 +106,13 @@ def get_spark(
         # through the driver (measured: local[32] slower than local[8]).
         # Small dims that SHOULD broadcast carry explicit broadcast() hints.
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
+        # Generated-code cache (static: read once, at session start). The
+        # default 100 entries is smaller than one dedup pass's working set
+        # (a fresh JVM compiles ~112 classes in its first benchmark pass),
+        # so the LRU evicted what the next pass needed: every steady pass
+        # recompiled 97 classes on the batch_dedup benchmark and 77 on
+        # hot_skew. At 1000 both compile 0.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         # shuffle/spill files on tmpfs when available: the sandbox's /tmp is

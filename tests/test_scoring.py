@@ -1,12 +1,16 @@
 """Scoring: surrogate cosine batch math, UDF vs builtin agreement,
 threshold semantics (strict >), confusion F1 and sweep vs hand counts."""
 
+import math
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 
 from ditto_spark.operators.scoring import (
     _cosine_batch,
+    _token_lists,
     score_pairs,
     score_pairs_builtin,
     apply_threshold,
@@ -15,18 +19,72 @@ from ditto_spark.operators.evaluate import confusion_f1, threshold_grid_f1, tune
 
 
 def test_cosine_batch_math():
-    left = pd.Series(["a b c", "a a b", "x y", ""])
-    right = pd.Series(["a b c", "b a a", "p q", "words"])
+    left = pd.Series(["a b c", "a a b", "x y", "", None])
+    right = pd.Series(["a b c", "b a a", "p q", "words", "words"])
     cos = _cosine_batch(left, right)
     assert np.allclose(cos[0], 1.0)
     assert np.allclose(cos[1], 1.0)  # same multiset, different order
     assert cos[2] == 0.0
     assert cos[3] == 0.0
+    assert cos[4] == 0.0  # a null text scores like an empty one
 
 
 def test_cosine_partial_overlap():
     cos = _cosine_batch(pd.Series(["a b"]), pd.Series(["a c"]))
     assert np.allclose(cos[0], 0.5)  # (1)/(sqrt2*sqrt2)
+
+
+def _counter_cosine(a, b, idf=None, default_idf=1.0):
+    """From-scratch TF(-IDF) cosine of two texts over str.split() tokens."""
+    w = lambda t: 1.0 if idf is None else idf.get(t, default_idf)  # noqa: E731
+    ca, cb = Counter(a.lower().split()), Counter(b.lower().split())
+    dot = sum(ca[t] * w(t) * cb[t] * w(t) for t in ca.keys() & cb.keys())
+    na = math.sqrt(sum((c * w(t)) ** 2 for t, c in ca.items()))
+    nb = math.sqrt(sum((c * w(t)) ** 2 for t, c in cb.items()))
+    return dot / (na * nb) if na * nb > 0 else 0.0
+
+
+def test_cosine_batch_matches_counter_reference():
+    """The kernel equals a per-pair Counter cosine on the shapes it must
+    handle: texts repeated across rows and sides, empty and whitespace-only
+    texts, repeated tokens, and every separator str.split() knows."""
+    seps = [chr(c) for c in range(0x110000) if len(f"a{chr(c)}b".split()) == 2]
+    toks = [f"w{i}" for i in range(len(seps) + 1)]
+    all_seps = toks[0] + "".join(s + t for s, t in zip(seps, toks[1:]))
+    hot = "hello there agent agent please reset my password please"
+    hot2 = "Hello there Agent please reset my password now"
+    texts = [hot, hot2, "", "   \t\n", "a a a b", "b a", all_seps,
+             " ".join(toks), "w3 w3 w5", "x"]
+    rng = np.random.default_rng(7)
+    left = [hot] * 8 + [hot2] * 4 + list(rng.choice(texts, 40))
+    right = [hot2, hot] * 4 + [hot] * 4 + list(rng.choice(texts, 40))
+    L, R = pd.Series(left), pd.Series(right)
+    got = _cosine_batch(L, R)
+    want = np.array([_counter_cosine(a, b) for a, b in zip(left, right)])
+    assert (got == want).all()
+
+    vocab = {t for x in texts for t in x.lower().split()}
+    idf = {t: float(w) for t, w in zip(sorted(vocab), rng.uniform(0.1, 5, len(vocab)))}
+    del idf["w3"]  # one token falls back to default_idf
+    got = _cosine_batch(L, R, idf=idf, default_idf=0.37)
+    want = np.array([_counter_cosine(a, b, idf, 0.37) for a, b in zip(left, right)])
+    assert np.abs(got - want).max() < 1e-12
+
+
+def test_cosine_batch_tokenizes_each_distinct_text_once(monkeypatch):
+    from ditto_spark.operators import scoring
+
+    seen = []
+
+    def recording(s):
+        seen.extend(s)
+        return _token_lists(s)
+
+    monkeypatch.setattr(scoring, "_token_lists", recording)
+    left = pd.Series(["a b", "c d", "a b", "e", "c d", "a b"])
+    right = pd.Series(["c d", "a b", "e", "a b", "a b", "c d"])
+    scoring._cosine_batch(left, right)
+    assert sorted(seen) == ["a b", "c d", "e"]
 
 
 def test_udf_scorer_end_to_end(spark):
