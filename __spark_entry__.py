@@ -663,12 +663,13 @@ def _ann_vecs_cte(with_aug: bool) -> str:
 
 def _ann_chunks_cte(with_aug: bool) -> str:
     """planes → sign bits → 8-bit band chunks, replicating
-    ann.plane_matrix / ann.hyperplane_band_chunks (64 planes, 8 bands,
-    seed 23) in portable SQL."""
+    ann.plane_matrix and the base (probe-0) chunks of
+    ann.hyperplane_band_probes (64 planes, 8 bands, md5 salt 23) in
+    portable SQL."""
     from ditto_spark.operators.ann import plane_sql
 
     return f"""
-    WITH planes AS ({plane_sql(dim=64, n_planes=64, seed=23)}),
+    WITH planes AS ({plane_sql(dim=64, n_planes=64)}),
     vecs AS ({_ann_vecs_cte(with_aug)}),
     bits AS (
       SELECT v.vid, p.plane,
@@ -768,14 +769,11 @@ def q_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the exact probe sequence → hash-checked parity."""
     from ditto_spark.operators.ann import cosine_topk_lsh
 
-    emb = _load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    return cosine_topk_lsh(
+    emb, _ = _ann_embeddings(spark, sf_dir)
+    return _ann_topk_out(cosine_topk_lsh(
         emb, dim=_ANN_DIM, k=5, n_planes=64, bands=8, n_probes=2,
         query_filter=F.col("query_id") % 25 == 0,
-    ).select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"),
-             F.col("rk").cast("long").alias("rk"))
+    ))
 
 
 _EMBEDDING_NEAR_DUP_ORACLE = _ann_chunks_cte(with_aug=True) + """
@@ -1532,8 +1530,8 @@ def q_hashed_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-free, vocabulary-free text vectorizer feeding the ANN stack.
     Oracle variant: dim=8, md5-portable index/sign hashes, unit weights →
     every component is an exact signed integer, order-independent and
-    bit-identical in SQL. Production keeps xxhash64 + IDF weights +
-    L2-normalization (pytest-gated)."""
+    bit-identical in SQL. Production keeps xxhash64 + L2-normalization
+    (pytest-gated)."""
     from ditto_spark.operators.ann import feature_hash_vectors
 
     docs = _load(spark, sf_dir, "documents")
@@ -1706,29 +1704,11 @@ def q_crowd_majority_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k ANN baseline over the embeddings table
     (query set = vec_id % 25 == 0), JVM-side higher-order functions."""
-    emb = _load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    q = emb.where(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    joined = q.crossJoin(emb).where(F.col("vec_id") != F.col("query_id"))
-    cos = (dot(F.col("qv"), F.col("v"))
-           / (F.sqrt(dot(F.col("qv"), F.col("qv"))) * F.sqrt(dot(F.col("v"), F.col("v")))))
-    from pyspark.sql import Window
+    from ditto_spark.operators.ann import cosine_topk_bruteforce
 
-    scored = joined.select("query_id", "vec_id", cos.alias("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 5)
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            F.round("cos", 6).alias("cos"), F.col("rk").cast("long").alias("rk"),
-        )
+    emb, queries = _ann_embeddings(spark, sf_dir)
+    return _ann_topk_out(
+        cosine_topk_bruteforce(emb, queries, k=5, vec_col="embedding")
     )
 
 
@@ -2664,6 +2644,27 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANN_DIM = 64  # driver testdata embeddings are 64-dim (all sf)
 
 
+def _ann_embeddings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The ANN queries' corpus (vec_id, embedding: array<double>) and
+    their shared query set (query_id, qv): every vector with
+    vec_id % 25 == 0."""
+    emb = _load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
+    )
+    queries = emb.where(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    return emb, queries
+
+
+def _ann_topk_out(topk: DataFrame) -> DataFrame:
+    """Top-k rows as the oracles print them: cos rounded to 6 dp, rk long."""
+    return topk.select(
+        "query_id", "neighbor_id", F.round("cos", 6).alias("cos"),
+        F.col("rk").cast("long").alias("rk"),
+    )
+
+
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH approximate top-k cosine neighbors — scale-safe
     parameters (64 planes × 8 bands → 8-bit chunks → 256 buckets/band; the
@@ -2672,14 +2673,11 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact candidate set → full hash-checked parity, not rows-only."""
     from ditto_spark.operators.ann import cosine_topk_lsh
 
-    emb = _load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    return cosine_topk_lsh(
+    emb, _ = _ann_embeddings(spark, sf_dir)
+    return _ann_topk_out(cosine_topk_lsh(
         emb, dim=_ANN_DIM, k=5, n_planes=64, bands=8,
         query_filter=F.col("query_id") % 25 == 0,
-    ).select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"),
-             F.col("rk").cast("long").alias("rk"))
+    ))
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2693,18 +2691,10 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim → full hash-checked parity."""
     from ditto_spark.operators.ann import cosine_topk_ivf
 
-    emb = _load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    queries = emb.where(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    return cosine_topk_ivf(
+    emb, queries = _ann_embeddings(spark, sf_dir)
+    return _ann_topk_out(cosine_topk_ivf(
         emb, k=5, n_centroids=16, n_probe=4, n_iter=0, queries=queries
-    ).select(
-        "query_id", "neighbor_id", F.round("cos", 6).alias("cos"),
-        F.col("rk").cast("long").alias("rk"),
-    )
+    ))
 
 
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2722,19 +2712,11 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled index payload is m codes per row, dim·8/m× smaller."""
     from ditto_spark.operators.ann import cosine_topk_ivfpq
 
-    emb = _load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    queries = emb.where(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    return cosine_topk_ivfpq(
+    emb, queries = _ann_embeddings(spark, sf_dir)
+    return _ann_topk_out(cosine_topk_ivfpq(
         emb, dim=_ANN_DIM, k=5, n_centroids=16, n_probe=4, m=8, ksub=16,
         n_iter=0, queries=queries, rerank=20,
-    ).select(
-        "query_id", "neighbor_id", F.round("cos", 6).alias("cos"),
-        F.col("rk").cast("long").alias("rk"),
-    )
+    ))
 
 
 def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2748,18 +2730,8 @@ def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sublinear path."""
     from ditto_spark.operators.ann import cosine_topk_sq8
 
-    emb = _load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    queries = emb.where(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    return cosine_topk_sq8(
-        emb, dim=_ANN_DIM, k=5, queries=queries
-    ).select(
-        "query_id", "neighbor_id", F.round("cos", 6).alias("cos"),
-        F.col("rk").cast("long").alias("rk"),
-    )
+    emb, queries = _ann_embeddings(spark, sf_dir)
+    return _ann_topk_out(cosine_topk_sq8(emb, dim=_ANN_DIM, k=5, queries=queries))
 
 
 _SQ8_TOPK_ORACLE = """

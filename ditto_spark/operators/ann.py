@@ -3,21 +3,49 @@ extension; the reference's dense blocking — /root/reference/blocking/
 blocker.py:43-80 — is the same problem single-node: L2-normalized matrix,
 blocked matmul, threshold or top-k selection).
 
-Two tiers, same output contract (query_id, neighbor_id, cos, rk):
+Index tiers, one output contract (query_id, neighbor_id, cos, rk):
 
-* brute-force — exact baseline: crossJoin + JVM higher-order-function dot
-  product + ranking window. O(|Q|·|N|); correct at any scale where |Q| is
+* brute-force — exact baseline: crossJoin + JVM higher-order-function
+  cosine + ranking window. O(|Q|·|N|); correct at any scale where |Q| is
   small or as the verify step. DuckDB-oracle-checked.
 
-* random-hyperplane LSH — the scale path: sign-bit signature of the dot
+* random-hyperplane LSH (+ multi-probe) — sign-bit signature of the dot
   product against `n_planes` hyperplanes, split into `bands` chunks, banded
   equi-join like MinHash/SimHash, cosine verified on candidates only.
 
-Scale parameters (round-1 verdict fix): defaults are 64 planes × 8 bands →
-8-bit chunks → 256 buckets per band. Bucket population is ~n/256 per band,
-so the candidate join is ~n²/256 per band worst-case on uniform data —
-and hot buckets (real embeddings cluster!) are additionally SALTED: a
-bucket larger than `max_bucket` is split into cells; candidate-side rows
+* IVF-flat, IVF-PQ, SQ8 — a broadcast coarse quantizer routes queries to
+  cells; the compressed tiers score against PQ / 8-bit reconstructions
+  (the compressed-index line of work: Jégou et al. TPAMI 2011; "Highly
+  Efficient String Similarity Search and Join over Compressed Indexes",
+  ICDE 2022).
+
+Each decision the tiers share has ONE private owner:
+
+* `_cosine` — exact cosine; `_guarded_cos` — the division every tier
+  (exact and asymmetric) goes through;
+* `_topk` — row_number per query over (cos desc, neighbor_id asc): ties
+  go to the lower neighbor_id, rk runs 1..k;
+* `_query_view` — self-search (queries=None) or an external (query_id,
+  qv) set cast to double;
+* `_pair_cosine` — vectors joined back onto bare candidate id pairs once,
+  after the dedup;
+* `_centroid_row` / `_ranked_cells` — the one-row broadcast centroid
+  table and the nearest-cell ranking over it;
+* `_lloyd_update` (per-cell mean, empty cells kept) and `_nearest_code`
+  (squared-L2 argmin over a codebook);
+* `hyperplane_band_probes` — the one hyperplane projection pass (probe 0
+  is the base band chunk).
+
+Zero vectors: a side whose norm is zero scores cos = -1.0 against
+anything, in every tier. It ranks last in every top-k, never passes a
+near-dup threshold, and no division by zero reaches ANSI mode
+(`feature_hash_vectors` maps an empty document to the zero vector).
+
+Scale parameters (round-1 verdict fix): LSH defaults are 64 planes × 8
+bands → 8-bit chunks → 256 buckets per band. Bucket population is ~n/256
+per band, so the candidate join is ~n²/256 per band worst-case on uniform
+data — and hot buckets (real embeddings cluster!) are additionally SALTED:
+a bucket larger than `max_bucket` is split into cells; candidate-side rows
 hash into one cell, query-side rows replicate across cells (full recall
 within the bucket, bounded cell size). Narrower chunks (the old 16-plane ×
 8-band default = 2-bit chunks = 4 buckets) degenerate toward n²/4 — a
@@ -40,6 +68,10 @@ import pyspark.sql.functions as F
 
 from ditto_spark.operators.blocking import hashed_salt, replicated_salts, salt_count
 
+_PLANE_SEED = 23  # md5 salt of the LSH hyperplanes (the DuckDB oracles use it too)
+_SIGN_SEED = 29  # md5 salt of the random-projection sign matrix
+_FH_SALT = 11  # xxhash64 salt of the feature-hashing bin and sign hashes
+
 
 def _dot(a, b) -> F.Column:
     return F.aggregate(
@@ -47,95 +79,58 @@ def _dot(a, b) -> F.Column:
     )
 
 
-def plane_matrix(dim: int, n_planes: int = 64, seed: int = 23) -> np.ndarray:
+def _norm(a) -> F.Column:
+    return F.sqrt(_dot(a, a))
+
+
+def _guarded_cos(dot, na2, nb2) -> F.Column:
+    """dot / (‖a‖·‖b‖) from the inner product and both SQUARED norms. A
+    side whose squared norm is not positive scores -1.0: it ranks last and
+    never passes a near-dup threshold. Each input is evaluated once (a
+    CASE WHEN guard would evaluate the norm folds twice)."""
+    root = lambda x2: F.sqrt(F.greatest(x2, F.lit(0.0)))  # noqa: E731
+    return F.coalesce(F.try_divide(dot, root(na2) * root(nb2)), F.lit(-1.0))
+
+
+def _cosine(a, b) -> F.Column:
+    """Exact cosine of two array<double> columns: three index-ordered
+    `_dot` folds, which the DuckDB oracles' list_inner_product replicates
+    bit for bit."""
+    return _guarded_cos(_dot(a, b), _dot(a, a), _dot(b, b))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos) → + rk, the k best per query: the one
+    ranking of every tier — cos desc, ties to the lower neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+
+
+def plane_matrix(dim: int, n_planes: int = 64) -> np.ndarray:
     """Deterministic (dim, n_planes) hyperplane matrix, engine-portable:
-    w[d, p] = int(md5(f"{seed}:{p}:{d}")[:8], 16) / 2^31 - 1  ∈ [-1, 1).
+    w[d, p] = int(md5(f"23:{p}:{d}")[:8], 16) / 2^31 - 1  ∈ [-1, 1).
     The DuckDB oracle regenerates the identical matrix in SQL
     (('0x' || substr(md5(...), 1, 8))::BIGINT / 2147483648.0 - 1)."""
     w = np.empty((dim, n_planes), dtype=np.float64)
     for p in range(n_planes):
         for d in range(dim):
-            h = int(hashlib.md5(f"{seed}:{p}:{d}".encode()).hexdigest()[:8], 16)
+            h = int(
+                hashlib.md5(f"{_PLANE_SEED}:{p}:{d}".encode()).hexdigest()[:8], 16
+            )
             w[d, p] = h / 2147483648.0 - 1.0
     return w
 
 
-def plane_sql(dim: int, n_planes: int = 64, seed: int = 23) -> str:
+def plane_sql(dim: int, n_planes: int = 64) -> str:
     """DuckDB CTE body generating exactly `plane_matrix` as rows
     (plane, d, w)."""
     return f"""
       SELECT p.i AS plane, d.i AS d,
-             ('0x' || substr(md5('{seed}:' || p.i || ':' || d.i), 1, 8))::BIGINT
+             ('0x' || substr(md5('{_PLANE_SEED}:' || p.i || ':' || d.i), 1, 8))::BIGINT
                / 2147483648.0 - 1.0 AS w
       FROM unnest(generate_series(0, {n_planes - 1})) p(i),
            unnest(generate_series(0, {dim - 1})) d(i)
     """
-
-
-def hyperplane_signatures(
-    vectors: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 64,
-    seed: int = 23,
-) -> DataFrame:
-    """(id, vec) → (id, hsig: bigint) packed sign-bit signature (wraps at
-    bit 63 — fine as an opaque key). One numpy matmul per Arrow batch."""
-    planes = plane_matrix(dim, n_planes, seed)
-
-    def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"id": [], "hsig": []})
-                continue
-            m = np.stack(pdf[vec_col].to_numpy())  # (B, dim)
-            bits = (m @ planes) > 0  # (B, n_planes)
-            sig = (bits.astype(np.int64) << np.arange(n_planes, dtype=np.int64)).sum(axis=1)
-            yield pd.DataFrame({"id": pdf[id_col].to_numpy(), "hsig": sig})
-
-    out = vectors.select(id_col, vec_col).mapInPandas(
-        project, schema=f"id {vectors.schema[id_col].dataType.simpleString()}, hsig long"
-    )
-    return out.withColumnRenamed("id", id_col)
-
-
-def hyperplane_band_chunks(
-    vectors: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 64,
-    bands: int = 8,
-    seed: int = 23,
-) -> DataFrame:
-    """(id, vec) → (id, chunks: array<long>), chunks[b] = packed sign bits
-    of planes [b·w, (b+1)·w). Band chunks are built directly (never through
-    a packed 64-bit signature) so widths up to 16 bits stay sign-safe and
-    the construction is replicable in portable SQL. One numpy matmul per
-    Arrow batch — vectorized, no per-row Python."""
-    assert n_planes % bands == 0
-    width = n_planes // bands
-    planes = plane_matrix(dim, n_planes, seed)
-    pow2 = 1 << np.arange(width, dtype=np.int64)
-
-    def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"id": [], "chunks": []})
-                continue
-            m = np.stack(pdf[vec_col].to_numpy())  # (B, dim)
-            bits = ((m @ planes) > 0).astype(np.int64)  # (B, n_planes)
-            chunks = bits.reshape(len(pdf), bands, width) @ pow2  # (B, bands)
-            yield pd.DataFrame(
-                {"id": pdf[id_col].to_numpy(), "chunks": list(chunks)}
-            )
-
-    out = vectors.select(id_col, vec_col).mapInPandas(
-        project,
-        schema=f"id {vectors.schema[id_col].dataType.simpleString()}, chunks array<long>",
-    )
-    return out.withColumnRenamed("id", id_col)
 
 
 def hyperplane_band_probes(
@@ -145,23 +140,25 @@ def hyperplane_band_probes(
     vec_col: str = "embedding",
     n_planes: int = 64,
     bands: int = 8,
-    seed: int = 23,
     n_probes: int = 2,
 ) -> DataFrame:
-    """Multi-probe LSH probe sequence (Lv et al., VLDB 2007, single-bit
-    perturbations): for each (vector, band) emit the base chunk PLUS
-    `n_probes` perturbed chunks, flipping the band's 1st..n_probes-th
+    """(id, vec) → (id, band_idx, chunk, probe): per (vector, band) the
+    base chunk (probe 0: packed sign bits of planes [b·w, (b+1)·w), built
+    per band — never through a packed 64-bit signature — so widths up to
+    16 bits stay sign-safe and the construction is replicable in portable
+    SQL) PLUS `n_probes` perturbed chunks (multi-probe LSH, Lv et al., VLDB
+    2007, single-bit perturbations), flipping the band's 1st..n_probes-th
     smallest-|margin| sign bits — the bits most likely to differ for a
     true near neighbor are exactly the ones whose hyperplane projection is
-    closest to zero. Output (id, band_idx, chunk, probe): probe 0 = base.
+    closest to zero. n_probes=0 emits the base chunks only.
     Ordering key is (|projection|, bit index) — the bit-index tiebreak
     makes the probe sequence deterministic and engine-portable (the DuckDB
-    oracle replays the same ranking in SQL). One numpy matmul + argsort
-    per Arrow batch; no per-row Python."""
+    oracle replays the same ranking in SQL). One numpy matmul (+ argsort
+    when probing) per Arrow batch; no per-row Python."""
     assert n_planes % bands == 0
     width = n_planes // bands
-    assert 1 <= n_probes < width
-    planes = plane_matrix(dim, n_planes, seed)
+    assert 0 <= n_probes < width
+    planes = plane_matrix(dim, n_planes)
     pow2 = 1 << np.arange(width, dtype=np.int64)
 
     def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -176,18 +173,21 @@ def hyperplane_band_probes(
             proj = m @ planes  # (B, n_planes)
             bits = (proj > 0).astype(np.int64)
             base = bits.reshape(b, bands, width) @ pow2  # (B, bands)
-            # floor-quantize |margin| to 1e-6 before ranking: numpy's
-            # pairwise matmul sum and the oracle's sequential SQL sum can
-            # differ in the last ulp, and an unquantized argsort would let
-            # two near-tied margins order differently across engines and
-            # flip the probed bucket. At 1e-6 granularity a flip needs the
-            # true value within one ulp of a quantization boundary — the
-            # documented tolerance of this probe sequence.
-            mg = np.floor(np.abs(proj).reshape(b, bands, width) * 1e6)
-            # stable argsort == (quantized |margin| asc, bit index asc)
-            order = np.argsort(mg, axis=2, kind="stable")[:, :, :n_probes]
-            flips = base[:, :, None] ^ (1 << order.astype(np.int64))  # (B, bands, T)
-            chunks = np.concatenate([base[:, :, None], flips], axis=2)  # (B, bands, T+1)
+            chunks = base[:, :, None]
+            if n_probes:
+                # floor-quantize |margin| to 1e-6 before ranking: numpy's
+                # pairwise matmul sum and the oracle's sequential SQL sum
+                # can differ in the last ulp, and an unquantized argsort
+                # would let two near-tied margins order differently across
+                # engines and flip the probed bucket. At 1e-6 granularity a
+                # flip needs the true value within one ulp of a
+                # quantization boundary — the documented tolerance of this
+                # probe sequence.
+                mg = np.floor(np.abs(proj).reshape(b, bands, width) * 1e6)
+                # stable argsort == (quantized |margin| asc, bit index asc)
+                order = np.argsort(mg, axis=2, kind="stable")[:, :, :n_probes]
+                flips = chunks ^ (1 << order.astype(np.int64))  # (B, bands, T)
+                chunks = np.concatenate([chunks, flips], axis=2)  # (B, bands, T+1)
             ids = np.repeat(pdf[id_col].to_numpy(), bands * (n_probes + 1))
             band_idx = np.tile(
                 np.repeat(np.arange(bands, dtype=np.int64), n_probes + 1), b
@@ -219,24 +219,53 @@ def _banded_ids(
     vec_col: str,
     n_planes: int,
     bands: int,
-    seed: int,
 ) -> DataFrame:
-    """(id, band_idx, chunk) — one row per (vector, band). Deliberately
-    WITHOUT the vector payload: candidate generation and dedup run on bare
-    ids, and the (large) vectors are joined back exactly once afterwards —
-    otherwise every band hit ships both full vectors through the dedup
-    shuffle (~bands× payload amplification, round-2 verdict finding)."""
-    sig = hyperplane_band_chunks(vectors, dim, id_col, vec_col, n_planes, bands, seed)
-    return sig.select(
-        id_col, F.posexplode("chunks").alias("band_idx", "chunk")
-    )
+    """(id, band_idx, chunk) — one row per (vector, band): the probe-0
+    rows. Deliberately WITHOUT the vector payload: candidate generation
+    and dedup run on bare ids, and the (large) vectors are joined back
+    exactly once afterwards (`_pair_cosine`) — otherwise every band hit
+    ships both full vectors through the dedup shuffle (~bands× payload
+    amplification, round-2 verdict finding)."""
+    return hyperplane_band_probes(
+        vectors, dim, id_col, vec_col, n_planes, bands, n_probes=0
+    ).select(id_col, "band_idx", "chunk")
 
 
 def _vec_view(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, v: array<double>) — the single post-dedup vector join side."""
+    """(id, v: array<double>) — the corpus side of every tier."""
     return vectors.select(
         F.col(id_col),
         F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
+    )
+
+
+def _keyed(vecs: DataFrame, id_col: str, key: str, vec: str) -> DataFrame:
+    """(key, vec) renaming of a `_vec_view` — one side of a vector join."""
+    return vecs.select(F.col(id_col).alias(key), F.col("v").alias(vec))
+
+
+def _query_view(
+    vecs: DataFrame, id_col: str, queries: DataFrame | None
+) -> DataFrame:
+    """(query_id, qv: array<double>): every corpus vector when `queries`
+    is None (self-search), else the external (query_id, qv) set."""
+    if queries is None:
+        return _keyed(vecs, id_col, "query_id", "qv")
+    return queries.select(
+        "query_id", F.transform("qv", lambda x: x.cast("double")).alias("qv")
+    )
+
+
+def _pair_cosine(pairs: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
+    """Bare candidate id pairs → (left key, right key, cos). `left` and
+    `right` are (key, vector) frames keyed by the pairs' two id columns;
+    each side's vectors join back exactly once, after the candidate dedup,
+    so no vector rides the dedup shuffle."""
+    (lkey, lvec), (rkey, rvec) = left.columns, right.columns
+    return (
+        pairs.join(left, lkey)
+        .join(right, rkey)
+        .select(lkey, rkey, _cosine(F.col(lvec), F.col(rvec)).alias("cos"))
     )
 
 
@@ -246,23 +275,18 @@ def cosine_topk_bruteforce(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qv",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query (self excluded by id).
-    blocker.py:67-72's argpartition top-k re-expressed as a ranking window."""
-    joined = queries.crossJoin(vectors).where(
-        F.col(id_col) != F.col(query_id_col)
-    )
-    cos = _dot(F.col(query_vec_col), F.col(vec_col)) / (
-        F.sqrt(_dot(F.col(query_vec_col), F.col(query_vec_col)))
-        * F.sqrt(_dot(F.col(vec_col), F.col(vec_col)))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        joined.select(query_id_col, F.col(id_col).alias("neighbor_id"), cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+    """Exact top-k cosine neighbors per (query_id, qv) query (self
+    excluded by id). blocker.py:67-72's argpartition top-k re-expressed as
+    a ranking window."""
+    joined = queries.crossJoin(vectors).where(F.col(id_col) != F.col("query_id"))
+    return _topk(
+        joined.select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            _cosine(F.col("qv"), F.col(vec_col)).alias("cos"),
+        ),
+        k,
     )
 
 
@@ -274,7 +298,6 @@ def cosine_topk_lsh(
     vec_col: str = "embedding",
     n_planes: int = 64,
     bands: int = 8,
-    seed: int = 23,
     max_bucket: int = 2000,
     query_filter: F.Column | None = None,
     n_probes: int = 0,
@@ -302,7 +325,7 @@ def cosine_topk_lsh(
     unchanged (bands rows per vector — the dominant side at web scale);
     only the query side replicates ×(1+n_probes), and probe buckets
     absent from the corpus vanish at the inner bucket join."""
-    banded = _banded_ids(vectors, dim, id_col, vec_col, n_planes, bands, seed)
+    banded = _banded_ids(vectors, dim, id_col, vec_col, n_planes, bands)
     w = Window.partitionBy("band_idx", "chunk")
     banded = banded.withColumn(
         "n_salts", salt_count(F.count(F.lit(1)).over(w), max_bucket)
@@ -314,7 +337,7 @@ def cosine_topk_lsh(
     )
     if n_probes > 0:
         probes = hyperplane_band_probes(
-            vectors, dim, id_col, vec_col, n_planes, bands, seed, n_probes
+            vectors, dim, id_col, vec_col, n_planes, bands, n_probes
         )
         q = probes.select(
             "band_idx", "chunk", F.col(id_col).alias("query_id")
@@ -348,21 +371,13 @@ def cosine_topk_lsh(
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     vecs = _vec_view(vectors, id_col, vec_col)
-    cand = cand_ids.join(
-        vecs.select(F.col(id_col).alias("query_id"), F.col("v").alias("qv")),
-        "query_id",
-    ).join(
-        vecs.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv")),
-        "neighbor_id",
-    )
-    cos = _dot(F.col("qv"), F.col("nv")) / (
-        F.sqrt(_dot(F.col("qv"), F.col("qv"))) * F.sqrt(_dot(F.col("nv"), F.col("nv")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(wr))
-        .where(F.col("rk") <= k)
+    return _topk(
+        _pair_cosine(
+            cand_ids,
+            _query_view(vecs, id_col, None),
+            _keyed(vecs, id_col, "neighbor_id", "nv"),
+        ),
+        k,
     )
 
 
@@ -374,7 +389,6 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     n_planes: int = 64,
     bands: int = 8,
-    seed: int = 23,
     max_bucket: int = 2000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ threshold), LSH-bucketed
@@ -388,7 +402,7 @@ def embedding_near_dup_pairs(
     stayed small). Per-task width stays bounded at ~max_bucket hashed left
     rows; candidate generation + dedup run on bare id pairs, vectors join
     back once after (same de-amplification as cosine_topk_lsh)."""
-    banded = _banded_ids(vectors, dim, id_col, vec_col, n_planes, bands, seed)
+    banded = _banded_ids(vectors, dim, id_col, vec_col, n_planes, bands)
     w = Window.partitionBy("band_idx", "chunk")
     banded = banded.withColumn(
         "n_salts", salt_count(F.count(F.lit(1)).over(w), max_bucket)
@@ -409,18 +423,34 @@ def embedding_near_dup_pairs(
         .dropDuplicates(["left_id", "right_id"])
     )
     vecs = _vec_view(vectors, id_col, vec_col)
-    cand = cand_ids.join(
-        vecs.select(F.col(id_col).alias("left_id"), F.col("v").alias("lv")),
-        "left_id",
-    ).join(
-        vecs.select(F.col(id_col).alias("right_id"), F.col("v").alias("rv")),
-        "right_id",
+    return _pair_cosine(
+        cand_ids,
+        _keyed(vecs, id_col, "left_id", "lv"),
+        _keyed(vecs, id_col, "right_id", "rv"),
+    ).where(F.col("cos") >= threshold)
+
+
+def _lloyd_update(
+    prev: DataFrame, members: DataFrame, keys: list[str], vec: str, col: str
+) -> DataFrame:
+    """One Lloyd refinement: each `keys` group's new `col` is the
+    component-wise mean of its members' `vec` arrays. The mean runs via
+    dimension explode — the shuffle key is (keys…, pos), partial-aggregated
+    map-side; no group's vectors are ever collected into one row. A group
+    with no members keeps its previous vector (standard k-means empty-cell
+    handling: the groupBy alone would shrink the code space, and md5
+    seeding is blind to geometry, so two nearby seeds make empty cells
+    likely)."""
+    means = (
+        members.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(F.avg("x").alias("m"))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select(*keys, F.transform("pm", lambda s: s["m"]).alias("__mean"))
     )
-    cos = _dot(F.col("lv"), F.col("rv")) / (
-        F.sqrt(_dot(F.col("lv"), F.col("lv"))) * F.sqrt(_dot(F.col("rv"), F.col("rv")))
-    )
-    return cand.select("left_id", "right_id", cos.alias("cos")).where(
-        F.col("cos") >= threshold
+    return prev.join(means, keys, "left").select(
+        *keys, F.coalesce("__mean", col).alias(col)
     )
 
 
@@ -454,34 +484,38 @@ def ivf_centroids(
         F.col("v").alias("cv"),
     )
     for _ in range(n_iter):
-        assigned = _ivf_assign(vecs, cent)
-        # per-cell mean via dimension explode: the shuffle key is
-        # (centroid_id, pos) — k·dim groups, partial-aggregated map-side;
-        # no cell's vectors are ever collected into one row
-        means = (
-            assigned.join(vecs, id_col)
-            .select("centroid_id", F.posexplode("v").alias("pos", "x"))
-            .groupBy("centroid_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("centroid_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                "centroid_id",
-                F.transform("pm", lambda s: s["m"]).alias("cv_new"),
-            )
-        )
-        # Empty-cell handling (standard k-means): a centroid whose cell got
-        # no assignments keeps its previous vector instead of silently
-        # vanishing from the quantizer — the groupBy alone would shrink the
-        # id space below n_centroids (md5 seeding is blind to geometry, so
-        # two nearby seeds make empty cells likely).
-        cent = (
-            cent.join(means, "centroid_id", "left")
-            .select(
-                "centroid_id", F.coalesce("cv_new", "cv").alias("cv")
-            )
-        )
+        members = _ivf_assign(vecs, cent).join(vecs, id_col)
+        cent = _lloyd_update(cent, members, ["centroid_id"], "v", "cv")
     return cent
+
+
+def _centroid_row(cent: DataFrame) -> DataFrame:
+    """The centroid table collapsed into ONE broadcast row `cents`:
+    array<struct<centroid_id, cv>> sorted by centroid_id (k ≪ corpus)."""
+    return F.broadcast(
+        cent.agg(
+            F.array_sort(F.collect_list(F.struct("centroid_id", "cv"))).alias("cents")
+        )
+    )
+
+
+def _ranked_cells(v: F.Column) -> F.Column:
+    """Every centroid of the `cents` row as struct(neg, centroid_id, cv),
+    sorted on (−cos(v, cv), centroid_id) — nearest cell first, ties to the
+    lower centroid_id (cv never decides: centroid_id is unique). Each
+    struct carries its own cv, so a residual reads its centroid id-exactly,
+    never through a positional element_at(cents, id+1) that would mis-index
+    a non-contiguous centroid table."""
+    return F.array_sort(
+        F.transform(
+            F.col("cents"),
+            lambda c: F.struct(
+                (-_cosine(v, c["cv"])).alias("neg"),
+                c["centroid_id"].alias("centroid_id"),
+                c["cv"].alias("cv"),
+            ),
+        )
+    )
 
 
 def _ivf_assign(vecs: DataFrame, cent: DataFrame, rank_upto: int = 1) -> DataFrame:
@@ -493,40 +527,9 @@ def _ivf_assign(vecs: DataFrame, cent: DataFrame, rank_upto: int = 1) -> DataFra
     no exchange, no per-row Python. A window/argmax formulation would
     shuffle n·k rows on the vector id; this shuffles nothing."""
     id_cols = [c for c in vecs.columns if c != "v"]
-    carr = cent.agg(
-        F.array_sort(F.collect_list(F.struct("centroid_id", "cv"))).alias("cents")
-    )
-
-    def neg_cos(c):
-        num = F.aggregate(
-            F.zip_with(F.col("v"), c["cv"], lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        nv = F.sqrt(F.aggregate(
-            F.transform(F.col("v"), lambda x: x * x), F.lit(0.0),
-            lambda acc, x: acc + x,
-        ))
-        nc = F.sqrt(F.aggregate(
-            F.transform(c["cv"], lambda x: x * x), F.lit(0.0),
-            lambda acc, x: acc + x,
-        ))
-        return -(num / (nv * nc))
-
-    # ascending struct sort on (-cos, centroid_id) == cos desc, id asc
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("cents"),
-                lambda c: F.struct(
-                    neg_cos(c).alias("neg"),
-                    c["centroid_id"].alias("centroid_id"),
-                ),
-            )
-        ),
-        1, rank_upto,
-    )
+    ranked = F.slice(_ranked_cells(F.col("v")), 1, rank_upto)
     return (
-        vecs.crossJoin(F.broadcast(carr))
+        vecs.crossJoin(_centroid_row(cent))
         .select(*id_cols, F.posexplode(ranked).alias("pos", "s"))
         .select(
             *id_cols,
@@ -568,14 +571,7 @@ def cosine_topk_ivf(
     members = _ivf_assign(vecs, cent).select(
         F.col(id_col).alias("neighbor_id"), "centroid_id"
     )
-    if queries is None:  # self-search: every corpus vector queries
-        qvecs = vecs.select(
-            F.col(id_col).alias("query_id"), F.col("v").alias("qv")
-        )
-    else:  # external query set: (query_id, qv) contract
-        qvecs = queries.select(
-            "query_id", F.transform("qv", lambda x: x.cast("double")).alias("qv")
-        )
+    qvecs = _query_view(vecs, id_col, queries)
     probed = _ivf_assign(
         qvecs.select("query_id", F.col("qv").alias("v")), cent, rank_upto=n_probe
     ).select("query_id", "centroid_id")
@@ -584,18 +580,8 @@ def cosine_topk_ivf(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
     )
-    scored = cand.join(qvecs, "query_id").join(
-        vecs.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv")),
-        "neighbor_id",
-    )
-    cos = _dot(F.col("qv"), F.col("nv")) / (
-        F.sqrt(_dot(F.col("qv"), F.col("qv"))) * F.sqrt(_dot(F.col("nv"), F.col("nv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+    return _topk(
+        _pair_cosine(cand, qvecs, _keyed(vecs, id_col, "neighbor_id", "nv")), k
     )
 
 
@@ -653,14 +639,10 @@ def semantic_dedup(
     rhs = sided.select(
         F.col(id_col).alias("b_id"), "centroid_id", F.col("v").alias("bv")
     )
-    cos = _dot(F.col("av"), F.col("bv")) / (
-        F.sqrt(_dot(F.col("av"), F.col("av")))
-        * F.sqrt(_dot(F.col("bv"), F.col("bv")))
-    )
     dups = (
         lhs.join(rhs, "centroid_id")
         .where(F.col("a_id") < F.col("b_id"))
-        .select("b_id", "a_id", cos.alias("cos"))
+        .select("b_id", "a_id", _cosine(F.col("av"), F.col("bv")).alias("cos"))
         .where(F.col("cos") >= threshold)
         .groupBy("b_id")
         .agg(F.min("a_id").alias("dup_of"))
@@ -675,14 +657,16 @@ def semantic_dedup(
     )
 
 
-def sign_matrix(in_dim: int, out_dim: int, seed: int = 29) -> "np.ndarray":
+def sign_matrix(in_dim: int, out_dim: int) -> "np.ndarray":
     """Deterministic (out_dim, in_dim) ±1 sign matrix, engine-portable:
-    +1 iff the first 8 md5 hex chars of f"{seed}:{j}:{d}" parse >= 2^31
+    +1 iff the first 8 md5 hex chars of f"29:{j}:{d}" parse >= 2^31
     (DuckDB: ('0x' || substr(md5(...), 1, 8))::BIGINT >= 2147483648)."""
     s = np.empty((out_dim, in_dim), dtype=np.float64)
     for j in range(out_dim):
         for d in range(in_dim):
-            h = int(hashlib.md5(f"{seed}:{j}:{d}".encode()).hexdigest()[:8], 16)
+            h = int(
+                hashlib.md5(f"{_SIGN_SEED}:{j}:{d}".encode()).hexdigest()[:8], 16
+            )
             s[j, d] = 1.0 if h >= (1 << 31) else -1.0
     return s
 
@@ -691,16 +675,15 @@ def rp_project(
     vectors: DataFrame,
     in_dim: int,
     out_dim: int,
-    seed: int = 29,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    out_col: str = "rp",
 ) -> DataFrame:
     """Random-projection dimensionality reduction (Achlioptas 2003 dense
-    sign variant): y = (1/sqrt(k)) S x with S ∈ {±1}^(k×d) md5-derived —
-    the Johnson-Lindenstrauss preprocessing step that shrinks embedding
-    payloads before ANN banding / brute-force rerank (a 4x dim cut is a 4x
-    cut in every downstream shuffle's vector bytes).
+    sign variant) → (id, rp: array<double>): y = (1/sqrt(k)) S x with
+    S ∈ {±1}^(k×d) md5-derived — the Johnson-Lindenstrauss preprocessing
+    step that shrinks embedding payloads before ANN banding / brute-force
+    rerank (a 4x dim cut is a 4x cut in every downstream shuffle's vector
+    bytes).
 
     ZERO-shuffle Catalyst projection: the sign matrix inlines as array
     literals and each output component is a zip_with + sequential aggregate
@@ -708,36 +691,24 @@ def rp_project(
     against a matrix table (the explode+join formulation this replaces
     shuffles n*d rows). Deterministic: same input row -> same output on any
     partitioning/engine (the fold order is fixed d=0..in_dim-1)."""
-    signs = sign_matrix(in_dim, out_dim, seed)
+    signs = sign_matrix(in_dim, out_dim)
     scale = 1.0 / float(out_dim) ** 0.5
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    comps = []
-    for j in range(out_dim):
-        srow = F.array(*[F.lit(float(v)) for v in signs[j]])
-        comps.append(
-            F.aggregate(
-                F.zip_with(vec, srow, lambda x, s: x * s),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
-            * F.lit(scale)
-        )
-    return vectors.select(F.col(id_col), F.array(*comps).alias(out_col))
+    comps = [
+        _dot(vec, F.array(*[F.lit(float(v)) for v in signs[j]])) * F.lit(scale)
+        for j in range(out_dim)
+    ]
+    return vectors.select(F.col(id_col), F.array(*comps).alias("rp"))
 
 
-def knn_vote(
-    neighbors: DataFrame,
-    labels: DataFrame,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
+def knn_vote(neighbors: DataFrame, labels: DataFrame) -> DataFrame:
     """kNN majority-vote labeling over ANY neighbor source — compose it on
     cosine_topk_bruteforce (exact baseline), cosine_topk_lsh, or ivf_topk
     (the scale paths): the embedding-based quality/domain classifier step
     of a training-data pipeline (label a few records, propagate to the
     corpus by nearest neighbors). Input `neighbors` is (query_id,
-    neighbor_id, ...) — already top-k per query; `labels` is (id_col,
-    label_col) for the labeled corpus. Output one row per query:
+    neighbor_id, ...) — already top-k per query; `labels` is (vec_id,
+    label) for the labeled corpus. Output one row per query:
     (query_id, label, votes). Deterministic: vote ties break to the
     smallest label.
 
@@ -748,8 +719,8 @@ def knn_vote(
     v = (
         neighbors.join(
             labels.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(label_col).alias("__lbl"),
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("label").alias("__lbl"),
             ),
             "neighbor_id",
         )
@@ -760,62 +731,54 @@ def knn_vote(
     return (
         v.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
-        .select("query_id", F.col("__lbl").alias(label_col), "votes")
+        .select("query_id", F.col("__lbl").alias("label"), "votes")
     )
 
 
 def feature_hash_vectors(
     df: DataFrame,
     id_col: str = "doc_id",
-    tokens_col: str = "tokens",
     dim: int = 64,
-    seed: int = 11,
-    weights_col: str | None = None,
     l2_normalize: bool = True,
-    out_col: str = "fh",
     hash_fn=None,
     sign_fn=None,
 ) -> DataFrame:
     """Hashing-trick document vectors (Weinberger et al. ICML 2009 /
-    Moody 1989): a MODEL-FREE text vectorizer — each token t adds
-    sign(t)·w(t) to component pmod(hash(t), dim) — whose inner products
-    are unbiased estimates of the underlying bag-of-words inner products
-    (the sign hash cancels collision cross-terms in expectation). The
-    output array<double> drops straight into this module's ANN stack
-    (cosine_topk_*, embedding_near_dup_pairs, rp_project, semantic_dedup),
-    giving the B1 sentence-encoding slot a dense-vector path that needs no
-    model weights and no vocabulary: dim is FIXED at plan time, so there
-    is no token index to build, broadcast, or keep consistent across runs
-    — the vectorizer is a pure function of the text.
+    Moody 1989) over a `tokens` array<string> column → (id, fh:
+    array<double>): a MODEL-FREE text vectorizer — each token t adds
+    sign(t) to component pmod(hash(t), dim) — whose inner products are
+    unbiased estimates of the underlying bag-of-words inner products (the
+    sign hash cancels collision cross-terms in expectation). The output
+    drops straight into this module's ANN stack (cosine_topk_*,
+    embedding_near_dup_pairs, rp_project, semantic_dedup), giving the B1
+    sentence-encoding slot a dense-vector path that needs no model weights
+    and no vocabulary: dim is FIXED at plan time, so there is no token
+    index to build, broadcast, or keep consistent across runs — the
+    vectorizer is a pure function of the text. A document with no tokens
+    (or whose signs cancel) stays the zero vector, which every cosine tier
+    scores -1.0.
 
     ZERO-shuffle Catalyst projection (same discipline as rp_project): one
     hash per token, then dim filtered array-aggregates — branch-predictable
     ALU compares inside whole-stage codegen, no explode, no join. Token
-    multiplicity counts (TF); pass weights_col (aligned array, e.g. IDF)
-    to reweight. With unit weights every component is an exact signed
-    integer count — order-independent, bit-identical cross-engine (the
-    DuckDB oracle checks exactly that variant).
+    multiplicity counts (TF): every component is an exact signed integer
+    count — order-independent, bit-identical cross-engine (the DuckDB
+    oracle checks exactly that).
 
     hash_fn (string col → bigint) / sign_fn (string col → boolean) default
     to xxhash64; pass md5-based ones for engine portability.
     """
     if hash_fn is None:
-        hash_fn = lambda t: F.xxhash64(t, F.lit(seed))  # noqa: E731
+        hash_fn = lambda t: F.xxhash64(t, F.lit(_FH_SALT))  # noqa: E731
     if sign_fn is None:
         sign_fn = lambda t: (  # noqa: E731
-            F.pmod(F.xxhash64(t, F.lit(seed * 31 + 7)), F.lit(2)) == 0
+            F.pmod(F.xxhash64(t, F.lit(_FH_SALT * 31 + 7)), F.lit(2)) == 0
         )
-    toks = F.col(tokens_col)
-    if weights_col is None:
-        wts = F.transform(toks, lambda t: F.lit(1.0))
-    else:
-        wts = F.transform(F.col(weights_col), lambda x: x.cast("double"))
-    pairs = F.zip_with(
-        toks,
-        wts,
-        lambda t, w: F.struct(
+    pairs = F.transform(
+        F.col("tokens"),
+        lambda t: F.struct(
             F.pmod(hash_fn(t), F.lit(dim)).alias("i"),
-            F.when(sign_fn(t), w).otherwise(-w).alias("sw"),
+            F.when(sign_fn(t), F.lit(1.0)).otherwise(F.lit(-1.0)).alias("sw"),
         ),
     )
     comps = [
@@ -830,21 +793,15 @@ def feature_hash_vectors(
     # so the normalization pass references it instead of re-evaluating the
     # dim filtered aggregates (SPARK-36718: CollapseProject keeps non-cheap
     # aliases referenced more than once)
-    base = df.select(F.col(id_col), F.array(*comps).alias(out_col))
+    base = df.select(F.col(id_col), F.array(*comps).alias("fh"))
     if not l2_normalize:
         return base
-    norm = F.sqrt(
-        F.aggregate(
-            F.col(out_col), F.lit(0.0), lambda acc, x: acc + x * x
-        )
-    )
+    norm = _norm(F.col("fh"))
     return base.select(
         F.col(id_col),
-        F.when(
-            norm > 0, F.transform(F.col(out_col), lambda x: x / norm)
-        )
-        .otherwise(F.col(out_col))
-        .alias(out_col),
+        F.when(norm > 0, F.transform(F.col("fh"), lambda x: x / norm))
+        .otherwise(F.col("fh"))
+        .alias("fh"),
     )
 
 
@@ -858,44 +815,32 @@ def _sq_l2(a, b) -> F.Column:
     return _dot(a, a) - F.lit(2.0) * _dot(a, b) + _dot(b, b)
 
 
-def _residualized(vecs: DataFrame, cent: DataFrame) -> DataFrame:
-    """(id…, centroid_id, v := v − c_nearest): nearest-cell id + residual,
-    as ONE zero-shuffle broadcast expression (the centroid table collapses
-    to a single struct-array row, argmin + subtraction run as higher-order
-    expressions — same discipline as _ivf_assign). Residuals are what the
-    PQ codebooks quantize in the true FAISS IVFADC: after the coarse cell
-    mean is removed the residual energy is a fraction of the vector's, so
-    the same code budget quantizes far more finely."""
-    id_cols = [c for c in vecs.columns if c != "v"]
-    carr = cent.agg(
-        F.array_sort(F.collect_list(F.struct("centroid_id", "cv"))).alias("cents")
-    )
-
-    def neg_cos(c):
-        num = _dot(F.col("v"), c["cv"])
-        nv = F.sqrt(_dot(F.col("v"), F.col("v")))
-        nc = F.sqrt(_dot(c["cv"], c["cv"]))
-        return -(num / (nv * nc))
-
-    # the winning struct carries its own cv, so the residual subtraction is
-    # id-exact by construction — no positional element_at(cents, id+1) that
-    # would silently mis-index a caller-supplied non-contiguous centroid
-    # table (cv never participates in the sort: centroid_id is unique, so
-    # the (neg, centroid_id) prefix always decides)
-    best = F.element_at(
+def _nearest_code(x: F.Column, codewords: F.Column) -> F.Column:
+    """Index of the codeword in `codewords` (array<array<double>>, ordered
+    by code) nearest `x` by squared L2, ties to the smaller code — the PQ
+    assignment of both Lloyd training and encoding."""
+    return F.element_at(
         F.array_sort(
             F.transform(
-                F.col("cents"),
-                lambda c: F.struct(
-                    neg_cos(c).alias("neg"),
-                    c["centroid_id"].alias("centroid_id"),
-                    c["cv"].alias("cv"),
-                ),
+                codewords,
+                lambda cw, c: F.struct(_sq_l2(x, cw).alias("d"), c.alias("code")),
             )
         ),
         1,
+    )["code"]
+
+
+def _residualized(vecs: DataFrame, cent: DataFrame) -> DataFrame:
+    """(id…, centroid_id, v := v − c_nearest): nearest-cell id + residual,
+    as ONE zero-shuffle broadcast expression (element 1 of `_ranked_cells`,
+    which carries its own cv — same discipline as _ivf_assign). Residuals
+    are what the PQ codebooks quantize in the true FAISS IVFADC: after the
+    coarse cell mean is removed the residual energy is a fraction of the
+    vector's, so the same code budget quantizes far more finely."""
+    id_cols = [c for c in vecs.columns if c != "v"]
+    out = vecs.crossJoin(_centroid_row(cent)).withColumn(
+        "__best", F.element_at(_ranked_cells(F.col("v")), 1)
     )
-    out = vecs.crossJoin(F.broadcast(carr)).withColumn("__best", best)
     return out.select(
         *id_cols,
         F.col("__best")["centroid_id"].alias("centroid_id"),
@@ -914,7 +859,6 @@ def pq_codebooks(
     vec_col: str = "embedding",
     n_iter: int = 0,
     train_filter=None,
-    cent: DataFrame | None = None,
 ) -> DataFrame:
     """Product-quantization codebooks (Jégou, Douze & Schmid, "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011 — public): split
@@ -944,8 +888,6 @@ def pq_codebooks(
     vecs = _vec_view(vectors, id_col, vec_col)
     if train_filter is not None:
         vecs = vecs.where(train_filter)
-    if cent is not None:  # residual-PQ training (FAISS IVFADC)
-        vecs = _residualized(vecs, cent).drop("centroid_id")
     subs = vecs.select(
         F.col(id_col),
         F.posexplode(
@@ -971,56 +913,34 @@ def pq_codebooks(
         )
     )
     for _ in range(n_iter):
-        percell = cb.groupBy("sub_id").agg(
-            F.array_sort(F.collect_list(F.struct("code", "cw"))).alias("cl")
-        )
-        assigned = subs.join(F.broadcast(percell), "sub_id").select(
+        assigned = subs.join(F.broadcast(_pq_subspace_rows(cb)), "sub_id").select(
             "sub_id",
-            F.col("sv"),
-            F.element_at(
-                F.array_sort(
-                    F.transform(
-                        F.col("cl"),
-                        lambda c: F.struct(
-                            _sq_l2(F.col("sv"), c["cw"]).alias("d"),
-                            c["code"].alias("code"),
-                        ),
-                    )
-                ),
-                1,
-            )["code"].alias("code"),
+            "sv",
+            _nearest_code(F.col("sv"), F.col("cws")).cast("long").alias("code"),
         )
-        means = (
-            assigned.select("sub_id", "code", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("sub_id", "code", "pos")
-            .agg(F.avg("x").alias("mx"))
-            .groupBy("sub_id", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "mx"))).alias("pm"))
-            .select(
-                "sub_id", "code",
-                F.transform("pm", lambda s: s["mx"]).alias("cw_new"),
-            )
-        )
-        cb = cb.join(means, ["sub_id", "code"], "left").select(
-            "sub_id", "code", F.coalesce("cw_new", "cw").alias("cw")
-        )
+        cb = _lloyd_update(cb, assigned, ["sub_id", "code"], "sv", "cw")
     return cb
 
 
-def _pq_cb_row(codebooks: DataFrame) -> DataFrame:
-    """Collapse (sub_id, code, cw) into ONE broadcastable row
-    `cbs: array<array<array<double>>>` — cbs[s+1][c+1] = codeword c of
-    subspace s. m·ksub·(dim/m) doubles = dim·ksub total: a few KB even at
-    ksub=256, always broadcast."""
+def _pq_subspace_rows(codebooks: DataFrame) -> DataFrame:
+    """(sub_id, cws: array<array<double>>) — one row per subspace, its
+    codewords ordered by code (cws[c+1] = codeword c)."""
     return (
         codebooks.groupBy("sub_id")
         .agg(F.array_sort(F.collect_list(F.struct("code", "cw"))).alias("cl"))
-        .agg(F.array_sort(F.collect_list(F.struct("sub_id", "cl"))).alias("scl"))
-        .select(
-            F.transform(
-                "scl", lambda s: F.transform(s["cl"], lambda c: c["cw"])
-            ).alias("cbs")
-        )
+        .select("sub_id", F.transform("cl", lambda c: c["cw"]).alias("cws"))
+    )
+
+
+def _pq_cb_row(codebooks: DataFrame) -> DataFrame:
+    """Collapse (sub_id, code, cw) into ONE broadcast row
+    `cbs: array<array<array<double>>>` — cbs[s+1][c+1] = codeword c of
+    subspace s. m·ksub·(dim/m) doubles = dim·ksub total: a few KB even at
+    ksub=256, always broadcast."""
+    return F.broadcast(
+        _pq_subspace_rows(codebooks)
+        .agg(F.array_sort(F.collect_list(F.struct("sub_id", "cws"))).alias("scl"))
+        .select(F.transform("scl", lambda s: s["cws"]).alias("cbs"))
     )
 
 
@@ -1031,42 +951,29 @@ def pq_encode(
     m: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    out_col: str = "codes",
-    cent: DataFrame | None = None,
 ) -> DataFrame:
-    """PQ encoding: each vector → array<int> of m codes (nearest codeword
-    per subspace by squared-L2, ties to the smallest code). ZERO-shuffle:
-    the codebooks collapse to one broadcast row and the m argmins run as
-    nested higher-order expressions inside whole-stage codegen — no window,
-    no explode, no Python. At dim=64/m=8 the index payload shrinks from
-    512 B of float64 to 8 small ints per row — the compression that lets a
-    100 TB embedding corpus's ANN index live in a fraction of the memory
-    (and every downstream shuffle carry codes, not vectors).
-
-    With `cent`, codes quantize the RESIDUAL v − c_nearest (pass codebooks
-    trained with the same `cent`); still zero-shuffle — the residual is a
-    broadcast higher-order expression too."""
+    """PQ encoding → (id, codes: array<int>): m codes per vector (nearest
+    codeword per subspace by squared-L2, ties to the smallest code).
+    ZERO-shuffle: the codebooks collapse to one broadcast row and the m
+    argmins run as nested higher-order expressions inside whole-stage
+    codegen — no window, no explode, no Python. At dim=64/m=8 the index
+    payload shrinks from 512 B of float64 to 8 small ints per row — the
+    compression that lets a 100 TB embedding corpus's ANN index live in a
+    fraction of the memory (and every downstream shuffle carry codes, not
+    vectors). For residual codes, pass residual vectors (as
+    cosine_topk_ivfpq(residual=True) does)."""
     dsub = dim // m
-    vecs = _vec_view(vectors, id_col, vec_col)
-    if cent is not None:
-        vecs = _residualized(vecs, cent).drop("centroid_id")
     codes = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.element_at(
-            F.array_sort(
-                F.transform(
-                    F.element_at(F.col("cbs"), s + 1),
-                    lambda cw, c: F.struct(
-                        _sq_l2(F.slice(F.col("v"), s * dsub + 1, dsub), cw).alias("d"),
-                        c.alias("code"),
-                    ),
-                )
-            ),
-            1,
-        )["code"],
+        lambda s: _nearest_code(
+            F.slice(F.col("v"), s * dsub + 1, dsub),
+            F.element_at(F.col("cbs"), s + 1),
+        ),
     )
-    return vecs.crossJoin(F.broadcast(_pq_cb_row(codebooks))).select(
-        F.col(id_col), codes.alias(out_col)
+    return (
+        _vec_view(vectors, id_col, vec_col)
+        .crossJoin(_pq_cb_row(codebooks))
+        .select(F.col(id_col), codes.alias("codes"))
     )
 
 
@@ -1094,7 +1001,8 @@ def cosine_topk_ivfpq(
     query against the PQ reconstruction of the neighbor,
     cos(q, recon) = Σ_s <q_s, cw_s[code_s]> / (‖q‖·‖recon‖) — so the
     inverted lists store only (centroid_id, m codes) per vector, dim·8/m×
-    smaller than raw float64 vectors.
+    smaller than raw float64 vectors. A zero-norm query or reconstruction
+    scores -1.0.
 
     residual=True is the true IVFADC: codebooks quantize v − c_nearest
     (the residual after the coarse cell mean is removed — a fraction of
@@ -1121,41 +1029,25 @@ def cosine_topk_ivfpq(
     )
     if residual:
         # ONE _residualized definition feeds cell assignment, codebook
-        # training, and encoding — a per-stage cent= pass-through would
-        # rank the corpus against the centroids three separate times and
-        # leave three copies of the tie-break logic to drift apart
-        # (review finding); the members cell and the codes' residual cell
-        # are now the same expression by construction.
+        # training, and encoding, so the members cell and the codes'
+        # residual cell are the same expression by construction
         rv = _residualized(vecs, cent)
-        rvecs = rv.select(id_col, "v")
-        cb = pq_codebooks(
-            rvecs, dim=dim, m=m, ksub=ksub, id_col=id_col, vec_col="v",
-            n_iter=n_iter, train_filter=train_filter,
-        )
+        cb_in, cb_col = rv.select(id_col, "v"), "v"
         members = rv.select(F.col(id_col).alias("neighbor_id"), "centroid_id")
-        codes = pq_encode(
-            rvecs, cb, dim=dim, m=m, id_col=id_col, vec_col="v"
-        ).select(F.col(id_col).alias("neighbor_id"), "codes")
     else:
-        cb = pq_codebooks(
-            vectors, dim=dim, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col,
-            n_iter=n_iter, train_filter=train_filter,
-        )
+        cb_in, cb_col = vectors, vec_col
         members = _ivf_assign(vecs, cent).select(
             F.col(id_col).alias("neighbor_id"), "centroid_id"
         )
-        codes = pq_encode(
-            vectors, cb, dim=dim, m=m, id_col=id_col, vec_col=vec_col
-        ).select(F.col(id_col).alias("neighbor_id"), "codes")
+    cb = pq_codebooks(
+        cb_in, dim=dim, m=m, ksub=ksub, id_col=id_col, vec_col=cb_col,
+        n_iter=n_iter, train_filter=train_filter,
+    )
+    codes = pq_encode(
+        cb_in, cb, dim=dim, m=m, id_col=id_col, vec_col=cb_col
+    ).select(F.col(id_col).alias("neighbor_id"), "codes")
     index = members.join(codes, "neighbor_id")  # the compressed inverted file
-    if queries is None:
-        qvecs = vecs.select(
-            F.col(id_col).alias("query_id"), F.col("v").alias("qv")
-        )
-    else:
-        qvecs = queries.select(
-            "query_id", F.transform("qv", lambda x: x.cast("double")).alias("qv")
-        )
+    qvecs = _query_view(vecs, id_col, queries)
     probed = _ivf_assign(
         qvecs.select("query_id", F.col("qv").alias("v")), cent, rank_upto=n_probe
     ).select("query_id", "centroid_id")
@@ -1165,9 +1057,7 @@ def cosine_topk_ivfpq(
         .select("query_id", "neighbor_id", "codes", "centroid_id")
     )
     dsub = dim // m
-    scored = cand.join(qvecs, "query_id").crossJoin(
-        F.broadcast(_pq_cb_row(cb))
-    )
+    scored = cand.join(qvecs, "query_id").crossJoin(_pq_cb_row(cb))
     # ADC: per-subspace codeword lookup; folds run in fixed s=0..m-1 order
     sub_idx = F.sequence(F.lit(0), F.lit(m - 1))
     cw_of = lambda s: F.element_at(  # noqa: E731
@@ -1184,17 +1074,9 @@ def cosine_topk_ivfpq(
         sub_idx, F.lit(0.0), lambda acc, s: acc + _dot(cw_of(s), cw_of(s))
     )
     if residual:
-        # recon = c + r̂: dot and norm pick up the centroid terms
-        # (centroids collapse to one broadcast row, like the codebooks)
-        carr = cent.agg(
-            F.array_sort(
-                F.collect_list(F.struct("centroid_id", "cv"))
-            ).alias("cents")
-        )
-        scored = scored.crossJoin(F.broadcast(carr))
-        # id-exact struct search (like _ivf_assign), not positional
-        # element_at(cents, id+1): correct for any caller-supplied
-        # centroid table, contiguous ids or not
+        # recon = c + r̂: dot and norm pick up the centroid terms, read
+        # id-exactly from the broadcast centroid row
+        scored = scored.crossJoin(_centroid_row(cent))
         cvec = F.element_at(
             F.filter(
                 F.col("cents"),
@@ -1210,33 +1092,14 @@ def cosine_topk_ivfpq(
         )
         adc_dot = adc_dot + _dot(F.col("qv"), cvec)
         rnorm2 = rnorm2 + F.lit(2.0) * cross + _dot(cvec, cvec)
-    qnorm = F.sqrt(_dot(F.col("qv"), F.col("qv")))
-    cos = F.when(rnorm2 > 0, adc_dot / (qnorm * F.sqrt(rnorm2))).otherwise(
-        F.lit(-1.0)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    approx = (
-        scored.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w))
-    )
+    cos = _guarded_cos(adc_dot, _dot(F.col("qv"), F.col("qv")), rnorm2)
+    adc = scored.select("query_id", "neighbor_id", cos.alias("cos"))
     if rerank is None:
-        return approx.where(F.col("rk") <= k)
+        return _topk(adc, k)
     # exact re-rank: full vectors touched for only `rerank` rows per query
-    top = approx.where(F.col("rk") <= int(rerank)).select(
-        "query_id", "neighbor_id"
-    )
-    ex = top.join(qvecs, "query_id").join(
-        vecs.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv")),
-        "neighbor_id",
-    )
-    ecos = _dot(F.col("qv"), F.col("nv")) / (
-        F.sqrt(_dot(F.col("qv"), F.col("qv")))
-        * F.sqrt(_dot(F.col("nv"), F.col("nv")))
-    )
-    return (
-        ex.select("query_id", "neighbor_id", ecos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+    top = _topk(adc, int(rerank)).select("query_id", "neighbor_id")
+    return _topk(
+        _pair_cosine(top, qvecs, _keyed(vecs, id_col, "neighbor_id", "nv")), k
     )
 
 
@@ -1279,16 +1142,15 @@ def sq8_encode(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    out_col: str = "sq8",
 ) -> DataFrame:
-    """SQ8 encoding: dim float64 components → dim/8 longs, 8 codes packed
-    per long (true 8× payload cut — an array<int> of codes would only
-    halve it). ZERO-shuffle: the one-row stats table broadcasts and both
-    the per-dim quantization and the bit-packing are higher-order
-    expressions in whole-stage codegen. Pack layout: packed[j] holds
-    codes 8j..8j+7, code i at bit 8·(i mod 8) — unpacked exactly by
-    `(packed[i//8] >> 8·(i%8)) & 255` (integer arithmetic, lossless,
-    pytest-roundtripped)."""
+    """SQ8 encoding → (id, sq8: array<long>): dim float64 components →
+    dim/8 longs, 8 codes packed per long (true 8× payload cut — an
+    array<int> of codes would only halve it). ZERO-shuffle: the one-row
+    stats table broadcasts and both the per-dim quantization and the
+    bit-packing are higher-order expressions in whole-stage codegen. Pack
+    layout: packed[j] holds codes 8j..8j+7, code i at bit 8·(i mod 8) —
+    unpacked exactly by `(packed[i//8] >> 8·(i%8)) & 255` (integer
+    arithmetic, lossless, pytest-roundtripped)."""
     if dim % 8 != 0:
         raise ValueError(f"dim={dim} not divisible by 8")
     vecs = _vec_view(vectors, id_col, vec_col)
@@ -1309,7 +1171,7 @@ def sq8_encode(
 
     packed = F.array(*[pack_word(j) for j in range(dim // 8)])
     return vecs.crossJoin(F.broadcast(stats)).select(
-        F.col(id_col), packed.alias(out_col)
+        F.col(id_col), packed.alias("sq8")
     )
 
 
@@ -1341,19 +1203,13 @@ def cosine_topk_sq8(
     when dimensions are independently scaled. Brute-force pairing here —
     the exact-verify twin; compose with IVF cells (route both sides
     through _ivf_assign and join on centroid_id, as cosine_topk_ivfpq
-    does) for the sublinear path. Deterministic double arithmetic
-    end-to-end, replicated by the `sq8_topk` DuckDB oracle."""
+    does) for the sublinear path. A zero-norm query or reconstruction
+    scores -1.0. Deterministic double arithmetic end-to-end, replicated by
+    the `sq8_topk` DuckDB oracle."""
     vecs = _vec_view(vectors, id_col, vec_col)
     stats = sq8_stats(vectors, dim, vec_col=vec_col)
     codes = sq8_encode(vectors, stats, dim, id_col=id_col, vec_col=vec_col)
-    if queries is None:
-        qvecs = vecs.select(
-            F.col(id_col).alias("query_id"), F.col("v").alias("qv")
-        )
-    else:
-        qvecs = queries.select(
-            "query_id", F.transform("qv", lambda x: x.cast("double")).alias("qv")
-        )
+    qvecs = _query_view(vecs, id_col, queries)
     cand = qvecs.crossJoin(
         codes.select(F.col(id_col).alias("neighbor_id"), "sq8")
     ).where(F.col("query_id") != F.col("neighbor_id")).crossJoin(
@@ -1373,11 +1229,5 @@ def cosine_topk_sq8(
         ),
         _sq8_decode_at(F.col("sq8"), 0) * _sq8_decode_at(F.col("sq8"), 0),
     )
-    qnorm = F.sqrt(_dot(F.col("qv"), F.col("qv")))
-    cos = F.when(rn2 > 0, dot / (qnorm * F.sqrt(rn2))).otherwise(F.lit(-1.0))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-    )
+    cos = _guarded_cos(dot, _dot(F.col("qv"), F.col("qv")), rn2)
+    return _topk(cand.select("query_id", "neighbor_id", cos.alias("cos")), k)

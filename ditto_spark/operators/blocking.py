@@ -519,7 +519,6 @@ def global_rank(
     df: DataFrame,
     order_cols: list[str],
     out_col: str = "rank",
-    parts: int | None = None,
 ) -> DataFrame:
     """0-based dense global row index over `order_cols` ascending (the
     order must be a total order — include a unique id as the last column).
@@ -527,45 +526,53 @@ def global_rank(
     ONE partition; this is the scale-safe two-phase form (the
     pack_pretraining_chunks idiom): range-repartition on the order
     columns, collect one tiny count row per partition to the driver,
-    then assign offset + local position in a zero-exchange Arrow pass."""
+    then assign offset + local position in a zero-exchange Arrow pass.
+
+    The offsets are only valid for the cached range partitioning they were
+    computed from, so the ranked table is materialized eagerly (a local
+    checkpoint) and the cache is released before returning."""
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
     spark = df.sparkSession
-    n_parts = parts or spark.sparkContext.defaultParallelism * 2
+    n_parts = spark.sparkContext.defaultParallelism * 2
     by_range = (
         df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
         .withColumn("pid", F.spark_partition_id())
         .persist()
     )
-    psums = {
-        r["pid"]: r["c"]
-        for r in by_range.groupBy("pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(psums):
-        offsets[pid] = acc
-        acc += psums[pid]
-    schema = StructType(
-        [f for f in by_range.schema.fields if f.name != "pid"]
-        + [StructField(out_col, LongType())]
-    )
-    offs = dict(offsets)
+    try:
+        psums = {
+            r["pid"]: r["c"]
+            for r in by_range.groupBy("pid")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .collect()
+        }
+        offsets, acc = {}, 0
+        for pid in sorted(psums):
+            offsets[pid] = acc
+            acc += psums[pid]
+        schema = StructType(
+            [f for f in by_range.schema.fields if f.name != "pid"]
+            + [StructField(out_col, LongType())]
+        )
 
-    def _assign(batches):
-        pos = None
-        for b in batches:
-            if len(b) == 0:
-                continue
-            if pos is None:
-                pos = offs[int(b["pid"].iloc[0])]
-            out = b.drop(columns=["pid"])
-            out[out_col] = range(pos, pos + len(b))
-            pos += len(b)
-            yield out
+        def _assign(batches):
+            pos = None
+            for b in batches:
+                if len(b) == 0:
+                    continue
+                if pos is None:
+                    pos = offsets[int(b["pid"].iloc[0])]
+                out = b.drop(columns=["pid"])
+                out[out_col] = range(pos, pos + len(b))
+                pos += len(b)
+                yield out
 
-    return by_range.mapInPandas(_assign, schema=schema)
+        return by_range.mapInPandas(_assign, schema=schema).localCheckpoint(eager=True)
+    finally:
+        by_range.unpersist()
 
 
 def sorted_neighborhood_pairs(
@@ -573,7 +580,6 @@ def sorted_neighborhood_pairs(
     key_col: str,
     w: int = 5,
     id_col: str = "doc_id",
-    parts: int | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood blocking (Hernández & Stolfo 1995, the merge/
     purge method — public; a blocking family the reference does not have):

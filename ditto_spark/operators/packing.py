@@ -57,7 +57,6 @@ def pack_pretraining_chunks(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_tok_col: str | None = None,
-    parts: int | None = None,
 ) -> DataFrame:
     """(id, text|n_tok) → (id, pack_id, tok_from, tok_to): for every pack a
     document overlaps, the doc-relative half-open token slice [tok_from,
@@ -79,7 +78,7 @@ def pack_pretraining_chunks(
     sized = sized.where(F.col("n_tok") > 0).withColumn(
         "n_tok", F.col("n_tok").cast("long")
     )
-    n_parts = parts or sized.sparkSession.sparkContext.defaultParallelism * 2
+    n_parts = sized.sparkSession.sparkContext.defaultParallelism * 2
     by_range = sized.repartitionByRange(n_parts, F.col(id_col)).sortWithinPartitions(
         id_col
     ).withColumn("pid", F.spark_partition_id())

@@ -1,15 +1,24 @@
 import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 
 from ditto_spark.operators.ann import (
     cosine_topk_bruteforce,
     cosine_topk_lsh,
     embedding_near_dup_pairs,
-    hyperplane_signatures,
     plane_matrix,
 )
 
 DIM = 16
+
+
+def _frame(spark, rows, typ="double"):
+    """(vec_id, embedding: array<typ>) built through Arrow from pandas: a
+    JVM-side scan. A frame built from a Python list is a Python RDD scan,
+    and the crossJoin plans here would start Python evaluation in every
+    task (seconds per call even on a few rows)."""
+    pdf = pd.DataFrame({"vec_id": [i for i, _ in rows], "embedding": [v for _, v in rows]})
+    return spark.createDataFrame(pdf, f"vec_id long, embedding array<{typ}>")
 
 
 def _vecs(spark, n=60, n_clusters=6, seed=3, noise=0.05):
@@ -22,7 +31,7 @@ def _vecs(spark, n=60, n_clusters=6, seed=3, noise=0.05):
         v = centers[c] + noise * rng.randn(DIM)
         v = v / np.linalg.norm(v)
         rows.append((i, [float(x) for x in v]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>"), [
+    return _frame(spark, rows, "float"), [
         i % n_clusters for i in range(n)
     ]
 
@@ -122,19 +131,12 @@ def test_embedding_near_dup_pairs(spark):
         assert r["cos"] >= 0.98
 
 
-def test_hyperplane_signature_deterministic(spark):
-    df, _ = _vecs(spark, n=10)
-    a = {r["vec_id"]: r["hsig"] for r in hyperplane_signatures(df, DIM).collect()}
-    b = {r["vec_id"]: r["hsig"] for r in hyperplane_signatures(df, DIM).collect()}
-    assert a == b
-
-
 def test_plane_matrix_portable_formula():
     """w[d, p] must equal the md5-derived value the DuckDB oracle
     regenerates in SQL."""
     import duckdb
 
-    w = plane_matrix(dim=3, n_planes=2, seed=23)
+    w = plane_matrix(dim=3, n_planes=2)
     got = duckdb.connect().execute(
         """
         SELECT p.i, d.i,
@@ -470,8 +472,10 @@ def test_feature_hash_feeds_ann_stack(spark):
         rows.append((2 * i, base + [f"doc{i}"]))
         rows.append((2 * i + 1, base + [f"doc{i}", "extra"]))  # near-dup
     df = spark.createDataFrame(rows, "doc_id long, tokens array<string>")
-    fh = feature_hash_vectors(df, dim=128, out_col="v").withColumnRenamed(
-        "doc_id", "vec_id"
+    fh = (
+        feature_hash_vectors(df, dim=128)
+        .withColumnRenamed("doc_id", "vec_id")
+        .withColumnRenamed("fh", "v")
     )
     q = fh.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     top1 = cosine_topk_bruteforce(fh, q, k=1)
@@ -490,7 +494,7 @@ def _dvecs(spark, n=60, n_clusters=6, seed=3, noise=0.05):
         v = centers[i % n_clusters] + noise * rng.randn(DIM)
         v = v / np.linalg.norm(v)
         rows.append((i, [float(x) for x in v]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return _frame(spark, rows)
 
 
 def test_pq_encode_matches_numpy(spark):
@@ -865,3 +869,95 @@ def test_sq8_partition_invariant(spark):
         for r in sq8_encode(df.repartition(7), st, DIM).collect()
     )
     assert a == b
+
+
+def _zero_vector_corpus(spark):
+    """Feature-hashed docs 0 and 1 plus an empty doc 2, whose hashed vector
+    is the zero vector (as embedding: array<double>)."""
+    from ditto_spark.operators.ann import feature_hash_vectors
+
+    docs = spark.createDataFrame(
+        [(0, ["a", "b", "c"]), (1, ["a", "b", "d"]), (2, [])],
+        "doc_id long, tokens array<string>",
+    )
+    rows = feature_hash_vectors(docs, dim=DIM).collect()
+    return _frame(spark, [(r["doc_id"], r["fh"]) for r in rows])
+
+
+def test_zero_vector_scores_minus_one_in_every_cosine_tier(spark):
+    """A zero vector (an empty document's hashed vector) scores cos = -1.0
+    against anything instead of dividing by zero: it ranks last in every
+    top-k and never passes a near-dup threshold. Width-1 LSH bands put the
+    zero vector (all sign bits 0) in a bucket with every vector that has a
+    non-positive projection, and a single IVF cell makes every pair meet."""
+    from ditto_spark.operators.ann import (
+        cosine_topk_ivf,
+        cosine_topk_sq8,
+        semantic_dedup,
+    )
+
+    vecs = _zero_vector_corpus(spark)
+    assert {
+        r["vec_id"]: any(x != 0.0 for x in r["embedding"]) for r in vecs.collect()
+    } == {0: True, 1: True, 2: False}
+    q = vecs.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    expect = {(2, 0): -1.0, (2, 1): -1.0, (0, 2): -1.0, (1, 2): -1.0}
+    tiers = {
+        "bruteforce": cosine_topk_bruteforce(vecs, q, k=2, vec_col="embedding"),
+        "lsh": cosine_topk_lsh(vecs, dim=DIM, k=2, n_planes=16, bands=16),
+        "ivf": cosine_topk_ivf(vecs, k=2, n_centroids=1, n_probe=1),
+    }
+    for name, df in tiers.items():
+        got = {(r["query_id"], r["neighbor_id"]): (r["cos"], r["rk"]) for r in df.collect()}
+        assert {p: got[p][0] for p in expect if p in got} == {
+            p: v for p, v in expect.items() if p in got
+        }, name
+        assert (2, 0) in got and got[(2, 0)][1] == 1, (name, got)
+        if (0, 2) in got:
+            assert got[(0, 2)][1] == 2, (name, got)  # ranks behind doc 1
+    pairs = embedding_near_dup_pairs(
+        vecs, dim=DIM, threshold=0.5, n_planes=16, bands=16
+    ).collect()
+    assert all(2 not in (r["left_id"], r["right_id"]) for r in pairs)
+    sd = {
+        r["vec_id"]: (r["is_kept"], r["dup_of"])
+        for r in semantic_dedup(vecs, n_centroids=1, threshold=0.5).collect()
+    }
+    assert sd[2] == (1, -1) and sd[1][1] != 2
+    # asymmetric tiers: a zero QUERY vector scores -1.0 too
+    zq = q.where(F.col("query_id") == 2)
+    rows = cosine_topk_sq8(vecs, dim=DIM, k=2, queries=zq).collect()
+    assert sorted((r["neighbor_id"], r["cos"], r["rk"]) for r in rows) == [
+        (0, -1.0, 1), (1, -1.0, 2)
+    ]
+
+
+def test_topk_ties_go_to_lower_neighbor_id(spark):
+    """The shared top-k contract: duplicated vectors tie exactly, ties go
+    to the lower neighbor_id, and rk runs 1..k per query — identically in
+    the brute-force, IVF and SQ8 tiers."""
+    from ditto_spark.operators.ann import cosine_topk_ivf, cosine_topk_sq8
+
+    rng = np.random.RandomState(5)
+    a, b = rng.randn(8), rng.randn(8)
+    vecs = _frame(
+        spark, [(i, [float(x) for x in (a if i < 4 else b)]) for i in range(6)]
+    )
+    q = vecs.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    # ids 0-3 duplicate one vector, 4-5 another
+    expect = {
+        0: [1, 2, 3], 1: [0, 2, 3], 2: [0, 1, 3], 3: [0, 1, 2],
+        4: [5, 0, 1], 5: [4, 0, 1],
+    }
+    tiers = {
+        "bruteforce": cosine_topk_bruteforce(vecs, q, k=3, vec_col="embedding"),
+        "ivf": cosine_topk_ivf(vecs, k=3, n_centroids=2, n_probe=2),
+        "sq8": cosine_topk_sq8(vecs, dim=8, k=3),
+    }
+    for name, df in tiers.items():
+        got = {}
+        for r in sorted(df.collect(), key=lambda r: (r["query_id"], r["rk"])):
+            got.setdefault(r["query_id"], []).append((r["rk"], r["neighbor_id"]))
+        assert got == {
+            qid: list(enumerate(nbrs, start=1)) for qid, nbrs in expect.items()
+        }, name

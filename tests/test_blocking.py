@@ -231,6 +231,26 @@ def test_sorted_neighborhood_pairs_unique_and_partition_invariant(spark):
     assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
 
 
+def test_global_rank_callers_release_their_cache(spark):
+    """global_rank's per-partition offsets are valid only for its cached
+    range partitioning: it materializes the ranks eagerly and releases the
+    cache, so neither caller leaves a cache entry behind."""
+    from ditto_spark.operators.blocking import sorted_neighborhood_pairs
+    from ditto_spark.operators.profile import exact_quantiles
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    df = spark.createDataFrame(
+        [(i, "k%02d" % (i % 7)) for i in range(40)], "doc_id long, k string"
+    )
+    assert len(sorted_neighborhood_pairs(df, key_col="k", w=3).collect()) > 0
+    med = exact_quantiles(
+        df.withColumn("v", F.col("doc_id").cast("double")), "v", [0.5], ["doc_id"]
+    ).collect()
+    assert med[0]["value"] == 19.0
+    assert cm.numCachedEntries() == before
+
+
 def test_meta_blocking_wnp_prunes_below_both_means(spark):
     from ditto_spark.operators.blocking import meta_blocking_wnp
 
