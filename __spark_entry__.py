@@ -168,7 +168,12 @@ def _mh_pairs_cte(prefix: str, docs_from: str, min_est: float = 0.25) -> str:
     prefixed names over `docs_from`(doc_id, text); terminal CTE
     `{prefix}p` = (left_id, right_id) pairs at est ≥ min_est. The same
     construction `_minhash_lsh_oracle` emits as a standalone statement,
-    reusable inside a larger composition (chunk_curation)."""
+    reusable inside a larger composition (chunk_curation).
+
+    `{prefix}sig` (read four times by the bands and twice by the pairs),
+    `{prefix}bands` (both sides of the band join) and `{prefix}p` (read
+    twice by the caller) are `AS MATERIALIZED`: DuckDB 1.0 inlines a CTE
+    at each reference, so the copies of the md5 signature multiply."""
     r = _MH_PERMS // _MH_BANDS
     mins = ",\n             ".join(
         f"min(md5('{i}|' || s)) AS h{i}" for i in range(_MH_PERMS)
@@ -185,17 +190,17 @@ def _mh_pairs_cte(prefix: str, docs_from: str, min_est: float = 0.25) -> str:
       FROM (SELECT doc_id, string_split(text, ' ') AS l FROM {docs_from}),
            unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
       WHERE len(l) >= 3
-    ), {prefix}sig AS (
+    ), {prefix}sig AS MATERIALIZED (
       SELECT doc_id, {mins}
       FROM {prefix}sh GROUP BY doc_id
-    ), {prefix}bands AS (
+    ), {prefix}bands AS MATERIALIZED (
       {band_rows}
     ), {prefix}cand AS (
       SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id
       FROM {prefix}bands l JOIN {prefix}bands r
         ON l.band_idx = r.band_idx AND l.band_key = r.band_key
       WHERE l.doc_id < r.doc_id
-    ), {prefix}p AS (
+    ), {prefix}p AS MATERIALIZED (
       SELECT c.left_id, c.right_id
       FROM {prefix}cand c
       JOIN {prefix}sig a ON a.doc_id = c.left_id
@@ -3958,10 +3963,16 @@ def _chunk_curation_oracle() -> str:
     boilerplate-augmented full corpus, with the chunk_boiler stage spliced
     between exact and near_dup — chunks CTE (stride composite ids, same
     as `_chunk_windows`), `_mh_pairs_cte` LSH pairs, cross-doc flagged
-    windows, frac cutoff."""
+    windows, frac cutoff.
+
+    Rule: a CTE that more than one later clause reads, or that the
+    recursive walk reads (`edges`, joined on every iteration), is declared
+    `AS MATERIALIZED`. DuckDB 1.0 inlines a CTE at each reference, and
+    across this 27-CTE chain the copies multiply until the statement runs
+    out of memory. The rule changes the plan, not the result."""
     s = _CHUNK_ID_STRIDE
     return f"""
-WITH RECURSIVE corpus AS (
+WITH RECURSIVE corpus AS MATERIALIZED (
   SELECT doc_id, concat_ws(' ',
      CASE WHEN doc_id % 3 = 0 THEN '{_CHUNK_BOILER_A}' END,
      CASE WHEN doc_id % 7 = 0 THEN '{_CHUNK_BOILER_B}' END,
@@ -3986,7 +3997,7 @@ WITH RECURSIVE corpus AS (
          len(list_intersect(list_distinct(toks),
              ['the','be','to','of','and','that','have','with'])) AS stop_hits
   FROM gd
-), qkeep AS (
+), qkeep AS MATERIALIZED (
   SELECT doc_id FROM gm
   WHERE n >= 20 AND n <= 100000
     AND (CASE WHEN n > 0 THEN round(chars / n, 9) ELSE 0.0 END)
@@ -3997,15 +4008,15 @@ WITH RECURSIVE corpus AS (
     AND (CASE WHEN nl > 0 THEN round(ell_lines / nl, 9) ELSE 0.0 END) <= 0.3
     AND (CASE WHEN n > 0 THEN round(alpha / n, 9) ELSE 0.0 END) >= 0.8
     AND stop_hits >= 1
-), qs AS (
+), qs AS MATERIALIZED (
   SELECT c.doc_id, c.text FROM corpus c JOIN qkeep USING (doc_id)
-), ekeep AS (
+), ekeep AS MATERIALIZED (
   SELECT doc_id FROM (
     SELECT doc_id, min(doc_id) OVER (PARTITION BY text) AS canon FROM qs
   ) WHERE doc_id = canon
-), es AS (
+), es AS MATERIALIZED (
   SELECT qs.doc_id, qs.text FROM qs JOIN ekeep USING (doc_id)
-), cbase AS (
+), cbase AS MATERIALIZED (
   SELECT doc_id,
          list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
                      x -> x <> '') AS l
@@ -4029,37 +4040,37 @@ WITH RECURSIVE corpus AS (
     UNION ALL
     SELECT right_id // {s}, right_id % {s}, left_id // {s} FROM mhp
   ) WHERE doc <> od
-), cbdrop AS (
+), cbdrop AS MATERIALIZED (
   SELECT n.doc_id FROM cnc n
   JOIN (SELECT doc, count(*) AS c FROM flg GROUP BY doc) f
     ON f.doc = n.doc_id
   WHERE f.c > {_CHUNK_CURATION_FRAC!r} * n.nc
-), cs AS (
+), cs AS MATERIALIZED (
   SELECT es.doc_id, es.text FROM es
   LEFT JOIN cbdrop cd ON cd.doc_id = es.doc_id
   WHERE cd.doc_id IS NULL
-), nsh AS (
+), nsh AS MATERIALIZED (
   SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
   FROM (SELECT doc_id, string_split(text, ' ') AS l FROM cs),
        unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
   WHERE len(l) >= 3
 ), rare AS (
   SELECT s FROM nsh GROUP BY s HAVING count(*) <= 50
-), f AS (
+), f AS MATERIALIZED (
   SELECT nsh.doc_id, nsh.s FROM nsh JOIN rare USING (s)
-), sizes AS (
+), sizes AS MATERIALIZED (
   SELECT doc_id, count(*) AS n_sh FROM f GROUP BY doc_id
 ), pairs AS (
   SELECT a.doc_id AS left_id, b.doc_id AS right_id, count(*) AS cs
   FROM f a JOIN f b ON a.s = b.s AND a.doc_id < b.doc_id
   GROUP BY 1, 2 HAVING count(*) >= 2
-), jp AS (
+), jp AS MATERIALIZED (
   SELECT p.left_id, p.right_id
   FROM pairs p
   JOIN sizes sa ON sa.doc_id = p.left_id
   JOIN sizes sb ON sb.doc_id = p.right_id
   WHERE p.cs / (sa.n_sh + sb.n_sh - p.cs) >= 0.5
-), edges AS (
+), edges AS MATERIALIZED (
   SELECT left_id AS a, right_id AS b FROM jp
   UNION ALL
   SELECT right_id, left_id FROM jp
