@@ -6332,7 +6332,7 @@ def q_cms_hot_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ditto_spark.operators.sketch import cms_heavy_hitters
 
     docs = _load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+    toks = B.space_tokens(F.col("text"))
     grams = (
         docs.where(F.col("text").isNotNull())
         .select(toks.alias("__toks"))
@@ -6570,7 +6570,7 @@ def q_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents")
     toks = docs.where(F.col("text").isNotNull()).select(
         "doc_id",
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("tok"),
+        F.explode(B.space_tokens(F.col("text"))).alias("tok"),
     )
     a = toks.where(F.col("doc_id") % 2 == 0)
     b = toks.where(F.col("doc_id") % 2 == 1)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from ditto_spark.operators.blocking import space_tokens
+
 
 def _rand01(id_col: F.Column, salt: F.Column | int, seed: int) -> F.Column:
     """Deterministic uniform [0,1) from (id, salt, seed)."""
@@ -83,7 +85,7 @@ def drop_same(df: DataFrame, text_col: str = "text",
               out_col: str = "augmented") -> DataFrame:
     """Deduplicate repeated tokens keeping first occurrence
     (augment.py drop_same)."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = space_tokens(F.col(text_col))
     idx = F.sequence(F.lit(0), F.size(toks) - 1)
     firsts = F.filter(
         idx, lambda i: F.array_position(toks, F.element_at(toks, i + 1)) == i + 1
@@ -97,7 +99,7 @@ def drop_same(df: DataFrame, text_col: str = "text",
 def drop_len(df: DataFrame, text_col: str = "text", out_col: str = "augmented",
              max_len: int = 12) -> DataFrame:
     """Drop tokens longer than max_len chars (augment.py drop_len)."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = space_tokens(F.col(text_col))
     kept = F.filter(toks, lambda t: F.length(t) <= max_len)
     return df.withColumn(
         out_col,
@@ -191,7 +193,7 @@ def token_ins(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
               out_col: str = "augmented", seed: int = 606) -> DataFrame:
     """Insert one random symbol from '-*.,#&' at a random token position
     (augment.py:108-113 'ins'). Deterministic by xxhash64(id, seed)."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = space_tokens(F.col(text_col))
     n = F.size(toks)
     pos = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed), F.lit(1)), n + 1).cast("int")
     sym = F.element_at(

@@ -40,6 +40,9 @@ joins against band keys computed elsewhere:
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
@@ -55,6 +58,17 @@ def content_tokens(col: Column) -> Column:
     tokens. The DuckDB oracles in __spark_entry__.py replicate
     '[^a-z0-9]+' in SQL; a change to TOKEN_PATTERN must change them too."""
     return F.filter(F.split(F.lower(col), TOKEN_PATTERN), lambda t: t != "")
+
+
+def space_tokens(col: Column) -> Column:
+    """Whitespace token list of `col`, case kept: split on single spaces,
+    drop the empty strings that repeated, leading and trailing spaces leave.
+    The curation, quality, augmentation, packing, sampling and sketch
+    operators call this wherever they drop empty tokens. The DuckDB oracles
+    in __spark_entry__.py replicate it in SQL as
+    `list_filter(string_split(text, ' '), x -> x <> '')`. Splits that must
+    keep the empty strings call `F.split` directly."""
+    return F.filter(F.split(col, " "), lambda t: t != "")
 
 
 def tokenize(df: DataFrame, text_col: str = "entity_text") -> DataFrame:
@@ -515,64 +529,107 @@ def block_exact_shingles(
     )
 
 
+# Private partition-id column of range_prefix_scan; a caller's own columns
+# pass through untouched whatever they are named.
+_SCAN_PID = "__range_scan_pid"
+
+
+@contextmanager
+def range_prefix_scan(
+    df: DataFrame, order_cols: list[str], sum_cols: list[str]
+) -> Iterator[DataFrame]:
+    """Yield `df` plus EXCLUSIVE running sums `cum_<c>` (long) of the
+    non-null integer `sum_cols` over `order_cols` ascending: each row gets
+    the sum over the rows strictly before it in that order. The order must
+    be total (end `order_cols` with a unique id) for the sums to be
+    deterministic.
+
+    A plain `sum() OVER (ORDER BY …)` funnels the corpus through ONE
+    partition. This is the scale-safe two-phase distributed scan instead:
+
+      1. range-repartition to 2 × defaultParallelism on `order_cols` and
+         sort within partitions (range bounds are Spark's sampled global
+         sort — the only wide exchange);
+      2. persist that layout and collect one partial-sum row per partition
+         — O(partitions) driver work — turned into per-partition START
+         OFFSETS;
+      3. add offset + partition-local exclusive cumsum in one Arrow pass
+         (mapInPandas, state carried across the batches of a partition,
+         which arrive in sort order) — NO further exchange. A
+         Window.partitionBy(pid) formulation computes the same values, but
+         Catalyst does not see that the range partitioning already clusters
+         the derived pid column, so it inserts a second corpus-wide hash
+         exchange.
+
+    The whole scan costs one range shuffle plus one O(partitions) collect.
+    The offsets are valid only for the cached range partitioning they were
+    computed from, so the yielded frame may be evaluated only inside the
+    `with` block: materialize it there (a `collect`, or an eager
+    `localCheckpoint`). The cache is released on exit, also when the scan
+    fails. Callers: `global_rank` (sorted-neighborhood blocking, exact
+    quantiles), `evaluate.roc_auc` and `packing.pack_pretraining_chunks`."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    n_parts = df.sparkSession.sparkContext.defaultParallelism * 2
+    by_range = (
+        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols)
+        .withColumn(_SCAN_PID, F.spark_partition_id())
+        .persist()
+    )
+    try:
+        partials = {
+            r[_SCAN_PID]: list(r)[1:]
+            for r in by_range.groupBy(_SCAN_PID)
+            .agg(*[F.sum(c) for c in sum_cols])
+            .collect()
+        }
+        offsets, acc = {}, [0] * len(sum_cols)
+        for pid in sorted(partials):
+            offsets[pid] = list(acc)
+            acc = [a + p for a, p in zip(acc, partials[pid])]
+        schema = StructType(
+            df.schema.fields + [StructField(f"cum_{c}", LongType()) for c in sum_cols]
+        )
+
+        def _assign(batches):
+            carry = None
+            for b in batches:
+                if len(b) == 0:
+                    continue
+                if carry is None:
+                    carry = list(offsets[int(b[_SCAN_PID].iloc[0])])
+                out = b.drop(columns=[_SCAN_PID])
+                for i, c in enumerate(sum_cols):
+                    n = b[c].astype("int64")
+                    cs = n.cumsum()
+                    out[f"cum_{c}"] = cs - n + carry[i]
+                    carry[i] += int(cs.iloc[-1])
+                yield out
+
+        yield by_range.mapInPandas(_assign, schema=schema)
+    finally:
+        by_range.unpersist()
+
+
 def global_rank(
     df: DataFrame,
     order_cols: list[str],
     out_col: str = "rank",
 ) -> DataFrame:
     """0-based dense global row index over `order_cols` ascending (the
-    order must be a total order — include a unique id as the last column).
-    A plain `row_number() OVER (ORDER BY …)` funnels the corpus through
-    ONE partition; this is the scale-safe two-phase form (the
-    pack_pretraining_chunks idiom): range-repartition on the order
-    columns, collect one tiny count row per partition to the driver,
-    then assign offset + local position in a zero-exchange Arrow pass.
-
-    The offsets are only valid for the cached range partitioning they were
-    computed from, so the ranked table is materialized eagerly (a local
-    checkpoint) and the cache is released before returning."""
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    spark = df.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism * 2
-    by_range = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    try:
-        psums = {
-            r["pid"]: r["c"]
-            for r in by_range.groupBy("pid")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        offsets, acc = {}, 0
-        for pid in sorted(psums):
-            offsets[pid] = acc
-            acc += psums[pid]
-        schema = StructType(
-            [f for f in by_range.schema.fields if f.name != "pid"]
-            + [StructField(out_col, LongType())]
+    order must be a total order — include a unique id as the last column):
+    the `range_prefix_scan` running count of a ones column, so no
+    single-partition `row_number() OVER (ORDER BY …)`. The ranked table is
+    materialized eagerly (a local checkpoint) inside the scan, so it leaves
+    no cache behind."""
+    one = "__global_rank_one"
+    with range_prefix_scan(df.withColumn(one, F.lit(1)), order_cols, [one]) as scan:
+        return (
+            scan.drop(one)
+            .withColumnRenamed(f"cum_{one}", out_col)
+            .localCheckpoint(eager=True)
         )
-
-        def _assign(batches):
-            pos = None
-            for b in batches:
-                if len(b) == 0:
-                    continue
-                if pos is None:
-                    pos = offsets[int(b["pid"].iloc[0])]
-                out = b.drop(columns=["pid"])
-                out[out_col] = range(pos, pos + len(b))
-                pos += len(b)
-                yield out
-
-        return by_range.mapInPandas(_assign, schema=schema).localCheckpoint(eager=True)
-    finally:
-        by_range.unpersist()
 
 
 def sorted_neighborhood_pairs(

@@ -48,6 +48,7 @@ from ditto_spark.operators.blocking import (
     content_tokens,
     ngram_overlap_cross,
     shingle,
+    space_tokens,
     tokenize,
 )
 from ditto_spark.operators.cluster import assign_clusters
@@ -95,7 +96,7 @@ def _min_tokens(df: DataFrame, text_col: str, n: int) -> DataFrame:
     `WHERE len(l) >= n` shingle gate (shingle() would otherwise emit a
     whole-stream shingle for shorter docs, which the SQL replica never
     sees)."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = space_tokens(F.col(text_col))
     return df.where(F.size(toks) >= n)
 
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Row
 import pyspark.sql.functions as F
 
+from ditto_spark.operators.blocking import range_prefix_scan
+
 # the reference's τ grid: 0.00, 0.05, …, 0.95
 N_TAUS, TAU_STEP = 20, 0.05
 # equal-width probability bins over [0, 1]
@@ -357,66 +359,6 @@ def cluster_agreement(predicted: DataFrame, truth: DataFrame) -> DataFrame:
     )
 
 
-def _ordered_prefix_sums(
-    df: DataFrame, order_col: str, sum_cols: list[str], *aggs: Column
-) -> Row:
-    """Aggregate `aggs` over `df` extended with EXCLUSIVE running sums
-    cum_<c> of `sum_cols` over `order_col` ascending (rows with order_col
-    values strictly below; `order_col` must be unique per row — feed a
-    groupBy(order_col) histogram). A plain `sum() OVER (ORDER BY …)`
-    funnels everything through ONE partition; this is the scale-safe
-    two-phase form (the global_rank / pack_pretraining_chunks idiom):
-    range-repartition on the order column, collect one tiny partial-sum
-    row per partition to the driver, then add offset + local exclusive
-    cumsum in a zero-exchange Arrow pass.
-
-    The offsets are only valid for the cached range partitioning they were
-    computed from, so this runs eagerly: it returns the one aggregate row
-    and releases the cache only after that row is collected."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    spark = df.sparkSession
-    by_range = (
-        df.repartitionByRange(spark.sparkContext.defaultParallelism * 2, F.col(order_col))
-        .sortWithinPartitions(order_col)
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    try:
-        partials = {
-            r["pid"]: [r[c] for c in sum_cols]
-            for r in by_range.groupBy("pid")
-            .agg(*[F.sum(c).alias(c) for c in sum_cols])
-            .collect()
-        }
-        offsets, acc = {}, [0] * len(sum_cols)
-        for pid in sorted(partials):
-            offsets[pid] = list(acc)
-            acc = [a + (p or 0) for a, p in zip(acc, partials[pid])]
-        schema = StructType(
-            [f for f in by_range.schema.fields if f.name != "pid"]
-            + [StructField(f"cum_{c}", LongType()) for c in sum_cols]
-        )
-
-        def _assign(batches):
-            carry = None
-            for b in batches:
-                if len(b) == 0:
-                    continue
-                if carry is None:
-                    carry = list(offsets[int(b["pid"].iloc[0])])
-                out = b.drop(columns=["pid"])
-                for i, c in enumerate(sum_cols):
-                    cs = b[c].cumsum()
-                    out[f"cum_{c}"] = cs - b[c] + carry[i]  # exclusive
-                    carry[i] += int(cs.iloc[-1])
-                yield out
-
-        return by_range.mapInPandas(_assign, schema=schema).agg(*aggs).collect()[0]
-    finally:
-        by_range.unpersist()
-
-
 def _score_histogram(
     scored_with_labels: DataFrame, caller: str
 ) -> tuple[DataFrame, int, int]:
@@ -453,7 +395,7 @@ def roc_auc(scored_with_labels: DataFrame) -> DataFrame:
     Scale shape: ONE data-sized groupBy collapses the corpus to the
     distinct-score histogram (`_score_histogram`); everything after runs on
     histogram rows. The running counts below each score come from the
-    two-phase distributed prefix sum (`_ordered_prefix_sums`) — no
+    two-phase distributed prefix scan (`blocking.range_prefix_scan`) — no
     single-partition window even when the score space is large. With
     cum_neg<(s) exclusive:  U = Σ_s pos(s)·(cum_neg<(s) + neg(s)/2),
     AUC = U / (P·Q);  AP = Σ_s (pos(s)/P) · TP(s)/(TP(s)+FP(s)) over
@@ -469,11 +411,11 @@ def roc_auc(scored_with_labels: DataFrame) -> DataFrame:
     u = F.sum(F.col("pos") * (F.col("cum_neg") + F.col("neg") / F.lit(2.0)))
     ap = F.sum((F.col("pos") / P) * (tp / (tp + fp)))
     try:
-        row = _ordered_prefix_sums(
-            hist, "s", ["pos", "neg"],
-            F.round(u / (P * Q), 9).alias("auc"),
-            F.round(ap, 9).alias("average_precision"),
-        )
+        with range_prefix_scan(hist, ["s"], ["pos", "neg"]) as scan:
+            row = scan.agg(
+                F.round(u / (P * Q), 9).alias("auc"),
+                F.round(ap, 9).alias("average_precision"),
+            ).collect()[0]
     finally:
         hist.unpersist()
     return scored_with_labels.sparkSession.createDataFrame(

@@ -10,29 +10,11 @@ Not in the reference (its datasets are pair files, /root/reference/
 ditto_light/dataset.py); this is part of the training-data-pipeline tier
 the build brief asks for beyond reference parity.
 
-Scale design — the operator is a GLOBAL prefix sum, which naive window code
-(`Window.orderBy(...)` with no partitionBy) computes by dragging the whole
-corpus into ONE partition. Here it is the classic two-phase distributed
-scan instead:
-
-  1. range-repartition + sort by `id_col` (range boundaries are Spark's
-     sampled global sort — the only wide exchange);
-  2. per-partition token sums (one tiny row per partition) collected and
-     turned into per-partition START OFFSETS on the driver — O(partitions)
-     driver work, broadcast back as a literal map;
-  3. the cumulative sum inside each partition is a partition-local
-     Arrow-batched cumsum (mapInPandas, vectorized, state carried across
-     batches of one partition) — NO further exchange. (A
-     Window.partitionBy(pid) formulation computes the same values but
-     Catalyst cannot see that the range partitioning already clusters
-     pid, so it inserts a second corpus-wide hash exchange — measured in
-     the executed plan.)
-
-So the whole operator costs one range shuffle + one O(partitions) collect,
-and every partition computes its absolute token offsets independently.
-The sized (id, n_tok) projection is persisted only between the offset
-collect and the span materialization (eager local checkpoint), then
-unpersisted — nothing is pinned in executor storage after the call.
+Scale design: the operator is a GLOBAL prefix sum over `id_col`, computed
+by `blocking.range_prefix_scan` (one range shuffle plus one O(partitions)
+collect, no single-partition window). The span table is materialized by an
+eager local checkpoint inside the scan, so nothing stays pinned in executor
+storage after the call.
 """
 
 from __future__ import annotations
@@ -40,15 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from ditto_spark.operators.blocking import range_prefix_scan, space_tokens
+
 
 def token_counts(
     df: DataFrame, text_col: str = "text", out_col: str = "n_tok"
 ) -> DataFrame:
     """Whitespace token count (same tokenizer as token_stats/quality ops)."""
-    return df.withColumn(
-        out_col,
-        F.size(F.filter(F.split(F.col(text_col), " "), lambda t: t != "")),
-    )
+    return df.withColumn(out_col, F.size(space_tokens(F.col(text_col))))
 
 
 def pack_pretraining_chunks(
@@ -78,60 +59,14 @@ def pack_pretraining_chunks(
     sized = sized.where(F.col("n_tok") > 0).withColumn(
         "n_tok", F.col("n_tok").cast("long")
     )
-    n_parts = sized.sparkSession.sparkContext.defaultParallelism * 2
-    by_range = sized.repartitionByRange(n_parts, F.col(id_col)).sortWithinPartitions(
-        id_col
-    ).withColumn("pid", F.spark_partition_id())
-    by_range = by_range.persist()
-    # phase 2: one tiny row per partition → absolute start offset per pid
-    psums = {
-        r["pid"]: r["s"]
-        for r in by_range.groupBy("pid").agg(F.sum("n_tok").alias("s")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(psums):
-        offsets[pid] = acc
-        acc += psums[pid]
-    # phase 3: partition-local cumsum, Arrow-batched, zero exchange. The
-    # batches of one partition arrive in sortWithinPartitions order; the
-    # running sum carries across them. (Window.partitionBy("pid") computes
-    # the same values but inserts Exchange hashpartitioning(pid) — Catalyst
-    # does not recognize the range partitioning as clustering the derived
-    # pid column.)
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    id_field = next(f for f in by_range.schema.fields if f.name == id_col)
-    span_schema = StructType(
-        [id_field, StructField("n_tok", LongType()), StructField("start", LongType())]
-    )
-    offs = dict(offsets)
-
-    def _local_cumsum(batches):
-        carry = 0
-        off = 0
-        seen_first = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if not seen_first:
-                off = int(offs.get(int(pdf["pid"].iloc[0]), 0))
-                seen_first = True
-            n = pdf["n_tok"].astype("int64")
-            cs = n.cumsum() + carry
-            carry = int(cs.iloc[-1])
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "n_tok": n, "start": off + cs - n}
-            )
-
-    # Eager local checkpoint bounds the persist lifecycle: spans (same row
-    # count as sized, 3 narrow columns) is materialized once, after which
-    # the persisted range-partitioned corpus is released. On a cluster this
-    # is the stage table a StageStore checkpoint would hold.
-    spans = by_range.mapInPandas(_local_cumsum, schema=span_schema).localCheckpoint(
-        eager=True
-    )
-    by_range.unpersist()
+    # Eager local checkpoint inside the scan: the spans (same row count as
+    # sized, 3 narrow columns) are materialized once, before the scan
+    # releases its range-partitioned cache. On a cluster this is the stage
+    # table a StageStore checkpoint would hold.
+    with range_prefix_scan(sized, [id_col], ["n_tok"]) as scan:
+        spans = scan.withColumnRenamed("cum_n_tok", "start").localCheckpoint(
+            eager=True
+        )
     # explode over the packs the doc overlaps; slice is doc-relative
     first_pack = (F.col("start") / budget).cast("long")
     last_pack = ((F.col("start") + F.col("n_tok") - 1) / budget).cast("long")

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
+from ditto_spark.operators.blocking import space_tokens
+
 
 def _rank_key(id_col: str, seed: int):
     """Deterministic per-row rank key: md5(seed ':' id), total order with the
@@ -336,7 +338,7 @@ def hashed_gram_buckets(
     the curation pipeline). md5 keeps the bucket assignment engine-portable
     for the DuckDB oracle; production swaps xxhash64 one-for-one.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = space_tokens(F.col(text_col))
     grams = toks
     if bigrams:
         n = F.size(toks)

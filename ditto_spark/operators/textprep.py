@@ -31,7 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
-from ditto_spark.operators.blocking import block_minhash_lsh, content_tokens
+from ditto_spark.operators.blocking import (
+    block_minhash_lsh,
+    content_tokens,
+    space_tokens,
+)
 
 # reference stopword list (summarize.py:12) is nltk English; a fixed small
 # list keeps the oracle portable
@@ -167,12 +171,7 @@ def normalize_numbers(
 
     return df.withColumn(
         out_col,
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.filter(F.split(F.col(text_col), " "), lambda x: x != ""), norm
-            ),
-        ),
+        F.concat_ws(" ", F.transform(space_tokens(F.col(text_col)), norm)),
     )
 
 
@@ -259,7 +258,7 @@ def dk_inject(
             norm(t)
         )
 
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    toks = space_tokens(F.col(text_col))
     return df.withColumn(out_col, F.concat_ws(" ", F.transform(toks, render)))
 
 
@@ -321,7 +320,7 @@ def repetition_stats(
     shuffle is keyed by doc_id (+gram), no joins wider than the document
     itself; scales as a pure keyed aggregation. Documents shorter than n
     tokens have no n-grams → frac 0 (guarded division)."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = space_tokens(F.col(text_col))
 
     def grams(n: int) -> F.Column:
         return F.when(
@@ -429,7 +428,7 @@ def gopher_quality_filter(
     whole-stage codegen, so the stage is a pure map over the scan and
     scales embarrassingly."""
     text = F.col(text_col)
-    toks = F.filter(F.split(text, " "), lambda t: t != "")
+    toks = space_tokens(text)
     n = F.size(toks)
     lines = F.filter(F.split(text, "\n"), lambda l: l != "")
     nl = F.size(lines)
@@ -510,7 +509,7 @@ def duplicated_span_stats(
     approximation — any duplicated run of ≥ L tokens contains a shared
     L-gram, so recall at span granularity L is exact."""
     text = F.col(text_col)
-    toks = F.filter(F.split(text, " "), lambda t: t != "")
+    toks = space_tokens(text)
     grams = F.when(
         F.size(toks) >= l,
         F.transform(
@@ -601,10 +600,9 @@ def ngram_lm_score(
     Documents with fewer than 2 tokens have no bigram and are excluded
     (mirrored by the oracle's length filter)."""
     def bigrams(df: DataFrame, keep_id: bool) -> DataFrame:
-        # drop empty tokens from repeated/leading/trailing spaces — they
-        # would otherwise enter the vocabulary and bigram counts (the
-        # same guard every other tokenizer in this module applies)
-        l = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+        # no empty tokens from repeated/leading/trailing spaces: they
+        # would otherwise enter the vocabulary and bigram counts
+        l = space_tokens(F.col(text_col))
         pairs = F.transform(
             F.slice(l, 1, F.size(l) - 1),
             lambda x, i: F.struct(

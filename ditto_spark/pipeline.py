@@ -4,12 +4,25 @@ transcripts → serialize → MinHash-LSH blocking → pairwise scorer (Arrow UD
 or JVM surrogate) → strict p > τ → large-star/small-star connected
 components → clusters.
 
-Exactly three keyed shuffles at scale: groupBy(conv_id) for serialization,
-the band equi-join for blocking, and the CC iterations (bounded O(log n)
-rounds). The Arrow scorer runs as mapInPandas over the pair table after one
-repartition to 2 × defaultParallelism (`repartition_pairs` overrides the
-count) so the CPU-bound UDF spreads over every core and no partition exceeds
-model memory (SURVEY.md §7 risk: skew).
+Exchanges up to the scored pairs, with AQE off (pinned per stage in
+tests/test_plans.py):
+  serialize   1 hash exchange: groupBy(conv_id); the frame is persisted
+  block       5 hash exchanges and 1 reuse: the band-bucket size window on
+              (band_idx, band_key), the salted band join on (band_idx,
+              band_key, salt) whose two sides share one exchange, the
+              distinct (left_id, right_id), and the left_id and right_id
+              joins back onto the cached signatures for the est_jaccard
+              prefilter
+  pair text   2 hash exchanges: the left_id and right_id joins onto the
+              serialized texts
+  Arrow score 1 round-robin repartition to 2 × defaultParallelism
+              (`repartition_pairs` overrides the count), so the CPU-bound
+              UDF spreads over every core and no partition exceeds model
+              memory (SURVEY.md §7 risk: skew); the JVM scorer adds none
+The executed plan prints the serialized frame's exchange again under each
+cached read of it: 1 line for serialized, 9 for the candidates, and 14 for
+the scored pairs (13 with the JVM scorer). Clustering then runs the CC
+iterations (bounded O(log n) rounds) as jobs of their own.
 
 This module is the only owner of the stage graph: the `stage_*` functions
 below map a `PipelineConfig` onto the operators, and `dedup_transcripts`,

@@ -2,6 +2,7 @@
 salted hot buckets, top-k window, exact-shingle oracle variant."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from ditto_spark.operators.serialize import serialize_conversations
 from ditto_spark.operators import blocking as B
@@ -248,6 +249,61 @@ def test_global_rank_callers_release_their_cache(spark):
         df.withColumn("v", F.col("doc_id").cast("double")), "v", [0.5], ["doc_id"]
     ).collect()
     assert med[0]["value"] == 19.0
+    assert cm.numCachedEntries() == before
+
+
+def test_global_rank_keeps_a_pid_column(spark):
+    """The scan's partition id lives in a private column: a caller's own
+    `pid` column comes back with its values."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {"doc_id": range(30), "k": [d % 4 for d in range(30)], "pid": range(100, 130)}
+    )
+    df = spark.createDataFrame(pdf, "doc_id long, k long, pid long")
+    out = B.global_rank(df, ["k", "doc_id"])
+    assert out.columns == ["doc_id", "k", "pid", "rank"]
+    order = sorted(range(30), key=lambda d: (d % 4, d))
+    got = {r["doc_id"]: (r["pid"], r["rank"]) for r in out.collect()}
+    assert got == {d: (100 + d, order.index(d)) for d in range(30)}
+
+
+def _rank_rows(spark, n):
+    import pandas as pd
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(n), "k": ["a"] * n}), "doc_id long, k string"
+    )
+    return [tuple(r) for r in B.global_rank(df, ["k", "doc_id"]).collect()]
+
+
+def _pack_zero_token_rows(spark):
+    import pandas as pd
+
+    from ditto_spark.operators.packing import pack_pretraining_chunks
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": ["d0", "d1", "d2"], "text": ["", "  ", " "]}),
+        "doc_id string, text string",
+    )
+    return [tuple(r) for r in pack_pretraining_chunks(df, budget=4).collect()]
+
+
+@pytest.mark.parametrize(
+    "run, expected",
+    [
+        (lambda s: _rank_rows(s, 0), []),
+        (lambda s: _rank_rows(s, 1), [(0, "a", 0)]),
+        (_pack_zero_token_rows, []),
+    ],
+    ids=["global_rank_empty", "global_rank_one_row", "pack_all_zero_tokens"],
+)
+def test_prefix_scan_degenerate_input(spark, run, expected):
+    """The shared range prefix scan on an empty frame, one row, and a corpus
+    whose every document has zero tokens: the right rows, no cache left."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    assert run(spark) == expected
     assert cm.numCachedEntries() == before
 
 

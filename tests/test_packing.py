@@ -122,3 +122,19 @@ def test_pack_phase3_adds_no_exchange(spark):
     out = pack_pretraining_chunks(docs, budget=64, n_tok_col="nt")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:1200]
+
+
+def test_pack_releases_its_cache_when_the_scan_fails(spark):
+    """A token count that fails its cast inside the scan raises, and the
+    range-partitioned cache is still released. The frame is list-built: a
+    local relation would fold the cast at planning time and fail before
+    anything is cached."""
+    import pytest
+    from pyspark.errors import PySparkException
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    docs = spark.createDataFrame([("a", "x"), ("b", "x")], "doc_id string, nt string")
+    with pytest.raises(PySparkException, match="CAST_INVALID_INPUT"):
+        pack_pretraining_chunks(docs, budget=4, n_tok_col="nt")
+    assert cm.numCachedEntries() == before

@@ -186,3 +186,48 @@ def test_bucketed_stage_join_is_exchange_free(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bk_left")
         spark.sql("DROP TABLE IF EXISTS bk_right")
+
+
+def test_flagship_exchange_count_per_stage(spark):
+    """The flagship's exchanges per stage and scorer, as pipeline.py's
+    docstring lists them. Counts the executed-plan lines naming an
+    Exchange, with AQE off so the plan is the static one; the serialized
+    frame's one exchange is printed again under each cached read of it."""
+    from ditto_spark.operators.serialize import serialize_conversations
+    from ditto_spark.pipeline import (
+        PipelineConfig,
+        stage_candidates,
+        stage_pair_text,
+        stage_scored,
+    )
+    from ditto_spark.synth import generate_transcripts
+
+    def exchanges(df):
+        lines = [l for l in _initial_plan(df).splitlines() if "Exchange" in l]
+        return (
+            len(lines),
+            sum("ReusedExchange" in l for l in lines),
+            sum("RoundRobinPartitioning" in l for l in lines),
+        )
+
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # a corpus of the tiny_transcripts size under a seed of its own: the
+    # signatures that blocking persists over the fixture in an earlier test
+    # were planned with AQE on, and if their cache stood in for this plan's
+    # signatures, it would hide the hash partitioning that spares the
+    # prefilter joins an exchange
+    transcripts = generate_transcripts(spark, n_base=50, seed=5)
+    serialized = serialize_conversations(transcripts).persist()
+    try:
+        assert exchanges(serialized) == (1, 0, 0)
+        for arrow, scored_counts in ((True, (14, 1, 1)), (False, (13, 1, 0))):
+            cfg = PipelineConfig(use_arrow_udf_scorer=arrow)
+            candidates = stage_candidates(serialized, cfg)
+            assert exchanges(candidates) == (9, 1, 0)
+            with_text = stage_pair_text(candidates, serialized, cfg)
+            assert exchanges(with_text) == scored_counts
+            assert exchanges(stage_scored(with_text, cfg)) == scored_counts
+    finally:
+        serialized.unpersist()
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
