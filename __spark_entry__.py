@@ -63,33 +63,17 @@ def _doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def _rare_shingle_pairs(docs: DataFrame, max_df: int = 50) -> DataFrame:
-    """Pairs sharing >=2 rare shingles with exact Jaccard over the
-    rare-filtered shingle sets (prefix-filter style pruning)."""
-    sh = _doc_shingles(docs)
-    rare = (
-        sh.groupBy("s").agg(F.count(F.lit(1)).alias("dfc")).where(F.col("dfc") <= max_df)
-    )
-    # rare-filtered shingles feed the size agg AND both join sides — persist
-    f = sh.join(rare.select("s"), "s").persist()
-    sizes = f.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    l = f.select(F.col("s"), F.col("doc_id").alias("left_id"))
-    r = f.select(F.col("s"), F.col("doc_id").alias("right_id"))
-    pairs = (
-        l.join(r, "s")
-        .where(F.col("left_id") < F.col("right_id"))
-        .groupBy("left_id", "right_id")
-        .agg(F.count(F.lit(1)).alias("common_shingles"))
-        .where(F.col("common_shingles") >= 2)
-    )
-    return (
-        pairs.join(sizes.withColumnsRenamed({"doc_id": "left_id", "n_sh": "na"}), "left_id")
-        .join(sizes.withColumnsRenamed({"doc_id": "right_id", "n_sh": "nb"}), "right_id")
-        .withColumn(
-            "jaccard",
-            F.col("common_shingles")
-            / (F.col("na") + F.col("nb") - F.col("common_shingles")),
-        )
+def _rare_shingle_pairs(docs: DataFrame) -> DataFrame:
+    """blocking.block_exact_shingles over docs with >= 3 tokens: pairs
+    sharing >= 2 rare (df <= 50) 3-shingles, with exact Jaccard over the
+    rare-filtered shingle sets (_ORACLE_SHINGLE_CTE is its SQL twin)."""
+    return B.block_exact_shingles(
+        docs.where(F.size(B.content_tokens(F.col("text"))) >= 3),
+        id_col="doc_id",
+        text_col="text",
+        shingle_n=3,
+        min_common=2,
+        max_shingle_df=50,
     )
 
 

@@ -84,15 +84,10 @@ def drop_sym(df: DataFrame, text_col: str = "text",
 def drop_same(df: DataFrame, text_col: str = "text",
               out_col: str = "augmented") -> DataFrame:
     """Deduplicate repeated tokens keeping first occurrence
-    (augment.py drop_same)."""
-    toks = space_tokens(F.col(text_col))
-    idx = F.sequence(F.lit(0), F.size(toks) - 1)
-    firsts = F.filter(
-        idx, lambda i: F.array_position(toks, F.element_at(toks, i + 1)) == i + 1
-    )
+    (augment.py drop_same): array_distinct keeps first-occurrence order.
+    Text with no tokens (empty, all spaces, NULL) gives ''."""
     return df.withColumn(
-        out_col,
-        F.concat_ws(" ", F.transform(firsts, lambda i: F.element_at(toks, i + 1))),
+        out_col, F.concat_ws(" ", F.array_distinct(space_tokens(F.col(text_col))))
     )
 
 

@@ -36,6 +36,12 @@ joins against band keys computed elsewhere:
   sig_agreement     fraction of agreeing components of two signatures
   salt_count / hashed_salt / replicated_salts
                     the salt cell of a hot bucket
+
+It also owns the frequency-cut shared-key self-join that every exact
+blocker (rare shingles, winnowed fingerprints, suffixes, meta-blocking,
+structure keys, decontamination) runs:
+  drop_frequent_keys  drop keys held by more than max_df rows
+  shared_key_pairs    (left_id < right_id, n_shared) per pair sharing keys
 """
 
 from __future__ import annotations
@@ -266,6 +272,45 @@ def candidates_from_bands(
     )
 
 
+def drop_frequent_keys(
+    rows: DataFrame, key_cols: list[str], max_df: int
+) -> DataFrame:
+    """Keep each row whose key (`key_cols`) is held by at most `max_df`
+    rows: the frequency cut that bounds a shared-key self-join at
+    max_df²/2 pairs per key. A key held by one row passes (it pairs with
+    nothing, but still counts toward its id's set size); a row with a NULL
+    key component is dropped, as it can share its key with no row.
+
+    A groupBy count joined back, not a count window: partial aggregation
+    means a purged hot key is never buffered as one window group."""
+    keep = (
+        rows.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("__key_df"))
+        .where(F.col("__key_df") <= max_df)
+        .select(*key_cols)
+    )
+    return rows.join(keep, key_cols)
+
+
+def shared_key_pairs(
+    rows: DataFrame, id_col: str, key_cols: list[str], min_shared: int = 1
+) -> DataFrame:
+    """Self-equi-join of (id, key) rows on `key_cols` → (left_id, right_id,
+    n_shared): each unordered pair once, left_id < right_id, n_shared =
+    the number of key rows the two ids meet on, kept at ≥ `min_shared`.
+    Bound the join first with drop_frequent_keys. (LSH bands pair through
+    candidates_from_bands instead: a hot band bucket is salted, not cut.)"""
+    left = rows.select(*key_cols, F.col(id_col).alias("left_id"))
+    right = rows.select(*key_cols, F.col(id_col).alias("right_id"))
+    return (
+        left.join(right, key_cols)
+        .where(F.col("left_id") < F.col("right_id"))
+        .groupBy("left_id", "right_id")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .where(F.col("n_shared") >= min_shared)
+    )
+
+
 def estimated_jaccard(
     pairs: DataFrame, sig_df: DataFrame, id_col: str = "conv_id"
 ) -> DataFrame:
@@ -447,7 +492,7 @@ def ngram_overlap_cross(
     text_col: str = "text",
     shingle_n: int = 8,
     min_common: int = 1,
-    max_train_df: int | None = 10_000,
+    max_train_df: int = 10_000,
 ) -> DataFrame:
     """Benchmark decontamination: (train_id, bench_id, n_common,
     bench_overlap_frac) for every train/benchmark document pair sharing ≥
@@ -457,22 +502,20 @@ def ngram_overlap_cross(
     or flags every train_id that appears here.
 
     Scale shape: one exploded shingle table per side, equi-join on the
-    shingle string, groupBy pair — the same prefix-filter skeleton as
-    block_exact_shingles. `max_train_df` prunes shingles appearing in more
-    than that many TRAIN docs before the join (boilerplate n-grams —
-    headers, license text — would otherwise fan out quadratically);
-    pruning is train-side only, so a benchmark n-gram can never be lost by
-    benchmark-side statistics, and None disables pruning for strict
-    audits. bench_overlap_frac = n_common / |bench doc's distinct
-    shingles| — the usual flag-if-above-epsilon decision input."""
-    tr = shingle(tokenize(train, text_col), shingle_n).select(
-        F.col(id_col).alias("train_id"), F.explode("shingles").alias("s")
+    shingle string, groupBy pair. `drop_frequent_keys` first prunes
+    shingles appearing in more than `max_train_df` TRAIN docs (boilerplate
+    n-grams — headers, license text — would otherwise fan out
+    quadratically); pruning is train-side only, so a benchmark n-gram can
+    never be lost by benchmark-side statistics. bench_overlap_frac =
+    n_common / |bench doc's distinct shingles| — the usual
+    flag-if-above-epsilon decision input."""
+    tr = drop_frequent_keys(
+        shingle(tokenize(train, text_col), shingle_n).select(
+            F.col(id_col).alias("train_id"), F.explode("shingles").alias("s")
+        ),
+        ["s"],
+        max_train_df,
     )
-    if max_train_df is not None:
-        keep = tr.groupBy("s").agg(F.count(F.lit(1)).alias("df_cnt")).where(
-            F.col("df_cnt") <= max_train_df
-        )
-        tr = tr.join(keep.select("s"), "s")
     be = shingle(tokenize(bench, text_col), shingle_n).select(
         F.col(id_col).alias("bench_id"), F.explode("shingles").alias("s")
     )
@@ -504,28 +547,39 @@ def block_exact_shingles(
     min_common: int = 1,
     max_shingle_df: int = 100,
 ) -> DataFrame:
-    """Oracle-friendly exact variant: candidates = pairs sharing ≥ min_common
-    shingles, ignoring shingles whose document frequency exceeds
-    max_shingle_df (stop-shingle pruning — the classic prefix-filter trick
-    that keeps the self-join from exploding on common n-grams).
+    """The rare-shingle Jaccard join: pairs sharing ≥ min_common distinct
+    token shingles, ignoring shingles whose document frequency exceeds
+    max_shingle_df (stop-shingle pruning that keeps the self-join from
+    exploding on common n-grams). Returns (left_id, right_id,
+    common_shingles, na, nb, jaccard): na and nb are the ids' rare-shingle
+    set sizes and jaccard = common / (na + nb − common), exact over those
+    sets.
 
-    SQL-expressible (DuckDB oracle in __spark_entry__.py), unlike the LSH
-    path which is checked rows-only."""
+    SQL-expressible, unlike the LSH path which is checked rows-only:
+    `curate._near_dup_edges` (the curation funnel's near-dup stage) and
+    `__spark_entry__._rare_shingle_pairs` (behind shingle_blocking_pairs,
+    ngram_jaccard_pairs, topk_similar and the other document-dedup
+    queries) call it, and their DuckDB oracles (_ORACLE_SHINGLE_CTE and
+    the near-dup CTEs of _DOC_CURATION_ORACLE) replicate it in SQL."""
     sh = shingle(tokenize(serialized, text_col), shingle_n).select(
         id_col, F.explode("shingles").alias("s")
     )
-    rare = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df_cnt")).where(
-        F.col("df_cnt") <= max_shingle_df
-    )
-    sh = sh.join(rare.select("s"), "s")
-    l = sh.select(F.col("s"), F.col(id_col).alias("left_id"))
-    r = sh.select(F.col("s"), F.col(id_col).alias("right_id"))
+    rare = drop_frequent_keys(sh, ["s"], max_shingle_df)
+    sizes = rare.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     return (
-        l.join(r, "s")
-        .where(F.col("left_id") < F.col("right_id"))
-        .groupBy("left_id", "right_id")
-        .agg(F.count(F.lit(1)).alias("common_shingles"))
-        .where(F.col("common_shingles") >= min_common)
+        shared_key_pairs(rare, id_col, ["s"], min_common)
+        .join(sizes.withColumnsRenamed({id_col: "left_id", "n_sh": "na"}), "left_id")
+        .join(sizes.withColumnsRenamed({id_col: "right_id", "n_sh": "nb"}), "right_id")
+        .select(
+            "left_id",
+            "right_id",
+            F.col("n_shared").alias("common_shingles"),
+            "na",
+            "nb",
+            (
+                F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared"))
+            ).alias("jaccard"),
+        )
     )
 
 
@@ -703,12 +757,11 @@ def suffix_blocking_pairs(
     left < right.
 
     Scale shape: suffix generation is a zero-shuffle codegen projection
-    (sequence + transform, <= len(key) rows per record); then one
-    suffix-keyed count agg and one self-equi-join — every join key is
-    capped at max_bucket rows BEFORE the join (<= max_bucket²/2 pairs
-    from the worst key), the same pre-join skew bound as
-    candidates_from_bands. Dedup shuffles bare id pairs only. Positions
-    are character-based in both engines (identical on ASCII keys)."""
+    (sequence + transform, <= len(key) rows per record); then
+    drop_frequent_keys caps every join key at max_bucket rows BEFORE the
+    shared_key_pairs self-join (<= max_bucket²/2 pairs from the worst
+    key), whose pair groupBy shuffles bare id pairs only. Positions are
+    character-based in both engines (identical on ASCII keys)."""
     k = F.col(key_col)
     suf = df.select(
         F.col(id_col),
@@ -724,27 +777,16 @@ def suffix_blocking_pairs(
             )
         ).alias("s"),
     )
-    kept = (
-        suf.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where((F.col("c") >= 2) & (F.col("c") <= max_bucket))
-        .select("s")
-    )
-    f = suf.join(kept, "s")
-    return (
-        f.select("s", F.col(id_col).alias("left_id"))
-        .join(f.select("s", F.col(id_col).alias("right_id")), "s")
-        .where(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .distinct()
-    )
+    return shared_key_pairs(
+        drop_frequent_keys(suf, ["s"], max_bucket), id_col, ["s"]
+    ).select("left_id", "right_id")
 
 
 def meta_blocking_wnp(
     blocks: DataFrame,
     block_col: str = "block_key",
     id_col: str = "doc_id",
-    max_block_size: int | None = 50,
+    max_block_size: int = 50,
 ) -> DataFrame:
     """Meta-blocking with weighted node pruning (Papadakis et al. 2014,
     "Meta-Blocking: Taking Entity Resolution to the Next Level", TKDE —
@@ -756,10 +798,11 @@ def meta_blocking_wnp(
     redundancy-positive variant that keeps an edge both nodes only weakly
     disagree on.
 
-    Scale shape: block purging (drop blocks larger than max_block_size)
-    bounds the per-block self-join at max_block_size² rows per block —
-    oversized blocks are exactly the ones meta-blocking theory says carry
-    no signal (a stopword-like key relates everything to everything). The
+    Scale shape: block purging (drop_frequent_keys drops blocks larger
+    than max_block_size) bounds the shared_key_pairs self-join at
+    max_block_size² rows per block — oversized blocks are exactly the
+    ones meta-blocking theory says carry no signal (a stopword-like key
+    relates everything to everything). The
     edge weights are one groupBy; node thresholds are one explode + groupBy
     over edges; the final filter joins the (|nodes|-sized) threshold table
     twice on an integer key. The mean comparison is done in exact integer
@@ -768,23 +811,9 @@ def meta_blocking_wnp(
     b = blocks.select(
         F.col(block_col).alias("bk"), F.col(id_col).alias("nid")
     ).distinct()
-    if max_block_size is not None:
-        keep = (
-            b.groupBy("bk")
-            .agg(F.count(F.lit(1)).alias("bsz"))
-            .where(F.col("bsz") <= max_block_size)
-            .select("bk")
-        )
-        b = b.join(keep, "bk")
-    edges = (
-        b.alias("l")
-        .join(b.alias("r"), "bk")
-        .where(F.col("l.nid") < F.col("r.nid"))
-        .groupBy(
-            F.col("l.nid").alias("left_id"), F.col("r.nid").alias("right_id")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("weight"))
-    )
+    edges = shared_key_pairs(
+        drop_frequent_keys(b, ["bk"], max_block_size), "nid", ["bk"]
+    ).withColumnRenamed("n_shared", "weight")
     thresholds = (
         edges.select(
             F.explode(F.array("left_id", "right_id")).alias("node"), "weight"
@@ -881,31 +910,17 @@ def winnow_near_dup_pairs(
     """Near-dup candidates from shared winnowed fingerprints (the MOSS
     match step): documents sharing ≥ min_shared distinct selected
     fingerprints, with boilerplate fingerprints (document frequency >
-    max_df) purged before the quadratic step — the same
-    bound-before-self-join discipline as block purging / rare-shingle
-    blocking. Output (left_id, right_id, shared_fp)."""
+    max_df) purged before the quadratic step by drop_frequent_keys and
+    shared_key_pairs, as in block purging / rare-shingle blocking.
+    Output (left_id, right_id, shared_fp)."""
     fp = (
         winnow_fingerprints(df, id_col, text_col, k=k, w=w)
         .select(F.col(id_col).alias("nid"), "fp")
         .distinct()
     )
-    keep = (
-        fp.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("dfc"))
-        .where(F.col("dfc") <= max_df)
-        .select("fp")
-    )
-    f = fp.join(keep, "fp")
-    return (
-        f.alias("l")
-        .join(f.alias("r"), "fp")
-        .where(F.col("l.nid") < F.col("r.nid"))
-        .groupBy(
-            F.col("l.nid").alias("left_id"), F.col("r.nid").alias("right_id")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("shared_fp"))
-        .where(F.col("shared_fp") >= min_shared)
-    )
+    return shared_key_pairs(
+        drop_frequent_keys(fp, ["fp"], max_df), "nid", ["fp"], min_shared
+    ).withColumnRenamed("n_shared", "shared_fp")
 
 
 def allpairs_jaccard_join(

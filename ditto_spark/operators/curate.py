@@ -4,8 +4,8 @@ already-plan-audited operators:
 
     quality gate (Gopher rules)            textprep.gopher_quality_filter
   → exact dedup (md5 fingerprint, min-id)  one fingerprint groupBy
-  → near-dup dedup (rare-shingle Jaccard   blocking-style prefix-filtered
-    ≥ τ → connected components →           self-join + cluster.assign_clusters
+  → near-dup dedup (rare-shingle Jaccard   blocking.block_exact_shingles
+    ≥ τ → connected components →           + cluster.assign_clusters
     min-id representative)
   → benchmark decontamination              blocking.ngram_overlap_cross
     (GPT-3-style shared-n-gram rule)
@@ -45,11 +45,10 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ditto_spark.operators.blocking import (
+    block_exact_shingles,
     content_tokens,
     ngram_overlap_cross,
-    shingle,
     space_tokens,
-    tokenize,
 )
 from ditto_spark.operators.cluster import assign_clusters
 from ditto_spark.operators.textprep import gopher_quality_filter
@@ -80,7 +79,7 @@ class CurationConfig:
     # n-grams with any benchmark document (train-side df pruning only)
     decon_shingle_n: int = 3
     decon_min_common: int = 2
-    decon_max_train_df: int | None = 50
+    decon_max_train_df: int = 50
     # chunk-level boilerplate stage (round-4 verdict #3): when chunk_tokens
     # is set, exact-dedup survivors whose fraction of chunk windows with a
     # cross-document near-dup partner exceeds chunk_dup_max_frac are
@@ -104,45 +103,19 @@ def _near_dup_edges(
     docs: DataFrame, id_col: str, text_col: str, cfg: CurationConfig
 ) -> DataFrame:
     """(left_id, right_id) pairs with exact Jaccard ≥ threshold over
-    rare-filtered distinct token shingles — the SQL-portable exact twin of
-    the LSH blocker (same shape as blocking.block_exact_shingles, plus
-    the Jaccard verify the curation decision needs)."""
-    sh = (
-        shingle(tokenize(_min_tokens(docs, text_col, cfg.shingle_n), text_col),
-                n=cfg.shingle_n)
-        .select(id_col, F.explode("shingles").alias("s"))
-    )
-    rare = (
-        sh.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("dfc"))
-        .where(F.col("dfc") <= cfg.max_shingle_df)
-    )
-    # rare-filtered shingles feed the size agg AND both join sides
-    f = sh.join(rare.select("s"), "s").persist()
-    sizes = f.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    l = f.select(F.col("s"), F.col(id_col).alias("left_id"))
-    r = f.select(F.col("s"), F.col(id_col).alias("right_id"))
-    pairs = (
-        l.join(r, "s")
-        .where(F.col("left_id") < F.col("right_id"))
-        .groupBy("left_id", "right_id")
-        .agg(F.count(F.lit(1)).alias("common_shingles"))
-        .where(F.col("common_shingles") >= cfg.min_common_shingles)
-    )
+    rare-filtered distinct token shingles: blocking.block_exact_shingles
+    (drop_frequent_keys + shared_key_pairs), the SQL-portable exact twin
+    of the LSH blocker, plus the Jaccard cut the curation decision needs."""
     return (
-        pairs.join(
-            sizes.withColumnsRenamed({id_col: "left_id", "n_sh": "na"}),
-            "left_id",
+        block_exact_shingles(
+            _min_tokens(docs, text_col, cfg.shingle_n),
+            id_col=id_col,
+            text_col=text_col,
+            shingle_n=cfg.shingle_n,
+            min_common=cfg.min_common_shingles,
+            max_shingle_df=cfg.max_shingle_df,
         )
-        .join(
-            sizes.withColumnsRenamed({id_col: "right_id", "n_sh": "nb"}),
-            "right_id",
-        )
-        .where(
-            F.col("common_shingles")
-            / (F.col("na") + F.col("nb") - F.col("common_shingles"))
-            >= cfg.jaccard_threshold
-        )
+        .where(F.col("jaccard") >= cfg.jaccard_threshold)
         .select("left_id", "right_id")
     )
 

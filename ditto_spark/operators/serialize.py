@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from ditto_spark.operators.blocking import drop_frequent_keys, shared_key_pairs
+
 
 def render_turn_expr() -> F.Column:
     """COL/VAL rendering of a single turn; tool skipped when null (P2)."""
@@ -153,27 +155,14 @@ def structure_blocking_pairs(
     """Equi-join blocking on conversation-structure keys with a
     frequency cut: key groups larger than max_bucket are ubiquitous
     shapes (every 2-turn Q/A conversation shares one) and are dropped
-    BEFORE the self-join — the same skew discipline as suffix blocking;
-    pair text-LSH candidates with these via unionByName + dropDuplicates.
-    Output: (left_id, right_id) distinct, left < right."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*join_cols)
-    bounded = keys.withColumn("__n", F.count(F.lit(1)).over(w)).where(
-        (F.col("__n") > 1) & (F.col("__n") <= max_bucket)
-    )
-    left = bounded.select(
-        *join_cols, F.col(id_col).alias("left_id")
-    )
-    right = bounded.select(
-        *join_cols, F.col(id_col).alias("right_id")
-    )
-    return (
-        left.join(right.hint("shuffle_hash"), list(join_cols))
-        .where(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .distinct()
-    )
+    BEFORE the self-join (blocking.drop_frequent_keys, then
+    blocking.shared_key_pairs — the same skew discipline as suffix
+    blocking); pair text-LSH candidates with these via unionByName +
+    dropDuplicates. Output: (left_id, right_id) distinct, left < right."""
+    key_cols = list(join_cols)
+    return shared_key_pairs(
+        drop_frequent_keys(keys, key_cols, max_bucket), id_col, key_cols
+    ).select("left_id", "right_id")
 
 
 def turn_prefix_hashes(

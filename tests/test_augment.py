@@ -41,8 +41,21 @@ def test_drop_sym(spark):
 
 
 def test_drop_same_keeps_first(spark):
-    df = spark.createDataFrame([(1, "x y x z y x")], "doc_id long, text string")
-    assert drop_same(df).collect()[0]["augmented"] == "x y z"
+    """First occurrences in order; text with no tokens gives '' (an empty
+    token list once indexed out of bounds under ANSI mode)."""
+    want = {
+        1: ("x y x z y x", "x y z"),
+        2: ("a b a c b", "a b c"),
+        3: ("x y x z", "x y z"),
+        4: ("", ""),
+        5: ("  ", ""),
+        6: (None, ""),
+    }
+    df = spark.createDataFrame(
+        [(i, t) for i, (t, _) in want.items()], "doc_id long, text string"
+    )
+    got = {r["doc_id"]: r["augmented"] for r in drop_same(df).collect()}
+    assert got == {i: out for i, (_, out) in want.items()}
 
 
 def test_drop_len(spark):

@@ -82,6 +82,60 @@ def test_exact_shingle_blocking(spark):
     out = B.block_exact_shingles(df, shingle_n=3)
     got = {(r["left_id"], r["right_id"]) for r in out.collect()}
     assert got == {("a", "b")}
+    # 'beta gamma delta' is held by a alone: it pairs with nothing but
+    # counts toward a's set size, so J = 1 / (2 + 2 - 1)
+    assert [tuple(r) for r in out.collect()] == [("a", "b", 1, 2, 2, 1 / 3)]
+
+
+def _keyed_rows(spark, rows):
+    """(id, k, part) rows built through Arrow from pandas."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=["id", "k", "part"])
+    return spark.createDataFrame(pdf, "id long, k string, part int")
+
+
+def test_drop_frequent_keys_boundary(spark):
+    """max_df rows on a key are kept, max_df + 1 are dropped, one row
+    passes; the key is every key column together."""
+    rows = (
+        [(i, "three", 0) for i in (1, 2, 3)]
+        + [(i, "four", 0) for i in (4, 5, 6, 7)]
+        + [(8, "one", 0)]
+        # (four, 1) is its own key: 2 rows, kept
+        + [(4, "four", 1), (5, "four", 1)]
+    )
+    got = B.drop_frequent_keys(_keyed_rows(spark, rows), ["k", "part"], 3)
+    assert sorted(tuple(r) for r in got.select("id", "k", "part").collect()) == [
+        (1, "three", 0), (2, "three", 0), (3, "three", 0),
+        (4, "four", 1), (5, "four", 1), (8, "one", 0),
+    ]
+
+
+def test_shared_key_pairs_counts_each_pair_once(spark):
+    """Each unordered pair once with left_id < right_id; n_shared counts
+    the shared keys, and n_shared == min_shared is kept."""
+    rows = [
+        (3, "x", 0), (1, "x", 0), (2, "x", 0),
+        (2, "y", 0), (1, "y", 0),
+        (9, "solo", 0),
+    ]
+    keyed = _keyed_rows(spark, rows)
+    got = sorted(tuple(r) for r in B.shared_key_pairs(keyed, "id", ["k"]).collect())
+    assert got == [(1, 2, 2), (1, 3, 1), (2, 3, 1)]
+    got = [tuple(r) for r in B.shared_key_pairs(keyed, "id", ["k"], 2).collect()]
+    assert got == [(1, 2, 2)]
+
+
+def test_shared_key_helpers_on_empty_input(spark):
+    empty = _keyed_rows(spark, [])
+    kept = B.drop_frequent_keys(empty, ["k"], 5)
+    assert kept.count() == 0 and sorted(kept.columns) == ["id", "k", "part"]
+    pairs = B.shared_key_pairs(kept, "id", ["k"])
+    assert pairs.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in pairs.schema] == [
+        ("left_id", "bigint"), ("right_id", "bigint"), ("n_shared", "bigint"),
+    ]
 
 
 def test_cross_table_blocking_recall_and_sides(spark, small_transcripts):

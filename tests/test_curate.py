@@ -122,6 +122,18 @@ def test_jaccard_threshold_knob(fixture_docs):
     assert got[2] == "exact"  # exact dedup unaffected by τ
 
 
+def test_curate_leaves_no_cache(spark, fixture_docs):
+    """Running the funnel to completion leaves no cache entry behind. The
+    filter gives the run plans of its own: a persist of a plan that an
+    earlier test already cached adds no entry, and would hide a leak."""
+    docs, bench = fixture_docs
+    docs = docs.where(F.col("doc_id") >= 0)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    assert curate_documents(docs, bench=bench).count() == docs.count()
+    assert cm.numCachedEntries() == before
+
+
 _BOILER20 = (
     "the deploy cluster error retry timeout schema parquet shuffle "
     "partition broadcast join filter window stream batch token model "
