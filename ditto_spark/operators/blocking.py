@@ -11,10 +11,9 @@ Design (all JVM expressions, whole-stage codegen; zero Python):
   tokens   = lowercased alnum runs of entity_text
   shingles = distinct n-gram shingles of the token stream
   minhash  = per conversation, sig[i] = min over shingles of xxhash64(xxhash64(shingle), seed_i)
-             (one groupBy with num_perm min() aggregates — single shuffle,
-             map-side partial aggregation)
+             (a narrow projection — zero shuffle)
   bands    = band_j = xxhash64(sig[j*r .. j*r+r-1]) → rows (conv_id, band_idx, band_key)
-  pairs    = self-equi-join on (band_idx, band_key), left_id < right_id, distinct
+  pairs    = every id pair within a (band_idx, band_key) bucket, left_id < right_id, distinct
 
 Skew handling (north_rule "salted keys for skewed blocks"): hot band buckets
 (near-identical template conversations all landing in one bucket) are split
@@ -23,10 +22,14 @@ pairs are generated within a salt cell only. Cross-cell pairs of a hot bucket
 are recovered probabilistically by the OTHER b-1 bands (each band salts
 independently), and deterministically by transitive clustering downstream —
 a giant near-duplicate bucket is exactly the case where connected components
-closes the gap. Two-sided joins (block_minhash_lsh_cross, ann's hyperplane
+closes the gap. The one-sided pairing (candidates_from_bands) pairs each
+cell in-array in the task that holds its bucket, so salting bounds the pairs
+a cell emits, not the pairs one task emits: a task holding an S-member
+bucket emits ~S·max_bucket/2 pairs. AQE skew-join splitting has no join to
+split there. Two-sided joins (block_minhash_lsh_cross, ann's hyperplane
 LSH) hash one side into a cell and replicate the other across every cell of
-its bucket instead, which keeps full within-bucket recall. AQE skew-join
-splitting stays on as the second line of defense.
+its bucket instead, which keeps full within-bucket recall; AQE skew-join
+splitting stays on for those as the second line of defense.
 
 This module is the only owner of the three formulas that define LSH
 blocking; every other module (streaming/incremental.py, ann.py) calls these
@@ -46,6 +49,7 @@ structure keys, decontamination) runs:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -110,8 +114,8 @@ def minhash_signatures(
     a pure narrow projection (array_min over a per-seed hash transform) —
     ZERO shuffle. An explode + groupBy(num_perm mins) computes the same
     values but pays a 6.5M-row shuffle at sf0.1 (measured 20s vs 2s on
-    local[32]); at 10^12 turns the projection form keeps blocking's only
-    shuffle the band equi-join itself.
+    local[32]); at 10^12 turns the projection form leaves the signatures
+    shuffle-free, so blocking's shuffles are the band pairing's.
 
     Two-level hashing: each shingle STRING is hashed exactly once to an
     int64, and the num_perm permutations re-hash that fixed-width integer
@@ -233,17 +237,33 @@ def candidates_from_bands(
     id_col: str = "conv_id",
     max_bucket: int = 200,
 ) -> DataFrame:
-    """Self-equi-join on (band_idx, band_key) → distinct (left_id, right_id).
+    """(id, band_idx, band_key) rows → distinct (left_id, right_id),
+    left_id < right_id: every pair of ids that share a band bucket.
 
     Buckets larger than max_bucket are salted: each is split into
-    ceil(size/max_bucket) cells by xxhash64(id) (salt_cell_assignment);
-    the join key becomes (band_idx, band_key, salt). Bounds the worst
-    bucket's pair count at ~max_bucket²/2 per cell instead of size²/2.
+    ceil(size/max_bucket) cells by xxhash64(id) (salt_cell_assignment),
+    and only ids in the same cell pair. Bounds a bucket of S ids at
+    ~S·max_bucket/2 pairs (~max_bucket²/2 per cell) instead of S²/2.
 
     Bucket sizes come from a count window over (band_idx, band_key) — ONE
     shuffle, computed where the data lives. (A groupBy+broadcast-join of the
     size table pulls ~|buckets| rows through the driver; measured to
-    serialize blocking at higher core counts.)
+    serialize blocking at higher core counts.) Each cell's ids are then
+    collected and paired in-array; grouping by (band_idx, band_key, salt)
+    refines the window's partitioning, so the pairing adds no exchange. (A
+    self-join on the cell key would shuffle both sides again and, under
+    AQE, run the window once per side.) The one further exchange is the
+    distinct over pairs that meet in several bands. Null ids count toward
+    a bucket's size but pair with nothing.
+
+    All cells of one bucket pair in the one task that holds the bucket.
+    Re-hashing on the cell key first would spread them, but AQE coalesces
+    that exchange by its input bytes, and band rows are small: on a
+    hot_template_frac=0.3 corpus (n_base=6000, 4 cores, 5.1M in-cell
+    pairs) the window layout ran the pairing in 4 tasks, the largest
+    holding 29% of the pairs, while a cell-key repartition ran it in one
+    task, and blocking took 11.0 s against 17.3 s (the cell-key self-join
+    took 14.6 s).
     """
     from pyspark.sql import Window
 
@@ -255,19 +275,23 @@ def candidates_from_bands(
         id_col=id_col,
         max_bucket=max_bucket,
     )
-    left = salted.select(
-        "band_idx", "band_key", "salt", F.col(id_col).alias("left_id")
+    ids = F.col("ids")
+    # sorted distinct ids: pairing each with the ids after it yields each
+    # unordered pair once, already ordered left < right
+    in_cell_pairs = F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + 2, F.size(ids)),
+                lambda y: F.struct(x.alias("left_id"), y.alias("right_id")),
+            ),
+        )
     )
-    right = salted.select(
-        "band_idx", "band_key", "salt", F.col(id_col).alias("right_id")
-    )
-    # shuffle_hash: both sides are the same banded table; hashing one side
-    # beats sort-merge's double sort (the build side per partition is
-    # |bands|·n/parts compact rows)
     return (
-        left.join(right.hint("shuffle_hash"), ["band_idx", "band_key", "salt"])
-        .where(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
+        salted.groupBy("band_idx", "band_key", "salt")
+        .agg(F.array_sort(F.array_distinct(F.collect_list(id_col))).alias("ids"))
+        .select(F.explode(in_cell_pairs).alias("p"))
+        .select("p.left_id", "p.right_id")
         .distinct()
     )
 
@@ -311,20 +335,55 @@ def shared_key_pairs(
     )
 
 
+# binary shift of each size suffix Spark accepts in a byte-size conf value
+_BYTE_SHIFT = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+               "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
+def _conf_bytes(value: str) -> int:
+    """A Spark byte-size conf value ('10485760', '10MB', '-1') in bytes."""
+    m = re.fullmatch(r"(-?\d+)([a-z]*)", value.strip().lower())
+    if m is None or m.group(2) not in _BYTE_SHIFT:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) << _BYTE_SHIFT[m.group(2)]
+
+
+def entity_lookup(entity: DataFrame) -> DataFrame:
+    """`entity` (one row per id) hinted as the build side of an id-keyed
+    lookup join from a pair table: broadcast when Catalyst's size estimate
+    of it fits spark.sql.autoBroadcastJoinThreshold, shuffle_hash when it
+    does not. Either way the hash map is built on the entity side and the
+    pair table streams through unsorted (a sort-merge join would sort it
+    with its payload attached). The choice is made here because Catalyst
+    cannot make both halves of it: a shuffle_hash hint outranks the
+    size-based broadcast in JoinSelection, and with no hint a join that
+    does not fit is sort-merge.
+
+    The choice is fixed when the frame is built: the threshold is the
+    session conf at that moment, and the size estimate is the optimized
+    plan's statistics, read from the JVM (no public Python API exposes
+    them). A frame built before a threshold change keeps its hint."""
+    limit = _conf_bytes(
+        entity.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    )
+    size = entity._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    fits = 0 <= limit and int(size) <= limit
+    return entity.hint("broadcast" if fits else "shuffle_hash")
+
+
 def estimated_jaccard(
     pairs: DataFrame, sig_df: DataFrame, id_col: str = "conv_id"
 ) -> DataFrame:
     """Attach the MinHash Jaccard estimate (sig_agreement), zero Python.
 
-    The signature side carries a 64-long array (~0.5 KB/row) — too wide to
-    broadcast at corpus scale, and a sort-merge join would SORT the pair
-    table twice with that payload attached (measured as the blocking
-    stage's scaling drag). The shuffle_hash hint builds the hash map on the
-    compact signature side and streams the pairs — no sort of either side."""
+    Both signature lookups go through entity_lookup: the signature side
+    carries a 64-long array (~0.5 KB/row), so it broadcasts at benchmark
+    sizes and, at corpus scale, builds the hash map of a shuffled hash join
+    while the pairs stream."""
     ls = sig_df.select(F.col(id_col).alias("left_id"), F.col("sig").alias("lsig"))
     rs = sig_df.select(F.col(id_col).alias("right_id"), F.col("sig").alias("rsig"))
-    joined = pairs.join(ls.hint("shuffle_hash"), "left_id").join(
-        rs.hint("shuffle_hash"), "right_id"
+    joined = pairs.join(entity_lookup(ls), "left_id").join(
+        entity_lookup(rs), "right_id"
     )
     return joined.withColumn(
         "est_jaccard", sig_agreement("lsig", "rsig")
@@ -363,7 +422,7 @@ def _lsh_pairs(
     """Signatures → filtered (left_id, right_id, est_jaccard): the shared
     tail of block_minhash_lsh and weighted_minhash_lsh.
 
-    The signature stage is persisted: it feeds the band join, the
+    The signature stage is persisted: it feeds the band pairing, the
     bucket-size histogram, AND both sides of the jaccard-estimate join —
     without materialization the tokenize+shingle+hash projection re-executes
     4× (measured 80s → 29s at sf0.1). At cluster scale this persist is the
@@ -477,8 +536,8 @@ def block_minhash_lsh_cross(
     ls = sig_a.select(F.col(id_col).alias("left_id"), F.col("sig").alias("lsig"))
     rs = sig_b.select(F.col(id_col).alias("right_id"), F.col("sig").alias("rsig"))
     pairs = (
-        cand.join(ls.hint("shuffle_hash"), "left_id")
-        .join(rs.hint("shuffle_hash"), "right_id")
+        cand.join(entity_lookup(ls), "left_id")
+        .join(entity_lookup(rs), "right_id")
         .withColumn("est_jaccard", sig_agreement("lsig", "rsig"))
         .drop("lsig", "rsig")
     )

@@ -66,20 +66,33 @@ def _signature(edges: DataFrame) -> tuple:
     return row["n"], row["h"]
 
 
-def _star_assignment(edges: DataFrame) -> DataFrame:
-    """Stable (u > v) star forest → (conv_id, cluster_id). Roots appear
-    only on the v side — union their self-mapping back in. groupBy-min
-    (not dropDuplicates) keeps the resolution deterministic."""
-    comp = edges.groupBy("u").agg(F.min("v").alias("cluster_id")).select(
-        F.col("u").alias("conv_id"), "cluster_id"
+def _star_nodes(edges: DataFrame) -> DataFrame:
+    """Per node of an oriented (u > v) edge set: min_p / max_p = its least
+    and greatest parent (the v of its u-side edges; NULL for a node with
+    none) and is_parent = it is some edge's v. min_p < max_p iff the node
+    has two distinct parents — min/max rather than a count of distinct
+    parents, which would plan a second exchange."""
+    vtype = edges.schema["v"].dataType.simpleString()
+    sides = edges.select(
+        F.col("u").alias("n"), F.col("v").alias("p")
+    ).unionByName(
+        edges.select(F.col("v").alias("n"), F.lit(None).cast(vtype).alias("p"))
     )
-    roots = edges.select(
-        F.col("v").alias("conv_id"), F.col("v").alias("cluster_id")
-    ).distinct()
-    return (
-        comp.unionByName(roots)
-        .groupBy("conv_id")
-        .agg(F.min("cluster_id").alias("cluster_id"))
+    return sides.groupBy("n").agg(
+        F.min("p").alias("min_p"),
+        F.max("p").alias("max_p"),
+        F.bool_or(F.col("p").isNull()).alias("is_parent"),
+    )
+
+
+def _star_clusters(nodes: DataFrame) -> DataFrame:
+    """`_star_nodes` rows → (conv_id, cluster_id): a node's least parent,
+    or the node itself when it has none. Every parent is below its child
+    (u > v), so this is also the min over the node and its parents — the
+    component minimum once the edges are a min-rooted star forest."""
+    return nodes.select(
+        F.col("n").alias("conv_id"),
+        F.coalesce("min_p", "n").alias("cluster_id"),
     )
 
 
@@ -279,27 +292,19 @@ def connected_components(
     # v-side member is emitted once per partition, possibly under two
     # roots. Under (a)+(b), orientation (u > v) makes each root the min of
     # its star and connectivity preservation makes each star exactly one
-    # input component — the final `_star_assignment` is then exact with
-    # zero star rounds. Checked with ONE node-keyed aggregate (ids only,
-    # map-side partial) + an isEmpty probe; on star input this replaces
-    # the loop's 2 fixed-point rounds (6 shuffles, 2 collects).
-    vtype = edges.schema["v"].dataType.simpleString()
-    sides = edges.select(
-        F.col("u").alias("n"), F.col("v").alias("p")
-    ).unionByName(
-        edges.select(F.col("v").alias("n"), F.lit(None).cast(vtype).alias("p"))
+    # input component, so each node's cluster is its one parent, or itself
+    # for a root. Check and assignment are ONE node-keyed aggregate (ids
+    # only, map-side partial): an isEmpty probe over its violating rows,
+    # and, on star input, the output read straight off it. On star input
+    # this saves the loop's 2 fixed-point rounds (6 shuffles, 2 collects).
+    nodes = _star_nodes(edges)
+    violations = nodes.where(
+        (F.col("min_p") < F.col("max_p"))
+        | (F.col("min_p").isNotNull() & F.col("is_parent"))
     )
-    viol = (
-        sides.groupBy("n")
-        .agg(
-            F.count_distinct("p").alias("np"),
-            F.max(F.col("p").isNull().cast("int")).alias("is_parent"),
-        )
-        .where((F.col("np") >= 2) | ((F.col("np") >= 1) & (F.col("is_parent") == 1)))
-    )
-    if viol.isEmpty():
+    if violations.isEmpty():
         connected_components.last_rounds = 0
-        return _star_assignment(edges)
+        return _star_clusters(nodes)
     # Seed the convergence test with the INPUT's signature: post-contraction
     # the graph is often already a union of min-rooted stars (a fixed point
     # of both stars), and with a seeded prev_sig the first check at round
@@ -334,7 +339,7 @@ def connected_components(
             "rounds; raise max_iter (large-star/small-star needs O(log n) rounds)"
         )
     # stable state: stars rooted at the component minimum
-    return _star_assignment(edges)
+    return _star_clusters(_star_nodes(edges))
 
 
 def assign_clusters(

@@ -18,7 +18,7 @@ Spark-first design:
   - Candidate generation is Bloom-bit-sampling LSH (Durham et al. 2012 /
     "blocking on encodings"): each of `bands` keys packs `bits_per_band`
     fixed bit positions of the filter into a small int; band keys feed the
-    SAME salted band equi-join the MinHash path uses
+    SAME salted band pairing the MinHash path uses
     (`blocking.candidates_from_bands`) — never an all-pairs join. Two
     records agreeing on any band's sampled bits collide; similar strings
     share most Bloom bits, so collision probability rises with Dice exactly
@@ -33,7 +33,7 @@ Band bit positions are md5-derived CONSTANTS computed driver-side
 no engine hash function is involved, so there is nothing to port.
 
 At 100 TB: encode is embarrassingly parallel; the only wide ops are the
-band equi-join (salted, bucket-bounded) and the bare-id-pair dedup; the
+band pairing (salted, bucket-bounded) and the bare-id-pair dedup; the
 verify joins 8-byte encodings, never cleartext.
 """
 
@@ -184,7 +184,7 @@ def pprl_dice_pairs(
     """Bloom-bit-sampling LSH candidates -> exact Dice verify.
 
     Each record emits `bands` (band_idx, band_key) rows; candidates come
-    from the salted band equi-join (`blocking.candidates_from_bands` — the
+    from the salted band pairing (`blocking.candidates_from_bands` — the
     same bucket-bounded machinery as the MinHash path, so a hot key never
     produces an unbounded cell). Dedup runs on BARE id pairs; the 8-byte
     encodings join back once for the verify (the round-2-verdict discipline:

@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
-from ditto_spark.operators.blocking import content_tokens
+from ditto_spark.operators.blocking import content_tokens, entity_lookup
 
 SCORE_SCHEMA = "left_id string, right_id string, prob double"
 # attach_pair_text truncates each side's text to this many characters
@@ -568,33 +568,24 @@ def score_pairs(
 
 def attach_pair_text(pairs: DataFrame, serialized: DataFrame) -> DataFrame:
     """Join serialized (conv_id, entity_text) onto candidate pairs as
-    left_txt/right_txt (two hash joins; broadcast if the entity table is
-    small — Catalyst/AQE decides).
+    left_txt/right_txt: two id-keyed lookups, each built on the entity side
+    (`blocking.entity_lookup`: broadcast when the entity table fits
+    autoBroadcastJoinThreshold, a shuffled hash join when it does not; the
+    pair table is never sorted).
 
     Text is truncated to PAIR_TEXT_MAX_CHARS (4096) BEFORE the join: the
     downstream scorer truncates anyway (the reference tokenizes with
     max_length/truncation — dataset.py:73-76; 4096 chars ≳ 256 subwords),
-    and truncating early halves the bytes moved through the two join
-    shuffles + the scorer repartition at 10^12-turn scale."""
+    and truncating early halves the bytes moved through the two lookups
+    + the scorer repartition at 10^12-turn scale."""
     ser = serialized.select(
         "conv_id",
         F.substring("entity_text", 1, PAIR_TEXT_MAX_CHARS).alias("entity_text"),
     )
-    # shuffle_hash: build on the entity side (one row per conversation),
-    # stream the (much larger) pair side — a sort-merge join would sort the
-    # pair table twice with text payloads attached. Catalyst still upgrades
-    # to broadcast when the entity table fits the threshold.
-    return (
-        pairs.join(
-            ser.withColumnsRenamed({"conv_id": "left_id", "entity_text": "left_txt"})
-            .hint("shuffle_hash"),
-            "left_id",
-        )
-        .join(
-            ser.withColumnsRenamed({"conv_id": "right_id", "entity_text": "right_txt"})
-            .hint("shuffle_hash"),
-            "right_id",
-        )
+    left = ser.withColumnsRenamed({"conv_id": "left_id", "entity_text": "left_txt"})
+    right = ser.withColumnsRenamed({"conv_id": "right_id", "entity_text": "right_txt"})
+    return pairs.join(entity_lookup(left), "left_id").join(
+        entity_lookup(right), "right_id"
     )
 
 

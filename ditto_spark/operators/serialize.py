@@ -13,8 +13,8 @@ Spark-first design: ONE shuffle — groupBy(conv_id) + collect_list(struct)
 + array_sort + higher-order transform + concat_ws, all whole-stage-codegen
 JVM expressions (no Python). A Window.orderBy + collect_list would shuffle
 twice; this formulation shuffles once and the sort is per-group in memory.
-At 10^12 turns this groupBy is the first of exactly three shuffles in the
-whole pipeline (serialize, block-join, cluster), each keyed differently.
+This groupBy is the flagship's first exchange; `pipeline.py` lists the
+exchanges of every stage as tests/test_plans.py pins them.
 """
 
 from __future__ import annotations

@@ -7,22 +7,27 @@ components → clusters.
 Exchanges up to the scored pairs, with AQE off (pinned per stage in
 tests/test_plans.py):
   serialize   1 hash exchange: groupBy(conv_id); the frame is persisted
-  block       5 hash exchanges and 1 reuse: the band-bucket size window on
-              (band_idx, band_key), the salted band join on (band_idx,
-              band_key, salt) whose two sides share one exchange, the
-              distinct (left_id, right_id), and the left_id and right_id
-              joins back onto the cached signatures for the est_jaccard
-              prefilter
-  pair text   2 hash exchanges: the left_id and right_id joins onto the
-              serialized texts
-  Arrow score 1 round-robin repartition to 2 × defaultParallelism
+  block       2 hash exchanges and 1 broadcast: the band-bucket size window
+              on (band_idx, band_key), whose layout the per-salt-cell
+              pairing reuses; the distinct (left_id, right_id); and the
+              cached signatures, broadcast once for both est_jaccard
+              lookups
+  pair text   1 broadcast of the serialized texts, shared by the left_id
+              and right_id lookups
+  Arrow score 1 round-robin repartition to defaultParallelism
               (`repartition_pairs` overrides the count), so the CPU-bound
-              UDF spreads over every core and no partition exceeds model
-              memory (SURVEY.md §7 risk: skew); the JVM scorer adds none
-The executed plan prints the serialized frame's exchange again under each
-cached read of it: 1 line for serialized, 9 for the candidates, and 14 for
-the scored pairs (13 with the JVM scorer). Clustering then runs the CC
-iterations (bounded O(log n) rounds) as jobs of their own.
+              UDF spreads over every core (see stage_pair_text); the JVM
+              scorer adds none
+The lookups broadcast by `blocking.entity_lookup`'s rule: when the entity
+side does not fit autoBroadcastJoinThreshold, each is a shuffled hash join
+built on the entity side instead. The executed plan prints the serialized
+frame's exchange again under each cached read of it, and each shared
+broadcast a second time as a reuse: 1 line for serialized, 6 for the
+candidates, and 10 for the scored pairs (9 with the JVM scorer).
+Clustering then runs two local contraction passes and, when they leave a
+star forest (the usual dedup shape), reads the clusters off one per-node
+aggregate; otherwise it runs the CC iterations (bounded O(log n) rounds)
+as jobs of their own.
 
 This module is the only owner of the stage graph: the `stage_*` functions
 below map a `PipelineConfig` onto the operators, and `dedup_transcripts`,
@@ -96,16 +101,22 @@ def stage_pair_text(
     candidates: DataFrame, serialized: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
     """Attach both sides' text to the pairs. For the Arrow scorer, also
-    repartition: AQE coalesces the pair table to ~64MB partitions, which
-    strands the Arrow UDF on a handful of Python workers (measured:
-    local[32] SLOWER than local[8] at sf0.1). The UDF stage is CPU-bound per
-    pair, not bytes-bound — spread it over the cluster's cores. On a real
-    cluster this is also where pair-count-based sizing caps model memory per
-    partition (SURVEY.md §7)."""
+    round-robin them over defaultParallelism partitions, one per core: the
+    scorer is CPU-bound per pair, and AQE would otherwise coalesce the pair
+    table into a few ~64MB partitions and strand the UDF on a handful of
+    Python workers. No more partitions than cores, because each
+    mapInPandas task costs a fixed amount of Python CPU whatever its size:
+    pyspark's worker calls importlib.invalidate_caches() at the start of
+    every task, and under Python 3.11 that re-reads pyspark.zip's directory
+    once per zipimporter on sys.path (16 in a worker), measured at
+    0.12-0.20 s of CPU per task on a 4-core VM, against a surrogate kernel
+    of ~18 µs/pair, ~0.5 s for the ~29k pairs of the hot_skew benchmark.
+    On a real cluster `repartition_pairs` sizes partitions by pair count
+    instead, to cap model memory per partition (SURVEY.md §7)."""
     with_text = attach_pair_text(candidates, serialized)
     if not cfg.use_arrow_udf_scorer:
         return with_text
-    n_parts = cfg.repartition_pairs or 2 * int(
+    n_parts = cfg.repartition_pairs or int(
         candidates.sparkSession.sparkContext.defaultParallelism
     )
     return with_text.repartition(n_parts)

@@ -3,7 +3,8 @@
 Local sandbox runs on local[N]; on a real cluster the same builder flags apply
 via spark-submit --conf. AQE + skew-join splitting are on because LSH blocking
 produces skewed band buckets by construction (hot templates → hot bands), and
-the adaptive planner re-splits those at runtime (SURVEY.md §4.3).
+the adaptive planner re-splits the two-sided band joins over them at runtime
+(SURVEY.md §4.3); the one-sided band pairing bounds its cells by salting.
 """
 
 from __future__ import annotations
@@ -102,9 +103,11 @@ def get_spark(
             os.environ.get("DITTO_SPARK_DRIVER_MEM") or default_driver_memory(),
         )
         # Spark's default 10MB: a larger threshold made the planner broadcast
-        # the ~1M-row LSH band table in the self-join, serializing blocking
-        # through the driver (measured: local[32] slower than local[8]).
-        # Small dims that SHOULD broadcast carry explicit broadcast() hints.
+        # the ~1M-row LSH band table in a band self-join, serializing
+        # blocking through the driver (measured: local[32] slower than
+        # local[8]). Small dims that SHOULD broadcast carry explicit
+        # broadcast() hints; the flagship's id-keyed lookups broadcast
+        # below this threshold (`blocking.entity_lookup`).
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
         # Generated-code cache (static: read once, at session start). The
         # default 100 entries is smaller than one dedup pass's working set

@@ -63,6 +63,87 @@ def test_salting_bounds_bucket_pairs(spark):
     assert pairs.where(F.col("left_id") >= F.col("right_id")).count() == 0
 
 
+def test_salted_band_pairs_match_bruteforce_cells(spark):
+    """A 700-member bucket at max_bucket=200 splits into 4 salt cells; the
+    pairs must be exactly the same-cell pairs, each once, ordered. A second
+    band repeats part of the bucket (pairs met twice come out once), and a
+    small bucket pairs in full."""
+    from itertools import combinations
+
+    hot = [f"h{i:04d}" for i in range(700)]
+    small = ["s1", "s2", "s3"]
+    rows = (
+        [(i, 0, 11) for i in hot]
+        + [(i, 1, 22) for i in hot[:150]]
+        + [(i, 2, 33) for i in small]
+    )
+    bands = spark.createDataFrame(rows, "conv_id string, band_idx int, band_key long")
+    got = [
+        (r["left_id"], r["right_id"])
+        for r in B.candidates_from_bands(bands, max_bucket=200).collect()
+    ]
+    salt = {
+        r["conv_id"]: r["salt"]
+        for r in spark.createDataFrame([(i,) for i in hot], "conv_id string")
+        .withColumn("n_salts", B.salt_count(F.lit(700), 200))
+        .select("conv_id", B.hashed_salt("conv_id").alias("salt"))
+        .collect()
+    }
+    assert len(set(salt.values())) >= 3
+    cells: dict = {}
+    for i in hot:
+        cells.setdefault(salt[i], []).append(i)
+    want = {p for ids in cells.values() for p in combinations(sorted(ids), 2)}
+    want |= set(combinations(hot[:150], 2)) | set(combinations(small, 2))
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
+def test_band_pairs_degenerate_input_under_ansi(spark):
+    """No bands, only singleton buckets, and null ids: no error under ANSI
+    mode, no pair with a null side, and null ids still count toward the
+    bucket size."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    schema = "conv_id string, band_idx int, band_key long"
+    try:
+        empty = spark.createDataFrame([], schema)
+        assert B.candidates_from_bands(empty).collect() == []
+        singletons = spark.createDataFrame(
+            [(f"a{i}", b, i) for i in range(5) for b in range(3)], schema
+        )
+        assert B.candidates_from_bands(singletons).collect() == []
+        with_nulls = spark.createDataFrame(
+            [(None, 0, 1), (None, 0, 1), ("x", 0, 1), ("y", 0, 1), (None, 1, 2)],
+            schema,
+        )
+        assert [tuple(r) for r in B.candidates_from_bands(with_nulls).collect()] == [
+            ("x", "y")
+        ]
+        # at max_bucket=2 the 4-row bucket splits into 2 cells, so x and y
+        # pair only if they hash into the same one
+        salts = (
+            spark.createDataFrame([("x",), ("y",)], "conv_id string")
+            .withColumn("n_salts", B.salt_count(F.lit(4), 2))
+            .select(B.hashed_salt("conv_id").alias("salt"))
+            .collect()
+        )
+        same_cell = salts[0]["salt"] == salts[1]["salt"]
+        got = B.candidates_from_bands(with_nulls, max_bucket=2).collect()
+        assert [tuple(r) for r in got] == ([("x", "y")] if same_cell else [])
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_conf_bytes_reads_spark_size_strings():
+    assert B._conf_bytes("10485760") == 10 * 1024 * 1024
+    assert B._conf_bytes("10MB") == B._conf_bytes("10m") == 10 * 1024 * 1024
+    assert B._conf_bytes("64k") == 64 * 1024
+    assert B._conf_bytes("-1") == -1
+    with pytest.raises(ValueError):
+        B._conf_bytes("ten megabytes")
+
+
 def test_topk_variant(spark, tiny_transcripts):
     ser = serialize_conversations(tiny_transcripts)
     pairs = B.block_minhash_lsh(ser, text_col="block_text", top_k=2)

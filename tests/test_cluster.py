@@ -86,6 +86,39 @@ def test_loop_path_without_contraction(spark):
                    "x": "x", "y": "x", "z": "x"}
 
 
+def test_star_path_matches_loop_path(spark):
+    """Both paths read each node's cluster off one per-node aggregate: the
+    star path off the star check's, the loop path off its converged edges.
+    On a clique (contracted to stars: star path), a path and a two-parent
+    graph (both violate the star check without contraction: loop path) the
+    two must agree, and last_rounds must say which path ran."""
+    clique = [(f"k{i}", f"k{j}") for i in range(6) for j in range(i + 1, 6)]
+    path = [(f"p{i}", f"p{i + 1}") for i in range(7)]
+    two_parent = [("t9", "t1"), ("t9", "t5"), ("t7", "t5")]
+    star = [("s0", "s1"), ("s0", "s2"), ("s0", "s3")]
+
+    def run(edges, **kw):
+        df = spark.createDataFrame(edges, "left_id string, right_id string")
+        got = {
+            r["conv_id"]: r["cluster_id"]
+            for r in connected_components(df, **kw).collect()
+        }
+        return got, connected_components.last_rounds
+
+    for edges, first in ((clique, "k0"), (path, "p0"), (two_parent, "t1")):
+        contracted, _ = run(edges)
+        loop, loop_rounds = run(edges, contract=False)
+        assert loop_rounds > 0
+        nodes = {n for e in edges for n in e}
+        assert contracted == loop == {n: first for n in nodes}
+    _, rounds = run(clique)
+    assert rounds == 0
+    # already a min-rooted star: the star path runs with no contraction too
+    got, rounds = run(star, contract=False)
+    assert rounds == 0
+    assert got == {"s0": "s0", "s1": "s0", "s2": "s0", "s3": "s0"}
+
+
 def test_connected_components_nonconvergence_raises(spark):
     import pytest
 

@@ -59,9 +59,18 @@ def test_cc_star_path_exchange_budget(spark):
     df = spark.createDataFrame(edges, "left_id string, right_id string")
     out = connected_components(df)
     assert connected_components.last_rounds == 0
-    # star path: final assembly = groupBy + union + groupBy over checkpointed
-    # stars — 3 exchanges, no iterative lineage
-    assert _initial_plan(out).count("Exchange") <= 3
+    # star path: the output is read off the star check's one per-node
+    # aggregate over the checkpointed stars — 1 exchange, no iterative
+    # lineage
+    assert _initial_plan(out).count("Exchange") <= 1
+    # loop path: the converged stars are read out the same way
+    path = [(f"p{i}", f"p{i + 1}") for i in range(8)]
+    looped = connected_components(
+        spark.createDataFrame(path, "left_id string, right_id string"),
+        contract=False,
+    )
+    assert connected_components.last_rounds > 0
+    assert _initial_plan(looped).count("Exchange") <= 1
 
 
 def test_ivf_assignment_is_broadcast_only(spark):
@@ -212,22 +221,92 @@ def test_flagship_exchange_count_per_stage(spark):
 
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # a corpus of the tiny_transcripts size under a seed of its own: the
-    # signatures that blocking persists over the fixture in an earlier test
-    # were planned with AQE on, and if their cache stood in for this plan's
-    # signatures, it would hide the hash partitioning that spares the
-    # prefilter joins an exchange
+    # a corpus of the tiny_transcripts size under a seed of its own, so no
+    # signature cache that an earlier test left over the fixture (planned
+    # with AQE on) stands in for this plan's signatures
     transcripts = generate_transcripts(spark, n_base=50, seed=5)
     serialized = serialize_conversations(transcripts).persist()
     try:
         assert exchanges(serialized) == (1, 0, 0)
-        for arrow, scored_counts in ((True, (14, 1, 1)), (False, (13, 1, 0))):
+        for arrow, scored_counts in ((True, (10, 2, 1)), (False, (9, 2, 0))):
             cfg = PipelineConfig(use_arrow_udf_scorer=arrow)
             candidates = stage_candidates(serialized, cfg)
-            assert exchanges(candidates) == (9, 1, 0)
+            assert exchanges(candidates) == (6, 1, 0)
             with_text = stage_pair_text(candidates, serialized, cfg)
             assert exchanges(with_text) == scored_counts
             assert exchanges(stage_scored(with_text, cfg)) == scored_counts
     finally:
         serialized.unpersist()
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def _flagship_pair_side(spark):
+    """The flagship's Arrow-scored plan over a fixture-sized corpus, with
+    AQE off: (the plan's text, the (nodeName, build side) of each hash or
+    sort-merge join on the pair side, and the output partitioning of each
+    exchange there). The pair side is walked from the scorer down through
+    each hash join's streamed child and the first child of any other
+    node."""
+    from ditto_spark.operators.serialize import serialize_conversations
+    from ditto_spark.pipeline import (
+        PipelineConfig,
+        stage_candidates,
+        stage_pair_text,
+        stage_scored,
+    )
+    from ditto_spark.synth import generate_transcripts
+
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    serialized = serialize_conversations(
+        generate_transcripts(spark, n_base=50, seed=5)
+    ).persist()
+    try:
+        cfg = PipelineConfig()
+        scored = stage_scored(
+            stage_pair_text(stage_candidates(serialized, cfg), serialized, cfg),
+            cfg,
+        )
+        plan = scored._jdf.queryExecution().executedPlan()
+        joins, exchanges = [], []
+        node = plan
+        while node.children().size() > 0:
+            name = node.nodeName()
+            streamed = 0
+            if "HashJoin" in name:
+                side = node.buildSide().toString()
+                joins.append((name, side))
+                streamed = 1 if side == "BuildLeft" else 0
+            elif "Join" in name:
+                joins.append((name, None))
+            elif name == "Exchange":
+                exchanges.append(node.outputPartitioning().toString())
+            node = node.children().apply(streamed)
+        return plan.toString(), joins, exchanges
+    finally:
+        serialized.unpersist()
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def test_entity_lookups_broadcast_at_fixture_size(spark):
+    """The two signature lookups and the two pair-text lookups broadcast
+    their sub-MB entity side, so the pair table is not shuffled between the
+    candidates' distinct and the scorer's round-robin."""
+    _, joins, exchanges = _flagship_pair_side(spark)
+    assert joins == [("BroadcastHashJoin", "BuildRight")] * 4, joins
+    assert exchanges[0].startswith("RoundRobinPartitioning"), exchanges
+    assert exchanges[1].startswith("hashpartitioning(left_id#"), exchanges
+    assert ", right_id#" in exchanges[1], exchanges
+
+
+def test_entity_lookups_build_on_entity_side_without_broadcast(spark):
+    """With broadcasting off, every lookup is a shuffled hash join that
+    builds on the entity side: the pair table is never sorted."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan, joins, _ = _flagship_pair_side(spark)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert joins == [("ShuffledHashJoin", "BuildRight")] * 4, joins
+    assert "SortMergeJoin" not in plan, plan
