@@ -63,6 +63,17 @@ def _doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
+def _md5_signature(sh: DataFrame, n_perm: int) -> DataFrame:
+    """(doc_id, s) shingles → (doc_id, h0 .. h{n_perm-1}): the md5-portable
+    MinHash, h{i} = the lexicographic min of md5('{i}|' || s)."""
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("s")))).alias(f"h{i}")
+            for i in range(n_perm)
+        ]
+    )
+
+
 def _rare_shingle_pairs(docs: DataFrame) -> DataFrame:
     """blocking.block_exact_shingles over docs with >= 3 tokens: pairs
     sharing >= 2 rare (df <= 50) 3-shingles, with exact Jaccard over the
@@ -77,13 +88,31 @@ def _rare_shingle_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-_ORACLE_SHINGLE_CTE = """
-WITH sh AS (
-  SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-       unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-  WHERE len(l) >= 3
-), rare AS (
+def _shingle_cte(
+    name: str, src: str, alias: str = "s", materialized: bool = False
+) -> str:
+    """SQL CTE `name`(doc_id, `alias`): the distinct token 3-shingles of each
+    `src`(doc_id, text) row with >= 3 tokens — the string_split twin of
+    `_doc_shingles` (no WITH, no trailing comma)."""
+    mat = "MATERIALIZED " if materialized else ""
+    return f"""{name} AS {mat}(
+      SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS {alias}
+      FROM (SELECT doc_id, string_split(text, ' ') AS l FROM {src}),
+           unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
+      WHERE len(l) >= 3
+    )"""
+
+
+def _md5_mins(n_perm: int) -> str:
+    """SQL select list of the n_perm md5-portable MinHash over shingle
+    column `s`: h{i} = the lexicographic min of md5('{i}|' || s) — the
+    SQL twin of `_md5_signature`."""
+    return ",\n             ".join(
+        f"min(md5('{i}|' || s)) AS h{i}" for i in range(n_perm)
+    )
+
+
+_ORACLE_SHINGLE_CTE = "\nWITH " + _shingle_cte("sh", "documents") + """, rare AS (
   SELECT s FROM sh GROUP BY s HAVING count(*) <= 50
 ), f AS (
   SELECT sh.doc_id, sh.s FROM sh JOIN rare USING (s)
@@ -103,65 +132,22 @@ WITH sh AS (
 """
 
 
-def _minhash_lsh_oracle(cand_where: str = "l.doc_id < r.doc_id",
-                        docs_from: str = "documents") -> str:
-    """16-perm md5 MinHash + 4-band LSH join + agreement estimate,
-    replicating q_minhash_lsh_candidates in portable SQL. `cand_where`
-    selects the pair space: the default self-join orientation, or the
-    two-table parity split (q_er_cross_candidates)."""
+def _mh_pairs_cte(
+    prefix: str, docs_from: str, pair_where: str = "l.doc_id < r.doc_id"
+) -> str:
+    """CTE block (no WITH) of the 16-perm md5 MinHash + 4-band LSH twin
+    over `docs_from`(doc_id, text), every name prefixed with `prefix`:
+    `{prefix}sh` (distinct 3-shingles), `{prefix}sig` (h0..h15),
+    `{prefix}bands`, `{prefix}cand` (the distinct pairs of band rows
+    `l`, `r` that share a band and satisfy `pair_where`) and the terminal
+    `{prefix}p` = (left_id, right_id, est_jaccard), est_jaccard = the
+    fraction of agreeing components, kept at ≥ 0.25. The SQL twin of
+    `_mh_lsh_pairs`, composed by every md5 MinHash-LSH oracle.
+
+    Every CTE read more than once is `AS MATERIALIZED`: DuckDB 1.0 inlines
+    a CTE at each reference, so the copies of the md5 signature multiply.
+    `{prefix}sh` is as well, so a caller can read the shingles too."""
     r = _MH_PERMS // _MH_BANDS
-    mins = ",\n             ".join(
-        f"min(md5('{i}|' || s)) AS h{i}" for i in range(_MH_PERMS)
-    )
-    band_rows = "\n      UNION ALL\n      ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5("
-        + " || '|' || ".join(f"h{b * r + j}" for j in range(r))
-        + ") AS band_key FROM sig"
-        for b in range(_MH_BANDS)
-    )
-    agree = " + ".join(f"(a.h{i} = b.h{i})::INT" for i in range(_MH_PERMS))
-    return f"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-      FROM (SELECT doc_id, string_split(text, ' ') AS l FROM {docs_from}),
-           unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-      WHERE len(l) >= 3
-    ), sig AS (
-      SELECT doc_id, {mins}
-      FROM sh GROUP BY doc_id
-    ), bands AS (
-      {band_rows}
-    ), cand AS (
-      SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id
-      FROM bands l JOIN bands r
-        ON l.band_idx = r.band_idx AND l.band_key = r.band_key
-      WHERE {cand_where}
-    )
-    SELECT c.left_id, c.right_id,
-           ({agree}) / {float(_MH_PERMS)} AS est_jaccard
-    FROM cand c
-    JOIN sig a ON a.doc_id = c.left_id
-    JOIN sig b ON b.doc_id = c.right_id
-    WHERE ({agree}) / {float(_MH_PERMS)} >= 0.25
-    """
-
-
-
-def _mh_pairs_cte(prefix: str, docs_from: str, min_est: float = 0.25) -> str:
-    """CTE block (no WITH): the 16-perm md5 MinHash + 4-band LSH join with
-    prefixed names over `docs_from`(doc_id, text); terminal CTE
-    `{prefix}p` = (left_id, right_id) pairs at est ≥ min_est. The same
-    construction `_minhash_lsh_oracle` emits as a standalone statement,
-    reusable inside a larger composition (chunk_curation).
-
-    `{prefix}sig` (read four times by the bands and twice by the pairs),
-    `{prefix}bands` (both sides of the band join) and `{prefix}p` (read
-    twice by the caller) are `AS MATERIALIZED`: DuckDB 1.0 inlines a CTE
-    at each reference, so the copies of the md5 signature multiply."""
-    r = _MH_PERMS // _MH_BANDS
-    mins = ",\n             ".join(
-        f"min(md5('{i}|' || s)) AS h{i}" for i in range(_MH_PERMS)
-    )
     band_rows = "\n      UNION ALL\n      ".join(
         f"SELECT doc_id, {b} AS band_idx, md5("
         + " || '|' || ".join(f"h{b * r + j}" for j in range(r))
@@ -169,13 +155,9 @@ def _mh_pairs_cte(prefix: str, docs_from: str, min_est: float = 0.25) -> str:
         for b in range(_MH_BANDS)
     )
     agree = " + ".join(f"(a.h{i} = b.h{i})::INT" for i in range(_MH_PERMS))
-    return f"""{prefix}sh AS (
-      SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-      FROM (SELECT doc_id, string_split(text, ' ') AS l FROM {docs_from}),
-           unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-      WHERE len(l) >= 3
-    ), {prefix}sig AS MATERIALIZED (
-      SELECT doc_id, {mins}
+    return f"""{_shingle_cte(prefix + "sh", docs_from, materialized=True)},
+    {prefix}sig AS MATERIALIZED (
+      SELECT doc_id, {_md5_mins(_MH_PERMS)}
       FROM {prefix}sh GROUP BY doc_id
     ), {prefix}bands AS MATERIALIZED (
       {band_rows}
@@ -183,22 +165,34 @@ def _mh_pairs_cte(prefix: str, docs_from: str, min_est: float = 0.25) -> str:
       SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id
       FROM {prefix}bands l JOIN {prefix}bands r
         ON l.band_idx = r.band_idx AND l.band_key = r.band_key
-      WHERE l.doc_id < r.doc_id
+      WHERE {pair_where}
     ), {prefix}p AS MATERIALIZED (
-      SELECT c.left_id, c.right_id
-      FROM {prefix}cand c
-      JOIN {prefix}sig a ON a.doc_id = c.left_id
-      JOIN {prefix}sig b ON b.doc_id = c.right_id
-      WHERE ({agree}) / {float(_MH_PERMS)} >= {min_est}
+      SELECT * FROM (
+        SELECT c.left_id, c.right_id,
+               ({agree}) / {float(_MH_PERMS)} AS est_jaccard
+        FROM {prefix}cand c
+        JOIN {prefix}sig a ON a.doc_id = c.left_id
+        JOIN {prefix}sig b ON b.doc_id = c.right_id
+      ) WHERE est_jaccard >= 0.25
     )"""
 
 
+def _minhash_lsh_oracle(pair_where: str = "l.doc_id < r.doc_id") -> str:
+    """The `_mh_pairs_cte` pairs over documents: q_minhash_lsh_candidates'
+    oracle, and q_er_cross_candidates' with the parity split as
+    `pair_where`."""
+    return f"""
+    WITH {_mh_pairs_cte("mh", "documents", pair_where)}
+    SELECT left_id, right_id, est_jaccard FROM mhp
+    """
+
+
 def _chunk_near_dup_oracle() -> str:
-    """q_chunk_near_dup's oracle: the parametrized 16-perm md5 MinHash-LSH
-    SQL (`_minhash_lsh_oracle`) run over a `chunks` CTE — 20-token windows
-    of the boilerplate-augmented documents keyed by the stride-guarded
-    composite doc_id·100000 + idx (`_chunk_windows`)."""
-    chunk_cte = f"""chunks AS (
+    """q_chunk_near_dup's oracle: the `_mh_pairs_cte` pairs over a `chunks`
+    CTE — 20-token windows of the boilerplate-augmented documents keyed by
+    the stride-guarded composite doc_id·100000 + idx (`_chunk_windows`)."""
+    return f"""
+    WITH chunks AS (
       SELECT doc_id * {_CHUNK_ID_STRIDE} + i AS doc_id,
              array_to_string(
                list_slice(l, i * 20 + 1, least((i + 1) * 20, len(l))),
@@ -213,36 +207,24 @@ def _chunk_near_dup_oracle() -> str:
       ), unnest(generate_series(0,
            CAST(ceil(len(l) / 20.0) AS INT) - 1)) u(i)
       WHERE len(l) > 0
-    )"""
-    return _minhash_lsh_oracle(docs_from="chunks").replace(
-        "WITH sh AS", "WITH " + chunk_cte + ", sh AS", 1
-    )
+    ), {_mh_pairs_cte("mh", "chunks")}
+    SELECT left_id, right_id, est_jaccard FROM mhp
+    """
 
 
 def _transcript_builtin_oracle() -> str:
     """End-to-end flagship-shape oracle (q_transcript_dedup_builtin):
     P1 serialization over events + two deterministic clone tiers →
-    16-perm md5 MinHash-LSH (est ≥ 0.25) → token-set Jaccard scorer →
-    prob > 0.8 → recursive-CTE min-label CC. One statement, every stage
-    mirroring the Spark pipeline stage above it."""
-    mins = ",\n             ".join(
-        f"min(md5('{i}|' || s)) AS h{i}" for i in range(_MH_PERMS)
-    )
-    r = _MH_PERMS // _MH_BANDS
-    band_rows = "\n      UNION ALL\n      ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5("
-        + " || '|' || ".join(f"h{b * r + j}" for j in range(r))
-        + ") AS band_key FROM sig"
-        for b in range(_MH_BANDS)
-    )
-    agree = " + ".join(f"(a.h{i} = b.h{i})::INT" for i in range(_MH_PERMS))
+    16-perm md5 MinHash-LSH (`_mh_pairs_cte`, est ≥ 0.25) → token-set
+    Jaccard scorer → prob > 0.8 → recursive-CTE min-label CC. One
+    statement, every stage mirroring the Spark pipeline stage above it."""
     return f"""
     WITH RECURSIVE ev AS (
       SELECT user_id, ts, event_id,
              'COL event_type VAL ' || event_type ||
              ' COL value VAL ' || printf('%.2f', value) AS txt
       FROM events
-    ), ranked AS (
+    ), ranked AS MATERIALIZED (
       SELECT user_id, txt,
              row_number() OVER (PARTITION BY user_id
                                 ORDER BY ts, event_id) AS rn,
@@ -260,53 +242,32 @@ def _transcript_builtin_oracle() -> str:
       SELECT user_id + 20000, string_agg(txt, ' ' ORDER BY rn)
       FROM ranked WHERE user_id % 10 = 0 AND rn <= greatest(n - 10, 1)
       GROUP BY user_id
-    ), docs AS (
+    ), docs AS MATERIALIZED (
       SELECT doc_id,
              array_to_string(
                list_filter(
                  regexp_split_to_array(lower(entity), '[^a-z0-9]+'),
                  x -> x <> ''), ' ') AS text
       FROM raw_docs
-    ), sh AS (
-      SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-      FROM (SELECT doc_id, string_split(text, ' ') AS l FROM docs),
-           unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-      WHERE len(l) >= 3
-    ), sig AS (
-      SELECT doc_id, {mins}
-      FROM sh GROUP BY doc_id
-    ), bands AS (
-      {band_rows}
-    ), cand AS (
-      SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id
-      FROM bands l JOIN bands r
-        ON l.band_idx = r.band_idx AND l.band_key = r.band_key
-      WHERE l.doc_id < r.doc_id
-    ), est AS (
-      SELECT c.left_id, c.right_id
-      FROM cand c
-      JOIN sig a ON a.doc_id = c.left_id
-      JOIN sig b ON b.doc_id = c.right_id
-      WHERE ({agree}) / {float(_MH_PERMS)} >= 0.25
-    ), tok AS (
+    ), {_mh_pairs_cte("mh", "docs")}, tok AS MATERIALIZED (
       SELECT DISTINCT doc_id, tk FROM (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tk FROM docs
       ) WHERE tk <> ''
-    ), tsz AS (
+    ), tsz AS MATERIALIZED (
       SELECT doc_id, count(*) AS nt FROM tok GROUP BY doc_id
     ), inter AS (
       SELECT e.left_id, e.right_id, count(*) AS ci
-      FROM est e
+      FROM mhp e
       JOIN tok a ON a.doc_id = e.left_id
       JOIN tok b ON b.doc_id = e.right_id AND b.tk = a.tk
       GROUP BY 1, 2
-    ), matches AS (
+    ), matches AS MATERIALIZED (
       SELECT i.left_id, i.right_id
       FROM inter i
       JOIN tsz ta ON ta.doc_id = i.left_id
       JOIN tsz tb ON tb.doc_id = i.right_id
       WHERE i.ci::DOUBLE / greatest(ta.nt + tb.nt - i.ci, 1) > 0.8
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT left_id AS a, right_id AS b FROM matches
       UNION ALL
       SELECT right_id, left_id FROM matches
@@ -522,7 +483,7 @@ def q_pivot_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decontaminate), re-scoped to the previous stage's survivor set. The CASE
 # precedence mirrors the funnel order: a doc dropped at quality is absent
 # from every later keep set, so quality must be tested first.
-_DOC_CURATION_ORACLE = """
+_DOC_CURATION_ORACLE = f"""
 WITH RECURSIVE corpus AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
 ), gd AS (
@@ -563,12 +524,7 @@ WITH RECURSIVE corpus AS (
   ) WHERE doc_id = canon
 ), es AS (
   SELECT qs.doc_id, qs.text FROM qs JOIN ekeep USING (doc_id)
-), sh AS (
-  SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM es),
-       unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-  WHERE len(l) >= 3
-), rare AS (
+), {_shingle_cte("sh", "es")}, rare AS (
   SELECT s FROM sh GROUP BY s HAVING count(*) <= 50
 ), f AS (
   SELECT sh.doc_id, sh.s FROM sh JOIN rare USING (s)
@@ -596,22 +552,11 @@ WITH RECURSIVE corpus AS (
   SELECT node AS doc_id FROM walk GROUP BY node HAVING node = min(comp)
 ), ns AS (
   SELECT es.doc_id, es.text FROM es JOIN ndkeep USING (doc_id)
-), tsh AS (
-  SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM ns),
-       unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-  WHERE len(l) >= 3
-), tkeep AS (
+), {_shingle_cte("tsh", "ns")}, tkeep AS (
   SELECT s FROM tsh GROUP BY s HAVING count(*) <= 50
 ), trf AS (
   SELECT tsh.doc_id, tsh.s FROM tsh JOIN tkeep USING (s)
-), bsh AS (
-  SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents
-        WHERE doc_id % 2 = 1),
-       unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-  WHERE len(l) >= 3
-), cont AS (
+), {_shingle_cte("bsh", "documents WHERE doc_id % 2 = 1")}, cont AS (
   SELECT DISTINCT doc_id FROM (
     SELECT t.doc_id, b.doc_id AS bench_id
     FROM trf t JOIN bsh b ON t.s = b.s
@@ -1073,12 +1018,7 @@ def q_bbit_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _load(spark, sf_dir, "documents")
-    sh = _doc_shingles(docs)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("s")))).alias(f"h{i}")
-        for i in range(16)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
+    sig = _md5_signature(_doc_shingles(docs), 16)
     fields = F.array(
         *[
             (
@@ -1108,7 +1048,6 @@ def q_bbit_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bbit_oracle() -> str:
-    mins = ", ".join(f"min(md5('{i}|' || s)) AS h{i}" for i in range(16))
     matches = " + ".join(
         f"(strpos('0123456789abcdef', substr(a.h{i}, 32, 1))"
         f" = strpos('0123456789abcdef', substr(b.h{i}, 32, 1)))::INT"
@@ -1118,7 +1057,7 @@ def _bbit_oracle() -> str:
     return (
         _ORACLE_SHINGLE_CTE
         + f""",
-    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id)
+    sig AS (SELECT doc_id, {_md5_mins(16)} FROM sh GROUP BY doc_id)
     SELECT p.left_id, p.right_id,
            round(greatest(least((({matches}) / 16.0 - {c}) / {1.0 - c}, 1.0),
                           0.0), 9) AS est_jaccard
@@ -1387,12 +1326,7 @@ def q_minhash_md5_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction itself is oracle-checked (the xxhash64 production path in
     ditto_spark.operators.blocking is checked rows-only)."""
     docs = _load(spark, sf_dir, "documents")
-    sh = _doc_shingles(docs)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(str(i) + "|"), F.col("s")))).alias(f"h{i}")
-        for i in range(8)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    return _md5_signature(_doc_shingles(docs), 8)
 
 
 _OPH_BINS = 8
@@ -1427,12 +1361,7 @@ def q_weighted_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rep = weighted_token_replicas(toks, "doc_id", "tokens", wdf)
     sh = rep.select("doc_id", F.explode("wshingles").alias("s"))
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("s")))).alias(f"h{i}")
-            for i in range(8)
-        ]
-    )
+    return _md5_signature(sh, 8)
 
 
 def q_oph_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1497,12 +1426,7 @@ def _oph_oracle() -> str:
 
     chains = ",\n               ".join(chain(i) for i in range(nb))
     return f"""
-        WITH sh AS (
-          SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-          FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-               unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-          WHERE len(l) >= 3
-        ),
+        WITH {_shingle_cte("sh", "documents")},
         h AS (SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h FROM sh),
         pv AS (SELECT doc_id,
                  {mins}
@@ -3877,10 +3801,9 @@ def q_chunk_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs across the corpus. Augmentation plants both regimes: every 3rd
     doc gets exact boilerplate A, every 5th a one-token mutation of A —
     the exact copies band-match at est 1.0 and the mutated pairs at the
-    ~0.7 shingle overlap the estimate reports. Scale shape inherits from
-    the doc-level path: zero-shuffle signatures, bare-id band dedup,
-    salting upstream in the production twin
-    (`textprep.chunk_near_dup_pairs`)."""
+    ~0.7 shingle overlap the estimate reports. The md5 signature is a
+    groupBy over the windows' shingles; the production twin
+    (`textprep.chunk_near_dup_pairs`) salts hot buckets."""
     docs = _load(spark, sf_dir, "documents")
     aug = docs.select(
         "doc_id",
@@ -4033,12 +3956,7 @@ WITH RECURSIVE corpus AS MATERIALIZED (
   SELECT es.doc_id, es.text FROM es
   LEFT JOIN cbdrop cd ON cd.doc_id = es.doc_id
   WHERE cd.doc_id IS NULL
-), nsh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM cs),
-       unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-  WHERE len(l) >= 3
-), rare AS (
+), {_shingle_cte("nsh", "cs", materialized=True)}, rare AS (
   SELECT s FROM nsh GROUP BY s HAVING count(*) <= 50
 ), f AS MATERIALIZED (
   SELECT nsh.doc_id, nsh.s FROM nsh JOIN rare USING (s)
@@ -4277,80 +4195,55 @@ _MH_BANDS = 4  # 4 rows per band
 
 def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate generation over an md5-portable 16-permutation
-    signature (perm i = lexicographic min of md5(i || shingle)); band key =
-    md5 of 4 consecutive components; self-equi-join on any band match;
-    est_jaccard = fraction of agreeing components, filtered ≥ 0.25.
+    signature (perm i = lexicographic min of md5(i || shingle)), 4 bands
+    of 4 components, pairs sharing any band, est_jaccard = fraction of
+    agreeing components, kept at ≥ 0.25 (`_mh_lsh_pairs`).
 
-    Banding, join, and estimate are all replicated by the DuckDB oracle →
-    full hash-checked parity. The production pipeline path keeps the
-    xxhash64 64-perm signature (ditto_spark.operators.blocking — fastest
-    JVM hash, same construction) with salted hot buckets; that path is
-    exercised by the transcript queries, bench.py, and the pytest recall
-    gate."""
+    Banding, pairing and estimate are replicated by the DuckDB oracle →
+    full hash-checked parity. The production pipeline keeps the xxhash64
+    64-perm signature with salted hot buckets
+    (`blocking.block_minhash_lsh`); that path runs in the transcript
+    queries and in perfbench/, the gated benchmark."""
     docs = _load(spark, sf_dir, "documents")
     return _mh_lsh_pairs(docs)
 
 
-def _mh_lsh_pairs(docs: DataFrame) -> DataFrame:
-    """The 16-perm md5 MinHash-LSH candidate generator over any (doc_id,
-    text) frame — shared by q_minhash_lsh_candidates (full corpus) and
-    q_blocking_recall (hash-sample audit)."""
-    sh = _doc_shingles(docs)
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("s")))).alias(f"h{i}")
-            for i in range(_MH_PERMS)
-        ]
-    ).persist()  # feeds the band explode AND both est-jaccard rejoin sides
-    r = _MH_PERMS // _MH_BANDS
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band_idx"),
-                    F.md5(
-                        F.concat_ws("|", *[F.col(f"h{b * r + j}") for j in range(r)])
-                    ).alias("band_key"),
-                )
-                for b in range(_MH_BANDS)
-            ]
+def _mh_lsh_pairs(docs: DataFrame, parity_split: bool = False) -> DataFrame:
+    """The 16-perm md5 MinHash-LSH twin over any (doc_id, text) frame →
+    (left_id, right_id, est_jaccard ≥ 0.25), built on the library's own
+    banding, pairing and estimate: `_md5_signature` as a `sig` array,
+    `blocking.lsh_bands` (4 bands × 4 components), then
+    `blocking.shared_key_pairs` on (band_idx, band_key) — or, with
+    `parity_split`, one band equi-join of even (left) against odd (right)
+    doc_ids plus a distinct — and `blocking.estimated_jaccard` (k/16).
+
+    lsh_bands keys a band by xxhash64 where the SQL twin
+    (`_mh_pairs_cte`) uses md5; the pairs differ only on a 64-bit band-key
+    collision."""
+    sig = _md5_signature(_doc_shingles(docs), _MH_PERMS).select(
+        "doc_id", F.array(*[f"h{i}" for i in range(_MH_PERMS)]).alias("sig")
+    )
+    bands = B.lsh_bands(sig, "doc_id", _MH_BANDS, _MH_PERMS // _MH_BANDS)
+    if parity_split:
+
+        def side(parity: int, id_name: str) -> DataFrame:
+            return bands.where(F.col("doc_id") % 2 == parity).select(
+                "band_idx", "band_key", F.col("doc_id").alias(id_name)
+            )
+
+        cand = (
+            side(0, "left_id")
+            .join(side(1, "right_id"), ["band_idx", "band_key"])
+            .select("left_id", "right_id")
+            .distinct()
         )
-    )
-    # Band join + dedup on BARE id pairs; the 16 md5 signature columns
-    # (~1 KB/row) join back exactly once afterwards — attaching them before
-    # the dedup ships both signatures through the shuffle for every
-    # duplicate band hit (the same ~bands× payload amplification the
-    # round-2 verdict flagged in ann.cosine_topk_lsh).
-    banded = sig.select("doc_id", bands.alias("b")).select(
-        "doc_id",
-        F.col("b.band_idx").alias("band_idx"), F.col("b.band_key").alias("band_key"),
-    )
-    l = banded.select("band_idx", "band_key", F.col("doc_id").alias("left_id"))
-    rr = banded.select("band_idx", "band_key", F.col("doc_id").alias("right_id"))
-    cand = (
-        l.join(rr, ["band_idx", "band_key"])
-        .where(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .dropDuplicates(["left_id", "right_id"])
-    )
-    ls = sig.select(
-        F.col("doc_id").alias("left_id"),
-        *[F.col(f"h{i}").alias(f"lh{i}") for i in range(_MH_PERMS)],
-    )
-    rs = sig.select(
-        F.col("doc_id").alias("right_id"),
-        *[F.col(f"h{i}").alias(f"rh{i}") for i in range(_MH_PERMS)],
-    )
-    agree = sum(
-        (F.col(f"lh{i}") == F.col(f"rh{i}")).cast("int") for i in range(_MH_PERMS)
-    )
+    else:
+        cand = B.shared_key_pairs(
+            bands, "doc_id", ["band_idx", "band_key"]
+        ).select("left_id", "right_id")
     return (
-        cand.join(ls, "left_id")
-        .join(rs, "right_id")
-        .select(
-            "left_id", "right_id",
-            (agree / F.lit(float(_MH_PERMS))).alias("est_jaccard"),
-        )
+        B.estimated_jaccard(cand, sig, "doc_id")
+        .select("left_id", "right_id", "est_jaccard")
         .where(F.col("est_jaccard") >= 0.25)
     )
 
@@ -4363,13 +4256,15 @@ def q_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Splink blocking-analysis counterpart): on a deterministic md5
     hash-sample of documents, compute EXACT ground-truth near-dup pairs
     (lossless prefix-filter all-pairs join at Jaccard >= tau) and measure
-    what fraction the production MinHash-LSH blocker recovers. MinHash
-    signatures are per-document, so the blocker's candidates restricted to
-    sample pairs equal the blocker run on the sample — the audit measures
-    the real pipeline's recall, no labels required. Scale shape: the n²
-    work is confined to the sample (pick the rate so the sample is ~10^4
-    docs at any corpus size); everything else is the production plan.
-    Output: one row (n_sample, n_truth, n_caught, recall)."""
+    what fraction the md5 16-perm, 4-band MinHash-LSH twin
+    (`_mh_lsh_pairs`) recovers. MinHash signatures are per-document, so
+    the blocker's candidates restricted to sample pairs equal the blocker
+    run on the sample — no labels required. This is the recall of the
+    twin, not of the production blocker (xxhash64 64-perm, 21 bands × 3,
+    salted buckets; `pipeline.PipelineConfig`). Scale shape: the n² work
+    is confined to the sample (pick the rate so the sample is ~10^4 docs
+    at any corpus size). Output: one row (n_sample, n_truth, n_caught,
+    recall)."""
     from ditto_spark.operators.blocking import allpairs_jaccard_join
 
     docs = _load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
@@ -4385,7 +4280,7 @@ def q_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint")
         / F.lit(float(1 << 24))
     )
-    sample = docs.where(u < F.lit(_RECALL_RATE)).persist()
+    sample = docs.where(u < F.lit(_RECALL_RATE))
     truth = allpairs_jaccard_join(
         sample, threshold=_RECALL_TAU, shingle_n=3
     ).select("left_id", "right_id")
@@ -4409,61 +4304,31 @@ def q_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _blocking_recall_oracle() -> str:
-    r = _MH_PERMS // _MH_BANDS
-    mins = ",\n             ".join(
-        f"min(md5('{i}|' || s)) AS h{i}" for i in range(_MH_PERMS)
-    )
-    band_rows = "\n      UNION ALL\n      ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5("
-        + " || '|' || ".join(f"h{b * r + j}" for j in range(r))
-        + ") AS band_key FROM sig"
-        for b in range(_MH_BANDS)
-    )
-    agree = " + ".join(f"(a.h{i} = b.h{i})::INT" for i in range(_MH_PERMS))
+    """q_blocking_recall's oracle: exact shingle-set Jaccard truth and the
+    `_mh_pairs_cte` pairs over the same md5 hash-sample."""
     return f"""
-    WITH smp AS (
+    WITH smp AS MATERIALIZED (
       SELECT doc_id, text FROM documents
       WHERE text IS NOT NULL
         AND ('0x' || substr(md5('{_RECALL_SEED}:' || doc_id), 1, 6))::BIGINT
             / {float(1 << 24)!r} < {_RECALL_RATE!r}
-    ), sh AS (
-      SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-      FROM (SELECT doc_id, string_split(text, ' ') AS l FROM smp),
-           unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-      WHERE len(l) >= 3
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
+    ), {_mh_pairs_cte("mh", "smp")}, sizes AS MATERIALIZED (
+      SELECT doc_id, count(*) AS n FROM mhsh GROUP BY 1
     ), tp AS (
       SELECT a.doc_id AS left_id, b.doc_id AS right_id, count(*) AS c
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+      FROM mhsh a JOIN mhsh b ON a.s = b.s AND a.doc_id < b.doc_id
       GROUP BY 1, 2
-    ), truth AS (
+    ), truth AS MATERIALIZED (
       SELECT t.left_id, t.right_id
       FROM tp t
       JOIN sizes sa ON sa.doc_id = t.left_id
       JOIN sizes sb ON sb.doc_id = t.right_id
       WHERE t.c / (sa.n + sb.n - t.c) >= {_RECALL_TAU!r}
-    ), sig AS (
-      SELECT doc_id, {mins}
-      FROM sh GROUP BY doc_id
-    ), bands AS (
-      {band_rows}
-    ), cand0 AS (
-      SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id
-      FROM bands l JOIN bands r
-        ON l.band_idx = r.band_idx AND l.band_key = r.band_key
-       AND l.doc_id < r.doc_id
-    ), cand AS (
-      SELECT c.left_id, c.right_id
-      FROM cand0 c
-      JOIN sig a ON a.doc_id = c.left_id
-      JOIN sig b ON b.doc_id = c.right_id
-      WHERE ({agree}) / {float(_MH_PERMS)!r} >= 0.25
     ), agg AS (
       SELECT (SELECT count(*) FROM smp)::BIGINT AS n_sample,
              (SELECT count(*) FROM truth)::BIGINT AS n_truth,
              (SELECT count(*) FROM truth t
-               WHERE EXISTS (SELECT 1 FROM cand c
+               WHERE EXISTS (SELECT 1 FROM mhp c
                              WHERE c.left_id = t.left_id
                                AND c.right_id = t.right_id))::BIGINT AS n_caught
     )
@@ -4574,12 +4439,7 @@ def q_allpairs_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ALLPAIRS_ORACLE = """
-    WITH tk AS (
-      SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS tok
-      FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-           unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-      WHERE len(l) >= 3
-    ), dfreq AS (SELECT tok, count(*) AS dfc FROM tk GROUP BY 1
+    WITH """ + _shingle_cte("tk", "documents", alias="tok") + """, dfreq AS (SELECT tok, count(*) AS dfc FROM tk GROUP BY 1
     ), ranked AS (
       SELECT doc_id, tok,
              row_number() OVER (PARTITION BY doc_id ORDER BY dfc, tok) AS rnk,
@@ -4739,70 +4599,15 @@ def q_er_cross_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents split by doc_id parity into table_a (even) and table_b
     (odd); candidates are cross-table band matches only — the reference's
     table_a/table_b linkage setting (/root/reference/blocking/blocker.py,
-    er_magellan pair files are cross-table by construction). Same
-    md5-portable 16-perm signature and band join as
-    q_minhash_lsh_candidates, so the DuckDB oracle replicates banding,
-    the cross join, and the agreement estimate exactly. The production
-    xxhash-64-perm path with A-side salting + B-side replication is
-    `blocking.block_minhash_lsh_cross`, exercised by pytest (recall vs
-    exact cross pairs; salted-bucket full-recall bound)."""
-    docs = _load(spark, sf_dir, "documents")
-    sh = _doc_shingles(docs)
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("s")))).alias(f"h{i}")
-            for i in range(_MH_PERMS)
-        ]
-    ).persist()
-    r = _MH_PERMS // _MH_BANDS
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band_idx"),
-                    F.md5(
-                        F.concat_ws("|", *[F.col(f"h{b * r + j}") for j in range(r)])
-                    ).alias("band_key"),
-                )
-                for b in range(_MH_BANDS)
-            ]
-        )
-    )
-    banded = sig.select("doc_id", bands.alias("b")).select(
-        "doc_id",
-        F.col("b.band_idx").alias("band_idx"), F.col("b.band_key").alias("band_key"),
-    )
-    l = banded.where(F.col("doc_id") % 2 == 0).select(
-        "band_idx", "band_key", F.col("doc_id").alias("left_id")
-    )
-    rr = banded.where(F.col("doc_id") % 2 == 1).select(
-        "band_idx", "band_key", F.col("doc_id").alias("right_id")
-    )
-    cand = (
-        l.join(rr, ["band_idx", "band_key"])
-        .select("left_id", "right_id")
-        .dropDuplicates(["left_id", "right_id"])
-    )
-    ls = sig.select(
-        F.col("doc_id").alias("left_id"),
-        *[F.col(f"h{i}").alias(f"lh{i}") for i in range(_MH_PERMS)],
-    )
-    rs = sig.select(
-        F.col("doc_id").alias("right_id"),
-        *[F.col(f"h{i}").alias(f"rh{i}") for i in range(_MH_PERMS)],
-    )
-    agree = sum(
-        (F.col(f"lh{i}") == F.col(f"rh{i}")).cast("int") for i in range(_MH_PERMS)
-    )
-    return (
-        cand.join(ls, "left_id")
-        .join(rs, "right_id")
-        .select(
-            "left_id", "right_id",
-            (agree / F.lit(float(_MH_PERMS))).alias("est_jaccard"),
-        )
-        .where(F.col("est_jaccard") >= 0.25)
-    )
+    er_magellan pair files are cross-table by construction). The same
+    md5-portable 16-perm twin as q_minhash_lsh_candidates
+    (`_mh_lsh_pairs` with the parity split), so the DuckDB oracle
+    replicates banding, the cross join, and the agreement estimate
+    exactly. The production xxhash-64-perm path with A-side salting +
+    B-side replication is `blocking.block_minhash_lsh_cross`, exercised by
+    pytest (recall vs exact cross pairs; salted-bucket full-recall
+    bound)."""
+    return _mh_lsh_pairs(_load(spark, sf_dir, "documents"), parity_split=True)
 
 
 def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5115,12 +4920,7 @@ _INCREMENTAL_LINK_ORACLE = (
       SELECT doc_id + 30000,
              array_to_string(list_reverse(string_split(text, ' ')), ' ')
       FROM documents WHERE doc_id % 7 = 3
-    ), sh2 AS (
-      SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-      FROM (SELECT doc_id, string_split(text, ' ') AS l FROM docs_all),
-           unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-      WHERE len(l) >= 3
-    ), rare2 AS (
+    ), """ + _shingle_cte("sh2", "docs_all") + """, rare2 AS (
       SELECT s FROM sh2 GROUP BY s HAVING count(*) <= 50
     ), f2 AS (
       SELECT sh2.doc_id, sh2.s FROM sh2 JOIN rare2 USING (s)
@@ -5941,10 +5741,11 @@ _PREFIX_CONTAINMENT_ORACLE = """
 
 def q_lsh_power_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LSH (bands, rows) design curve: detection probability
-    1-(1-s^r)^b over a similarity grid for the pipeline's banding configs —
-    the planner table that justifies the chosen (b=16, r=4) production
-    banding and the portable (b=4, r=4) oracle variant. Pure arithmetic
-    projection, rounded to 6 dp (pow last-ulp differences absorb)."""
+    1-(1-s^r)^b over a similarity grid for three banding configs — the
+    md5 twin's (b=4, r=4), (b=8, r=8) and (b=16, r=4). The production
+    blocker's (b=21, r=3) (`pipeline.PipelineConfig`) is not in the
+    table. Pure arithmetic projection, rounded to 6 dp (pow last-ulp
+    differences absorb)."""
     grid = spark.range(1, 20).select((F.col("id") / F.lit(20.0)).alias("s"))
     rows = []
     for b, r in [(4, 4), (8, 8), (16, 4)]:
@@ -6978,27 +6779,13 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN ta ON d.doc_id = ta.doc_id
         """,
         "pii_scrub": _pii_scrub_sql(),
-        "doc_fingerprint": """
-            WITH sh AS (
-              SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-              FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-                   unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-              WHERE len(l) >= 3
-            )
+        "doc_fingerprint": f"""
+            WITH {_shingle_cte("sh", "documents")}
             SELECT doc_id, min(md5(s)) AS fingerprint FROM sh GROUP BY doc_id
         """,
-        "minhash_md5_signature": """
-            WITH sh AS (
-              SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-              FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-                   unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-              WHERE len(l) >= 3
-            )
-            SELECT doc_id,
-                   min(md5('0|' || s)) AS h0, min(md5('1|' || s)) AS h1,
-                   min(md5('2|' || s)) AS h2, min(md5('3|' || s)) AS h3,
-                   min(md5('4|' || s)) AS h4, min(md5('5|' || s)) AS h5,
-                   min(md5('6|' || s)) AS h6, min(md5('7|' || s)) AS h7
+        "minhash_md5_signature": f"""
+            WITH {_shingle_cte("sh", "documents")}
+            SELECT doc_id, {_md5_mins(8)}
             FROM sh GROUP BY doc_id
         """,
         "crowd_majority_vote": """
@@ -7632,7 +7419,7 @@ def oracle_sql() -> dict[str, str]:
         "crowd_bwa": _bwa_oracle(),
         "minhash_lsh_candidates": _minhash_lsh_oracle(),
         "oph_signature": _oph_oracle(),
-        "weighted_minhash_signature": """
+        "weighted_minhash_signature": f"""
             WITH toks AS (
               SELECT DISTINCT doc_id, tok FROM (
                 SELECT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -7652,11 +7439,7 @@ def oracle_sql() -> dict[str, str]:
               FROM toks t JOIN w USING (tok),
                    unnest(generate_series(1, w.weight)) u(i)
             )
-            SELECT doc_id,
-                   min(md5('0|' || s)) AS h0, min(md5('1|' || s)) AS h1,
-                   min(md5('2|' || s)) AS h2, min(md5('3|' || s)) AS h3,
-                   min(md5('4|' || s)) AS h4, min(md5('5|' || s)) AS h5,
-                   min(md5('6|' || s)) AS h6, min(md5('7|' || s)) AS h7
+            SELECT doc_id, {_md5_mins(8)}
             FROM rep GROUP BY doc_id
         """,
         "leakage_safe_split": _DOC_DEDUP_ORACLE.rsplit("SELECT node AS doc_id", 1)[0] + """
@@ -7766,13 +7549,8 @@ def oracle_sql() -> dict[str, str]:
                  / ((sp / n_rec) + (sr / n_rec)), 6) AS bcubed_f1
     FROM agg
         """,
-        "decontaminate": """
-            WITH sh AS (
-              SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS s
-              FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-                   unnest(generate_series(1, greatest(len(l) - 2, 1))) u(i)
-              WHERE len(l) >= 3
-            ), tr AS (
+        "decontaminate": f"""
+            WITH {_shingle_cte("sh", "documents")}, tr AS (
               SELECT doc_id AS train_id, s FROM sh WHERE doc_id % 2 = 0
             ), keep AS (
               SELECT s FROM tr GROUP BY s HAVING count(*) <= 50

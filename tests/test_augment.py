@@ -1,3 +1,4 @@
+import pandas as pd
 import pyspark.sql.functions as F
 
 from ditto_spark.operators.augment import (
@@ -87,9 +88,9 @@ COLVAL = (
 
 
 def _colval_df(spark, n=6):
-    return spark.createDataFrame(
-        [(i, COLVAL) for i in range(n)], "doc_id long, text string"
-    )
+    # through Arrow from pandas: a Python-list frame is a Python-RDD scan
+    pdf = pd.DataFrame({"doc_id": range(n), "text": [COLVAL] * n})
+    return spark.createDataFrame(pdf, "doc_id long, text string")
 
 
 def test_drop_col_removes_one_short_segment(spark):

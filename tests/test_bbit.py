@@ -2,6 +2,7 @@
 per-field Python, estimator accuracy against exact Jaccard."""
 
 import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 
 from ditto_spark.operators.blocking import (
@@ -14,10 +15,11 @@ from ditto_spark.operators.blocking import (
 
 
 def _docs(spark, texts):
-    return spark.createDataFrame(
-        [(f"d{i}", t) for i, t in enumerate(texts)],
-        "conv_id string, entity_text string",
+    # through Arrow from pandas: a Python-list frame is a Python-RDD scan
+    pdf = pd.DataFrame(
+        {"conv_id": [f"d{i}" for i in range(len(texts))], "entity_text": texts}
     )
+    return spark.createDataFrame(pdf, "conv_id string, entity_text string")
 
 
 def _sigs(spark, texts, num_perm=64):

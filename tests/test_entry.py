@@ -3,49 +3,19 @@ __spark_entry__.py runs on Spark AND DuckDB at sf0.01; row count, column
 names, and exact sorted values must agree. Rows-only queries must run and
 return a stable non-empty result."""
 
-import math
 import os
 import sys
 
-import duckdb
+import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from scripts.check_oracles import duck_connection, mismatch
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _duck(sql: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    return con.execute(sql).fetchdf()
-
-
-def _norm(df):
-    cols = sorted(df.columns)
-    df = df[cols]
-    rows = []
-    for tup in df.itertuples(index=False):
-        row = []
-        for v in tup:
-            if isinstance(v, float):
-                if math.isnan(v):
-                    row.append("nan")
-                else:
-                    row.append(f"{v!r}")
-            else:
-                row.append(str(v))
-        rows.append(tuple(row))
-    return cols, sorted(rows)
+SF_SMALL = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 ORACLES = sorted(entrymod.oracle_sql().keys())
@@ -55,16 +25,18 @@ ROWS_ONLY = sorted(set(entrymod.queries()) - set(ORACLES))
 @pytest.mark.parametrize("name", ORACLES)
 def test_oracle_parity(spark, name):
     qdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    odf = _duck(entrymod.oracle_sql()[name])
-    qc, qr = _norm(qdf)
-    oc, orr = _norm(odf)
-    assert qc == oc, f"{name}: columns {qc} vs {oc}"
-    assert len(qr) == len(orr), f"{name}: rows {len(qr)} vs {len(orr)}"
-    mismatches = [i for i, (a, b) in enumerate(zip(qr, orr)) if a != b]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} mismatched rows; first: "
-        f"{qr[mismatches[0]]} vs {orr[mismatches[0]]}"
-    )
+    odf = duck_connection(SF_DIR).execute(entrymod.oracle_sql()[name]).fetchdf()
+    diff = mismatch(qdf, odf)
+    assert diff is None, f"{name}: {diff}"
+
+
+def test_compare_is_exact_on_floats():
+    """The gate compares a float by its repr, so a 1e-12 difference is a
+    mismatch, and NaN equals NaN."""
+    a = pd.DataFrame({"x": [0.5 + 1e-12], "n": [float("nan")]})
+    b = pd.DataFrame({"x": [0.5], "n": [float("nan")]})
+    assert mismatch(a, b) is not None
+    assert mismatch(b, b.copy()) is None
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
@@ -108,3 +80,22 @@ def test_chunk_windows_stride_guard_raises(spark):
     )
     with pytest.raises(PySparkException, match="chunk index overflow"):
         entrymod._chunk_windows(docs, w=4, stride=8).count()
+
+
+# The md5 MinHash queries: each returns a lazy frame, so a persist inside
+# one outlives the query. blocking_recall is left out: its exact-truth side,
+# blocking.allpairs_jaccard_join, persists its element table. sf0.001, so no
+# frame cached by an earlier sf0.01 case can absorb a persist.
+MD5_QUERIES = [
+    "minhash_lsh_candidates", "er_cross_candidates", "chunk_near_dup",
+    "chunk_curation", "transcript_dedup_builtin", "bbit_minhash_jaccard",
+    "minhash_md5_signature", "weighted_minhash_signature",
+]
+
+
+@pytest.mark.parametrize("name", MD5_QUERIES)
+def test_md5_query_leaves_no_cache(spark, name):
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    entrymod.queries()[name](spark, SF_SMALL).collect()
+    assert cm.numCachedEntries() == before
