@@ -88,6 +88,17 @@ def _rare_shingle_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
+def _rare_pair_text(docs: DataFrame) -> DataFrame:
+    """The _rare_shingle_pairs ids with each document's text attached as
+    left_txt / right_txt (blocking.pair_sides)."""
+    return B.pair_sides(
+        _rare_shingle_pairs(docs).select("left_id", "right_id"),
+        docs,
+        "doc_id",
+        {"text": ("left_txt", "right_txt")},
+    )
+
+
 def _shingle_cte(
     name: str, src: str, alias: str = "s", materialized: bool = False
 ) -> str:
@@ -1034,13 +1045,11 @@ def q_bbit_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         b=4,
         id_col="doc_id",
     )
-    pairs = _rare_shingle_pairs(docs).select("left_id", "right_id")
-    joined = pairs.join(
-        packed.withColumnsRenamed({"doc_id": "left_id", "bsig": "left_bsig"}),
-        "left_id",
-    ).join(
-        packed.withColumnsRenamed({"doc_id": "right_id", "bsig": "right_bsig"}),
-        "right_id",
+    joined = B.pair_sides(
+        _rare_shingle_pairs(docs).select("left_id", "right_id"),
+        packed,
+        "doc_id",
+        {"bsig": ("left_bsig", "right_bsig")},
     )
     return bbit_jaccard_estimate(joined, b=4).select(
         "left_id", "right_id", F.round("est_jaccard", 9).alias("est_jaccard")
@@ -1082,20 +1091,7 @@ def q_cached_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
         score_pairs_cached,
     )
 
-    docs = _load(spark, sf_dir, "documents")
-    txt = docs.select("doc_id", "text")
-    pairs = (
-        _rare_shingle_pairs(docs)
-        .select("left_id", "right_id")
-        .join(
-            txt.withColumnsRenamed({"doc_id": "left_id", "text": "left_txt"}),
-            "left_id",
-        )
-        .join(
-            txt.withColumnsRenamed({"doc_id": "right_id", "text": "right_txt"}),
-            "right_id",
-        )
-    )
+    pairs = _rare_pair_text(_load(spark, sf_dir, "documents"))
     cache_dir = tempfile.mkdtemp(prefix="score_cache_")
     out = score_pairs_cached(pairs, cache_dir, score_fn=score_pairs_builtin)
     return out.select(
@@ -4707,15 +4703,11 @@ def q_transcript_dedup_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _load(spark, sf_dir, "events")
     docs = _event_entity_docs(ev)
-    cands = _mh_lsh_pairs(docs).select("left_id", "right_id")
-    with_text = cands.join(
-        docs.select(F.col("doc_id").alias("left_id"), F.col("text").alias("left_txt")),
-        "left_id",
-    ).join(
-        docs.select(
-            F.col("doc_id").alias("right_id"), F.col("text").alias("right_txt")
-        ),
-        "right_id",
+    with_text = B.pair_sides(
+        _mh_lsh_pairs(docs).select("left_id", "right_id"),
+        docs,
+        "doc_id",
+        {"text": ("left_txt", "right_txt")},
     )
     scored = score_pairs_builtin(with_text)
     matches = apply_threshold(scored, 0.8).where(F.col("match") == 1)
@@ -5490,16 +5482,8 @@ def q_idf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ditto_spark.operators.scoring import build_idf_df, score_pairs_tfidf_relational
 
     docs = _load(spark, sf_dir, "documents")
-    pairs = _rare_shingle_pairs(docs).select("left_id", "right_id")
-    pt = pairs.join(
-        docs.select(F.col("doc_id").alias("left_id"), F.col("text").alias("left_txt")),
-        "left_id",
-    ).join(
-        docs.select(F.col("doc_id").alias("right_id"), F.col("text").alias("right_txt")),
-        "right_id",
-    )
     idf = build_idf_df(docs.select(F.col("text").alias("txt")))
-    scored = score_pairs_tfidf_relational(pt, idf)
+    scored = score_pairs_tfidf_relational(_rare_pair_text(docs), idf)
     return scored.select(
         "left_id", "right_id", F.round("prob", 6).alias("idf_cosine")
     )
@@ -5551,16 +5535,8 @@ def q_weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _load(spark, sf_dir, "documents")
-    pairs = _rare_shingle_pairs(docs).select("left_id", "right_id")
-    pt = pairs.join(
-        docs.select(F.col("doc_id").alias("left_id"), F.col("text").alias("left_txt")),
-        "left_id",
-    ).join(
-        docs.select(F.col("doc_id").alias("right_id"), F.col("text").alias("right_txt")),
-        "right_id",
-    )
     idf = build_idf_df(docs.select(F.col("text").alias("txt")))
-    scored = score_pairs_weighted_jaccard(pt, idf)
+    scored = score_pairs_weighted_jaccard(_rare_pair_text(docs), idf)
     return scored.select(
         "left_id", "right_id", F.round("prob", 6).alias("weighted_jaccard")
     )
@@ -5635,19 +5611,8 @@ def q_match_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ditto_spark.operators.scoring import build_idf_df, match_evidence
 
     docs = _load(spark, sf_dir, "documents")
-    pairs = _rare_shingle_pairs(docs).select("left_id", "right_id")
-    texts = docs.select("doc_id", "text")
-    pt = pairs.join(
-        texts.select(F.col("doc_id").alias("left_id"), F.col("text").alias("left_txt")),
-        "left_id",
-    ).join(
-        texts.select(
-            F.col("doc_id").alias("right_id"), F.col("text").alias("right_txt")
-        ),
-        "right_id",
-    )
     idf = build_idf_df(docs.select(F.col("text").alias("txt")))
-    return match_evidence(pt, idf, k=5)
+    return match_evidence(_rare_pair_text(docs), idf, k=5)
 
 
 _MATCH_EVIDENCE_ORACLE = _ORACLE_SHINGLE_CTE + """

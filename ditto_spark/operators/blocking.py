@@ -45,6 +45,12 @@ blocker (rare shingles, winnowed fingerprints, suffixes, meta-blocking,
 structure keys, decontamination) runs:
   drop_frequent_keys  drop keys held by more than max_df rows
   shared_key_pairs    (left_id < right_id, n_shared) per pair sharing keys
+
+and the pair-side entity lookup that attaches a per-entity value
+(signature, text, set size, cluster id, ...) to both ends of a pair table,
+built on the entity side so the pair table is never sorted:
+  entity_lookup       an entity table hinted broadcast or shuffle_hash
+  pair_sides          the left_id and right_id lookups onto one table
 """
 
 from __future__ import annotations
@@ -371,20 +377,37 @@ def entity_lookup(entity: DataFrame) -> DataFrame:
     return entity.hint("broadcast" if fits else "shuffle_hash")
 
 
+def pair_sides(
+    pairs: DataFrame,
+    entity: DataFrame,
+    id_col: str,
+    cols: dict[str, tuple[str, str]],
+) -> DataFrame:
+    """Attach per-entity values to both ends of a pair table: each entity
+    column `c` in `cols` arrives as `cols[c][0]` for left_id and
+    `cols[c][1]` for right_id. Two inner joins, left then right, each
+    through entity_lookup, so the entity side is the build side and the
+    pair table is never sorted. A pair whose id is NULL or absent from
+    `entity` is dropped; entity columns outside `cols` are not carried."""
+    for side, pick in (("left_id", 0), ("right_id", 1)):
+        looked = entity.select(
+            F.col(id_col).alias(side),
+            *[F.col(c).alias(names[pick]) for c, names in cols.items()],
+        )
+        pairs = pairs.join(entity_lookup(looked), side)
+    return pairs
+
+
 def estimated_jaccard(
     pairs: DataFrame, sig_df: DataFrame, id_col: str = "conv_id"
 ) -> DataFrame:
     """Attach the MinHash Jaccard estimate (sig_agreement), zero Python.
 
-    Both signature lookups go through entity_lookup: the signature side
-    carries a 64-long array (~0.5 KB/row), so it broadcasts at benchmark
-    sizes and, at corpus scale, builds the hash map of a shuffled hash join
-    while the pairs stream."""
-    ls = sig_df.select(F.col(id_col).alias("left_id"), F.col("sig").alias("lsig"))
-    rs = sig_df.select(F.col(id_col).alias("right_id"), F.col("sig").alias("rsig"))
-    joined = pairs.join(entity_lookup(ls), "left_id").join(
-        entity_lookup(rs), "right_id"
-    )
+    The signature side carries a 64-long array (~0.5 KB/row), so its
+    lookups (pair_sides) broadcast at benchmark sizes and, at corpus
+    scale, build the hash map of a shuffled hash join while the pairs
+    stream."""
+    joined = pair_sides(pairs, sig_df, id_col, {"sig": ("lsig", "rsig")})
     return joined.withColumn(
         "est_jaccard", sig_agreement("lsig", "rsig")
     ).drop("lsig", "rsig")
@@ -488,8 +511,10 @@ def block_minhash_lsh_cross(
     probabilistic cross-cell recovery, which leans on CC downstream — a
     luxury two-table linkage does not have since its output IS the final
     pair set). Per-task width stays ~max_bucket A rows; the replication
-    factor is bounded by the count window, not guessed. Both signature
-    tables are persisted (each feeds its band rows and the estimate join).
+    factor is bounded by the count window, not guessed. Neither signature
+    table is persisted: each feeds its band rows and the estimate join, so
+    its MinHash is computed twice, and the returned frame holds no cache
+    entry of its own.
 
     top_k keeps the best-k A-side candidates per B row (blocker.py:67-72
     ranks neighbors per query row)."""
@@ -498,10 +523,10 @@ def block_minhash_lsh_cross(
     assert num_bands * rows_per_band <= num_perm
     sig_a = minhash_signatures(
         shingle(tokenize(table_a, text_col), shingle_n), id_col, num_perm=num_perm
-    ).persist()
+    )
     sig_b = minhash_signatures(
         shingle(tokenize(table_b, text_col), shingle_n), id_col, num_perm=num_perm
-    ).persist()
+    )
     bands_a = lsh_bands(sig_a, id_col, num_bands, rows_per_band).withColumn(
         "side", F.lit("a")
     )
@@ -533,6 +558,7 @@ def block_minhash_lsh_cross(
         .select("left_id", "right_id")
         .dropDuplicates(["left_id", "right_id"])
     )
+    # the two sides look up different tables, so not pair_sides
     ls = sig_a.select(F.col(id_col).alias("left_id"), F.col("sig").alias("lsig"))
     rs = sig_b.select(F.col(id_col).alias("right_id"), F.col("sig").alias("rsig"))
     pairs = (
@@ -625,20 +651,20 @@ def block_exact_shingles(
     )
     rare = drop_frequent_keys(sh, ["s"], max_shingle_df)
     sizes = rare.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    return (
-        shared_key_pairs(rare, id_col, ["s"], min_common)
-        .join(sizes.withColumnsRenamed({id_col: "left_id", "n_sh": "na"}), "left_id")
-        .join(sizes.withColumnsRenamed({id_col: "right_id", "n_sh": "nb"}), "right_id")
-        .select(
-            "left_id",
-            "right_id",
-            F.col("n_shared").alias("common_shingles"),
-            "na",
-            "nb",
-            (
-                F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared"))
-            ).alias("jaccard"),
-        )
+    return pair_sides(
+        shared_key_pairs(rare, id_col, ["s"], min_common),
+        sizes,
+        id_col,
+        {"n_sh": ("na", "nb")},
+    ).select(
+        "left_id",
+        "right_id",
+        F.col("n_shared").alias("common_shingles"),
+        "na",
+        "nb",
+        (
+            F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared"))
+        ).alias("jaccard"),
     )
 
 
@@ -880,16 +906,13 @@ def meta_blocking_wnp(
         .groupBy("node")
         .agg(F.sum("weight").alias("sw"), F.count(F.lit(1)).alias("deg"))
     )
-    tl = thresholds.withColumnsRenamed(
-        {"node": "left_id", "sw": "sw_l", "deg": "deg_l"}
-    )
-    tr = thresholds.withColumnsRenamed(
-        {"node": "right_id", "sw": "sw_r", "deg": "deg_r"}
-    )
     return (
-        edges.join(tl, "left_id")
-        .join(tr, "right_id")
-        .where(
+        pair_sides(
+            edges,
+            thresholds,
+            "node",
+            {"sw": ("sw_l", "sw_r"), "deg": ("deg_l", "deg_r")},
+        ).where(
             (F.col("weight") * F.col("deg_l") >= F.col("sw_l"))
             | (F.col("weight") * F.col("deg_r") >= F.col("sw_r"))
         )
@@ -1038,13 +1061,7 @@ def allpairs_jaccard_join(
             )
         return tk
 
-    # the exploded element table feeds BOTH the df counts and the ranked
-    # index — persist it or the tokenize/shingle projection runs twice
-    toks = (
-        elements(df)
-        .select(F.col(id_col), F.explode("el").alias("tok"))
-        .persist()
-    )
+    toks = elements(df).select(F.col(id_col), F.explode("el").alias("tok"))
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("dfc"))
     ranked = (
         toks.join(dfreq, "tok")
@@ -1123,13 +1140,10 @@ def allpairs_jaccard_join(
     sets = elements(df.join(cand_ids, id_col, "left_semi")).select(
         F.col(id_col), F.array_sort(F.array_distinct("el")).alias("ts")
     )
-    la = sets.select(F.col(id_col).alias("left_id"), F.col("ts").alias("ta"))
-    rb = sets.select(F.col(id_col).alias("right_id"), F.col("ts").alias("tb"))
     inter = F.size(F.array_intersect("ta", "tb")).cast("double")
     union = (F.size("ta") + F.size("tb")).cast("double") - inter
     return (
-        cand.join(la, "left_id")
-        .join(rb, "right_id")
+        pair_sides(cand, sets, id_col, {"ts": ("ta", "tb")})
         .select(
             "left_id", "right_id", (inter / union).alias("jaccard")
         )
@@ -1195,9 +1209,7 @@ def edit_distance_join(
             )
         ).alias("_grams"),
     )
-    toks = base.select(
-        F.col(id_col), "_n", F.explode("_grams").alias("g")
-    ).persist()
+    toks = base.select(F.col(id_col), "_n", F.explode("_grams").alias("g"))
     dfreq = toks.groupBy("g").agg(F.count(F.lit(1)).alias("dfc"))
     pref = (
         toks.join(dfreq, "g")
@@ -1223,11 +1235,8 @@ def edit_distance_join(
         .select("left_id", "right_id")
         .dropDuplicates(["left_id", "right_id"])
     )
-    sa = base.select(F.col(id_col).alias("left_id"), F.col("_s").alias("sa"))
-    sb = base.select(F.col(id_col).alias("right_id"), F.col("_s").alias("sb"))
     return (
-        cand.join(sa, "left_id")
-        .join(sb, "right_id")
+        pair_sides(cand, base, id_col, {"_s": ("sa", "sb")})
         .withColumn("dist", F.levenshtein("sa", "sb"))
         .where(F.col("dist") <= d)
         .select("left_id", "right_id", "dist")

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from ditto_spark.operators.blocking import pair_sides
+
 # Edges per loop partition of the CC and pivot loops (`_loop_partitions`).
 ROWS_PER_PARTITION = 200_000
 # Star rounds per convergence check (why 2: see connected_components).
@@ -613,16 +615,14 @@ def cluster_graph_metrics(
     score_col is given min_score / max_score (4 dp; order-free aggregates —
     an avg would be addition-order-nondeterministic across engines).
 
-    Shape: two node-keyed hash joins attach cluster ids to edge endpoints,
-    then one per-cluster partial aggregation each side; nothing holds a
-    cluster's member list in a row, so a 10^8-member degenerate cluster is
-    just a big group, not an OOM. Edges whose endpoints landed in different
-    clusters (possible when `edges` is a superset of the thresholded match
-    set) are dropped rather than miscounted.
+    Shape: two node-keyed lookups (blocking.pair_sides) attach cluster ids
+    to edge endpoints, then one per-cluster partial aggregation each side;
+    nothing holds a cluster's member list in a row, so a 10^8-member
+    degenerate cluster is just a big group, not an OOM. Edges whose
+    endpoints landed in different clusters (possible when `edges` is a
+    superset of the thresholded match set) are dropped rather than
+    miscounted.
     """
-    a = assignments.select(
-        F.col(id_col).alias("__n"), F.col(cluster_col).alias("__c")
-    )
     score_aggs = []
     if score_col is not None:
         score_aggs = [
@@ -634,13 +634,9 @@ def cluster_graph_metrics(
         .agg(F.count(F.lit(1)).alias("n_nodes"))
         .where(F.col("n_nodes") >= min_nodes)
     )
-    e = (
-        edges.join(a.withColumnRenamed("__n", "left_id"), "left_id")
-        .withColumnRenamed("__c", "__cl")
-        .join(a.withColumnRenamed("__n", "right_id"), "right_id")
-        .withColumnRenamed("__c", "__cr")
-        .where(F.col("__cl") == F.col("__cr"))
-    )
+    e = pair_sides(
+        edges, assignments, id_col, {cluster_col: ("__cl", "__cr")}
+    ).where(F.col("__cl") == F.col("__cr"))
     edge_stats = e.groupBy(F.col("__cl").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_edges"), *score_aggs
     )
@@ -806,8 +802,9 @@ def cluster_bridge_edges(
     is_bridge flag plus per-endpoint articulation-point flags (nodes
     whose removal splits the cluster — same single Tarjan DFS).
 
-    Distributed shape: edges join their cluster id (one node-keyed join;
-    cross-cluster edges dropped, same contract as cluster_graph_metrics),
+    Distributed shape: edges join their endpoints' cluster ids (two
+    node-keyed lookups, blocking.pair_sides; cross-cluster edges dropped,
+    same contract as cluster_graph_metrics),
     then ONE applyInPandas group per cluster runs linear-time Tarjan —
     per-group cost O(V+E) of THAT cluster only, so the stage is bounded by
     the largest cluster, not the corpus. Clusters larger than
@@ -817,16 +814,13 @@ def cluster_bridge_edges(
     group is deterministic (sorted edge input, sorted adjacency)."""
     import pandas as pd
 
-    le = assignment.select(
-        F.col(id_col).alias("left_id"), F.col(cluster_col).alias("__ca")
-    )
-    re_ = assignment.select(
-        F.col(id_col).alias("right_id"), F.col(cluster_col).alias("__cb")
-    )
     e = (
-        edges.select("left_id", "right_id")
-        .join(le, "left_id")
-        .join(re_, "right_id")
+        pair_sides(
+            edges.select("left_id", "right_id"),
+            assignment,
+            id_col,
+            {cluster_col: ("__ca", "__cb")},
+        )
         .where(F.col("__ca") == F.col("__cb"))
         .select("left_id", "right_id", F.col("__ca").alias(cluster_col))
     )

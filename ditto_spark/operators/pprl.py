@@ -192,7 +192,7 @@ def pprl_dice_pairs(
 
     Returns (left_id, right_id, dice) with dice >= min_dice.
     """
-    from ditto_spark.operators.blocking import candidates_from_bands
+    from ditto_spark.operators.blocking import candidates_from_bands, pair_sides
 
     pos = band_positions(bands, bits_per_band, n_bits=n_bits)
     keys = F.array(*[band_key_expr("bloom", p) for p in pos])
@@ -200,11 +200,8 @@ def pprl_dice_pairs(
         F.col(id_col), F.posexplode(keys).alias("band_idx", "band_key")
     )
     cand = candidates_from_bands(bands_df, id_col=id_col, max_bucket=max_bucket)
-    a = encoded.select(F.col(id_col).alias("left_id"), F.col("bloom").alias("ba"))
-    b = encoded.select(F.col(id_col).alias("right_id"), F.col("bloom").alias("bb"))
     return (
-        cand.join(a, "left_id")
-        .join(b, "right_id")
+        pair_sides(cand, encoded, id_col, {"bloom": ("ba", "bb")})
         .withColumn("dice", dice_expr("ba", "bb"))
         .where(F.col("dice") >= min_dice)
         .select("left_id", "right_id", "dice")

@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
-from ditto_spark.operators.blocking import content_tokens, entity_lookup
+from ditto_spark.operators.blocking import content_tokens, pair_sides
 
 SCORE_SCHEMA = "left_id string, right_id string, prob double"
 # attach_pair_text truncates each side's text to this many characters
@@ -569,7 +569,7 @@ def score_pairs(
 def attach_pair_text(pairs: DataFrame, serialized: DataFrame) -> DataFrame:
     """Join serialized (conv_id, entity_text) onto candidate pairs as
     left_txt/right_txt: two id-keyed lookups, each built on the entity side
-    (`blocking.entity_lookup`: broadcast when the entity table fits
+    (`blocking.pair_sides`: broadcast when the entity table fits
     autoBroadcastJoinThreshold, a shuffled hash join when it does not; the
     pair table is never sorted).
 
@@ -582,10 +582,8 @@ def attach_pair_text(pairs: DataFrame, serialized: DataFrame) -> DataFrame:
         "conv_id",
         F.substring("entity_text", 1, PAIR_TEXT_MAX_CHARS).alias("entity_text"),
     )
-    left = ser.withColumnsRenamed({"conv_id": "left_id", "entity_text": "left_txt"})
-    right = ser.withColumnsRenamed({"conv_id": "right_id", "entity_text": "right_txt"})
-    return pairs.join(entity_lookup(left), "left_id").join(
-        entity_lookup(right), "right_id"
+    return pair_sides(
+        pairs, ser, "conv_id", {"entity_text": ("left_txt", "right_txt")}
     )
 
 
@@ -638,8 +636,10 @@ def edit_similarity_pairs(
     text is truncated to `prefix_len` BEFORE the two attach joins — the
     truncation caps both the shuffle payload and the per-pair compute at
     a constant, which is what keeps a verify pass over 10^10 candidate
-    pairs sized by the pair count alone. Both joins are plain equi-joins
-    on the id (broadcast if docs is small; AQE decides)."""
+    pairs sized by the pair count alone. Both attach joins go through
+    blocking.pair_sides, so each builds on the docs side (broadcast when it
+    fits autoBroadcastJoinThreshold, a shuffled hash join when it does
+    not) and the pair table is never sorted."""
     txt = F.substring(F.col(text_col), 1, prefix_len)
     t = docs.select(F.col(id_col), txt.alias("t"))
     lt, rt = F.col("lt"), F.col("rt")
@@ -649,10 +649,9 @@ def edit_similarity_pairs(
         1.0 - dist.cast("double") / maxlen.cast("double")
     )
     return (
-        pairs.select("left_id", "right_id")
-        .join(t.withColumnsRenamed({id_col: "left_id", "t": "lt"}), "left_id")
-        .join(t.withColumnsRenamed({id_col: "right_id", "t": "rt"}), "right_id")
-        .select(
+        pair_sides(
+            pairs.select("left_id", "right_id"), t, id_col, {"t": ("lt", "rt")}
+        ).select(
             "left_id",
             "right_id",
             dist.cast("long").alias("edit_dist"),

@@ -22,7 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from ditto_spark.operators.blocking import drop_frequent_keys, shared_key_pairs
+from ditto_spark.operators.blocking import (
+    drop_frequent_keys,
+    pair_sides,
+    shared_key_pairs,
+)
 
 
 def render_turn_expr() -> F.Column:
@@ -328,8 +332,8 @@ def turn_alignment_scores(
                       alignment collapses
 
     Plan: ONE ordering-in-agg groupBy builds each conversation's ordered
-    turn-fingerprint array (md5(role|text) per turn); two id-keyed joins
-    attach the arrays to the pair table; both measures are zip_with /
+    turn-fingerprint array (md5(role|text) per turn); two id-keyed lookups
+    (blocking.pair_sides) attach the arrays to the pair table; both measures are zip_with /
     array_intersect codegen — no Python, no window, per-pair cost bounded
     by its own turn counts."""
     t = F.struct(
@@ -347,9 +351,7 @@ def turn_alignment_scores(
             F.array_sort(F.collect_list(t)), lambda s: s["__fp"]
         ).alias("fps")
     )
-    la = fps.select(F.col(id_col).alias("left_id"), F.col("fps").alias("lf"))
-    rb = fps.select(F.col(id_col).alias("right_id"), F.col("fps").alias("rf"))
-    j = pairs.join(la, "left_id").join(rb, "right_id")
+    j = pair_sides(pairs, fps, id_col, {"fps": ("lf", "rf")})
     aligned = F.aggregate(
         F.zip_with("lf", "rf", lambda a, b: (a == b).cast("int")),
         F.lit(0),

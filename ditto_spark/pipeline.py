@@ -18,9 +18,10 @@ tests/test_plans.py):
               (`repartition_pairs` overrides the count), so the CPU-bound
               UDF spreads over every core (see stage_pair_text); the JVM
               scorer adds none
-The lookups broadcast by `blocking.entity_lookup`'s rule: when the entity
-side does not fit autoBroadcastJoinThreshold, each is a shuffled hash join
-built on the entity side instead. The executed plan prints the serialized
+Both pairs of lookups are `blocking.pair_sides` calls, so they broadcast by
+`blocking.entity_lookup`'s rule: when the entity side does not fit
+autoBroadcastJoinThreshold, each is a shuffled hash join built on the
+entity side instead. The executed plan prints the serialized
 frame's exchange again under each cached read of it, and each shared
 broadcast a second time as a reuse: 1 line for serialized, 6 for the
 candidates, and 10 for the scored pairs (9 with the JVM scorer).

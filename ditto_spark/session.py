@@ -106,8 +106,9 @@ def get_spark(
         # the ~1M-row LSH band table in a band self-join, serializing
         # blocking through the driver (measured: local[32] slower than
         # local[8]). Small dims that SHOULD broadcast carry explicit
-        # broadcast() hints; the flagship's id-keyed lookups broadcast
-        # below this threshold (`blocking.entity_lookup`).
+        # broadcast() hints; every pair-side id lookup
+        # (`blocking.pair_sides`, `blocking.entity_lookup`) broadcasts
+        # below this threshold and builds a shuffled hash join above it.
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
         # Generated-code cache (static: read once, at session start). The
         # default 100 entries is smaller than one dedup pass's working set

@@ -38,3 +38,19 @@ def small_transcripts(spark):
     df = generate_transcripts(spark, n_base=300, seed=42).cache()
     df.count()
     return df
+
+
+@pytest.fixture(scope="session")
+def arrow_frame(spark):
+    """`arrow_frame(rows, ddl)`: the frame of `rows` under the DDL schema,
+    built through Arrow from pandas, so its scan runs in the JVM. A frame
+    from `spark.createDataFrame(<list>)` is a Python RDD scan instead, and
+    every task of a plan over it starts Python evaluation."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    def build(rows, ddl):
+        names = StructType.fromDDL(ddl).names
+        return spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
+
+    return build

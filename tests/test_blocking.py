@@ -151,8 +151,42 @@ def test_topk_variant(spark, tiny_transcripts):
     assert over == 0
 
 
-def test_exact_shingle_blocking(spark):
-    df = spark.createDataFrame(
+def test_pair_sides_under_ansi(spark, arrow_frame):
+    """Both ends of each pair get the mapped entity columns, two at once;
+    a pair whose id is NULL or absent from the entity table is dropped, a
+    NULL entity id matches nothing, entity columns outside the mapping are
+    not carried, the pair table's own columns are, and an empty pair frame
+    gives an empty frame of the same columns."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        entity = arrow_frame(
+            [(1, "a", 10, "x"), (2, "b", 20, "y"), (3, "c", 30, "z"),
+             (None, "n", 0, "w")],
+            "id long, sig string, n long, extra string",
+        )
+        ddl = "left_id long, right_id long, w double"
+        cols = {"sig": ("ls", "rs"), "n": ("ln", "rn")}
+        pairs = arrow_frame(
+            [(1, 2, 0.5), (2, 3, 0.25), (1, 9, 1.0), (None, 2, 1.0),
+             (3, None, 1.0)],
+            ddl,
+        )
+        out = B.pair_sides(pairs, entity, "id", cols)
+        names = ["right_id", "left_id", "w", "ls", "ln", "rs", "rn"]
+        assert out.columns == names
+        assert sorted(tuple(r) for r in out.collect()) == [
+            (2, 1, 0.5, "a", 10, "b", 20),
+            (3, 2, 0.25, "b", 20, "c", 30),
+        ]
+        empty = B.pair_sides(arrow_frame([], ddl), entity, "id", cols)
+        assert empty.columns == names and empty.collect() == []
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_exact_shingle_blocking(arrow_frame):
+    df = arrow_frame(
         [
             ("a", "alpha beta gamma delta"),
             ("b", "alpha beta gamma zeta"),
@@ -251,21 +285,25 @@ def test_cross_table_blocking_recall_and_sides(spark, small_transcripts):
     assert found / max(n_pos, 1) >= 0.95, f"cross recall {found}/{n_pos}"
 
 
-def test_cross_table_salting_full_recall(spark):
+def test_cross_table_salting_full_recall(spark, arrow_frame):
     # one hot bucket: 30 identical A texts and 20 identical B texts land in
     # the same band buckets; with max_bucket=10 the A side splits into 3
     # cells and B replicates — ALL 30x20 cross pairs must still surface
     # (one-side replication = full within-bucket recall, unlike the
-    # self-join's probabilistic cross-cell recovery)
+    # self-join's probabilistic cross-cell recovery), and the operator
+    # leaves no cache entry behind
     txt = "omega psi chi phi upsilon tau sigma rho"
-    a = spark.createDataFrame(
+    a = arrow_frame(
         [(f"a{i:03d}", txt) for i in range(30)], "conv_id string, entity_text string"
     )
-    b = spark.createDataFrame(
+    b = arrow_frame(
         [(f"b{i:03d}", txt) for i in range(20)], "conv_id string, entity_text string"
     )
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
     pairs = B.block_minhash_lsh_cross(a, b, max_bucket=10)
     assert pairs.count() == 30 * 20
+    assert cm.numCachedEntries() == before
 
 
 def test_ngram_overlap_cross_decontamination(spark):
@@ -442,12 +480,12 @@ def test_prefix_scan_degenerate_input(spark, run, expected):
     assert cm.numCachedEntries() == before
 
 
-def test_meta_blocking_wnp_prunes_below_both_means(spark):
+def test_meta_blocking_wnp_prunes_below_both_means(arrow_frame):
     from ditto_spark.operators.blocking import meta_blocking_wnp
 
     # edges: (1,2) w=2, (3,4) w=2, (1,3) w=1; node means 1/3 both 1.5
     # -> (1,3) pruned (1 < 1.5 at BOTH endpoints), the w=2 edges kept
-    blocks = spark.createDataFrame(
+    blocks = arrow_frame(
         [("b1", 1), ("b1", 2), ("b2", 1), ("b2", 2),
          ("b3", 3), ("b3", 4), ("b4", 3), ("b4", 4), ("b5", 1), ("b5", 3)],
         "block_key string, doc_id long",
@@ -459,11 +497,11 @@ def test_meta_blocking_wnp_prunes_below_both_means(spark):
     assert got == {(1, 2): 2, (3, 4): 2}
 
 
-def test_meta_blocking_wnp_block_purging(spark):
+def test_meta_blocking_wnp_block_purging(arrow_frame):
     from ditto_spark.operators.blocking import meta_blocking_wnp
 
     rows = [("big", i) for i in range(10, 16)] + [("ok", 1), ("ok", 2)]
-    blocks = spark.createDataFrame(rows, "block_key string, doc_id long")
+    blocks = arrow_frame(rows, "block_key string, doc_id long")
     got = {
         (r["left_id"], r["right_id"])
         for r in meta_blocking_wnp(blocks, max_block_size=3).collect()
@@ -471,10 +509,10 @@ def test_meta_blocking_wnp_block_purging(spark):
     assert got == {(1, 2)}  # the 6-entity block is purged entirely
 
 
-def test_meta_blocking_wnp_duplicate_assignments_counted_once(spark):
+def test_meta_blocking_wnp_duplicate_assignments_counted_once(arrow_frame):
     from ditto_spark.operators.blocking import meta_blocking_wnp
 
-    blocks = spark.createDataFrame(
+    blocks = arrow_frame(
         [("b1", 1), ("b1", 1), ("b1", 2)], "block_key string, doc_id long"
     )
     rows = meta_blocking_wnp(blocks).collect()
@@ -558,7 +596,7 @@ def test_winnow_near_dup_detects_shared_runs(spark):
     assert all(3 not in p for p in got)
 
 
-def test_allpairs_jaccard_lossless_vs_bruteforce(spark):
+def test_allpairs_jaccard_lossless_vs_bruteforce(arrow_frame):
     """Prefix filter must be LOSSLESS: equals the exact crossJoin jaccard
     join on a random corpus (both token and shingle element modes)."""
     import itertools
@@ -574,7 +612,7 @@ def test_allpairs_jaccard_lossless_vs_bruteforce(spark):
         docs.append((i, " ".join(base)))
         if i % 4 == 0:  # planted near-dup: small edit
             docs.append((i + 1000, " ".join(base[:-1] + [rng.choice(vocab)])))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
+    df = arrow_frame(docs, "doc_id long, text string")
 
     for n, thresh in [(1, 0.6), (3, 0.4)]:
         got = {
@@ -605,14 +643,14 @@ def test_allpairs_jaccard_lossless_vs_bruteforce(spark):
             assert abs(got[k] - v) < 1e-12
 
 
-def test_allpairs_finds_frequent_shingle_pairs_rare_join_drops(spark):
+def test_allpairs_finds_frequent_shingle_pairs_rare_join_drops(arrow_frame):
     """The losslessness that motivates AllPairs: duplicates built ONLY of
     corpus-frequent shingles (df > max_df) are invisible to the
     rare-shingle join but found exactly by the prefix-filter join."""
     from ditto_spark.operators.blocking import allpairs_jaccard_join
 
     boiler = "alpha beta gamma delta epsilon zeta eta theta"
-    df = spark.createDataFrame(
+    df = arrow_frame(
         [(i, boiler) for i in range(60)]
         + [(100 + i, f"unique{i} filler{i} other{i} stuff{i}") for i in range(5)],
         "doc_id long, text string",
@@ -627,7 +665,7 @@ def test_allpairs_finds_frequent_shingle_pairs_rare_join_drops(spark):
     assert E._rare_shingle_pairs(df).count() == 0
 
 
-def test_allpairs_prefix_ceil_float_boundary_lossless(spark):
+def test_allpairs_prefix_ceil_float_boundary_lossless(arrow_frame):
     """threshold*len landing a hair above an exact integer in doubles
     (0.56*25 = 14.000000000000002) must not shorten the prefix: the
     biased ceil keeps the join lossless at rational boundaries."""
@@ -647,7 +685,7 @@ def test_allpairs_prefix_ceil_float_boundary_lossless(spark):
             for j in rng.sample(range(25), 5):
                 mutated[j] = rng.choice(vocab)
             docs.append((i + 100, " ".join(dict.fromkeys(mutated))))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
+    df = arrow_frame(docs, "doc_id long, text string")
     got = {
         (r["left_id"], r["right_id"])
         for r in allpairs_jaccard_join(df, threshold=0.56, shingle_n=1).collect()
@@ -689,7 +727,7 @@ def test_containment_asymmetry_on_planted_quote(spark):
     assert r["cr"] < 0.1
 
 
-def test_edit_distance_join_equals_bruteforce(spark):
+def test_edit_distance_join_equals_bruteforce(arrow_frame):
     """Losslessness: prefix-filter + length-filter + verify returns exactly
     the brute-force levenshtein <= d set, including short/empty strings."""
     from itertools import combinations
@@ -702,7 +740,7 @@ def test_edit_distance_join_equals_bruteforce(spark):
         "algorithm", "logarithm", "xylophone",
     ]
     rows = [(i, w) for i, w in enumerate(words)]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
+    df = arrow_frame(rows, "doc_id int, text string")
 
     def lev(s1, s2):
         dp = list(range(len(s2) + 1))
@@ -727,11 +765,11 @@ def test_edit_distance_join_equals_bruteforce(spark):
         assert got == want, f"d={d}"
 
 
-def test_edit_distance_join_partition_invariant(spark):
+def test_edit_distance_join_partition_invariant(arrow_frame):
     from ditto_spark.operators.blocking import edit_distance_join
 
     rows = [(i, f"prefix shared {i % 7} tail{i}") for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
+    df = arrow_frame(rows, "doc_id int, text string")
     a = sorted(map(tuple, edit_distance_join(df.repartition(1), max_dist=2).collect()))
     b = sorted(map(tuple, edit_distance_join(df.repartition(16), max_dist=2).collect()))
     assert a == b and len(a) > 0
@@ -1148,7 +1186,7 @@ def test_time_band_pairs_partition_invariant(spark):
     assert a == b
 
 
-def test_allpairs_positional_filter_lossless_and_reduces_candidates(spark):
+def test_allpairs_positional_filter_lossless_and_reduces_candidates(arrow_frame):
     """PPJoin positional filter: identical verified output, strictly
     fewer (or equal) candidates than prefix+length filtering alone."""
     from ditto_spark.operators.blocking import allpairs_jaccard_join
@@ -1169,7 +1207,7 @@ def test_allpairs_positional_filter_lossless_and_reduces_candidates(spark):
         (200 + i, f"u{2 * i}a u{2 * i}b link{i} " + base)
         for i in range(5)  # exact copies of docs 0, 2, 4, 6, 8
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = arrow_frame(rows, "doc_id long, text string")
 
     on, off = {}, {}
     got_on = {

@@ -261,11 +261,11 @@ def test_merge_edge_batch_fresh_nodes_and_intra_cluster_edges(spark):
     assert got == {(1, 1), (2, 1), (3, 3), (9, 3), (10, 10), (11, 10)}
 
 
-def test_cluster_graph_metrics_density_and_scores(spark):
+def test_cluster_graph_metrics_density_and_scores(arrow_frame):
     from ditto_spark.operators.cluster import assign_clusters, cluster_graph_metrics
 
     # triangle {1,2,3} (dense) + chain {4,5,6} (sparse) + singleton 7
-    edges = spark.createDataFrame(
+    edges = arrow_frame(
         [
             (1, 2, 0.9),
             (2, 3, 0.8),
@@ -275,7 +275,7 @@ def test_cluster_graph_metrics_density_and_scores(spark):
         ],
         "left_id long, right_id long, score double",
     )
-    ids = spark.createDataFrame([(i,) for i in range(1, 8)], "conv_id long")
+    ids = arrow_frame([(i,) for i in range(1, 8)], "conv_id long")
     a = assign_clusters(ids, edges.select("left_id", "right_id"))
     out = {
         r["cluster_id"]: r
@@ -289,14 +289,14 @@ def test_cluster_graph_metrics_density_and_scores(spark):
     assert 7 not in out  # singleton filtered at min_nodes=2
 
 
-def test_cluster_graph_metrics_cross_cluster_edges_dropped(spark):
+def test_cluster_graph_metrics_cross_cluster_edges_dropped(arrow_frame):
     from ditto_spark.operators.cluster import cluster_graph_metrics
 
-    a = spark.createDataFrame(
+    a = arrow_frame(
         [(1, 1), (2, 1), (3, 3), (4, 3)], "conv_id long, cluster_id long"
     )
     # edge (2,3) straddles clusters: must not count anywhere
-    edges = spark.createDataFrame(
+    edges = arrow_frame(
         [(1, 2), (3, 4), (2, 3)], "left_id long, right_id long"
     )
     out = {r["cluster_id"]: r for r in cluster_graph_metrics(a, edges).collect()}
@@ -464,7 +464,7 @@ def test_stabilize_new_records_without_history(spark):
     assert got["z"] == ("n7", False)
 
 
-def test_cluster_bridge_edges_vs_bruteforce(spark):
+def test_cluster_bridge_edges_vs_bruteforce(arrow_frame):
     """Tarjan bridges ≡ remove-edge-and-check-connectivity brute force on
     a mixed graph: chain (all bridges), triangle (none), barbell (only the
     bar), plus a cross-cluster edge that must be dropped."""
@@ -481,8 +481,8 @@ def test_cluster_bridge_edges_vs_bruteforce(spark):
         (14, 15), (14, 16), (15, 16), (12, 14),
         (4, 10),
     ]
-    e = spark.createDataFrame(edges, "left_id long, right_id long")
-    assign = spark.createDataFrame(
+    e = arrow_frame(edges, "left_id long, right_id long")
+    assign = arrow_frame(
         [(i, 1) for i in (1, 2, 3, 4)]
         + [(i, 2) for i in (10, 11, 12, 13, 14, 15, 16)],
         "conv_id long, cluster_id long",
@@ -524,13 +524,13 @@ def test_cluster_bridge_edges_vs_bruteforce(spark):
     assert not got[(10, 11)] and not got[(15, 16)]
 
 
-def test_cluster_bridge_edges_oversize_skip(spark):
+def test_cluster_bridge_edges_oversize_skip(arrow_frame):
     from ditto_spark.operators.cluster import cluster_bridge_edges
 
-    e = spark.createDataFrame(
+    e = arrow_frame(
         [(1, 2), (2, 3)], "left_id long, right_id long"
     )
-    assign = spark.createDataFrame(
+    assign = arrow_frame(
         [(1, 7), (2, 7), (3, 7)], "conv_id long, cluster_id long"
     )
     out = cluster_bridge_edges(e, assign, max_cluster_size=2).collect()
@@ -539,7 +539,7 @@ def test_cluster_bridge_edges_oversize_skip(spark):
     assert all(r["is_bridge"] is None for r in out)
 
 
-def test_cluster_articulation_points_vs_bruteforce(spark):
+def test_cluster_articulation_points_vs_bruteforce(arrow_frame):
     """Articulation flags ≡ remove-node-and-check-connectivity brute force
     on the same chain/triangle-pendant/barbell graph."""
     from ditto_spark.operators.cluster import cluster_bridge_edges
@@ -549,8 +549,8 @@ def test_cluster_articulation_points_vs_bruteforce(spark):
         (10, 11), (10, 12), (11, 12), (12, 13),
         (14, 15), (14, 16), (15, 16), (12, 14),
     ]
-    e = spark.createDataFrame(edges, "left_id long, right_id long")
-    assign = spark.createDataFrame(
+    e = arrow_frame(edges, "left_id long, right_id long")
+    assign = arrow_frame(
         [(i, 1) for i in (1, 2, 3, 4)]
         + [(i, 2) for i in (10, 11, 12, 13, 14, 15, 16)],
         "conv_id long, cluster_id long",

@@ -82,18 +82,19 @@ def test_chunk_windows_stride_guard_raises(spark):
         entrymod._chunk_windows(docs, w=4, stride=8).count()
 
 
-# The md5 MinHash queries: each returns a lazy frame, so a persist inside
-# one outlives the query. blocking_recall is left out: its exact-truth side,
-# blocking.allpairs_jaccard_join, persists its element table. sf0.001, so no
-# frame cached by an earlier sf0.01 case can absorb a persist.
-MD5_QUERIES = [
+# The md5 MinHash queries, and the two exact self-join queries
+# (allpairs_jaccard, edit_distance_pairs): each returns a lazy frame, so a
+# persist inside one outlives the query. sf0.001, so no frame cached by an
+# earlier sf0.01 case can absorb a persist.
+NO_CACHE_QUERIES = [
     "minhash_lsh_candidates", "er_cross_candidates", "chunk_near_dup",
     "chunk_curation", "transcript_dedup_builtin", "bbit_minhash_jaccard",
-    "minhash_md5_signature", "weighted_minhash_signature",
+    "minhash_md5_signature", "weighted_minhash_signature", "blocking_recall",
+    "allpairs_jaccard", "edit_distance_pairs",
 ]
 
 
-@pytest.mark.parametrize("name", MD5_QUERIES)
+@pytest.mark.parametrize("name", NO_CACHE_QUERIES)
 def test_md5_query_leaves_no_cache(spark, name):
     cm = spark._jsparkSession.sharedState().cacheManager()
     before = cm.numCachedEntries()

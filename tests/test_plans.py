@@ -310,3 +310,46 @@ def test_entity_lookups_build_on_entity_side_without_broadcast(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert joins == [("ShuffledHashJoin", "BuildRight")] * 4, joins
     assert "SortMergeJoin" not in plan, plan
+
+
+def _joins(df):
+    """(nodeName, build side or None) of every join in df's executed plan."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if "Join" in name:
+            side = node.buildSide().toString() if "HashJoin" in name else None
+            out.append((name, side))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_pair_side_lookups_build_on_entity_side_without_broadcast(
+    spark, arrow_frame
+):
+    """Off the flagship too, a pair-side lookup (here edit_similarity_pairs'
+    two text lookups) builds on the entity side: with broadcasting off each
+    is a shuffled hash join and the pair table is never sorted."""
+    from ditto_spark.operators.scoring import edit_similarity_pairs
+
+    docs = arrow_frame(
+        [(1, "kitten"), (2, "sitting"), (3, "mitten")], "doc_id long, text string"
+    )
+    pairs = arrow_frame([(1, 2), (1, 3), (2, 3)], "left_id long, right_id long")
+    prev = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = edit_similarity_pairs(pairs, docs)
+        joins = _joins(out)
+        plan = _initial_plan(out)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert joins == [("ShuffledHashJoin", "BuildRight")] * 2, joins
+    assert "SortMergeJoin" not in plan, plan

@@ -33,9 +33,9 @@ def _py_dice(a: int, b: int) -> float:
     return 2.0 * bin(a & b).count("1") / (bin(a).count("1") + bin(b).count("1"))
 
 
-def test_bloom_encoding_matches_independent_python(spark):
+def test_bloom_encoding_matches_independent_python(arrow_frame):
     words = ["jonathan", "Smith-Jones", "O'Neil 3rd", "a", ""]
-    df = spark.createDataFrame([(w,) for w in words], "w string")
+    df = arrow_frame([(w,) for w in words], "w string")
     got = {
         r["w"]: r["bloom"]
         for r in df.select("w", bloom_expr("w").alias("bloom")).collect()
@@ -44,8 +44,8 @@ def test_bloom_encoding_matches_independent_python(spark):
         assert got[w] == _py_bloom(w), w
 
 
-def test_dice_identity_and_variant_ordering(spark):
-    base = spark.createDataFrame(
+def test_dice_identity_and_variant_ordering(arrow_frame):
+    base = arrow_frame(
         [("jonathan smith", "jonathan smith", "jonothan smith", "zebra quartz")],
         "a string, b string, c string, d string",
     )
@@ -78,7 +78,7 @@ def test_band_positions_distinct_and_deterministic():
         assert f">> {p}" in sql
 
 
-def test_pprl_dice_pairs_finds_planted_variant(spark):
+def test_pprl_dice_pairs_finds_planted_variant(arrow_frame):
     rows = [
         (1, "jonathan smith"),
         (2, "jonothan smith"),  # planted spelling variant of 1
@@ -86,7 +86,7 @@ def test_pprl_dice_pairs_finds_planted_variant(spark):
         (4, "quentin zebra"),
         (5, "vladimir ulyanov"),
     ]
-    df = spark.createDataFrame(rows, "id int, name string")
+    df = arrow_frame(rows, "id int, name string")
     enc = pprl_bloom_encode(df, "id", "name")
     got = pprl_dice_pairs(enc, id_col="id", min_dice=0.7).collect()
     pairs = {(r["left_id"], r["right_id"]) for r in got}
@@ -97,12 +97,12 @@ def test_pprl_dice_pairs_finds_planted_variant(spark):
     assert all(p == (1, 2) for p in pairs)
 
 
-def test_pprl_dice_pairs_partition_invariant(spark):
+def test_pprl_dice_pairs_partition_invariant(arrow_frame):
     rows = [(i, f"person number {i}") for i in range(40)] + [
         (100, "jonathan smith"),
         (101, "jonothan smith"),
     ]
-    df = spark.createDataFrame(rows, "id int, name string")
+    df = arrow_frame(rows, "id int, name string")
     a = pprl_dice_pairs(
         pprl_bloom_encode(df.repartition(1), "id", "name"), id_col="id"
     )

@@ -272,14 +272,14 @@ def test_numpy_cross_encoder_in_udf_slot(spark):
         assert 0.0 < v < 1.0
 
 
-def test_edit_similarity_known_values(spark):
+def test_edit_similarity_known_values(arrow_frame):
     from ditto_spark.operators.scoring import edit_similarity_pairs
 
-    docs = spark.createDataFrame(
+    docs = arrow_frame(
         [(1, "kitten"), (2, "sitting"), (3, ""), (4, "")],
         "doc_id long, text string",
     )
-    pairs = spark.createDataFrame(
+    pairs = arrow_frame(
         [(1, 2), (3, 4)], "left_id long, right_id long"
     )
     got = {
@@ -291,14 +291,14 @@ def test_edit_similarity_known_values(spark):
     assert got[(3, 4)] == (0, 1.0)  # empty-vs-empty guarded, sim 1
 
 
-def test_edit_similarity_prefix_truncation_and_threshold(spark):
+def test_edit_similarity_prefix_truncation_and_threshold(arrow_frame):
     from ditto_spark.operators.scoring import edit_similarity_pairs
 
-    docs = spark.createDataFrame(
+    docs = arrow_frame(
         [(1, "abcd" + "x" * 50), (2, "abcd" + "y" * 50), (5, "zzzz")],
         "doc_id long, text string",
     )
-    pairs = spark.createDataFrame(
+    pairs = arrow_frame(
         [(1, 2), (1, 5)], "left_id long, right_id long"
     )
     # prefix_len=4: both sides truncate to "abcd" -> dist 0, sim 1
